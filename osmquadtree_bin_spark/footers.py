@@ -18,6 +18,24 @@ import os
 log = logging.getLogger(__name__)
 
 
+def tile_files(tiled_path: str, tiles: list[int] | None = None) -> dict[int, list[str]]:
+    """Sorted ``*.parquet`` files per tile partition of a local
+    hive-partitioned layout (tile_idx=N/ dirs). ``tiles`` limits the listing
+    to those partitions; a tile without a directory is left out."""
+    if tiles is None:
+        dirs = glob.glob(os.path.join(tiled_path, "tile_idx=*"))
+    else:
+        dirs = [
+            d for t in tiles if os.path.isdir(d := os.path.join(tiled_path, f"tile_idx={t}"))
+        ]
+    return {
+        int(os.path.basename(d).split("=", 1)[1]): sorted(
+            glob.glob(os.path.join(d, "*.parquet"))
+        )
+        for d in dirs
+    }
+
+
 def tile_rows_from_footers(
     tiled_path: str,
     max_files: int = 50_000,
@@ -28,39 +46,29 @@ def tile_rows_from_footers(
     read replacing a full distributed scan of the store. ``tiles`` limits
     the walk to those partitions (diff ledgers only touch a few tiles; the
     full-store walk is for the post-prepare audit). None → caller falls
-    back to the Spark count (non-partitioned layout, non-local fs, corrupt
-    footer, or more files than a serial driver walk should touch). The
-    except clause is narrow on purpose: a corrupt-footer signal must
-    surface in the log, not silently vanish into the fallback (r05 ADVICE)."""
+    back to the Spark count (no pyarrow, non-partitioned layout, non-local
+    fs, corrupt footer, or more files than a serial driver walk should
+    touch). The except clause is narrow on purpose: a corrupt-footer signal
+    must surface in the log, not silently vanish into the fallback (r05
+    ADVICE)."""
     try:
-        import pyarrow as pa
         import pyarrow.parquet as pq
-
-        if tiles is not None:
-            dirs = [
-                d
-                for t in tiles
-                if os.path.isdir(d := os.path.join(tiled_path, f"tile_idx={t}"))
-            ]
-            if not dirs and tiles:
-                return {}
-        else:
-            dirs = glob.glob(os.path.join(tiled_path, "tile_idx=*"))
-            if not dirs:
-                return None
-        per_dir = {
-            int(os.path.basename(d).split("=", 1)[1]): glob.glob(
-                os.path.join(d, "*.parquet")
-            )
-            for d in dirs
-        }
+        from pyarrow import ArrowException
+    except ImportError as e:
+        log.warning("no pyarrow for the footer walk of %s (%s) — falling back "
+                    "to a distributed count", tiled_path, e)
+        return None
+    try:
+        per_dir = tile_files(tiled_path, tiles)
+        if not per_dir:
+            return {} if tiles is not None else None
         if sum(len(fs) for fs in per_dir.values()) > max_files:
             return None
         return {
             t: sum(pq.read_metadata(f).num_rows for f in fs)
             for t, fs in per_dir.items()
         }
-    except (OSError, ValueError, KeyError, pa.ArrowInvalid) as e:
+    except (OSError, ValueError, KeyError, ArrowException) as e:
         log.warning(
             "footer walk of %s failed (%s: %s) — falling back to a "
             "distributed count; if this is a corrupt-footer signal it needs "

@@ -11,16 +11,27 @@ Reference contract (``/root/reference/osmquadtree-update.go``):
     (:354-360).
 
 Spark shape: the tiled table is hive-partitioned parquet (Iceberg in
-production — MERGE INTO + overwrite-by-partition-filter). Each ``apply_diff``:
-  1. joins the diff against the (id → tile) assignment to find touched tiles
-     (partition pruning: only those partitions are read),
-  2. merges newest-wins via row_number over (id) ordered by version desc,
-  3. rewrites ONLY the touched tile partitions (dynamic partition overwrite),
-  4. appends a lineage row per touched partition: (state, tile_idx, rows_in,
-     rows_out, ts) — the resumable-checkpoint contract of the north rule.
+production — MERGE INTO + overwrite-by-partition-filter). Each ``apply_diff``
+runs as few Spark jobs as its work needs:
+  1. evaluates the assigned diff ONCE (``localCheckpoint``: the parquet read
+     and the assigner's broadcast join run one time), then one collect finds
+     the touched tiles — the diff's new tiles plus the tiles its ids live in
+     now (partition pruning: only those partitions are read below),
+  2. merges newest-wins via row_number over (id) ordered by version desc and
+     writes the result straight into a dynamic partition overwrite of ONLY
+     the touched tiles — one write job, no persist. The overwrite commits
+     after every task has read its base partitions; a touched tile whose
+     ``*.parquet`` files are the same after the write got no output rows and
+     is dropped,
+  3. reads the per-tile row counts before and after from parquet footers,
+  4. writes a lineage row per touched partition on the driver with pyarrow:
+     (state, tile_idx, rows_in, rows_out, ts) — the resumable-checkpoint
+     contract of the north rule. The file appears atomically (hidden temp
+     file + ``os.replace``).
 
-``resume_state`` reads the ledger to find the last applied state, so a killed
-run restarts idempotently (T1's re-fetch avoidance).
+``resume_state`` reads the ledger's ``state`` column on the driver once per
+store instance, so a killed run restarts idempotently (T1's re-fetch
+avoidance). One writer per store, as the dynamic overwrite already requires.
 """
 
 from __future__ import annotations
@@ -81,6 +92,7 @@ class TiledStore:
         self.root = root
         self.data_path = os.path.join(root, "tiles")
         self.ledger_path = os.path.join(root, "ledger")
+        self._last_state: int | None = None  # read once by resume_state
 
     # ------------------------------------------------------------- bootstrap
     def write_initial(self, assigned: DataFrame) -> None:
@@ -107,9 +119,22 @@ class TiledStore:
             return self.spark.createDataFrame([], LEDGER_SCHEMA)
 
     def resume_state(self) -> int:
-        """Last fully-applied state (S7 re-fetch avoidance); 0 if none."""
-        row = self.ledger().agg(F.max("state").alias("s")).collect()[0]
-        return int(row["s"]) if row["s"] is not None else 0
+        """Last fully-applied state (S7 re-fetch avoidance); 0 if none. The
+        ledger's ``state`` column is read on the driver once per instance;
+        after that this store's own appends keep the value current."""
+        if self._last_state is None:
+            import glob
+
+            import pyarrow.parquet as pq
+
+            # glob skips the hidden temp files of an interrupted append
+            states = [
+                s
+                for f in glob.glob(os.path.join(self.ledger_path, "*.parquet"))
+                for s in pq.read_table(f, columns=["state"])["state"].to_pylist()
+            ]
+            self._last_state = max(states, default=0)
+        return self._last_state
 
     # ----------------------------------------------------------- apply diff
     def apply_diff(self, diff: DataFrame, state: int, version_col: str = "version") -> list[int]:
@@ -117,68 +142,68 @@ class TiledStore:
         tile partitions. ``diff`` needs (id, changetype, version, <element
         cols>, tile_idx precomputed by the caller via the assigner).
         Returns the touched tile list. Idempotent per state (skips if the
-        ledger already has it)."""
+        ledger already has it). Steps 1-4 of the module docstring; the merged
+        result is never persisted or collected."""
         if self.resume_state() >= state:
             return []
+        from ..footers import tile_files
+        from ..tuning import shuffle_partitions_for
 
+        # the diff lineage (a parquet read plus the assigner's broadcast
+        # join, or even a lazy read of this store) runs once, here
+        diff = diff.localCheckpoint()
         # Touched = tiles the diff assigns rows to, PLUS the tiles the same
         # ids currently live in (the reference resolves old tiles via its
         # locations cache, CalcUpdateTiles): a moved element must vanish from
         # its previous partition and a delete must clear the row where it
         # actually is, not where the assigner would now place it. Parquet
         # column pruning makes the old-tile lookup an (id, tile_idx)-only scan.
-        new_tiles = diff.select("tile_idx").distinct()
-        old_tiles = (
-            self.read()
-            .join(diff.select("id").distinct(), "id", "left_semi")
-            .select("tile_idx")
-            .distinct()
-        )
-        touched = [
+        # The broadcast hint keeps the store side unshuffled: a change set is
+        # small next to the store, but Spark cannot see that through the
+        # checkpoint (its size estimate of the assigner's left joins is the
+        # product of their sides).
+        store = self.read()
+        old_tiles = store.join(F.broadcast(diff.select("id")), "id", "left_semi")
+        touched = sorted(
             r["tile_idx"]
-            for r in new_tiles.unionByName(old_tiles).distinct().collect()
-        ]
+            for r in diff.select("tile_idx")
+            .unionByName(old_tiles.select("tile_idx"))
+            .distinct()
+            .collect()
+        )
         if not touched:
             self._append_ledger([], state, {}, {})
             return []
 
-        base = self.read().filter(F.col("tile_idx").isin(touched))
         rows_in = self._touched_counts(touched)
-
+        files_in = tile_files(self.data_path, touched)
+        base = store.filter(F.col("tile_idx").isin(touched))
         newest = merge_newest(base, diff, version_col)  # T5: deletes drop
-
-        # materialize BEFORE the overwrite: newest reads the very partitions
-        # the write below replaces, so a lazy re-evaluation would see them
-        newest = newest.persist()
-        try:
-            out_tiles = {
-                r["tile_idx"] for r in newest.select("tile_idx").distinct().collect()
-            }
-            # dynamic partition overwrite: only the touched tiles are
-            # rewritten. Scoped to THIS write via the DataFrameWriter option —
-            # a session-level conf.set here would leak "dynamic" into every
-            # later partitioned overwrite (no top-level _SUCCESS, stale
-            # partitions surviving a same-session re-tile).
-            from ..tuning import shuffle_partitions_for
-
-            (
-                newest.repartition(shuffle_partitions_for(newest), F.col("tile_idx"))
-                .sortWithinPartitions("tile_idx", "id")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("tile_idx")
-                .parquet(self.data_path)
-            )
-        finally:
-            newest.unpersist()
-        # Dynamic overwrite only replaces partitions PRESENT in the output: a
-        # touched tile whose rows were all deleted emits nothing and its stale
-        # partition would survive. Clear those explicitly. (On Iceberg this is
-        # a single overwrite-by-partition-filter / MERGE and needs no FS ops.)
-        self._drop_partitions([t for t in touched if t not in out_tiles])
+        # dynamic partition overwrite: only the touched tiles are rewritten.
+        # Spark stages the output and commits it after every task has read
+        # its base partitions, so newest may read the partitions it replaces.
+        # Scoped to THIS write via the DataFrameWriter option — a
+        # session-level conf.set here would leak "dynamic" into every later
+        # partitioned overwrite (no top-level _SUCCESS, stale partitions
+        # surviving a same-session re-tile).
+        (
+            newest.repartition(shuffle_partitions_for(newest), F.col("tile_idx"))
+            .sortWithinPartitions("tile_idx", "id")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("tile_idx")
+            .parquet(self.data_path)
+        )
+        # Dynamic overwrite only replaces partitions PRESENT in the output,
+        # each with newly named files: a touched tile whose files did not
+        # change got no rows (all deleted or moved away), and its stale
+        # partition must be cleared explicitly. (On Iceberg this is a single
+        # overwrite-by-partition-filter / MERGE and needs no FS ops.)
+        files_out = tile_files(self.data_path, touched)
+        self._drop_partitions([t for t, fs in files_in.items() if files_out.get(t) == fs])
         rows_out = self._touched_counts(touched)
         self._append_ledger(touched, state, rows_in, rows_out)
-        return sorted(touched)
+        return touched
 
     def _touched_counts(self, touched: list[int]) -> dict[int, int]:
         """Per-tile row counts for the touched partitions. Footer-walk fast
@@ -211,14 +236,31 @@ class TiledStore:
                 shutil.rmtree(p)
 
     def _append_ledger(self, touched: list[int], state: int, rows_in: dict, rows_out: dict):
+        """One ledger file per state, written on the driver with exactly
+        ``LEDGER_SCHEMA`` and published atomically: a ``.``-prefixed temp
+        file (which Spark's reader and ``resume_state`` skip) is renamed into
+        place, so a killed append leaves no half-written ledger row set."""
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         now = int(time.time())
         rows = [
             (state, int(t), int(rows_in.get(t, 0)), int(rows_out.get(t, 0)), now, True)
             for t in touched
         ] or [(state, -1, 0, 0, now, True)]
-        self.spark.createDataFrame(rows, LEDGER_SCHEMA).write.mode("append").parquet(
-            self.ledger_path
+        arrow_types = {"long": pa.int64(), "boolean": pa.bool_()}
+        schema = pa.schema(
+            [(n, arrow_types[t]) for n, t in (f.split() for f in LEDGER_SCHEMA.split(","))]
         )
+        table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema)
+        os.makedirs(self.ledger_path, exist_ok=True)
+        name = f"state-{state}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.ledger_path, "." + name)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.ledger_path, name))
+        self._last_state = max(self.resume_state(), state)
 
     # -------------------------------------------------- overflow monitoring
     def overflow_pressure(self, overflow_idx: int) -> dict:

@@ -29,8 +29,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
 
 from . import quadtree as qtk
 from .quadtree import DEPTH_MASK, round_to
@@ -69,9 +67,10 @@ def count_tree(
     Amdahl bottleneck. The rounding happens DRIVER-SIDE in numpy on the
     already-aggregated counts (one distributed shuffle, one collect, zero
     caching — Spark's persist path measured 50-80× slower than the recompute
-    at high thread counts). ``collect_guard``: if the aggregated cell count
-    may exceed what the driver should hold (~20M rows), a distributed
-    pre-shrink runs first. The reference expects ~500k tiles at planet scale
+    at high thread counts). There is no distributed pre-shrink: the collect
+    holds every occupied cell at ``level``, so at planet scale pass
+    ``n_rows_hint`` (which caps ``level``) or a lower ``level``. The
+    reference expects ~500k tiles at planet scale
     (``osmquadtree-prepare.go:201``)."""
     import math
 
@@ -466,7 +465,6 @@ def assign_tiles(
     elements: DataFrame,
     groups: pd.DataFrame,
     level: int = QT_TREE_MAX_LEVEL,
-    impl: str = "jvm",
     counts: pd.DataFrame | None = None,
 ) -> DataFrame:
     """Deepest-ancestor tile assignment, fully JVM-side (no Python workers).
@@ -482,18 +480,15 @@ def assign_tiles(
     broadcast, one JVM hash probe per element, zero Python on executors.
 
     General path (no ``counts`` — e.g. incremental data arriving after the
-    groups were fixed): one broadcast hash join per occupied group depth —
-    the element probes with its ancestor key at that depth, the tiny
-    per-depth group slices are the build sides — then a ``coalesce`` picks
-    the deepest hit. All probes stay in one whole-stage-codegen span; no
-    shuffle of the big side, no Arrow round-trip (the previous pandas-UDF
-    searchsorted assigner serialized every element through Python workers and
-    kept the ``assign_write_tiled`` stage flat from 1→4 executors).
-
-    ``impl="arrow"`` keeps the legacy pandas-UDF path (parity-tested in
-    tests/test_tiling_golden.py)."""
-    if impl == "arrow":
-        return _assign_tiles_arrow(elements, groups, level)
+    groups were fixed): the element probes ONE broadcast build side of all
+    group keys once per occupied group depth, with its ancestor key at that
+    depth; a ``coalesce`` picks the deepest hit. A key's low 5 bits are its
+    depth, so the probe at depth d only meets depth-d keys (or, for an
+    element shallower than d, its own key — the deepest possible hit
+    anyway). The probes share one build side, so Spark broadcasts it once
+    and reuses the exchange for every other depth. All probes stay in one
+    whole-stage-codegen span; no shuffle of the big side, no Arrow
+    round-trip."""
     if counts is not None and len(counts) and len(groups):
         return _assign_tiles_cellmap(elements, groups, counts, level)
 
@@ -502,41 +497,29 @@ def assign_tiles(
     gidx = groups["tile_idx"].to_numpy(np.int64)
     overflow_idx = int(gidx.max()) + 1 if len(gidx) else 0
 
-    # group keys are unique (one emit per tree node) — the per-depth hash
-    # joins below rely on it (a duplicate key would duplicate element rows)
+    # group keys are unique (one emit per tree node) — the hash joins below
+    # rely on it (a duplicate key would duplicate element rows)
     assert len(np.unique(gkeys)) == len(gkeys), "group keys must be unique"
 
     depths = sorted({int(d) for d in (gkeys & 31)}, reverse=True)
     # one Project computes every ancestor key (cheap bit math over the rounded
     # qt; qt arrives lineage-severed so nothing big gets inlined 18×)
     df = elements.withColumn("__qtr", qt_round_expr("qt", level))
-    for d in depths:
-        df = df.withColumn(f"__anc{d}", qt_round_expr("__qtr", d))
-    ti_cols: list[str] = []
-    tq_cols: list[str] = []
-    for d in depths:
-        m = (gkeys & 31) == d
-        slice_pdf = pd.DataFrame(
-            {
-                f"__gk{d}": gkeys[m],
-                f"__ti{d}": gidx[m],
-                f"__tq{d}": gkeys[m],
-            }
+    df = df.withColumns({f"__anc{d}": qt_round_expr("__qtr", d) for d in depths})
+    gdf = F.broadcast(
+        spark.createDataFrame(
+            pd.DataFrame({"__gk": gkeys, "__ti": gidx}), "__gk long, __ti long"
         )
-        gdf = spark.createDataFrame(slice_pdf)
-        df = df.join(
-            F.broadcast(gdf), F.col(f"__anc{d}") == F.col(f"__gk{d}"), "left"
-        ).drop(f"__gk{d}")
-        ti_cols.append(f"__ti{d}")
-        tq_cols.append(f"__tq{d}")
-    df = df.withColumn(
-        "tile_idx",
-        F.coalesce(*[F.col(c) for c in ti_cols], F.lit(overflow_idx)).cast("long"),
-    ).withColumn(
-        "tile_qt",
-        F.coalesce(*[F.col(c) for c in tq_cols], F.lit(0)).cast("long"),
     )
-    return df.drop("__qtr", *(f"__anc{d}" for d in depths), *ti_cols, *tq_cols)
+    for d in depths:
+        side = gdf.select(F.col("__gk").alias(f"__gk{d}"), F.col("__ti").alias(f"__ti{d}"))
+        df = df.join(side, F.col(f"__anc{d}") == F.col(f"__gk{d}"), "left")
+    ti = F.coalesce(*[F.col(f"__ti{d}") for d in depths], F.lit(overflow_idx))
+    tq = F.coalesce(*[F.col(f"__gk{d}") for d in depths], F.lit(0))
+    df = df.withColumns({"tile_idx": ti.cast("long"), "tile_qt": tq.cast("long")})
+    return df.drop(
+        "__qtr", *(f"{c}{d}" for d in depths for c in ("__anc", "__gk", "__ti"))
+    )
 
 
 def _assign_tiles_cellmap(
@@ -588,39 +571,6 @@ def _assign_tiles_cellmap(
         )
         .withColumn("tile_qt", F.coalesce("__tq", F.lit(0)).cast("long"))
         .drop("__cell", "__ti", "__tq")
-    )
-
-
-def _assign_tiles_arrow(
-    elements: DataFrame, groups: pd.DataFrame, level: int = QT_TREE_MAX_LEVEL
-) -> DataFrame:
-    """Legacy Arrow-path assigner: ONE pandas-UDF round-trip (searchsorted),
-    tile_qt via broadcast hash join. Kept for parity testing against the
-    JVM path — the JVM path is the production one."""
-    assigner = make_tile_assigner(groups, level)
-
-    @pandas_udf(LongType())
-    def _assign(qt: pd.Series) -> pd.Series:
-        return pd.Series(assigner(qt.to_numpy(np.int64)))
-
-    # asNondeterministic: REQUIRED for plan health, not semantics. A filter on
-    # tile_idx above this (e.g. apply_diff touching one tile) is otherwise
-    # pushed through the projection by substituting the UDF call — and its qt
-    # argument — down every level of the parse/qt alias chain, exponentially
-    # inlining the chain into a multi-MB expression that is then evaluated a
-    # SECOND time below the real one (observed: 15.5 MB plan, 135 s optimize,
-    # tasks wedged in per-task transformUp). Nondeterministic marks block
-    # predicate pushdown through the UDF, which costs nothing here: the filter
-    # can never reach parquet anyway (tile_idx exists only above this point).
-    _assign = _assign.asNondeterministic()
-
-    spark = elements.sparkSession
-    gmap = groups[["tile_idx", "tile_qt"]].copy()
-    if assigner.overflow_idx not in set(gmap["tile_idx"]):
-        gmap.loc[len(gmap)] = [assigner.overflow_idx, 0]  # overflow → root qt
-    gdf = spark.createDataFrame(gmap.astype({"tile_idx": "int64", "tile_qt": "int64"}))
-    return elements.withColumn("tile_idx", _assign(F.col("qt"))).join(
-        F.broadcast(gdf), "tile_idx"
     )
 
 

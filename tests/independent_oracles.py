@@ -7,6 +7,9 @@ dedup.py, similarity.py, pip_join.py are never imported here). The fixture
 parquets under tests/golden/oracle/ are generated FROM these functions
 (`python tests/make_goldens.py oracle`), so the driver's Spark-vs-fixture
 hash gate is a genuine two-implementation cross-check, not a regression pin.
+One exception runs on Spark: :func:`assign_tiles_arrow`, the second tile
+assigner for the parity tests in tests/test_tiling_golden.py (a pandas UDF
+around the same scalar walk the q26 oracle uses).
 
 What IS shared, deliberately:
   * input synthesis (`datagen._doc_rows` / `gen_regions` parameters) — the
@@ -216,6 +219,51 @@ def _oracle_groups(cell_counts: dict[int, int], target: int, minimum: int):
     return groups
 
 
+def _oracle_tile(qt: int, gmap: dict[int, int], overflow_idx: int,
+                 level: int) -> tuple[int, int]:
+    """(tile_idx, tile_qt) of the deepest group key ancestor-of-or-equal of
+    ``round(qt, level)``, found by a scalar walk from that depth up to the
+    root; (overflow_idx, 0) when no group is an ancestor."""
+    qtr = _round_qt(qt, level)
+    for d in range(qtr & 31, -1, -1):
+        anc = _round_qt(qtr, d)
+        if anc in gmap:
+            return gmap[anc], anc
+    return overflow_idx, 0
+
+
+def assign_tiles_arrow(elements, groups: pd.DataFrame, level: int = 17):
+    """Second implementation of ``tiling.assign_tiles`` for the parity tests:
+    ONE pandas-UDF round trip through Python workers, each qt resolved by the
+    scalar :func:`_oracle_tile` walk (vs the engine's per-depth broadcast hash
+    joins or its count-tree cell map). The one oracle here that runs on Spark,
+    because what it checks is a Spark DataFrame transform."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import LongType
+
+    keys = [int(k) for k in groups["tile_qt"]]
+    idxs = [int(i) for i in groups["tile_idx"]]
+    gmap = dict(zip(keys, idxs))
+    overflow_idx = max(idxs) + 1 if idxs else 0
+
+    def udf_of(pick: int):
+        @pandas_udf(LongType())
+        def _tile(qt: pd.Series) -> pd.Series:
+            return pd.Series(
+                [_oracle_tile(int(q), gmap, overflow_idx, level)[pick] for q in qt],
+                dtype="int64",
+            )
+
+        # nondeterministic blocks pushing a tile_idx filter down through the
+        # UDF (which would inline the qt lineage into the filter)
+        return _tile.asNondeterministic()
+
+    return elements.withColumn("tile_idx", udf_of(0)(F.col("qt"))).withColumn(
+        "tile_qt", udf_of(1)(F.col("qt"))
+    )
+
+
 def oracle_q26(n_docs: int, seed: int = 42, target: int = 500,
                minimum: int = 250, level: int = 17) -> pd.DataFrame:
     els = _parse_elements(_docs_frame(n_docs, seed))
@@ -229,15 +277,7 @@ def oracle_q26(n_docs: int, seed: int = 42, target: int = 500,
     overflow_idx = len(groups)
     tile_counts: dict[tuple[int, int], int] = {}
     for qt in qts:
-        qtr = _round_qt(qt, level)
-        hit = None
-        for d in range(qtr & 31, -1, -1):
-            anc = _round_qt(qtr, d)
-            if anc in gmap:
-                hit = (gmap[anc], anc)
-                break
-        if hit is None:
-            hit = (overflow_idx, 0)
+        hit = _oracle_tile(qt, gmap, overflow_idx, level)
         tile_counts[hit] = tile_counts.get(hit, 0) + 1
     rows = sorted(tile_counts.items())
     return pd.DataFrame(

@@ -314,3 +314,110 @@ def test_ledger_counts_via_footers(spark, store, monkeypatch):
     assert {r["tile_idx"]: (r["rows_in"], r["rows_out"]) for r in led} == {
         t: (rows_in.get(t, 0), rows_out.get(t, 0)) for t in touched
     }
+
+
+def _clustered_diff(spark, st, groups, tmp_path, state):
+    """A clustered diff like the update benchmark's: rows of one tile, read
+    back from parquet and assigned by the general (no ``counts``) arm."""
+    t = st.read().groupBy("tile_idx").count().orderBy(F.desc("count")).first()["tile_idx"]
+    src = str(tmp_path / f"diff-{state}")
+    (
+        st.read().filter(F.col("tile_idx") == t).orderBy("id").limit(6)
+        .drop("tile_idx")
+        .withColumn("wkt", F.concat(F.lit(f"S{state}:"), F.col("wkt")))
+        .withColumn("changetype", F.lit("modify"))
+        .withColumn("version", F.lit(state))
+        .write.parquet(src)
+    )
+    return assign_tiles(spark.read.parquet(src), groups)
+
+
+def test_clustered_apply_diff_spark_jobs(spark, store, tmp_path):
+    """One diff batch runs few Spark jobs: the diff lineage is evaluated once,
+    the merge goes straight into one write, and the ledger is written on the
+    driver. The same batch ran 28 jobs when the diff lineage ran three times,
+    the merge was persisted and collected before the write, and the ledger
+    was read and appended through Spark; it runs 9 now."""
+    st, _, groups = store
+    st.apply_diff(_clustered_diff(spark, st, groups, tmp_path, 1), state=1)
+    diff = _clustered_diff(spark, st, groups, tmp_path, 2)
+    sc = spark.sparkContext
+    sc.setJobGroup("apply-diff-jobs", "apply_diff job count")
+    try:
+        st.apply_diff(diff, state=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("apply-diff-jobs")
+    assert 0 < len(jobs) <= 9, len(jobs)
+    assert st.read().filter(F.col("wkt").startswith("S2:")).count() == 6
+
+
+def test_driver_ledger_reads_back_with_ledger_schema(spark, store):
+    from osmquadtree_bin_spark.streaming.update import LEDGER_SCHEMA
+
+    st, assigned, _ = store
+    st.apply_diff(_mk_diff(spark, assigned, "modify", version=1, n=3), state=1)
+    got = spark.read.parquet(st.ledger_path)
+    assert got.schema == spark.createDataFrame([], LEDGER_SCHEMA).schema
+    assert {r["state"] for r in got.collect()} == {1}
+
+
+def test_hidden_ledger_temp_file_ignored(spark, store):
+    """A temp file left by a killed append is invisible to the ledger and to
+    resume_state (hidden name, never renamed into place)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    st, assigned, _ = store
+    st.apply_diff(_mk_diff(spark, assigned, "modify", version=1, n=2), state=1)
+    leftover = pa.table({"state": pa.array([99], pa.int64())})
+    pq.write_table(leftover, os.path.join(st.ledger_path, ".state-99-dead.parquet"))
+    fresh = TiledStore(spark, st.root)
+    assert fresh.resume_state() == 1
+    assert {r["state"] for r in fresh.ledger().collect()} == {1}
+
+
+def test_resume_over_mixed_spark_and_driver_ledger(spark, store):
+    """A ledger holding Spark-written files (as older stores have) next to
+    driver-written ones resumes at the max state, whichever writer wrote it."""
+    import time
+
+    from osmquadtree_bin_spark.streaming.update import LEDGER_SCHEMA
+
+    st, assigned, _ = store
+
+    def spark_append(state):
+        spark.createDataFrame(
+            [(state, -1, 0, 0, int(time.time()), True)], LEDGER_SCHEMA
+        ).write.mode("append").parquet(st.ledger_path)
+
+    spark_append(4)
+    assert st.apply_diff(_mk_diff(spark, assigned, "modify", version=1, n=2), state=3) == []
+    st.apply_diff(_mk_diff(spark, assigned, "modify", version=5, n=2), state=5)
+    assert TiledStore(spark, st.root).resume_state() == 5
+    spark_append(7)
+    assert TiledStore(spark, st.root).resume_state() == 7
+    assert sorted(
+        r["state"] for r in TiledStore(spark, st.root).ledger().select("state").distinct().collect()
+    ) == [4, 5, 7]
+
+
+def test_diff_read_lazily_from_store(spark, store):
+    """A diff that is a lazy read of the store itself (the store's rewritten
+    partitions are its source) applies as if it had been materialized."""
+    st, _, _ = store
+    n0 = st.read().count()
+    diff = (
+        st.read().orderBy("id").limit(2)
+        .withColumn("wkt", F.concat(F.lit("LAZY:"), F.col("wkt")))
+        .withColumn("changetype", F.lit("modify"))
+        .withColumn("version", F.lit(1))
+    )
+    ids = sorted(r["id"] for r in diff.select("id").collect())
+    st.apply_diff(diff, state=1)
+    assert st.read().count() == n0
+    got = st.read().filter(F.col("wkt").startswith("LAZY:")).collect()
+    assert sorted(r["id"] for r in got) == ids
+    assert all(not r["wkt"].startswith("LAZY:LAZY:") for r in got)

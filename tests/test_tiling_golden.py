@@ -21,6 +21,7 @@ from osmquadtree_bin_spark.tiling import (
     make_tile_assigner,
     tree_lines,
 )
+from tests.independent_oracles import assign_tiles_arrow
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden")
 
@@ -130,8 +131,8 @@ def test_end_to_end_tiling_on_docs(spark, docs):
 
 def test_jvm_assigner_matches_arrow_assigner(spark, docs):
     """The production JVM assigner (per-depth broadcast hash joins + coalesce)
-    is bit-identical to the legacy Arrow searchsorted path on every element,
-    and its physical plan contains zero Python stages."""
+    is bit-identical to the independent Arrow assigner on every element, and
+    its physical plan contains zero Python stages."""
     from pyspark.sql import functions as F
 
     from osmquadtree_bin_spark.spans import explode_geoms
@@ -144,11 +145,11 @@ def test_jvm_assigner_matches_arrow_assigner(spark, docs):
     )
     cols = ["id", "tile_idx", "tile_qt"]
     a = (
-        assign_tiles(elements, g, impl="jvm").select(*cols)
+        assign_tiles(elements, g).select(*cols)
         .toPandas().sort_values("id").reset_index(drop=True)
     )
     b = (
-        assign_tiles(elements, g, impl="arrow").select(*cols)
+        assign_tiles_arrow(elements, g).select(*cols)
         .toPandas().sort_values("id").reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(a, b)
@@ -169,7 +170,8 @@ def test_jvm_assigner_matches_arrow_assigner(spark, docs):
 
 def test_jvm_assigner_overflow_and_shallow_elements(spark):
     """Elements with NO ancestor group land in the overflow tile (tile_qt 0),
-    matching the Arrow path; elements shallower than every group key too."""
+    matching the independent Arrow assigner; elements shallower than every
+    group key too."""
     # groups only at depth 3 under one subtree; elements elsewhere overflow
     k3 = qtk.from_string("AAB")
     g = pd.DataFrame({"tile_idx": [0], "tile_qt": [k3], "cnt": [10]})
@@ -183,7 +185,7 @@ def test_jvm_assigner_overflow_and_shallow_elements(spark):
         .toPandas().sort_values("id").reset_index(drop=True)
     )
     want_arrow = (
-        assign_tiles(el, g, impl="arrow").select("id", "tile_idx", "tile_qt")
+        assign_tiles_arrow(el, g).select("id", "tile_idx", "tile_qt")
         .toPandas().sort_values("id").reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want_arrow)
@@ -226,3 +228,11 @@ def test_find_groups_vectorized_parity():
                 got.astype("int64"), want.astype("int64"),
                 check_dtype=False,
             ), (target, minimum, len(cells))
+
+
+def test_general_assigner_without_groups(spark):
+    """No groups at all: every element lands in overflow tile 0 (tile_qt 0)."""
+    g = pd.DataFrame({c: np.array([], np.int64) for c in ("tile_idx", "tile_qt", "cnt")})
+    el = spark.createDataFrame([(1, qtk.from_string("AB")), (2, 0)], "id long, qt long")
+    got = assign_tiles(el, g).orderBy("id").collect()
+    assert [(r["tile_idx"], r["tile_qt"]) for r in got] == [(0, 0), (0, 0)]

@@ -11,6 +11,7 @@ before the judge sees it.
 from __future__ import annotations
 
 import os
+import re
 import sys
 import tempfile
 
@@ -94,12 +95,22 @@ def main() -> None:
         counts["cell"].to_numpy(np.int64), counts["cnt"].to_numpy(np.int64), 200, 100
     )
     assigned = assign_tiles(elements, groups)
-    p = executed(assigned.filter(F.col("tile_idx") == 3))
+    one_tile = assigned.filter(F.col("tile_idx") == 3)
+    one_tile.collect()  # AQE reuses exchanges as its stages run
+    p = executed(one_tile).split("== Initial Plan ==")[0]  # the final plan
     n_depths = len(set(int(k) & 31 for k in groups["tile_qt"]))
     check(
         "tile assignment fully JVM-side (per-depth broadcast hash joins, zero Python)",
         f"{p.count('BroadcastHashJoin')}x BroadcastHashJoin for {n_depths} group depths; EvalPython absent",
         "EvalPython" not in p and p.count("BroadcastHashJoin") >= n_depths,
+    )
+    n_bx = len(re.findall(r"[+:]- BroadcastExchange", p))
+    n_reused = len(re.findall(r"[+:]- ReusedExchange", p))
+    check(
+        "general-arm tile assignment broadcasts ONE build side for every depth",
+        f"final plan: {n_bx}x BroadcastExchange + {n_reused}x ReusedExchange "
+        f"for {n_depths} group depths",
+        n_bx == 1 and n_reused == n_depths - 1,
     )
     check(
         "tile filter does NOT blow up the plan below the coalesce",

@@ -29,13 +29,11 @@ def main() -> None:
     ap.add_argument("--geojson", action="store_true")
     args = ap.parse_args()
 
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import SparkSession
 
     from osmquadtree_bin_spark.plans.store import TileQueryEngine
     from osmquadtree_bin_spark.quadtree import COORD_SCALE
-    from osmquadtree_bin_spark.sources import poly_to_regions, to_geojson
+    from osmquadtree_bin_spark.sources import poly_to_regions, regions_frame, to_geojson
 
     spark = SparkSession.builder.appName("oqt-extract").getOrCreate()
 
@@ -55,11 +53,10 @@ def main() -> None:
 
     if args.bbox:
         mnx, mny, mxx, mxy = (float(v) for v in args.bbox.split(","))
-        regions = spark.createDataFrame(
+        regions = regions_frame(
+            spark,
             [("extract", "bbox", int(mnx * COORD_SCALE), int(mny * COORD_SCALE),
               int(mxx * COORD_SCALE), int(mxy * COORD_SCALE), None, None)],
-            "region_id string, kind string, minx long, miny long, maxx long, "
-            "maxy long, lons array<long>, lats array<long>",
         )
     elif args.poly:
         regions = poly_to_regions(spark, args.poly)

@@ -38,31 +38,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _parquet_rows(path: str) -> int | None:
-    """Exact row count from parquet footers — a driver-side metadata read
-    replacing a full-scan count() job (the scan was a hidden, untimed wall
-    between parse_qt and count_tree). Local-fs implementation; on HDFS/S3
-    the same footers are read through the FS API (on Iceberg it's a single
-    manifest-summary lookup). None → caller falls back to a Spark count."""
-    try:
-        import glob
-
-        import pyarrow.parquet as pq
-
-        files = glob.glob(os.path.join(path, "*.parquet"))
-        if not files:
-            return None
-        return sum(pq.read_metadata(f).num_rows for f in files)
-    except (OSError, ValueError, KeyError) as e:  # narrow: a corrupt-footer
-        # signal must surface, not vanish into the fallback (r05 ADVICE)
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "parquet row-count footer walk of %s failed (%s: %s) — falling "
-            "back to a distributed count", path, type(e).__name__, e)
-        return None
-
-
 def _tile_rows_from_footers(
     tiled_path: str, max_files: int = 50_000
 ) -> dict[int, int] | None:
@@ -124,6 +99,7 @@ def prepare_pipeline(
     import numpy as np
     from pyspark.sql import functions as F
 
+    from osmquadtree_bin_spark.footers import parquet_rows
     from osmquadtree_bin_spark.spans import explode_geoms
     from osmquadtree_bin_spark.tiling import assign_tiles, count_tree, find_groups
     from osmquadtree_bin_spark.tuning import scan_splits_for, shuffle_partitions_for
@@ -211,7 +187,7 @@ def prepare_pipeline(
 
         timed("parse_qt", parse)
     slim = spark.read.parquet(el_path)
-    n_elements = _parquet_rows(el_path)
+    n_elements = parquet_rows(el_path)
     if n_elements is None:  # non-local fs fallback: one Spark count job
         n_elements = slim.count()
     counts = timed("count_tree", lambda: count_tree(slim, n_rows_hint=n_elements))

@@ -36,6 +36,45 @@ def tile_files(tiled_path: str, tiles: list[int] | None = None) -> dict[int, lis
     }
 
 
+def _guarded_walk(path: str, walk):
+    """``walk(pq)`` with pyarrow's parquet module, or None (logged) when
+    pyarrow is missing or the walk fails. The except clause is narrow on
+    purpose: a corrupt-footer signal must surface in the log, not silently
+    vanish into the fallback (r05 ADVICE)."""
+    try:
+        import pyarrow.parquet as pq
+        from pyarrow import ArrowException
+    except ImportError as e:
+        log.warning("no pyarrow for the footer walk of %s (%s) — falling back "
+                    "to a distributed count", path, e)
+        return None
+    try:
+        return walk(pq)
+    except (OSError, ValueError, KeyError, ArrowException) as e:
+        log.warning(
+            "footer walk of %s failed (%s: %s) — falling back to a "
+            "distributed count; if this is a corrupt-footer signal it needs "
+            "attention, not silence",
+            path,
+            type(e).__name__,
+            e,
+        )
+        return None
+
+
+def parquet_rows(path: str) -> int | None:
+    """Exact row count of a flat parquet directory from its file footers — a
+    driver-side metadata read replacing a full-scan ``count()`` job. None →
+    caller falls back to the Spark count (no pyarrow, no ``*.parquet`` files,
+    non-local fs, corrupt footer)."""
+
+    def walk(pq):
+        files = glob.glob(os.path.join(path, "*.parquet"))
+        return sum(pq.read_metadata(f).num_rows for f in files) if files else None
+
+    return _guarded_walk(path, walk)
+
+
 def tile_rows_from_footers(
     tiled_path: str,
     max_files: int = 50_000,
@@ -48,17 +87,9 @@ def tile_rows_from_footers(
     full-store walk is for the post-prepare audit). None → caller falls
     back to the Spark count (no pyarrow, non-partitioned layout, non-local
     fs, corrupt footer, or more files than a serial driver walk should
-    touch). The except clause is narrow on purpose: a corrupt-footer signal
-    must surface in the log, not silently vanish into the fallback (r05
-    ADVICE)."""
-    try:
-        import pyarrow.parquet as pq
-        from pyarrow import ArrowException
-    except ImportError as e:
-        log.warning("no pyarrow for the footer walk of %s (%s) — falling back "
-                    "to a distributed count", tiled_path, e)
-        return None
-    try:
+    touch)."""
+
+    def walk(pq):
         per_dir = tile_files(tiled_path, tiles)
         if not per_dir:
             return {} if tiles is not None else None
@@ -68,13 +99,5 @@ def tile_rows_from_footers(
             t: sum(pq.read_metadata(f).num_rows for f in fs)
             for t, fs in per_dir.items()
         }
-    except (OSError, ValueError, KeyError, ArrowException) as e:
-        log.warning(
-            "footer walk of %s failed (%s: %s) — falling back to a "
-            "distributed count; if this is a corrupt-footer signal it needs "
-            "attention, not silence",
-            tiled_path,
-            type(e).__name__,
-            e,
-        )
-        return None
+
+    return _guarded_walk(tiled_path, walk)

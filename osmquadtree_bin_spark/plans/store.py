@@ -7,19 +7,23 @@ a pruned scan of the packed tile store (``pds.Filter``/``FilterTile``,
 (:600-602).
 
 Spark shape: the store is tile-partitioned parquet (Iceberg in production).
-``query_bbox`` computes the pruned tile list on the driver (a numpy pass over
-the group keys — the P1 generator), filters with ``tile_idx IN (...)`` so the
-scan reads ONLY those hive partitions (verify with
-``.explain`` → PartitionFilters), applies the exact bbox predicate, registers
-the planet_osm views over the slice, and hands back a dict of DataFrames —
-on which any corpus query runs via ``spark.sql``.
+``scan_bbox`` computes the pruned tile list on the driver (a numpy pass over
+the group keys — the P1 generator) and reads ONLY those hive partitions: the
+scan is built over the pruned ``tile_idx=N`` directories with the store
+schema read once at construction, so a request neither lists the whole store
+nor runs a schema-inference job. The ``tile_idx IN (...)`` filter stays
+(``.explain`` → PartitionFilters). It applies the exact bbox predicate;
+``tables_for_bbox`` registers the planet_osm views over the slice, on which
+any corpus query runs via ``spark.sql``.
 """
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.pip_join import region_tiles
 from .tables import register_tables
@@ -32,6 +36,31 @@ class TileQueryEngine:
         self.spark = spark
         self.store_path = store_path
         self.groups = groups
+        self.schema = spark.read.parquet(store_path).schema
+
+    def read_tiles(self, tiles: list[int], where: str | None = None) -> DataFrame:
+        """The store restricted to ``tiles`` and to the SQL predicate
+        ``where``: a pinned-schema read of just their ``tile_idx=N``
+        directories. The directories are listed per call, so files that
+        ``TiledStore.apply_diff`` rewrote since the engine was built are
+        seen; a tile without a directory (emptied by a diff) is skipped, and
+        no directory at all gives an empty frame. The predicate is one SQL
+        string in one filter: built from Column objects it costs a py4j
+        round trip per literal (~20 ms on a 4-vCPU Xeon for a 9-tile
+        ``isin`` and a bbox)."""
+        dirs = [
+            d for t in sorted(set(tiles))
+            if os.path.isdir(d := os.path.join(self.store_path, f"tile_idx={t}"))
+        ]
+        if not dirs:
+            return self.spark.createDataFrame([], self.schema)
+        cond = f"tile_idx IN ({', '.join(str(int(t)) for t in tiles)})"  # → PartitionFilters
+        return (
+            self.spark.read.schema(self.schema)
+            .option("basePath", self.store_path)
+            .parquet(*dirs)
+            .filter(cond if where is None else f"{cond} AND {where}")
+        )
 
     def pruned_tiles(self, minx: int, miny: int, maxx: int, maxy: int) -> list[int]:
         """P1 generator: tile_idx list whose buffered tile bounds intersect."""
@@ -46,14 +75,10 @@ class TileQueryEngine:
         """P6: pruned + exact-filtered scan of the tiled store."""
         if (maxx - minx) > MAX_BBOX_UNITS or (maxy - miny) > MAX_BBOX_UNITS:
             raise ValueError("bbox too large (reference guard, geometry.go:600-602)")
-        tiles = self.pruned_tiles(minx, miny, maxx, maxy)
-        df = (
-            self.spark.read.parquet(self.store_path)
-            .filter(F.col("tile_idx").isin(tiles))  # → hive partition pruning
-            .filter(
-                (F.col("minx") <= maxx) & (F.col("maxx") >= minx)
-                & (F.col("miny") <= maxy) & (F.col("maxy") >= miny)
-            )
+        df = self.read_tiles(
+            self.pruned_tiles(minx, miny, maxx, maxy),
+            f"minx <= {int(maxx)} AND maxx >= {int(minx)} "
+            f"AND miny <= {int(maxy)} AND maxy >= {int(miny)}",
         )
         return df.select(*columns) if columns else df
 
@@ -71,19 +96,14 @@ class TileQueryEngine:
         """J8 raw-tile fetch (``tq.rawtile``, ``osmquadtree-geometry.go:283-314``):
         every stored element whose qt is a descendant-or-equal of the raster
         cell — tile partitions pruned first, then the rounded-key equi-filter."""
-        import numpy as np
-
         from .. import quadtree as qtk
-        from ..tiling import qt_round_expr
+        from ..tiling import qt_round_sql
 
         req = int(qtk.from_tuple(np.array([tx]), np.array([ty]), np.array([tz]))[0])
         minx, miny, maxx, maxy = (int(v[0]) for v in qtk.bounds(np.array([req]), 0.05))
-        tiles = self.pruned_tiles(minx, miny, maxx, maxy)
-        return (
-            self.spark.read.parquet(self.store_path)
-            .filter(F.col("tile_idx").isin(tiles))
-            .filter((F.col("qt").bitwiseAND(F.lit(31))) >= tz)
-            .filter(qt_round_expr("qt", tz) == req)
+        return self.read_tiles(
+            self.pruned_tiles(minx, miny, maxx, maxy),
+            f"(qt & 31) >= {int(tz)} AND {qt_round_sql('qt', tz)} = {req}",
         )
 
     def extract(
@@ -105,9 +125,7 @@ class TileQueryEngine:
             else:
                 bb = (min(r["lons"]), min(r["lats"]), max(r["lons"]), max(r["lats"]))
             tiles.update(self.pruned_tiles(*(int(v) for v in bb)))
-        elements = self.spark.read.parquet(self.store_path).filter(
-            F.col("tile_idx").isin(sorted(tiles))
-        )
+        elements = self.read_tiles(sorted(tiles))
         matched = pip_join(elements, regions)
         trimmed = idset_trim(elements, matched)
         return trimmed.orderBy("id") if sort_by_id else trimmed

@@ -6,6 +6,17 @@ server (``/root/reference/osmquadtree-geometry.go:384-550`` route handlers,
 bounded collect of an already-pruned Spark plan (tile partition pruning +
 exact predicates), never a bulk path.
 
+One Spark job per request: a /tile or /bbox miss runs exactly one job. The
+engine reads only the pruned tile directories with a pinned schema (no
+store-wide listing, no schema-inference job), and the bounded collect
+(``tuning.collect_limited``) scopes ``spark.sql.limit.initialNumPartitions``
+so Spark's take scans every pruned partition in its first job instead of
+one partition first and the rest in a second. The conf is session-wide, so
+it is set and restored around each collect; that is safe because engine
+calls are serialized behind ``TileServer._lock``. /extract's one-row region
+frame is driver-local (``sources.regions_frame``), so collecting it to prune
+tiles and to build the PIP predicate runs no job.
+
 Routes (GET):
     /                           embedded Leaflet viewer (static HTML)
     /status                     store + ledger state (JSON)
@@ -36,7 +47,8 @@ from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from .sources import to_geojson
+from .sources import regions_frame, to_geojson
+from .tuning import collect_limited
 
 BBOX_CACHE_SIZE = 1  # osmquadtree-geometry.go:235-243
 TILE_CACHE_SIZE = 3  # osmquadtree-geometry.go:291-298
@@ -162,16 +174,14 @@ class TileServer:
 
     def page_query(self, sql: str, bbox: tuple[int, int, int, int]) -> str:
         with self._lock:
-            rows = self.engine.sql(sql, bbox).limit(self.limit).collect()
+            rows = collect_limited(self.engine.sql(sql, bbox), self.limit)
         return json.dumps(
             {"rows": [self._jsonable_row(r.asDict()) for r in rows], "n": len(rows)}
         )
 
     def _extract_df(self, minx: int, miny: int, maxx: int, maxy: int):
-        regions = self.engine.spark.createDataFrame(
-            [("req", "bbox", minx, miny, maxx, maxy, None, None)],
-            "region_id string, kind string, minx long, miny long, "
-            "maxx long, maxy long, lons array<long>, lats array<long>",
+        regions = regions_frame(
+            self.engine.spark, [("req", "bbox", minx, miny, maxx, maxy, None, None)]
         )
         return self.engine.extract(regions)
 

@@ -19,6 +19,7 @@ import json
 from pyspark.sql import DataFrame, functions as F
 
 from .quadtree import COORD_SCALE
+from .tuning import collect_limited
 
 
 # ------------------------------------------------------------------ S13 .poly
@@ -46,6 +47,27 @@ def read_poly(path: str) -> dict:
     return {"name": name, "rings": rings}
 
 
+REGION_SCHEMA = (
+    "region_id string, kind string, minx long, miny long, maxx long, maxy long, "
+    "lons array<long>, lats array<long>"
+)
+
+
+def regions_frame(spark, rows: list[tuple], hole: bool = False) -> DataFrame:
+    """The engine's regions frame from ``(region_id, kind, minx, miny, maxx,
+    maxy, lons, lats[, hole])`` tuples (bbox regions: lons/lats None;
+    polygons: minx..maxy None). Built from a pandas frame, so with Arrow on
+    it is a driver-local ``LocalTableScan``: the collects that prune and
+    broadcast it (``TileQueryEngine.extract``, ``pip_join``) run no Spark
+    job. ``hole=True`` adds the ``.poly`` hole-ring flag column."""
+    import pandas as pd
+
+    schema = REGION_SCHEMA + (", hole boolean" if hole else "")
+    cols = [c.split()[0] for c in schema.split(", ")]
+    # object columns: a None-holding int column must not become float NaN
+    return spark.createDataFrame(pd.DataFrame(rows, columns=cols, dtype=object), schema)
+
+
 def poly_to_regions(spark, path: str) -> DataFrame:
     """.poly → the engine's regions frame. All rings share the poly's name as
     region_id; hole rings carry hole=true and are SUBTRACTED by pip_join
@@ -55,11 +77,7 @@ def poly_to_regions(spark, path: str) -> DataFrame:
         (poly["name"], "polygon", None, None, None, None, lons, lats, hole)
         for lons, lats, hole in poly["rings"]
     ]
-    return spark.createDataFrame(
-        rows,
-        "region_id string, kind string, minx long, miny long, maxx long, maxy long, "
-        "lons array<long>, lats array<long>, hole boolean",
-    )
+    return regions_frame(spark, rows, hole=True)
 
 
 def write_poly(path: str, name: str, rings: list[tuple[list[int], list[int], bool]]):
@@ -80,8 +98,9 @@ def to_geojson(df: DataFrame, wkt_col: str = "wkt", limit: int = 10000) -> str:
     Geometry parse is WKT → GeoJSON coordinates (points/linestrings/polygons,
     the engine's three types); properties = every other column. Collect is
     bounded by ``limit`` (a serving endpoint, not a bulk path — matches the
-    reference server's per-tile responses)."""
-    rows = df.limit(limit).collect()
+    reference server's per-tile responses), in one Spark job
+    (:func:`tuning.collect_limited`)."""
+    rows = collect_limited(df, limit)
     feats = []
     for r in rows:
         d = r.asDict()

@@ -42,14 +42,16 @@ GROUP_MINIMUM = 4000  # osmquadtree-prepare.go:89
 MAX_DRIVER_CELLS = 150_000  # cap on the driver-side tree (SURVEY.md §7 risk 6)
 
 
+def qt_round_sql(col_name: str, level: int) -> str:
+    """SQL text of :func:`qt_round_expr`."""
+    d = f"least({col_name} & 31, {int(level)})"
+    return f"(shiftleft(shiftrightunsigned({col_name} & -32, 63 - 2*{d}), 63 - 2*{d}) | {d})"
+
+
 def qt_round_expr(col_name: str, level: int):
     """JVM-side round_to (same bit math as quadtree.round_to) — keeps the
     count-tree aggregation in whole-stage codegen, no Python round trip."""
-    d = f"least({col_name} & 31, {int(level)})"
-    return F.expr(
-        f"(shiftleft(shiftrightunsigned({col_name} & -32, 63 - 2*{d}), 63 - 2*{d}) "
-        f"| {d})"
-    )
+    return F.expr(qt_round_sql(col_name, level))
 
 
 def count_tree(

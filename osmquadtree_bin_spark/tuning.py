@@ -17,7 +17,8 @@ Scoped, never session-set: ``scan_splits_for`` saves/restores the conf around
 the one action that needs it (the ``apply_diff`` partitionOverwriteMode leak
 is the cautionary tale). Spark reads the conf at physical-planning time, i.e.
 when the action runs, so wrapping the action is sufficient even for a
-DataFrame built earlier.
+DataFrame built earlier. ``collect_limited`` scopes the bounded-take conf the
+same way for the serving endpoints.
 """
 
 from __future__ import annotations
@@ -29,6 +30,8 @@ MIN_SPLIT_BYTES = 4 * 1024 * 1024
 DEFAULT_SPLIT_BYTES = 128 * 1024 * 1024
 TARGET_WAVES = 4
 _KEY = "spark.sql.files.maxPartitionBytes"
+_LIMIT_PARTS_KEY = "spark.sql.limit.initialNumPartitions"
+_ALL_PARTITIONS = 2**31 - 1  # first take job covers every partition
 
 
 def input_bytes(df) -> int:
@@ -89,16 +92,33 @@ def shuffle_partitions_for(df, waves: int = TARGET_WAVES,
 
 
 @contextmanager
-def scan_splits_for(df, waves: int = TARGET_WAVES, floor_bytes: int = MIN_SPLIT_BYTES):
-    """Scope maxPartitionBytes to the actions run inside this block so the
-    scan of ``df`` fills the session's cores for ``waves`` waves."""
-    spark = df.sparkSession
-    old = spark.conf.get(_KEY, None)
-    spark.conf.set(_KEY, str(split_bytes(df, waves, floor_bytes)))
+def scoped_conf(spark, key: str, value: str):
+    """Set a session conf for the actions run inside this block only: save,
+    set, then restore (or unset) it."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
         if old is None:
-            spark.conf.unset(_KEY)
+            spark.conf.unset(key)
         else:
-            spark.conf.set(_KEY, old)
+            spark.conf.set(key, old)
+
+
+def scan_splits_for(df, waves: int = TARGET_WAVES, floor_bytes: int = MIN_SPLIT_BYTES):
+    """Scope maxPartitionBytes to the actions run inside this block so the
+    scan of ``df`` fills the session's cores for ``waves`` waves."""
+    return scoped_conf(df.sparkSession, _KEY, str(split_bytes(df, waves, floor_bytes)))
+
+
+def collect_limited(df, limit: int) -> list:
+    """``df.limit(limit).collect()`` as ONE Spark job. Spark's bounded take
+    scans ``spark.sql.limit.initialNumPartitions`` partitions (default 1)
+    in a first job, then runs more jobs over the rest while it is short of
+    ``limit`` rows. A served response is usually shorter than its limit, so
+    the take ends up scanning every partition of its pruned scan anyway;
+    here the first job takes them all. Meant for pruned, already-small
+    plans (serving endpoints), not for sampling a bulk table."""
+    with scoped_conf(df.sparkSession, _LIMIT_PARTS_KEY, str(_ALL_PARTITIONS)):
+        return df.limit(limit).collect()

@@ -2,6 +2,7 @@
 documented "fall back to a distributed count" signal, and logs why."""
 
 import logging
+import os
 import sys
 
 import pyarrow as pa
@@ -46,11 +47,31 @@ def test_arrow_error_beyond_invalid_falls_back(layout, monkeypatch, caplog):
 
 
 def test_truncated_footer_falls_back(layout, caplog):
-    import os
-
     f = os.path.join(layout, "tile_idx=1", "part-0.parquet")
     with open(f, "r+b") as fh:
         fh.truncate(os.path.getsize(f) // 2)
     with caplog.at_level(logging.WARNING, logger=footers.__name__):
         assert footers.tile_rows_from_footers(layout, tiles=[1]) is None
     assert "failed" in caplog.text
+
+
+def test_parquet_rows_counts(layout):
+    assert footers.parquet_rows(os.path.join(layout, "tile_idx=0")) == 3
+    assert footers.parquet_rows(layout) is None  # no *.parquet at this level
+
+
+def test_parquet_rows_missing_pyarrow_falls_back(layout, monkeypatch, caplog):
+    monkeypatch.setitem(sys.modules, "pyarrow.parquet", None)  # import fails
+    with caplog.at_level(logging.WARNING, logger=footers.__name__):
+        assert footers.parquet_rows(os.path.join(layout, "tile_idx=0")) is None
+    assert "no pyarrow" in caplog.text
+
+
+def test_parquet_rows_arrow_error_falls_back(layout, monkeypatch, caplog):
+    def boom(path):
+        raise pa.ArrowNotImplementedError("unsupported footer feature")
+
+    monkeypatch.setattr(pq, "read_metadata", boom)
+    with caplog.at_level(logging.WARNING, logger=footers.__name__):
+        assert footers.parquet_rows(os.path.join(layout, "tile_idx=0")) is None
+    assert "ArrowNotImplementedError" in caplog.text

@@ -5,6 +5,7 @@ status / UI page) and its exact cache sizing (1 bbox result, 3 raw-tile
 results, osmquadtree-geometry.go:235-243 & :291-298)."""
 
 import json
+import os
 import urllib.parse
 import urllib.request
 
@@ -181,6 +182,156 @@ def test_extract_parquet_artifact_roundtrip(served, tmp_path):
     store = TiledStore(spark, str(tmp_path / "reingested"))
     store.write_initial(assign_tiles(back, groups, counts=counts))
     assert store.read().count() == len(want)
+
+
+def _spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran on this thread)."""
+    sc = spark.sparkContext
+    group = f"server-jobs-{id(fn)}"
+    sc.setJobGroup(group, "server job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bbox_and_tile_miss_one_spark_job(served):
+    """A /bbox or /tile cache miss is one Spark job: a pinned-schema read of
+    the pruned tile directories (no listing of the whole store, no schema
+    inference job) and a bounded collect whose first job takes every
+    partition. A bbox miss ran 3 jobs when each request read the whole store
+    (schema inference, then a take of one partition and then the rest)."""
+    _, ts, engine = served
+    m0 = ts.bbox_cache.misses
+    out, jobs = _spark_jobs(
+        engine.spark, lambda: ts.page_bbox(-4500001, 510000001, 2500001, 520000001)
+    )
+    assert ts.bbox_cache.misses == m0 + 1
+    assert json.loads(out)["features"] and jobs == 1
+    import osmquadtree_bin_spark.quadtree as qtk
+
+    row = engine.spark.read.parquet(engine.store_path).select("qt").first()
+    tx, ty, tz = (int(v[0]) for v in qtk.to_tuple(qtk.round_to(np.array([row["qt"]]), 8)))
+    m0 = ts.tile_cache.misses
+    out, jobs = _spark_jobs(engine.spark, lambda: ts.page_tile(tz, tx, ty + 1))
+    assert ts.tile_cache.misses == m0 + 1
+    assert json.loads(out)["type"] == "FeatureCollection" and jobs == 1
+
+
+def test_extract_region_frame_is_driver_local(served, monkeypatch):
+    """/extract's region frame is collected twice (tile pruning, pip_join's
+    broadcast side); it is driver-local, so neither collect runs a job."""
+    _, ts, engine = served
+    seen = []
+    orig = engine.extract
+    monkeypatch.setattr(engine, "extract", lambda regions: seen.append(regions) or orig(regions))
+    ts.page_extract(-4500000, 510000000, 2500000, 520000000)
+    (regions,) = seen
+    rows, jobs = _spark_jobs(engine.spark, lambda: (regions.collect(), regions.collect()))
+    assert jobs == 0 and rows[0][0]["region_id"] == "req"
+
+
+@pytest.fixture()
+def diffed(spark, docs, tmp_path):
+    """An engine and server built over a TiledStore, THEN a diff that
+    rewrites tile ``a`` (every row's doc_id changed) and empties every tile
+    that the centre of tile ``b``'s cell prunes to (every row deleted), so a
+    request there has no tile directory left to read."""
+    from osmquadtree_bin_spark import quadtree as qtk
+    from osmquadtree_bin_spark.plans.store import MAX_BBOX_UNITS, TileQueryEngine
+    from osmquadtree_bin_spark.server import serve
+    from osmquadtree_bin_spark.spans import explode_geoms
+    from osmquadtree_bin_spark.streaming.update import TiledStore
+    from osmquadtree_bin_spark.tiling import assign_tiles, count_tree, find_groups
+
+    elements = explode_geoms(docs)
+    counts = count_tree(elements)
+    groups = find_groups(
+        counts["cell"].to_numpy(np.int64), counts["cnt"].to_numpy(np.int64), 200, 100
+    )
+    st = TiledStore(spark, str(tmp_path / "store"))
+    st.write_initial(assign_tiles(elements, groups, counts=counts).drop("tile_qt"))
+    engine = TileQueryEngine(spark, st.data_path, groups)
+    httpd, ts = serve(engine)
+
+    def centre(key):
+        x0, y0, x1, y1 = (int(v[0]) for v in qtk.bounds(np.array([key])))
+        return (x0 + x1) // 2, (y0 + y1) // 2
+
+    # tiles nest (a group's key can be an ancestor of others' keys), so
+    # emptying a request's pruned set means emptying every tile it prunes to
+    b_qt = min(groups.tile_qt, key=lambda k: len(engine.pruned_tiles(*centre(k), *centre(k))))
+    gone = engine.pruned_tiles(*centre(b_qt), *centre(b_qt))
+    ext = (
+        st.read().groupBy("tile_idx")
+        .agg(*(F.min(c).alias(c) for c in ("minx", "miny")),
+             *(F.max(c).alias(c) for c in ("maxx", "maxy")))
+        .filter(~F.col("tile_idx").isin(gone)
+                & (F.col("maxx") - F.col("minx") < MAX_BBOX_UNITS)
+                & (F.col("maxy") - F.col("miny") < MAX_BBOX_UNITS))
+        .orderBy("tile_idx").first()
+    )
+    a = ext["tile_idx"]
+    rows = st.read().filter(F.col("tile_idx").isin(a, *gone))
+    diff = (
+        rows.withColumn("doc_id", F.concat(F.lit("MOD:"), F.col("doc_id")))
+        .withColumn("changetype", F.when(F.col("tile_idx") == a, "modify").otherwise("delete"))
+        .withColumn("version", F.lit(1))
+    )
+    st.apply_diff(diff, state=1)
+    for t in gone:
+        assert not os.path.isdir(os.path.join(st.data_path, f"tile_idx={t}"))
+    yield {
+        "base": f"http://127.0.0.1:{httpd.server_address[1]}", "store": st,
+        "a_bbox": tuple(ext[c] for c in ("minx", "miny", "maxx", "maxy")),
+        "a_qt": int(groups.set_index("tile_idx").tile_qt[a]), "b_qt": int(b_qt),
+        "b_centre": centre(b_qt),
+    }
+    httpd.shutdown()
+
+
+def _feature_ids(body: str) -> list:
+    gj = json.loads(body)
+    assert gj["type"] == "FeatureCollection"
+    return sorted((f["properties"]["id"], f["properties"]["doc_id"]) for f in gj["features"])
+
+
+def _store_ids(df) -> list:
+    return sorted((r["id"], r["doc_id"]) for r in df.select("id", "doc_id").collect())
+
+
+def test_bbox_and_tile_see_rows_rewritten_after_engine_built(diffed):
+    """The engine lists the pruned tile directories per request: a diff
+    applied after it was built is served, with no 500 for the files the
+    diff replaced or for the emptied tile's removed directory."""
+    from osmquadtree_bin_spark import quadtree as qtk
+    from osmquadtree_bin_spark.tiling import qt_round_expr
+
+    store = diffed["store"].read()
+    minx, miny, maxx, maxy = diffed["a_bbox"]
+    status, body = _get(f"{diffed['base']}/bbox?minx={minx}&miny={miny}&maxx={maxx}&maxy={maxy}")
+    want = store.filter(
+        (F.col("minx") <= maxx) & (F.col("maxx") >= minx)
+        & (F.col("miny") <= maxy) & (F.col("maxy") >= miny)
+    )
+    got = _feature_ids(body)
+    assert status == 200 and got == _store_ids(want)
+    assert any(d.startswith("MOD:") for _, d in got)
+    for key in (diffed["a_qt"], diffed["b_qt"]):
+        tx, ty, tz = (int(v[0]) for v in qtk.to_tuple(np.array([key])))
+        status, body = _get(f"{diffed['base']}/tile/{tz}/{tx}/{ty}")
+        want = store.filter(
+            ((F.col("qt").bitwiseAND(F.lit(31))) >= tz) & (qt_round_expr("qt", tz) == key)
+        )
+        assert status == 200 and _feature_ids(body) == _store_ids(want)
+
+
+def test_request_on_emptied_tile_returns_empty_collection(diffed):
+    x, y = diffed["b_centre"]
+    status, body = _get(f"{diffed['base']}/bbox?minx={x}&miny={y}&maxx={x}&maxy={y}")
+    assert status == 200
+    assert json.loads(body) == {"type": "FeatureCollection", "features": []}
 
 
 def test_serve_rejects_non_loopback_without_optin():

@@ -157,6 +157,14 @@ def main() -> None:
             "PushedFilters on minx/maxx/miny/maxy",
             "LessThanOrEqual(minx" in p,
         )
+        n_pruned = len(eng.pruned_tiles(-4_500_000, 512_000_000, 2_500_000, 518_000_000))
+        index = re.search(r"InMemoryFileIndex\(\d+ paths\)", p)
+        check(
+            "served bbox scan lists only the pruned tile directories",
+            f"{index.group(0) if index else 'no InMemoryFileIndex'} for "
+            f"{n_pruned} pruned of {len(groups)} tiles",
+            index is not None and index.group(0) == f"InMemoryFileIndex({n_pruned} paths)",
+        )
 
     # --- resume safety: apply_diff must not flip session overwrite semantics
     # (round-4 verdict bug: a session-wide partitionOverwriteMode=dynamic

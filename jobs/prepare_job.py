@@ -19,7 +19,12 @@ Writes under --output:
                       find_groups, assign_write_tiled, lineage — the SAME
                       phases bench.py's scaling measurement times, because
                       both run ``prepare_pipeline`` (the one shipped code
-                      path) — plus resumed_phases
+                      path). Each phase P also carries P_steal_cores,
+                      P_busy_cores and P_pg_cpu_s (``hostmetrics.stage``;
+                      Linux only), count_tree its count_tree_* sub-timings
+                      (agg_collect_s, driver_s, cells_collected, cells_out,
+                      level); plus resumed_phases, assignments_sec,
+                      total_sec, n_elements, n_groups
 
 ``--gen-docs N`` generates a deterministic synthetic input instead of
 --input (sandbox/demo mode). ``--resume`` re-enters a killed run, skipping
@@ -72,7 +77,8 @@ def prepare_pipeline(
     spark-submit job (``main`` below) and ``bench.py``'s north-rule scaling
     measurement run, so the measured pipeline is literally the shipped job.
 
-    Phases (per-phase walls returned in ``stages``):
+    Phases (each phase's ``hostmetrics.stage`` record returned in
+    ``stages``):
       parse_qt            span parse + JVM quadtree Calculate → slim elements
                           table staged to parquet (int32 bbox, int8 geom_type,
                           NO strings — the packed id encodes doc seq/span)
@@ -100,47 +106,13 @@ def prepare_pipeline(
     from pyspark.sql import functions as F
 
     from osmquadtree_bin_spark.footers import parquet_rows
+    from osmquadtree_bin_spark.hostmetrics import stage
     from osmquadtree_bin_spark.spans import explode_geoms
     from osmquadtree_bin_spark.tiling import assign_tiles, count_tree, find_groups
     from osmquadtree_bin_spark.tuning import scan_splits_for, shuffle_partitions_for
 
     stages: dict[str, float] = {}
     resumed: list[str] = []
-
-    def timed(label, fn):
-        # per-phase host metrics (hostmetrics.py): whole-guest busy/steal
-        # separates "slow" from "robbed"; process-group CPU is the phase's
-        # own compute cost, immune to steal and to other guest processes
-        from osmquadtree_bin_spark.hostmetrics import (
-            pg_cpu_by_role, pg_cpu_jiffies, pg_cpu_seconds_delta,
-            proc_stat, role_delta_seconds,
-        )
-
-        roles = os.environ.get("BENCH_CPU_ROLES") == "1"
-        # whole-guest (busy, steal, total) jiffies: ``steal`` is the
-        # hypervisor's runnable-but-preempted counter — per phase it tells
-        # apart "this phase is slow" from "this phase was robbed"
-        c0 = proc_stat()
-        p0 = pg_cpu_jiffies()
-        r0 = pg_cpu_by_role() if roles else None
-        t0 = time.perf_counter()
-        r = fn()
-        stages[label] = round(time.perf_counter() - t0, 3)
-        c1 = proc_stat()
-        p1 = pg_cpu_jiffies()
-        if roles:
-            rd = role_delta_seconds(r0, pg_cpu_by_role())
-            if rd:
-                stages[f"{label}_cpu_roles"] = rd
-        if c0 and c1 and c1[2] > c0[2]:
-            ncpu = os.cpu_count() or 1
-            dt = c1[2] - c0[2]
-            stages[f"{label}_steal_cores"] = round((c1[1] - c0[1]) / dt * ncpu, 3)
-            stages[f"{label}_busy_cores"] = round((c1[0] - c0[0]) / dt * ncpu, 3)
-        cpu_s = pg_cpu_seconds_delta(p0, p1)
-        if cpu_s is not None:
-            stages[f"{label}_pg_cpu_s"] = cpu_s
-        return r
 
     params = {
         "target": target, "minimum": minimum,
@@ -169,41 +141,33 @@ def prepare_pipeline(
         stages["parse_qt"] = 0.0
         resumed.append("parse_qt")
     else:
-
-        def parse():
-            # scan-split the docs input for this session's cores (a GB-scale
-            # input at default 128 MB splits runs the parse as a ragged
-            # 1.4-wave stage on 8 cores — tuning.py)
-            with scan_splits_for(docs):
-                explode_geoms(docs).select(
-                    "id",
-                    "qt",
-                    F.col("minx").cast("int").alias("minx"),
-                    F.col("miny").cast("int").alias("miny"),
-                    F.col("maxx").cast("int").alias("maxx"),
-                    F.col("maxy").cast("int").alias("maxy"),
-                    F.col("geom_type").cast("tinyint").alias("geom_type"),
-                ).write.mode("overwrite").parquet(el_path)
-
-        timed("parse_qt", parse)
+        # scan-split the docs input for this session's cores (a GB-scale
+        # input at default 128 MB splits runs the parse as a ragged
+        # 1.4-wave stage on 8 cores — tuning.py)
+        with stage(stages, "parse_qt"), scan_splits_for(docs):
+            explode_geoms(docs).select(
+                "id",
+                "qt",
+                F.col("minx").cast("int").alias("minx"),
+                F.col("miny").cast("int").alias("miny"),
+                F.col("maxx").cast("int").alias("maxx"),
+                F.col("maxy").cast("int").alias("maxy"),
+                F.col("geom_type").cast("tinyint").alias("geom_type"),
+            ).write.mode("overwrite").parquet(el_path)
     slim = spark.read.parquet(el_path)
     n_elements = parquet_rows(el_path)
     if n_elements is None:  # non-local fs fallback: one Spark count job
         n_elements = slim.count()
-    counts = timed("count_tree", lambda: count_tree(slim, n_rows_hint=n_elements))
-    from osmquadtree_bin_spark.tiling import LAST_COUNT_TREE_TIMINGS
-
-    for kk, vv in LAST_COUNT_TREE_TIMINGS.items():
-        stages[f"count_tree_{kk}"] = vv
-    groups = timed(
-        "find_groups",
-        lambda: find_groups(
+    with stage(stages, "count_tree"):
+        counts = count_tree(slim, n_rows_hint=n_elements)
+    stages.update({f"count_tree_{k}": v for k, v in counts.attrs.items()})
+    with stage(stages, "find_groups"):
+        groups = find_groups(
             counts["cell"].to_numpy(np.int64),
             counts["cnt"].to_numpy(np.int64),
             target,
             minimum,
-        ),
-    )
+        )
     tiled_path = os.path.join(work_dir, f"tiles{run_tag}")
     if resume and _phase_complete(tiled_path):
         stages["assign_write_tiled"] = 0.0
@@ -217,8 +181,7 @@ def prepare_pipeline(
             .drop("tile_qt")
             .withColumn("tile_idx", F.col("tile_idx").cast("int"))
         )
-
-        def write():
+        with stage(stages, "assign_write_tiled"):
             # explicit partition count: wave-aligned for this session, byte-
             # bounded at scale; blocks AQE's sub-wave coalescing (tuning.py)
             w = (
@@ -230,8 +193,6 @@ def prepare_pipeline(
                 w = w.partitionBy("tile_idx")
             with scan_splits_for(slim):  # map side reads the slim table
                 w.parquet(tiled_path)
-
-        timed("assign_write_tiled", write)
 
     lineage_path = os.path.join(work_dir, f"lineage{run_tag}")
     if lineage:
@@ -308,7 +269,8 @@ def prepare_pipeline(
             )
             open(os.path.join(lineage_path, "_SUCCESS"), "w").close()
 
-        timed("lineage", lineage_write)
+        with stage(stages, "lineage"):
+            lineage_write()
 
     artifacts = {
         "elements_path": el_path,

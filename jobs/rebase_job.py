@@ -11,7 +11,13 @@ Writes under --output:
     tiles/            freshly re-grouped tile-partitioned elements
     qts.txt           count-tree dump over the MERGED element set (S12)
     groups.txt        the new tile groups (S12)
-    metrics.json      per-phase wall times (osmquadtree-rebase.go:730-734)
+    metrics.json      per-phase wall times (osmquadtree-rebase.go:730-734):
+                      merge_count, count_tree, find_groups, assign_write.
+                      Each phase P also carries P_steal_cores, P_busy_cores
+                      and P_pg_cpu_s (``hostmetrics.stage``, the same
+                      per-stage keys prepare_job writes; Linux only), and
+                      count_tree its count_tree_* sub-timings; plus
+                      total_sec, n_groups, n_cells
 """
 
 from __future__ import annotations
@@ -50,7 +56,7 @@ def main() -> None:
         diff, args.output, target=args.target, minimum=args.minimum
     )
     metrics["total_sec"] = round(time.perf_counter() - t0, 3)
-    metrics.update(out.rebase_phases)  # per-phase walls (rebase.go:730-734)
+    metrics.update(out.rebase_phases)  # per-phase records (rebase.go:730-734)
     metrics["n_groups"] = int(len(groups))
     metrics["n_cells"] = int(len(counts))
 

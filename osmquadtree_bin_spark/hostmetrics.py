@@ -5,23 +5,22 @@ Two complementary views, both from /proc (Linux-only, None elsewhere):
 * whole-guest busy/steal jiffies (`proc_stat`) — tells apart "this phase is
   slow" from "this phase was robbed" on a shared host (steal is the
   hypervisor's counter of runnable-but-preempted time);
-* process-group CPU jiffies (`pg_cpu_jiffies`) — the job's OWN compute cost
-  (driver python + the JVM it launched + executor JVMs + Arrow UDF workers,
-  which all inherit the pgid), immune to BOTH hypervisor steal (steal
-  inflates wall, never CPU time) and other guest processes.
+* process-tree CPU jiffies (`pg_cpu_jiffies`) — the job's OWN compute cost
+  (driver python + the JVM it launched + executor JVMs + Arrow UDF workers),
+  immune to BOTH hypervisor steal (steal inflates wall, never CPU time) and
+  other guest processes.
 
-A third, diagnostic view (`pg_cpu_by_role`) splits the process-group CPU by
-WHO burned it — per-thread, classified by thread name and process cmdline:
-executor task threads vs GC vs JIT vs shuffle/netty vs the Python driver vs
-Arrow UDF workers. This is how a "4N cores burn 3× the CPU of N" finding
-gets attributed: duplicated JVM services (GC/JIT per executor) look very
-different from inflated task compute (memory stalls / recomputation).
+`stage(record, name)` is the one stage timer built on both views: prepare,
+rebase and the scaling bench wrap each phase in it, and it writes that
+phase's record keys into the caller's dict (see its docstring).
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import time
+from contextlib import contextmanager
 
 
 def proc_stat() -> tuple[int, int, int] | None:
@@ -106,93 +105,36 @@ def pg_cpu_seconds_delta(before: int | None, after: int | None) -> float | None:
     return round((after - before) / os.sysconf("SC_CLK_TCK"), 2)
 
 
-# ------------------------------------------------------- role attribution
-# Thread-name prefixes → role buckets. HotSpot names its service threads
-# stably ("GC Thread#3", "G1 Conc#0", "C2 CompilerThre", "VM Thread");
-# Spark's executor task threads are "Executor task l" (truncated to 15
-# chars by the kernel comm limit).
-_THREAD_ROLES = (
-    ("Executor task", "task"),
-    ("GC Thread", "gc"),
-    ("G1 ", "gc"),
-    ("VM Thread", "gc"),
-    ("C2 Compiler", "jit"),
-    ("C1 Compiler", "jit"),
-    ("shuffle-", "net"),
-    ("netty", "net"),
-    ("rpc-", "net"),
-    ("dispatcher-", "net"),
-)
+def cores_between(before, after) -> dict[str, float]:
+    """Average stolen and busy cores of the whole guest between two
+    ``proc_stat`` samples; empty without /proc."""
+    if not before or not after or after[2] <= before[2]:
+        return {}
+    dt = after[2] - before[2]
+    ncpu = os.cpu_count() or 1
+    return {
+        "steal_cores": round((after[1] - before[1]) / dt * ncpu, 3),
+        "busy_cores": round((after[0] - before[0]) / dt * ncpu, 3),
+    }
 
 
-def _proc_role(pid: str) -> str:
-    """Classify a process by cmdline: the driver JVM vs executor JVMs vs
-    python (driver script / Arrow UDF workers) vs everything else."""
-    try:
-        with open(f"/proc/{pid}/cmdline", "rb") as f:
-            cmd = f.read().replace(b"\0", b" ").decode(errors="replace")
-    except OSError:
-        return "gone"
-    if "CoarseGrainedExecutorBackend" in cmd:
-        return "exec-jvm"
-    if "java" in cmd.split(" ", 1)[0]:
-        return "driver-jvm"
-    if "pyspark.daemon" in cmd or "pyspark.worker" in cmd:
-        return "py-udf"
-    if "python" in cmd.split(" ", 1)[0]:
-        return "py-driver"
-    return "other"
+@contextmanager
+def stage(record: dict, name: str):
+    """Time one pipeline stage into ``record``: ``name`` is its wall
+    seconds, ``name_steal_cores`` / ``name_busy_cores`` the whole guest's
+    average stolen and busy cores over the window, ``name_pg_cpu_s`` the
+    job's own process-tree CPU seconds. The /proc-backed keys are written
+    only when /proc can be read. A body that raises records nothing.
 
-
-def pg_cpu_by_role() -> dict[str, int] | None:
-    """Per-role CPU jiffies (utime+stime) for every THREAD of the caller's
-    descendant-process tree (see ``_job_pids``). Role key is
-    ``proc-role/thread-bucket`` for JVM service threads (task/gc/jit/net),
-    else just the proc role. Diagnostic companion to ``pg_cpu_jiffies`` —
-    no cutime folding, so short-lived reaped children are missed; use for
-    attribution shares, not absolute totals."""
-    pids = _job_pids()
-    if not pids:
-        return None
-    out: dict[str, int] = {}
-    for p in pids:
-        pid = str(p)
-        prole = _proc_role(pid)
-        for tst in glob.glob(f"/proc/{pid}/task/[0-9]*/stat"):
-            try:
-                with open(tst) as f:
-                    raw = f.read()
-                comm = raw[raw.index("(") + 1 : raw.rindex(")")]
-                tparts = raw.rsplit(") ", 1)[1].split()
-                jif = int(tparts[11]) + int(tparts[12])
-            except (OSError, IndexError, ValueError):
-                continue
-            if not jif:
-                continue
-            bucket = prole
-            if prole.endswith("jvm"):
-                for pref, b in _THREAD_ROLES:
-                    if comm.startswith(pref):
-                        bucket = f"{prole}/{b}"
-                        break
-                else:
-                    bucket = f"{prole}/misc"
-            out[bucket] = out.get(bucket, 0) + jif
-    return out
-
-
-def role_delta_seconds(
-    before: dict[str, int] | None, after: dict[str, int] | None
-) -> dict[str, float] | None:
-    """Per-role CPU-seconds between two ``pg_cpu_by_role`` snapshots
-    (roles only present before are dropped; a reaped thread's tail is
-    lost — see pg_cpu_by_role)."""
-    if before is None or after is None:
-        return None
-    tck = os.sysconf("SC_CLK_TCK")
-    out = {}
-    for k, v in after.items():
-        d = v - before.get(k, 0)
-        if d > 0:
-            out[k] = round(d / tck, 2)
-    return out
+    Sets no Spark job group: a caller that traces jobs by group (perfbench)
+    keeps every job of the stage inside its own span."""
+    c0, p0 = proc_stat(), pg_cpu_jiffies()
+    t0 = time.perf_counter()
+    yield
+    record[name] = round(time.perf_counter() - t0, 3)
+    c1, p1 = proc_stat(), pg_cpu_jiffies()
+    for k, v in cores_between(c0, c1).items():
+        record[f"{name}_{k}"] = v
+    cpu_s = pg_cpu_seconds_delta(p0, p1)
+    if cpu_s is not None:
+        record[f"{name}_pg_cpu_s"] = cpu_s

@@ -96,17 +96,9 @@ class TiledStore:
 
     # ------------------------------------------------------------- bootstrap
     def write_initial(self, assigned: DataFrame) -> None:
-        from ..tuning import shuffle_partitions_for
+        from ..tiling import write_tiled
 
-        # explicit partition count: wave-aligned, byte-bounded at scale;
-        # blocks AQE's sub-wave coalescing of repartition(col) (tuning.py)
-        (
-            assigned.repartition(shuffle_partitions_for(assigned), F.col("tile_idx"))
-            .sortWithinPartitions("tile_idx", "id")
-            .write.mode("overwrite")
-            .partitionBy("tile_idx")
-            .parquet(self.data_path)
-        )
+        write_tiled(assigned, self.data_path)
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.data_path)
@@ -320,38 +312,35 @@ class TiledStore:
 
         Returns (new_store, counts_pdf, groups_pdf); per-phase wall times
         (the ``osmquadtree-rebase.go:730-734`` metric shape) are stashed on
-        the returned store as ``new_store.rebase_phases``."""
-        import time
-
+        the returned store as ``new_store.rebase_phases``: each phase
+        (merge_count, count_tree, find_groups, assign_write) is one
+        ``hostmetrics.stage`` record, as in ``prepare_pipeline``, plus
+        count_tree's ``count_tree_*`` sub-timings."""
         import numpy as np
 
+        from ..hostmetrics import stage
         from ..tiling import assign_tiles, count_tree, find_groups
 
         phases: dict[str, float] = {}
-
-        def timed(label, fn):
-            t0 = time.perf_counter()
-            r = fn()
-            phases[label] = round(time.perf_counter() - t0, 3)
-            return r
-
         merged = merge_newest(
             self.read().drop("tile_idx", "tile_qt"), diff, version_col
         )
-        n = timed("merge_count", merged.count)
-        counts = timed("count_tree", lambda: count_tree(merged, n_rows_hint=n))
-        groups = timed(
-            "find_groups",
-            lambda: find_groups(
+        with stage(phases, "merge_count"):
+            n = merged.count()
+        with stage(phases, "count_tree"):
+            counts = count_tree(merged, n_rows_hint=n)
+        phases.update({f"count_tree_{k}": v for k, v in counts.attrs.items()})
+        with stage(phases, "find_groups"):
+            groups = find_groups(
                 counts["cell"].to_numpy(np.int64),
                 counts["cnt"].to_numpy(np.int64),
                 target,
                 minimum,
-            ),
-        )
+            )
         assigned = assign_tiles(merged, groups, counts=counts)
         out = TiledStore(self.spark, out_root)
-        timed("assign_write", lambda: out.write_initial(assigned))
+        with stage(phases, "assign_write"):
+            out.write_initial(assigned)
         out.rebase_phases = phases
         return out, counts, groups
 

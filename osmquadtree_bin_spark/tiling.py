@@ -59,7 +59,6 @@ def count_tree(
     level: int = QT_TREE_MAX_LEVEL,
     max_cells: int = MAX_DRIVER_CELLS,
     n_rows_hint: int | None = None,
-    scan_floor_bytes: int | None = None,
 ) -> pd.DataFrame:
     """Per-cell element counts at ``min(depth, level)`` (A3). Distributed agg,
     small driver-side result (sorted by key = DFS pre-order).
@@ -73,7 +72,12 @@ def count_tree(
     holds every occupied cell at ``level``, so at planet scale pass
     ``n_rows_hint`` (which caps ``level``) or a lower ``level``. The
     reference expects ~500k tiles at planet scale
-    (``osmquadtree-prepare.go:201``)."""
+    (``osmquadtree-prepare.go:201``).
+
+    The result's ``attrs`` carry the call's sub-timings: ``agg_collect_s``
+    (distributed agg + collect wall) vs ``driver_s`` (numpy coarsening
+    wall) — the split that tells fixed driver cost apart from scan scaling
+    — plus ``cells_collected``, ``cells_out`` and the final ``level``."""
     import math
 
     # ONE distributed pass: aggregate at the requested level and collect —
@@ -92,18 +96,14 @@ def count_tree(
         F.count(F.lit(1)).alias("cnt")
     )
     # split-size the scan for this session's cores (default 128 MB splits
-    # give the map side fewer tasks than cores on GB-scale tables).
-    # ``scan_floor_bytes`` (off by default, and now unused by
-    # prepare_pipeline): a 32 MB floor was tried to shrink the map-side
-    # partial duplication (12.8M shuffled partial rows at 32 map tasks vs
-    # 6.6M at 12 on the same 17M-row table), but a clean 2→8-core pair
-    # measured the floored scan SLOWER at the 8-core level (1.6 s → 2.7 s:
-    # the ragged 1.5-wave scan loses more than the halved shuffle gains),
-    # so full-wave splits stay the default everywhere. Kept as a knob for
-    # genuinely shuffle-bound callers at larger scales.
-    from .tuning import MIN_SPLIT_BYTES, scan_splits_for
+    # give the map side fewer tasks than cores on GB-scale tables). Full-wave
+    # splits even though more map tasks duplicate more partial-agg rows: a
+    # clean 2→8-core pair measured a 32 MB split floor SLOWER at 8 cores
+    # (1.6 s → 2.7 s; the ragged 1.5-wave scan loses more than the halved
+    # shuffle gains).
+    from .tuning import scan_splits_for
 
-    with scan_splits_for(elements, floor_bytes=scan_floor_bytes or MIN_SPLIT_BYTES):
+    with scan_splits_for(elements):
         pdf = agg.toPandas()
     t1 = _time.perf_counter()
     cells = pdf["cell"].to_numpy(np.int64)
@@ -119,95 +119,17 @@ def count_tree(
         cnts = g.to_numpy(np.int64)
     out = pd.DataFrame({"cell": cells, "cnt": cnts})
     out = out.sort_values("cell").reset_index(drop=True)
-    # sub-timing side channel (read by prepare_pipeline's stage metrics):
-    # distributed agg+collect wall vs driver-side numpy coarsening wall —
-    # the split that tells fixed driver cost apart from scan scaling
-    LAST_COUNT_TREE_TIMINGS.clear()
-    LAST_COUNT_TREE_TIMINGS.update(
-        {
-            "agg_collect_s": round(t1 - t0, 3),
-            "driver_s": round(_time.perf_counter() - t1, 3),
-            "cells_collected": int(len(pdf)),
-            "cells_out": int(len(out)),
-            "level": int(level),
-        }
-    )
+    out.attrs = {
+        "agg_collect_s": round(t1 - t0, 3),
+        "driver_s": round(_time.perf_counter() - t1, 3),
+        "cells_collected": int(len(pdf)),
+        "cells_out": int(len(out)),
+        "level": int(level),
+    }
     return out
 
 
-LAST_COUNT_TREE_TIMINGS: dict = {}
-
-
 # ------------------------------------------------------------- A4 group walk
-class _Node:
-    """Tree node — __slots__ + plain ints: the walk is driver-serial, its
-    constant factor is the pipeline's Amdahl term at scale."""
-
-    __slots__ = ("key", "count", "children", "total")
-
-    def __init__(self, key: int, count: int):
-        self.key = key
-        self.count = count
-        self.children: list[_Node] = []
-        self.total = 0
-
-
-def _common2(a: int, b: int) -> int:
-    """Scalar LCA of two keys (driver-side; hot-loop-friendly pure int ops)."""
-    x = (a & ~31) ^ (b & ~31)
-    prefix_pairs = 18 if x == 0 else (63 - x.bit_length()) // 2
-    d = min(a & 31, b & 31, prefix_pairs)
-    shift = 63 - 2 * d
-    return (((a & ~31) >> shift) << shift) | d
-
-
-def _build_tree(cells: np.ndarray, counts: np.ndarray) -> _Node:
-    """LCA-compressed (patricia-style) quadtree from DFS-pre-order (cell,
-    count) rows. Implicit internal nodes are materialized at the LCA of
-    adjacent subtrees so the group walk can merge scattered small cells at
-    the deepest ancestor where they amount to a group — at most 2n nodes."""
-    root = _Node(0, 0)
-    stack = [root]
-    for key, cnt in zip(cells.tolist(), counts.tolist()):
-        # inline ancestor test: pop while stack top is not an ancestor of key
-        while len(stack) > 1:
-            top = stack[-1]
-            tk = top.key
-            da = tk & 31
-            if da <= (key & 31):
-                shift = 63 - 2 * da
-                if (tk >> shift) == ((key & ~31) >> shift):
-                    break
-            stack.pop()
-        top = stack[-1]
-        if key == top.key:
-            top.count += cnt
-            continue
-        tc = top.children
-        if tc:
-            last = tc[-1]
-            lca = _common2(last.key, key)
-            if (lca & 31) > (top.key & 31):
-                inter = _Node(lca, 0)
-                inter.children.append(last)
-                tc[-1] = inter
-                stack.append(inter)
-                top = inter
-                tc = inter.children
-        node = _Node(key, cnt)
-        tc.append(node)
-        stack.append(node)
-    return root
-
-
-def _is_anc(anc: int, key: int) -> bool:
-    da, dk = anc & 31, key & 31
-    if da > dk:
-        return False
-    shift = 63 - 2 * da
-    return (anc >> shift) == ((key & ~31) >> shift) and (anc & 31) == da
-
-
 def tree_lines(cells: np.ndarray, counts: np.ndarray) -> list[str]:
     """Golden qt-tree dump, reference format '%6d %s' per line
     (``osmquadtree-prepare.go:179-187``); node repr = '<qtstring>:<depth> <count>'."""
@@ -239,7 +161,8 @@ def find_groups(
     total > target (a few hundred at 100k cells), so the serial part is
     O(groups), not O(cells). Semantics are bit-identical to the reference
     walk — pinned by the goldens in tests/test_tiling_golden.py and the
-    exhaustive parity test against :func:`_find_groups_reference`."""
+    exhaustive parity test against the reference patricia walk,
+    ``tests/independent_oracles._find_groups_reference``."""
     cells = np.asarray(cells, dtype=np.int64)
     counts = np.asarray(counts, dtype=np.int64)
     order = np.argsort(cells, kind="stable")
@@ -340,77 +263,6 @@ def find_groups(
     out = out.sort_values("tile_qt").reset_index(drop=True)
     out.insert(0, "tile_idx", np.arange(len(out), dtype=np.int64))
     return out.astype({"tile_qt": "int64", "cnt": "int64"})
-
-
-def _find_groups_reference(
-    cells: np.ndarray,
-    counts: np.ndarray,
-    target: int = GROUP_TARGET,
-    minimum: int = GROUP_MINIMUM,
-) -> pd.DataFrame:
-    """Reference A4 walk (pre-r06 implementation): explicit patricia-tree
-    build + full-node DFS. Kept as the semantic oracle for the vectorized
-    :func:`find_groups`; parity pinned by test_find_groups_vectorized_parity."""
-    order = np.argsort(cells, kind="stable")
-    root = _build_tree(np.asarray(cells)[order], np.asarray(counts)[order])
-    _fill_totals(root)
-    groups: list[tuple[int, int]] = []
-
-    # iterative DFS (explicit frames) — semantics identical to the recursive
-    # walk, cheap enough to stay off the Amdahl critical path:
-    #   total <= target  → one group at the subtree LCA (>= minimum) or bubble
-    #   total >  target  → recurse children, emit leftover here if >= minimum
-    root_rem = 0
-    stack: list[tuple[_Node, int, int]] = [(root, 0, 0)]  # (node, child_idx, rem)
-    ret = 0  # remainder bubbled from the last completed child
-    while stack:
-        node, ci, rem = stack.pop()
-        if ci > 0:
-            rem += ret  # collect the child's bubbled remainder
-        if ci == 0 and node.total <= target:
-            if node.total >= minimum:
-                at = node
-                while at.count == 0 and len(at.children) == 1:
-                    at = at.children[0]
-                groups.append((at.key, node.total))
-                ret = 0
-            else:
-                ret = node.total
-            continue
-        if ci < len(node.children):
-            stack.append((node, ci + 1, rem))
-            stack.append((node.children[ci], 0, 0))
-            continue
-        leftover = node.count + rem
-        if node is root:
-            root_rem = leftover
-            ret = 0
-        elif leftover >= minimum:
-            groups.append((node.key, leftover))
-            ret = 0
-        else:
-            ret = leftover
-
-    root_rem += ret  # a root whose whole tree was below minimum bubbles here
-    if root_rem > 0:
-        groups.append((0, root_rem))  # root catches any remainder
-    out = pd.DataFrame(groups, columns=["tile_qt", "cnt"])
-    out = out.sort_values("tile_qt").reset_index(drop=True)
-    out.insert(0, "tile_idx", np.arange(len(out), dtype=np.int64))
-    return out
-
-
-def _fill_totals(root: _Node) -> None:
-    """Single post-order pass filling subtree totals (iterative — no depth
-    limit concerns even at planet scale)."""
-    stack = [(root, False)]
-    while stack:
-        node, done = stack.pop()
-        if done:
-            node.total = node.count + sum(c.total for c in node.children)
-        else:
-            stack.append((node, True))
-            stack.extend((c, False) for c in node.children)
 
 
 def group_lines(groups: pd.DataFrame) -> list[str]:
@@ -576,7 +428,7 @@ def _assign_tiles_cellmap(
     )
 
 
-def write_tiled(elements_with_tiles: DataFrame, path: str, n_buckets: int | None = None):
+def write_tiled(elements_with_tiles: DataFrame, path: str) -> None:
     """O1: shuffle every element to its tile, write partitioned + sorted.
 
     ``repartition(tile_idx)`` + ``sortWithinPartitions(tile_idx, id)`` gives the

@@ -49,21 +49,14 @@ def input_bytes(df) -> int:
     return total
 
 
-def split_bytes(df, waves: int = TARGET_WAVES, floor_bytes: int = MIN_SPLIT_BYTES) -> int:
-    """Split size giving ``waves`` full task waves on the session's cores.
-
-    ``floor_bytes``: never split finer than this. A scan that FEEDS A
-    HIGH-CARDINALITY AGGREGATION should raise it (count_tree uses 32 MB):
-    the shuffle's partial-aggregation output is ~(map tasks × occupied
-    cells), so splitting a small table ever finer for parallelism inflates
-    the shuffled rows linearly with the core count — the §2.2 anti-scaling
-    term. The floor keeps map tasks few and large where the shuffle, not
-    the scan, dominates."""
+def split_bytes(df, waves: int = TARGET_WAVES) -> int:
+    """Split size giving ``waves`` full task waves on the session's cores,
+    never finer than ``MIN_SPLIT_BYTES``."""
     total = input_bytes(df)
     if not total:
         return DEFAULT_SPLIT_BYTES
     cores = df.sparkSession.sparkContext.defaultParallelism
-    return int(min(DEFAULT_SPLIT_BYTES, max(floor_bytes, total // (cores * waves))))
+    return int(min(DEFAULT_SPLIT_BYTES, max(MIN_SPLIT_BYTES, total // (cores * waves))))
 
 
 def shuffle_partitions_for(df, waves: int = TARGET_WAVES,
@@ -106,10 +99,10 @@ def scoped_conf(spark, key: str, value: str):
             spark.conf.set(key, old)
 
 
-def scan_splits_for(df, waves: int = TARGET_WAVES, floor_bytes: int = MIN_SPLIT_BYTES):
+def scan_splits_for(df, waves: int = TARGET_WAVES):
     """Scope maxPartitionBytes to the actions run inside this block so the
     scan of ``df`` fills the session's cores for ``waves`` waves."""
-    return scoped_conf(df.sparkSession, _KEY, str(split_bytes(df, waves, floor_bytes)))
+    return scoped_conf(df.sparkSession, _KEY, str(split_bytes(df, waves)))
 
 
 def collect_limited(df, limit: int) -> list:

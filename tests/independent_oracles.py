@@ -9,7 +9,9 @@ parquets under tests/golden/oracle/ are generated FROM these functions
 hash gate is a genuine two-implementation cross-check, not a regression pin.
 One exception runs on Spark: :func:`assign_tiles_arrow`, the second tile
 assigner for the parity tests in tests/test_tiling_golden.py (a pandas UDF
-around the same scalar walk the q26 oracle uses).
+around the same scalar walk the q26 oracle uses). Those tests also check the
+engine's vectorized group walk against :func:`_find_groups_reference`, the
+engine's earlier patricia-tree walk.
 
 What IS shared, deliberately:
   * input synthesis (`datagen._doc_rows` / `gen_regions` parameters) — the
@@ -217,6 +219,140 @@ def _oracle_groups(cell_counts: dict[int, int], target: int, minimum: int):
         groups.append((0, root_rem))
     groups.sort(key=lambda g: g[0])
     return groups
+
+
+# ------------------------------------------------ reference patricia walk
+class _Node:
+    """Tree node — __slots__ + plain ints: the walk is driver-serial, its
+    constant factor is the pipeline's Amdahl term at scale."""
+
+    __slots__ = ("key", "count", "children", "total")
+
+    def __init__(self, key: int, count: int):
+        self.key = key
+        self.count = count
+        self.children: list[_Node] = []
+        self.total = 0
+
+
+def _common2(a: int, b: int) -> int:
+    """Scalar LCA of two keys (driver-side; hot-loop-friendly pure int ops)."""
+    x = (a & ~31) ^ (b & ~31)
+    prefix_pairs = 18 if x == 0 else (63 - x.bit_length()) // 2
+    d = min(a & 31, b & 31, prefix_pairs)
+    shift = 63 - 2 * d
+    return (((a & ~31) >> shift) << shift) | d
+
+
+def _build_tree(cells: np.ndarray, counts: np.ndarray) -> _Node:
+    """LCA-compressed (patricia-style) quadtree from DFS-pre-order (cell,
+    count) rows. Implicit internal nodes are materialized at the LCA of
+    adjacent subtrees so the group walk can merge scattered small cells at
+    the deepest ancestor where they amount to a group — at most 2n nodes."""
+    root = _Node(0, 0)
+    stack = [root]
+    for key, cnt in zip(cells.tolist(), counts.tolist()):
+        # inline ancestor test: pop while stack top is not an ancestor of key
+        while len(stack) > 1:
+            top = stack[-1]
+            tk = top.key
+            da = tk & 31
+            if da <= (key & 31):
+                shift = 63 - 2 * da
+                if (tk >> shift) == ((key & ~31) >> shift):
+                    break
+            stack.pop()
+        top = stack[-1]
+        if key == top.key:
+            top.count += cnt
+            continue
+        tc = top.children
+        if tc:
+            last = tc[-1]
+            lca = _common2(last.key, key)
+            if (lca & 31) > (top.key & 31):
+                inter = _Node(lca, 0)
+                inter.children.append(last)
+                tc[-1] = inter
+                stack.append(inter)
+                top = inter
+                tc = inter.children
+        node = _Node(key, cnt)
+        tc.append(node)
+        stack.append(node)
+    return root
+
+
+def _find_groups_reference(
+    cells: np.ndarray,
+    counts: np.ndarray,
+    target: int = 8000,
+    minimum: int = 4000,
+) -> pd.DataFrame:
+    """Reference A4 walk (the engine's pre-r06 implementation): explicit
+    patricia-tree build + full-node DFS. The semantic oracle for the
+    vectorized ``tiling.find_groups``; parity pinned by
+    tests/test_tiling_golden.py::test_find_groups_vectorized_parity."""
+    order = np.argsort(cells, kind="stable")
+    root = _build_tree(np.asarray(cells)[order], np.asarray(counts)[order])
+    _fill_totals(root)
+    groups: list[tuple[int, int]] = []
+
+    # iterative DFS (explicit frames) — semantics identical to the recursive
+    # walk, cheap enough to stay off the Amdahl critical path:
+    #   total <= target  → one group at the subtree LCA (>= minimum) or bubble
+    #   total >  target  → recurse children, emit leftover here if >= minimum
+    root_rem = 0
+    stack: list[tuple[_Node, int, int]] = [(root, 0, 0)]  # (node, child_idx, rem)
+    ret = 0  # remainder bubbled from the last completed child
+    while stack:
+        node, ci, rem = stack.pop()
+        if ci > 0:
+            rem += ret  # collect the child's bubbled remainder
+        if ci == 0 and node.total <= target:
+            if node.total >= minimum:
+                at = node
+                while at.count == 0 and len(at.children) == 1:
+                    at = at.children[0]
+                groups.append((at.key, node.total))
+                ret = 0
+            else:
+                ret = node.total
+            continue
+        if ci < len(node.children):
+            stack.append((node, ci + 1, rem))
+            stack.append((node.children[ci], 0, 0))
+            continue
+        leftover = node.count + rem
+        if node is root:
+            root_rem = leftover
+            ret = 0
+        elif leftover >= minimum:
+            groups.append((node.key, leftover))
+            ret = 0
+        else:
+            ret = leftover
+
+    root_rem += ret  # a root whose whole tree was below minimum bubbles here
+    if root_rem > 0:
+        groups.append((0, root_rem))  # root catches any remainder
+    out = pd.DataFrame(groups, columns=["tile_qt", "cnt"])
+    out = out.sort_values("tile_qt").reset_index(drop=True)
+    out.insert(0, "tile_idx", np.arange(len(out), dtype=np.int64))
+    return out
+
+
+def _fill_totals(root: _Node) -> None:
+    """Single post-order pass filling subtree totals (iterative — no depth
+    limit concerns even at planet scale)."""
+    stack = [(root, False)]
+    while stack:
+        node, done = stack.pop()
+        if done:
+            node.total = node.count + sum(c.total for c in node.children)
+        else:
+            stack.append((node, True))
+            stack.extend((c, False) for c in node.children)
 
 
 def _oracle_tile(qt: int, gmap: dict[int, int], overflow_idx: int,

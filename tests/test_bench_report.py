@@ -1,12 +1,17 @@
 """Unit tests for the BENCH.md renderer's measurement-admission logic.
 
-Pure-python (no Spark): tools/bench_report decides which per-stage walls
-count as verified engine evidence — on a steal-heavy shared host this logic
-IS the integrity of every scaling number we publish, so it gets the same
-test treatment as an operator.
+tools/bench_report decides which per-stage walls count as verified engine
+evidence — on a steal-heavy shared host this logic IS the integrity of every
+scaling number we publish, so it gets the same test treatment as an
+operator. All but one test are pure-python;
+``test_scaling_record_carries_every_admitted_stage_key`` runs the scaling
+bench's measurement body on Spark and checks that its record carries what
+the admission rule reads.
 """
 
 from __future__ import annotations
+
+import sys
 
 import tools.bench_report as br
 
@@ -196,3 +201,26 @@ def test_stage_composite_requires_full_parallel_coverage():
         )
     ]
     assert br._stage_composite(full) == 1.0
+
+
+def test_scaling_record_carries_every_admitted_stage_key(spark, tmp_path, monkeypatch):
+    """``tools.bench_scaling._scaling_body`` writes, for every STAGE_ORDER
+    stage, the keys ``stage_clean`` reads: the wall and, where /proc exists,
+    the stage's steal, busy and own-CPU figures."""
+    import tools.bench_scaling as bs
+
+    monkeypatch.setattr(
+        bs, "_staged_docs_path",
+        lambda n_docs, parts, fallback_base="/tmp": str(tmp_path / f"docs_{n_docs}_{parts}"),
+    )
+    work = tmp_path / "work"
+    work.mkdir()
+    rec = bs._scaling_body(spark, str(work), 4, n_docs=1500, input_parts=4)
+    want = set(br.STAGE_ORDER)
+    if sys.platform == "linux":
+        want |= {
+            f"{st}{sfx}" for st in br.STAGE_ORDER
+            for sfx in ("_steal_cores", "_busy_cores", "_pg_cpu_s")
+        }
+        assert {"steal_cores", "busy_cores"} <= set(rec)
+    assert want <= set(rec["stages"])

@@ -1,21 +1,21 @@
-"""hostmetrics: the steal-immune per-phase CPU accounting used by the
-north-rule scaling evidence (jobs/prepare_job.timed, tools/bench_scaling).
+"""hostmetrics: the steal-immune per-phase CPU accounting behind every
+stage record (``hostmetrics.stage``: prepare, rebase, tools/bench_scaling).
 
 Linux-only counters — the module contracts to return None elsewhere, so
-every test skips off-Linux rather than asserting platform behavior.
+every test that reads /proc skips off-Linux rather than asserting platform
+behavior.
 """
 
-import os
 import sys
 
 import pytest
 
+from osmquadtree_bin_spark import hostmetrics
 from osmquadtree_bin_spark.hostmetrics import (
-    pg_cpu_by_role,
     pg_cpu_jiffies,
     pg_cpu_seconds_delta,
     proc_stat,
-    role_delta_seconds,
+    stage,
 )
 
 linux_only = pytest.mark.skipif(sys.platform != "linux", reason="/proc only")
@@ -46,28 +46,29 @@ def test_proc_stat_monotone_totals():
 
 
 @linux_only
-def test_role_attribution_sees_python_driver():
-    r0 = pg_cpu_by_role()
-    _burn()
-    r1 = pg_cpu_by_role()
-    d = role_delta_seconds(r0, r1)
-    assert d is not None
-    # the busy loop ran in THIS python process → py-driver bucket
-    assert d.get("py-driver", 0) > 0.05
-    # JVM buckets must not appear from nowhere — but in suite order an
-    # earlier Spark test's JVM shares this process group, and its GC/timer
-    # threads can legitimately tick a jiffy during the burn. Assert the
-    # invariant only when the snapshot itself shows no JVM present.
-    jvm_in_pg = any(k.startswith(("driver-jvm", "exec-jvm")) for k in (r1 or {}))
-    if not jvm_in_pg:
-        assert not any(k.startswith(("driver-jvm", "exec-jvm")) for k in d)
+def test_stage_writes_wall_steal_busy_and_own_cpu():
+    rec = {}
+    with stage(rec, "burn"):
+        _burn()
+    assert set(rec) == {
+        "burn", "burn_steal_cores", "burn_busy_cores", "burn_pg_cpu_s"
+    }
+    assert rec["burn"] > 0 and rec["burn_pg_cpu_s"] > 0.05
+    assert rec["burn_steal_cores"] >= 0 and rec["burn_busy_cores"] > 0
 
 
-def test_role_delta_drops_vanished_and_zero_roles():
-    before = {"py-driver": 100, "exec-jvm/task": 50, "gone-role": 10}
-    after = {"py-driver": 200, "exec-jvm/task": 50}
-    d = role_delta_seconds(before, after)
-    tck = os.sysconf("SC_CLK_TCK") if sys.platform == "linux" else 100
-    assert d == {"py-driver": round(100 / tck, 2)}
-    assert role_delta_seconds(None, after) is None
-    assert role_delta_seconds(before, None) is None
+def test_stage_without_proc_writes_only_the_wall(monkeypatch):
+    monkeypatch.setattr(hostmetrics, "proc_stat", lambda: None)
+    monkeypatch.setattr(hostmetrics, "pg_cpu_jiffies", lambda: None)
+    rec = {}
+    with stage(rec, "s"):
+        _burn(10_000)
+    assert set(rec) == {"s"} and rec["s"] >= 0
+
+
+def test_stage_records_nothing_when_body_raises():
+    rec = {"before": 1.0}
+    with pytest.raises(ZeroDivisionError):
+        with stage(rec, "boom"):
+            1 / 0
+    assert rec == {"before": 1.0}

@@ -1,6 +1,8 @@
 """Incremental update: newest-wins merge, touched-tile rewrite, ledger resume
 (FIXTURES.md F5, SURVEY.md §2.10)."""
 
+import sys
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -268,10 +270,16 @@ def test_rebase_reproduces_fresh_tiling_on_merged_input(spark, store, tmp_path):
     assert got_rows == want_rows
     # the moved elements live in the root-ancestor group now, and deletes are gone
     assert out.read().count() == assigned.count() - 3
-    # per-phase walls recorded (the osmquadtree-rebase.go:730-734 shape)
-    assert set(out.rebase_phases) == {
-        "merge_count", "count_tree", "find_groups", "assign_write"
-    }
+    # per-phase stage records (the osmquadtree-rebase.go:730-734 walls, in
+    # prepare's per-stage schema) plus count_tree's sub-timings
+    walls = {"merge_count", "count_tree", "find_groups", "assign_write"}
+    want = set(walls) | {"count_tree_cells_out"}
+    if sys.platform == "linux":
+        want |= {
+            f"{w}{suffix}" for w in walls
+            for suffix in ("_pg_cpu_s", "_steal_cores", "_busy_cores")
+        }
+    assert want <= set(out.rebase_phases)
     assert all(v >= 0 for v in out.rebase_phases.values())
 
 

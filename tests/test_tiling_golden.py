@@ -21,7 +21,7 @@ from osmquadtree_bin_spark.tiling import (
     make_tile_assigner,
     tree_lines,
 )
-from tests.independent_oracles import assign_tiles_arrow
+from tests.independent_oracles import _find_groups_reference, assign_tiles_arrow
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden")
 
@@ -199,7 +199,7 @@ def test_find_groups_vectorized_parity():
     reference patricia-walk implementation across random cell sets of
     varying density, depth mixes and parameters (including the degenerate
     empty / single-cell / everything-below-minimum cases)."""
-    from osmquadtree_bin_spark.tiling import _find_groups_reference, find_groups
+    from osmquadtree_bin_spark.tiling import find_groups
 
     rng = np.random.default_rng(7)
     cases = []

@@ -20,8 +20,7 @@ def _stage_rows(rn: dict, r4: dict, factor: int) -> list[str]:
     out = []
     for key in rn.get("stages", {}):
         if key.endswith(
-            ("_mb", "_mb_per_s", "_steal_cores", "_busy_cores", "_pg_cpu_s",
-             "_cpu_roles")
+            ("_mb", "_mb_per_s", "_steal_cores", "_busy_cores", "_pg_cpu_s")
         ):
             continue
         a, b = rn["stages"][key], r4["stages"].get(key, float("nan"))
@@ -817,6 +816,11 @@ def write_bench_md(record: dict, history: list[dict]) -> None:
         "resolve moved elements via the stored (id → tile) mapping; the "
         "ledger gives per-partition lineage + row counts for resumable "
         "re-runs.",
+        "- Scope of the headline q26 leaf: it times the count-tree pass plus "
+        "the driver-side rollup of the collected cell counts (numpy assigner "
+        "over ≤150k cells), not the distributed assigner. The general "
+        "distributed assigner (`tiling.assign_tiles`) is measured by "
+        "perfbench `update` (`python3 perfbench/run.py --workload update`).",
         "",
     ]
     with open(os.path.join(REPO, "BENCH.md"), "w") as f:

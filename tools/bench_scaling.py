@@ -85,41 +85,6 @@ def _cpu_probe(reps: int = 3) -> float:
     return best
 
 
-def _proc_stat() -> tuple[int, int, int] | None:
-    """(busy, steal, total) jiffies from the aggregate /proc/stat cpu line.
-
-    ``steal`` (field 8) is the hypervisor's own counter of time a runnable
-    vCPU waited for a physical core taken by ANOTHER TENANT — on this
-    Firecracker box it is the direct, per-jiffy measurement of the neighbor
-    contention that the single-thread probe could only hint at (multi-core
-    steal is invisible to a one-thread probe on a 32-vCPU VM). ``busy`` is
-    in-VM user+nice+system+irq+softirq — this VM runs nothing but the bench,
-    so busy ≈ the engine's own CPU."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        v = [int(x) for x in parts[1:11]]
-        busy = v[0] + v[1] + v[2] + v[5] + v[6]
-        steal = v[7]
-        return busy, steal, sum(v[:8])
-    except (OSError, IndexError, ValueError):
-        return None
-
-
-def _steal_cores(before, after) -> dict:
-    """Average stolen / busy core counts over a sampled window."""
-    if not before or not after:
-        return {}
-    db, ds, dt = (after[i] - before[i] for i in range(3))
-    if dt <= 0:
-        return {}
-    ncpu = os.cpu_count() or 32
-    return {
-        "steal_cores": round(ds / dt * ncpu, 3),
-        "busy_cores": round(db / dt * ncpu, 3),
-    }
-
-
 # A level (and the pair containing it) counts as uncontaminated only when the
 # hypervisor stole less than this many cores on average during the measured
 # window. 0.35 distorts a 2-core level by at most ~±17% and an 8-core level
@@ -134,13 +99,15 @@ def _wait_for_quiet(
     Launching a 15-minute pair into a loud window wastes the whole pair;
     a 5-second pre-check is ~200× cheaper. Steal can still arrive mid-run —
     the per-level counters recorded by scaling_job remain the ground truth."""
+    from osmquadtree_bin_spark.hostmetrics import cores_between, proc_stat
+
     t0 = time.perf_counter()
     waited = 0
     last = None
     while True:
-        b = _proc_stat()
+        b = proc_stat()
         time.sleep(window_sec)
-        last = _steal_cores(b, _proc_stat())
+        last = cores_between(b, proc_stat())
         if not last or last.get("steal_cores", 0.0) < threshold:
             return {"waited_sec": round(time.perf_counter() - t0, 1), **(last or {})}
         waited = time.perf_counter() - t0
@@ -231,7 +198,9 @@ def _scaling_body(
 
     from jobs.prepare_job import prepare_pipeline
     from osmquadtree_bin_spark.datagen import gen_docs_dist, gen_regions
+    from osmquadtree_bin_spark.hostmetrics import cores_between, proc_stat, stage
     from osmquadtree_bin_spark.operators.pip_join import pip_join
+    from osmquadtree_bin_spark.tuning import scan_splits_for
 
     # FIXED input layout across parallelism levels: a real cluster reads the
     # SAME table at N and 4N executors, so the staged file count must not
@@ -282,38 +251,16 @@ def _scaling_body(
             "doc_id", F.format_string("doc_%08d", (seq / 64).cast("long"))
         ).withColumn("span_idx", (seq % 64).cast("int"))
         pip = pip_join(elements, regions)
-        from osmquadtree_bin_spark.hostmetrics import (
-            pg_cpu_by_role, pg_cpu_jiffies, pg_cpu_seconds_delta,
-            role_delta_seconds,
-        )
-
-        roles = os.environ.get("BENCH_CPU_ROLES") == "1"
-        stat0 = _proc_stat()
-        p0 = pg_cpu_jiffies()
-        r0 = pg_cpu_by_role() if roles else None
-        t0 = time.perf_counter()
-        from osmquadtree_bin_spark.tuning import scan_splits_for
-
-        with scan_splits_for(slim):  # core-wave split sizing (tuning.py)
+        # core-wave split sizing (tuning.py)
+        with stage(stages, "pip"), scan_splits_for(slim):
             n_pip = pip.count()
-        stages["pip"] = round(time.perf_counter() - t0, 3)
-        p1 = pg_cpu_jiffies()
-        for kk, vv in _steal_cores(stat0, _proc_stat()).items():
-            stages[f"pip_{kk}"] = vv
-        cpu_s = pg_cpu_seconds_delta(p0, p1)
-        if cpu_s is not None:
-            stages["pip_pg_cpu_s"] = cpu_s
-        if roles:
-            rd = role_delta_seconds(r0, pg_cpu_by_role())
-            if rd:
-                stages["pip_cpu_roles"] = rd
         return stages, n_elements + n_pip, n_elements
 
     # warm-up pass: python worker spawn, codegen JIT, shuffle file creation —
     # identical one-time costs at both levels that would otherwise mask
     # steady-state throughput (what a long-running cluster job actually sees)
     run_pipeline(0)
-    stat0 = _proc_stat()
+    stat0 = proc_stat()
     t0 = time.perf_counter()
     stages, rows, n_elements = run_pipeline(1)
     wall = time.perf_counter() - t0
@@ -325,8 +272,8 @@ def _scaling_body(
         "rows_per_sec": round(rows / wall, 2),
         "stages": stages,
         # hypervisor steal + own busy cores averaged over the measured pass:
-        # the direct contamination record for this level (see _proc_stat)
-        **_steal_cores(stat0, _proc_stat()),
+        # the direct contamination record for this level
+        **cores_between(stat0, proc_stat()),
     }
 
 

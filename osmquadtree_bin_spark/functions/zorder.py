@@ -5,6 +5,10 @@ Reference: ``calc_zorder`` style type (``extrastyle.json:69``), consumed at
 table in ``osmquadtree-geometry-features.go:722-770`` and the corpus's roads
 ordering. way_area: shoelace area over mercator coords
 (``osmquadtree-postgis.go:317-333``).
+
+Both feed the served views' SQL text (``plans.tables``): z_order is a SQL
+expression (``z_order_sql``); way_area is a pandas UDF that the views call
+by name, registered as a session function when the polygon view is made.
 """
 
 from __future__ import annotations
@@ -13,7 +17,6 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
@@ -81,23 +84,18 @@ Z_ORDER_TABLE = {
 LAYER_STEP = 1000  # a layer=n tag shifts z_order by n*1000 (carto convention)
 
 
-def z_order(tags: str = "tags") -> Column:
-    """Priority of the first matching (tagkey, value) row — one JVM map
-    lookup per tag key, no per-value CASE ladder."""
-    prio_map = F.create_map(
-        *[F.lit(x) for kv in Z_ORDER_TABLE.items() for x in kv]
-    )
-    lookups = [
-        F.element_at(
-            prio_map,
-            F.concat(F.lit(f"{key}_"), F.element_at(F.col(tags), key)),
-        )
+def z_order_sql(tags: str = "tags") -> str:
+    """Priority of the first matching (tagkey, value) row plus the layer
+    shift, as one SQL expression: a ``map(...)`` literal lookup per tag key
+    (Catalyst folds the literal once), no per-value CASE ladder."""
+    prio_map = "map(" + ", ".join(f"'{k}', {v}" for k, v in Z_ORDER_TABLE.items()) + ")"
+    lookups = ", ".join(
+        f"element_at({prio_map}, concat('{key}_', element_at({tags}, '{key}')))"
         for key in ("highway", "railway", "aeroway", "aerialway")
-    ]
-    base = F.coalesce(*lookups, F.lit(0))
-    layer = F.element_at(F.col(tags), "layer")
-    layer_n = F.when(layer.rlike(r"^-?[0-9]+$"), layer.cast("long")).otherwise(0)
-    return (base + layer_n * LAYER_STEP).cast("long")
+    )
+    layer = f"element_at({tags}, 'layer')"
+    layer_n = f"CASE WHEN {layer} rlike '^-?[0-9]+$' THEN CAST({layer} AS BIGINT) ELSE 0 END"
+    return f"CAST(coalesce({lookups}, 0) + {layer_n} * {LAYER_STEP} AS BIGINT)"
 
 
 @pandas_udf(DoubleType())

@@ -351,5 +351,7 @@ def pip_join(elements: DataFrame, regions: DataFrame) -> DataFrame:
 def idset_trim(elements: DataFrame, matched: DataFrame) -> DataFrame:
     """P4 two-pass trim: re-read ALL columns of elements whose id matched a
     region (LEFT SEMI JOIN — Spark broadcasts the id set when small, same as
-    the reference's ``isBig`` switch, ``osmquadtree-filter.go:145``)."""
-    return elements.join(matched.select("id").distinct(), "id", "left_semi")
+    the reference's ``isBig`` switch, ``osmquadtree-filter.go:145``). The
+    semi join has set semantics, so an id matched by several regions needs
+    no ``distinct`` first (which would cost its own Spark job)."""
+    return elements.join(matched.select("id"), "id", "left_semi")

@@ -12,9 +12,15 @@ the group keys — the P1 generator) and reads ONLY those hive partitions: the
 scan is built over the pruned ``tile_idx=N`` directories with the store
 schema read once at construction, so a request neither lists the whole store
 nor runs a schema-inference job. The ``tile_idx IN (...)`` filter stays
-(``.explain`` → PartitionFilters). It applies the exact bbox predicate;
-``tables_for_bbox`` registers the planet_osm views over the slice, on which
-any corpus query runs via ``spark.sql``.
+(``.explain`` → PartitionFilters). It applies the exact bbox predicate.
+
+``sql`` serves the planet_osm views over that slice. The views are SQL text
+(``plans.tables``) that read one slice view by name, so a request only
+re-points the slice (``tables_for_bbox``: one ``createOrReplaceTempView``);
+a view is created the first time a query references it, after the views it
+reads from, and again only when the session's live definition of its name
+is not the engine's (``register_tables`` elsewhere in the session replaced
+it).
 """
 
 from __future__ import annotations
@@ -26,9 +32,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.pip_join import region_tiles
-from .tables import register_tables
+from ..tuning import scoped_conf
+from .tables import SLICE_VIEW, referenced_views, served_views
+from .tables import register_tables  # noqa: F401 — perfbench's tracer wraps it by name
 
 MAX_BBOX_UNITS = 200_000_000  # reference guard: reject bboxes > 20M units (×10 margin)
+_DISCOVERY_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 class TileQueryEngine:
@@ -37,6 +46,7 @@ class TileQueryEngine:
         self.store_path = store_path
         self.groups = groups
         self.schema = spark.read.parquet(store_path).schema
+        self.views = served_views()
 
     def read_tiles(self, tiles: list[int], where: str | None = None) -> DataFrame:
         """The store restricted to ``tiles`` and to the SQL predicate
@@ -47,7 +57,10 @@ class TileQueryEngine:
         no directory at all gives an empty frame. The predicate is one SQL
         string in one filter: built from Column objects it costs a py4j
         round trip per literal (~20 ms on a 4-vCPU Xeon for a 9-tile
-        ``isin`` and a bbox)."""
+        ``isin`` and a bbox). The directories are listed on the driver: past
+        ``parallelPartitionDiscovery.threshold`` paths (32 by default) Spark
+        would run a listing job, so the threshold is scoped to their
+        count."""
         dirs = [
             d for t in sorted(set(tiles))
             if os.path.isdir(d := os.path.join(self.store_path, f"tile_idx={t}"))
@@ -55,12 +68,10 @@ class TileQueryEngine:
         if not dirs:
             return self.spark.createDataFrame([], self.schema)
         cond = f"tile_idx IN ({', '.join(str(int(t)) for t in tiles)})"  # → PartitionFilters
-        return (
-            self.spark.read.schema(self.schema)
-            .option("basePath", self.store_path)
-            .parquet(*dirs)
-            .filter(cond if where is None else f"{cond} AND {where}")
-        )
+        with scoped_conf(self.spark, _DISCOVERY_KEY, str(len(dirs))):
+            df = self.spark.read.schema(self.schema).option("basePath", self.store_path)
+            df = df.parquet(*dirs)
+        return df.filter(cond if where is None else f"{cond} AND {where}")
 
     def pruned_tiles(self, minx: int, miny: int, maxx: int, maxy: int) -> list[int]:
         """P1 generator: tile_idx list whose buffered tile bounds intersect."""
@@ -82,15 +93,19 @@ class TileQueryEngine:
         )
         return df.select(*columns) if columns else df
 
-    def tables_for_bbox(self, minx: int, miny: int, maxx: int, maxy: int):
-        """Register planet_osm views over the bbox slice; returns the dict."""
-        return register_tables(self.spark, self.scan_bbox(minx, miny, maxx, maxy))
+    def tables_for_bbox(self, minx: int, miny: int, maxx: int, maxy: int, views) -> None:
+        """Point the planet_osm views at the bbox slice, creating those of
+        ``views`` (and the views they read from) whose live definition is
+        not the engine's."""
+        self.scan_bbox(minx, miny, maxx, maxy).createOrReplaceTempView(SLICE_VIEW)
+        self.views.ensure(self.spark, views)
 
     def sql(self, query: str, bbox: tuple[int, int, int, int]) -> DataFrame:
         from ..functions.dialect import translate
 
-        self.tables_for_bbox(*bbox)
-        return self.spark.sql(translate(query))
+        text = translate(query)
+        self.tables_for_bbox(*bbox, views=referenced_views(text))
+        return self.spark.sql(text)
 
     def rawtile(self, tx: int, ty: int, tz: int) -> DataFrame:
         """J8 raw-tile fetch (``tq.rawtile``, ``osmquadtree-geometry.go:283-314``):

@@ -2,24 +2,41 @@
 
 Reference: table col lists assembled from the style at
 ``/root/reference/osmquadtree-geometry.go:859-893``; style format
-``extrastyle.json``. The roads view SQL is the reference's verbatim contract
-(``osmquadtree-geometry.go:889``), translated through the dialect shims.
+``extrastyle.json``; a table is computed only when a query references it
+(``deferedResult``, :554-588). The roads view SQL is the reference's
+verbatim contract (``osmquadtree-geometry.go:889``), translated through the
+dialect shims.
 
-Spark shape: one geometry elements DataFrame (from ``spans.explode_geoms``,
-optionally tiled) → three projected temp views (point/line/polygon) with the
-style tags pivoted to real columns (``element_at(tags, k)`` — Catalyst prunes
-unused ones per query) → roads as a Spark SQL view over them.
+Spark shape: every served view is SQL text, rendered once from the style
+(``served_views``): ``CREATE OR REPLACE TEMP VIEW … AS SELECT … FROM`` a
+base view over ONE slice view, ``_planet_osm_slice``. point / line / polygon
+pivot the style tags to real columns (``element_at(tags, k)`` — Catalyst
+prunes unused ones per query); roads is a view over line and polygon. A
+temp view made from SQL text is re-analyzed each time a query references
+it, so pointing the slice at another frame (one ``createOrReplaceTempView``)
+re-points every view: the text is created once per session, not per slice.
+
+The views are session-global names. Each creation records a digest of its
+text in one session conf key (``VIEWS_CONF``), so a caller can tell with one
+``spark.conf.get`` whether the live definition of a name is the one it
+would create (``ServedViews.ensure``), and re-create only the ones that are
+not. ``register_tables`` points the slice at its frame and creates all of
+them; the tiled-store engine creates each one the first time a query
+references it.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.dialect import translate
-from ..functions.zorder import way_area_merc, z_order
+from ..functions.zorder import way_area_merc, z_order_sql
 
 # Public style-vocabulary fixture (jharris2268/osmquadtree-bin ships it as
 # extrastyle.json). A copy lives in tests/fixtures/ so the repo is
@@ -45,39 +62,19 @@ ROADS_VIEW_SQL = (
     "FROM planet_osm_polygon WHERE osm_id<0 and boundary='administrative'"
 )
 
+SERVED = ("planet_osm_point", "planet_osm_line", "planet_osm_polygon", "planet_osm_roads")
+SLICE_VIEW = "_planet_osm_slice"  # the element frame every view reads
+BASE_VIEW = "_planet_osm_base"
+RELATIONS_VIEW = "_planet_osm_relations"  # multipolygon rows, when given
+VIEWS_CONF = "osmquadtree.planet_osm.views"  # name=digest of each live view
+
+_PH_DEPTH = 12  # grid depth cap for the parent_highway cell join
+_AREA_NO = "element_at(tags, 'area') IN ('no', '0', 'false')"
+
 
 def load_style(path: str = STYLE_PATH) -> list[dict]:
     with open(path) as f:
         return json.load(f)
-
-
-def _osm_id():
-    """Reference id unpack (``osmquadtree-postgis.go:279-284``): low 40 bits,
-    negative for relations (type bits >= 59 == 2)."""
-    oid = F.col("id").bitwiseAND(F.lit((1 << 40) - 1))
-    return F.when(F.shiftrightunsigned(F.col("id"), 59) == 2, -oid).otherwise(oid)
-
-
-_PH_DEPTH = 12  # grid depth cap for the parent_highway cell join
-
-
-def _cell_key(a, x, y):
-    """Pack (depth, cell_x, cell_y) into one join key."""
-    return (
-        F.shiftleft(a.cast("long"), 40)
-        .bitwiseOR(F.shiftleft(x.cast("long"), 20))
-        .bitwiseOR(y.cast("long"))
-    )
-
-
-def _grid_xy(lon_col: str, lat_col: str):
-    """Fixed-point lon/lat → depth-_PH_DEPTH integer grid coords (equirect
-    grid is fine here: the key only buckets, the exact bbox test follows)."""
-    n = 1 << _PH_DEPTH
-    x = F.floor((F.col(lon_col) + 1_800_000_000) / F.lit(3_600_000_000) * n)
-    y = F.floor((F.col(lat_col) + 900_000_000) / F.lit(1_800_000_000) * n)
-    clamp = lambda c: F.greatest(F.least(c, F.lit(n - 1)), F.lit(0))  # noqa: E731
-    return clamp(x).cast("long"), clamp(y).cast("long")
 
 
 def _bitlen(col: str, maxbits: int) -> str:
@@ -88,8 +85,36 @@ def _bitlen(col: str, maxbits: int) -> str:
     )
 
 
-def _parent_highway(pts: DataFrame, hwy_lines: DataFrame) -> DataFrame:
-    """A6 calc_parent as a CELL EQUI-JOIN (scales; no broadcast, no theta).
+def _grid(col: str, offset: int, span: int) -> str:
+    """Fixed-point coordinate → depth-_PH_DEPTH integer grid coord, clamped
+    (equirect grid is fine here: the key only buckets, the exact bbox test
+    follows)."""
+    n = 1 << _PH_DEPTH
+    return f"greatest(least(floor(({col} + {offset}) / {span} * {n}), {n - 1}), 0)"
+
+
+def _gx(col: str) -> str:
+    return _grid(col, 1_800_000_000, 3_600_000_000)
+
+
+def _gy(col: str) -> str:
+    return _grid(col, 900_000_000, 1_800_000_000)
+
+
+def _cell(d: str, x: str, y: str) -> str:
+    """Pack (depth, cell_x, cell_y) of the depth-``d`` ancestor into one key."""
+    D = _PH_DEPTH
+    return (
+        f"shiftleft(CAST({d} AS BIGINT), 40) | shiftleft(shiftright({x}, {D} - {d}), 20)"
+        f" | shiftright({y}, {D} - {d})"
+    )
+
+
+def _parent_highway_ctes() -> str:
+    """A6 calc_parent as a CELL EQUI-JOIN (scales; no broadcast, no theta),
+    as CTEs over ``ph_pts`` (id, minx, miny) and ``ph_lines`` (lminx, lminy,
+    lmaxx, lmaxy, l_osm_id, l_highway), ending in ``ph_parent`` (id,
+    parent_highway).
 
     Each highway line picks the deepest grid depth at which its bbox covers
     <= 2 cells per axis (capped at _PH_DEPTH) and explodes into those <= 4
@@ -101,57 +126,191 @@ def _parent_highway(pts: DataFrame, hwy_lines: DataFrame) -> DataFrame:
     shallow-depth point keys meet only the few continent-sized lines.
     """
     D = _PH_DEPTH
-    x0, y0 = _grid_xy("lminx", "lminy")
-    x1, y1 = _grid_xy("lmaxx", "lmaxy")
-    lines_k = (
-        hwy_lines.withColumn("_x0", x0).withColumn("_y0", y0)
-        .withColumn("_x1", x1).withColumn("_y1", y1)
-        # common-prefix depth per axis -> deepest depth with <= 2 cells/axis
-        .withColumn(
-            "_d",
-            F.expr(
-                f"least({D} - ({_bitlen('(_x0 ^ _x1)', D)}) + 1, "
-                f"least({D} - ({_bitlen('(_y0 ^ _y1)', D)}) + 1, {D}))"
-            ),
-        )
-        .withColumn(
-            "_ck",
-            F.explode(
-                F.expr(
-                    f"array_distinct(array("
-                    f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x0, {D} - _d), 20) | shiftright(_y0, {D} - _d),"
-                    f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x1, {D} - _d), 20) | shiftright(_y0, {D} - _d),"
-                    f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x0, {D} - _d), 20) | shiftright(_y1, {D} - _d),"
-                    f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x1, {D} - _d), 20) | shiftright(_y1, {D} - _d)))"
-                )
-            ),
-        )
-        .drop("_x0", "_y0", "_x1", "_y1", "_d")
+    corners = ", ".join(_cell("_d", x, y) for y in ("_y0", "_y1") for x in ("_x0", "_x1"))
+    return f"""
+ph_lines_xy AS (
+  SELECT *, CAST({_gx('lminx')} AS BIGINT) AS _x0, CAST({_gy('lminy')} AS BIGINT) AS _y0,
+         CAST({_gx('lmaxx')} AS BIGINT) AS _x1, CAST({_gy('lmaxy')} AS BIGINT) AS _y1
+  FROM ph_lines),
+ph_lines_d AS (
+  SELECT *, least({D} - ({_bitlen('(_x0 ^ _x1)', D)}) + 1,
+                  least({D} - ({_bitlen('(_y0 ^ _y1)', D)}) + 1, {D})) AS _d
+  FROM ph_lines_xy),
+ph_lines_k AS (
+  SELECT lminx, lminy, lmaxx, lmaxy, l_osm_id, l_highway,
+         explode(array_distinct(array({corners}))) AS _ck
+  FROM ph_lines_d),
+ph_pts_k AS (
+  SELECT id, minx, miny, explode(transform(sequence(0, {D}), a -> {_cell('a', '_px', '_py')})) AS _ck
+  FROM (SELECT id, minx, miny, CAST({_gx('minx')} AS BIGINT) AS _px,
+               CAST({_gy('miny')} AS BIGINT) AS _py FROM ph_pts)),
+ph_parent AS (
+  SELECT p.id, min_by(l.l_highway, l.l_osm_id) AS parent_highway
+  FROM ph_pts_k p JOIN ph_lines_k l ON p._ck = l._ck
+  WHERE p.minx >= l.lminx AND p.minx <= l.lmaxx AND p.miny >= l.lminy AND p.miny <= l.lmaxy
+  GROUP BY p.id)"""
+
+
+def _parent_highway(pts: DataFrame, hwy_lines: DataFrame) -> DataFrame:
+    """The point view's parent-highway join (``_parent_highway_ctes``, the
+    same SQL text) over two frames: ``pts`` (id, minx, miny) and
+    ``hwy_lines`` (lminx, lminy, lmaxx, lmaxy, l_osm_id, l_highway)."""
+    return pts.sparkSession.sql(
+        "WITH ph_pts AS (SELECT id, minx, miny FROM {pts}), "
+        "ph_lines AS (SELECT * FROM {lines}), "
+        f"{_parent_highway_ctes()} SELECT id, parent_highway FROM ph_parent",
+        pts=pts, lines=hwy_lines,
     )
-    px, py = _grid_xy("minx", "miny")
-    pts_k = (
-        pts.select("id", "minx", "miny")
-        .withColumn("_px", px).withColumn("_py", py)
-        .withColumn(
-            "_ck",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {D}), a -> "
-                    f"shiftleft(CAST(a AS BIGINT), 40) | "
-                    f"shiftleft(shiftright(_px, {D} - a), 20) | shiftright(_py, {D} - a))"
-                )
-            ),
+
+
+def _proj(tags: list[str]) -> str:
+    return ", ".join(f"element_at(tags, '{t}') AS `{t}`" for t in sorted(set(tags)))
+
+
+def _view(name: str, select: str) -> str:
+    return f"CREATE OR REPLACE TEMP VIEW {name} AS {select}"
+
+
+class ServedViews:
+    """The CREATE text of the base view and the four served views for one
+    style and option set, with each view's dependencies and text digest."""
+
+    def __init__(self, style_path: str, parent_highway: bool, relations: bool):
+        style = load_style(style_path)
+        node = _proj([s["Tag"] for s in style if s.get("IsNode") and s["Type"] == "text"])
+        way = _proj([s["Tag"] for s in style if s.get("IsWay") and s["Type"] == "text"])
+        zo = z_order_sql()
+        oid = "id & 1099511627775"  # reference id unpack: low 40 bits
+        # A6 calc_parent (extrastyle.json:73): a point inherits the highway
+        # value of a containing way — doc-model analogue: highway of the
+        # smallest-id LINESTRING whose bbox contains the point center, by
+        # the cell equi-join of _parent_highway_ctes (never a broadcast
+        # nested-loop theta join). Built only when `parent_highway`: the
+        # left join would survive in every plan over planet_osm_point even
+        # when the column is never projected (Catalyst cannot eliminate an
+        # outer join without unique-key metadata).
+        if parent_highway:
+            point = (
+                f"WITH ph_pts AS (SELECT id, minx, miny FROM {BASE_VIEW} WHERE geom_type = 0), "
+                "ph_lines AS (SELECT minx AS lminx, miny AS lminy, maxx AS lmaxx, "
+                "maxy AS lmaxy, osm_id AS l_osm_id, element_at(tags, 'highway') AS l_highway "
+                f"FROM {BASE_VIEW} WHERE geom_type = 1 "
+                "AND element_at(tags, 'highway') IS NOT NULL), "
+                f"{_parent_highway_ctes()} "
+                f"SELECT osm_id, quadtree, way, parent_highway, {node} "
+                f"FROM (SELECT * FROM {BASE_VIEW} WHERE geom_type = 0) "
+                "LEFT JOIN ph_parent USING (id)"
+            )
+        else:
+            point = (
+                "SELECT osm_id, quadtree, way, CAST(NULL AS STRING) AS parent_highway, "
+                f"{node} FROM {BASE_VIEW} WHERE geom_type = 0"
+            )
+        polygon_rows = (
+            f"SELECT osm_id, quadtree, way, tags FROM {BASE_VIEW} "
+            f"WHERE geom_type = 2 AND NOT coalesce({_AREA_NO}, false)"
         )
-        .drop("_px", "_py")
+        if relations:
+            polygon_rows += f" UNION ALL SELECT osm_id, quadtree, way, tags FROM {RELATIONS_VIEW}"
+        self.text = {
+            # osm_id: negative for relations (type bits >= 59 == 2), the
+            # reference's id unpack (osmquadtree-postgis.go:279-284)
+            BASE_VIEW: _view(BASE_VIEW, (
+                "SELECT id, geom_type, tags, minx, miny, maxx, maxy, wkt, "
+                f"CASE WHEN shiftrightunsigned(id, 59) = 2 THEN -({oid}) ELSE {oid} END AS osm_id, "
+                f"qt AS quadtree, wkt AS way FROM {SLICE_VIEW}"
+            )),
+            "planet_osm_point": _view("planet_osm_point", point),
+            # IsPoly='maybe' area-tag override (extrastyle.json:9): a
+            # POLYGON span tagged area=no lands in the line table
+            "planet_osm_line": _view("planet_osm_line", (
+                f"SELECT osm_id, quadtree, way, {zo} AS z_order, {way} FROM {BASE_VIEW} "
+                f"WHERE geom_type = 1 OR (geom_type = 2 AND {_AREA_NO})"
+            )),
+            "planet_osm_polygon": _view("planet_osm_polygon", (
+                f"SELECT osm_id, quadtree, way, {zo} AS z_order, "
+                f"way_area_merc(way) AS way_area, {way} FROM ({polygon_rows})"
+            )),
+            "planet_osm_roads": _view("planet_osm_roads", translate(ROADS_VIEW_SQL)),
+        }
+        self.deps = {
+            BASE_VIEW: (),
+            "planet_osm_point": (BASE_VIEW,),
+            "planet_osm_line": (BASE_VIEW,),
+            "planet_osm_polygon": (BASE_VIEW,),
+            "planet_osm_roads": ("planet_osm_line", "planet_osm_polygon"),
+        }
+        self.digest = {
+            k: hashlib.sha1(v.encode()).hexdigest()[:16] for k, v in self.text.items()
+        }
+
+    def ensure(self, spark: SparkSession, names, force: bool = False) -> None:
+        """Create each view of ``names`` and the views it reads from whose
+        live definition is not this one's text (all of them when
+        ``force``). The slice view must exist: creation analyzes the text
+        against it."""
+        live = dict(
+            kv.split("=") for kv in spark.conf.get(VIEWS_CONF, "").split(",") if kv
+        )
+        made: list[str] = []
+
+        def walk(name: str) -> None:
+            if name in made:
+                return
+            for dep in self.deps[name]:
+                walk(dep)
+            if force or live.get(name) != self.digest[name]:
+                if name == "planet_osm_polygon":
+                    spark.udf.register("way_area_merc", way_area_merc)
+                spark.sql(self.text[name])
+                live[name] = self.digest[name]
+                made.append(name)
+
+        for name in names:
+            walk(name)
+        if made:
+            spark.conf.set(VIEWS_CONF, ",".join(f"{k}={v}" for k, v in sorted(live.items())))
+
+
+@functools.lru_cache(maxsize=None)
+def served_views(
+    style_path: str = STYLE_PATH, parent_highway: bool = True, relations: bool = False
+) -> ServedViews:
+    """The view texts for one style and option set, rendered once."""
+    return ServedViews(style_path, parent_highway, relations)
+
+
+_VIEW_REF = re.compile(r"\bplanet_osm_(point|line|polygon|roads)\b", re.IGNORECASE)
+
+
+def referenced_views(sql: str) -> set[str]:
+    """The served views a SQL text names."""
+    return {f"planet_osm_{m.lower()}" for m in _VIEW_REF.findall(sql)}
+
+
+def _relation_rows(relations: DataFrame, ways: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Assembled multipolygon relations as (osm_id, quadtree, way, tags)
+    rows: NEGATIVE osm_ids and member-LCA quadtrees, the reference's
+    relation-row convention (``osmquadtree-postgis.go:279-284`` id sign,
+    ``:265-274`` GeometryType 7 rows)."""
+    from ..operators.element_joins import node_qts, rel_wkt, relation_qts, way_qts
+
+    rq = relation_qts(relations, node_qts(nodes), way_qts(ways, nodes))
+    mp = rel_wkt(relations, ways, nodes).filter(F.col("wkt").isNotNull())
+    rel_tags = (
+        relations.select("id", "tags")
+        if "tags" in relations.columns
+        else relations.select("id", F.lit(None).cast("map<string,string>").alias("tags"))
     )
     return (
-        pts_k.join(lines_k, "_ck")
-        .filter(
-            (F.col("minx") >= F.col("lminx")) & (F.col("minx") <= F.col("lmaxx"))
-            & (F.col("miny") >= F.col("lminy")) & (F.col("miny") <= F.col("lmaxy"))
+        mp.join(rel_tags, "id", "left")
+        .join(rq.withColumnRenamed("qt", "quadtree"), "id", "left")
+        .select(
+            (-F.col("id")).alias("osm_id"),
+            F.coalesce("quadtree", F.lit(0)).alias("quadtree"),
+            F.col("wkt").alias("way"),
+            "tags",
         )
-        .groupBy("id")
-        .agg(F.min_by("l_highway", "l_osm_id").alias("parent_highway"))
     )
 
 
@@ -164,7 +323,10 @@ def register_tables(
     ways: DataFrame | None = None,
     nodes: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Create temp views planet_osm_point / line / polygon / roads.
+    """Point the slice at ``elements`` and create the temp views
+    planet_osm_point / line / polygon / roads; returns them as frames
+    (analyzed now, so they keep reading ``elements`` after the slice moves
+    on).
 
     Geometry routing: our doc model declares geometry type per span
     (POINT/LINESTRING/POLYGON), so the point table takes geom_type 0, line 1,
@@ -173,108 +335,13 @@ def register_tables(
     (``extrastyle.json:9``, IsPoly maybe semantics).
 
     When ``relations``/``ways``/``nodes`` are given, multipolygon-relation
-    geometries (rel_wkt — ``geometry.Multi``) are assembled and unioned into
-    planet_osm_polygon with NEGATIVE osm_ids and member-LCA quadtrees, the
-    reference's relation-row convention (``osmquadtree-postgis.go:279-284``
-    id sign, ``:265-274`` GeometryType 7 rows).
+    geometries (rel_wkt — ``geometry.Multi``) are assembled into a second
+    registered view and unioned into planet_osm_polygon (``_relation_rows``).
     """
-    style = load_style(style_path)
-    node_tags = [s["Tag"] for s in style if s.get("IsNode") and s["Type"] == "text"]
-    way_tags = [s["Tag"] for s in style if s.get("IsWay") and s["Type"] == "text"]
-
-    def proj(tags: list[str]):
-        return [F.element_at(F.col("tags"), t).alias(t) for t in sorted(set(tags))]
-
-    base = elements.withColumn("osm_id", _osm_id()).withColumn(
-        "quadtree", F.col("qt")
-    ).withColumn("way", F.col("wkt"))
-
-    area_no = F.element_at(F.col("tags"), "area").isin("no", "0", "false")
-
-    # A6 calc_parent (extrastyle.json:73): a point inherits the highway value
-    # of a containing way — doc-model analogue: highway of the smallest-id
-    # LINESTRING whose bbox contains the point center. Cell equi-join (see
-    # _parent_highway) — never a broadcast nested-loop theta join. Built only
-    # when `parent_highway=True`: the left join would survive in every plan
-    # over planet_osm_point even when the column is never projected (Catalyst
-    # cannot eliminate an outer join without unique-key metadata), so callers
-    # whose query set never touches the column can skip it outright.
-    pts = base.filter(F.col("geom_type") == 0)
-    if parent_highway:
-        hwy_lines = (
-            base.filter(
-                (F.col("geom_type") == 1)
-                & F.element_at(F.col("tags"), "highway").isNotNull()
-            )
-            .select(
-                F.col("minx").alias("lminx"), F.col("miny").alias("lminy"),
-                F.col("maxx").alias("lmaxx"), F.col("maxy").alias("lmaxy"),
-                F.col("osm_id").alias("l_osm_id"),
-                F.element_at(F.col("tags"), "highway").alias("l_highway"),
-            )
-        )
-        parent = _parent_highway(pts, hwy_lines)
-        point = pts.join(parent, "id", "left").select(
-            "osm_id", "quadtree", "way", F.col("parent_highway"), *proj(node_tags)
-        )
-    else:
-        point = pts.select(
-            "osm_id", "quadtree", "way",
-            F.lit(None).cast("string").alias("parent_highway"), *proj(node_tags)
-        )
-    line = (
-        base.filter(
-            (F.col("geom_type") == 1) | ((F.col("geom_type") == 2) & area_no)
-        )
-        .withColumn("z_order", z_order())
-        .select("osm_id", "quadtree", "way", "z_order", *proj(way_tags))
-    )
-    polygon = (
-        base.filter((F.col("geom_type") == 2) & ~F.coalesce(area_no, F.lit(False)))
-        .withColumn("z_order", z_order())
-        .withColumn("way_area", way_area_merc(F.col("wkt")))
-        .select("osm_id", "quadtree", "way", "z_order", "way_area", *proj(way_tags))
-    )
+    elements.createOrReplaceTempView(SLICE_VIEW)
     if relations is not None:
-        from ..operators.element_joins import (
-            node_qts,
-            rel_wkt,
-            relation_qts,
-            way_qts,
-        )
-
-        rq = relation_qts(relations, node_qts(nodes), way_qts(ways, nodes))
-        mp = rel_wkt(relations, ways, nodes).filter(F.col("wkt").isNotNull())
-        rel_tags = (
-            relations.select("id", "tags")
-            if "tags" in relations.columns
-            else relations.select(
-                "id", F.lit(None).cast("map<string,string>").alias("tags")
-            )
-        )
-        mp_rows = (
-            mp.join(rel_tags, "id", "left")
-            .join(rq.withColumnRenamed("qt", "quadtree"), "id", "left")
-            .withColumn("z_order", z_order())
-            .select(
-                (-F.col("id")).alias("osm_id"),  # relation rows: negative ids
-                F.coalesce("quadtree", F.lit(0)).alias("quadtree"),
-                F.col("wkt").alias("way"),
-                "z_order",
-                way_area_merc(F.col("wkt")).alias("way_area"),
-                *proj(way_tags),
-            )
-        )
-        polygon = polygon.unionByName(mp_rows)
-
-    point.createOrReplaceTempView("planet_osm_point")
-    line.createOrReplaceTempView("planet_osm_line")
-    polygon.createOrReplaceTempView("planet_osm_polygon")
-    roads = spark.sql(translate(ROADS_VIEW_SQL))
-    roads.createOrReplaceTempView("planet_osm_roads")
-    return {
-        "planet_osm_point": point,
-        "planet_osm_line": line,
-        "planet_osm_polygon": polygon,
-        "planet_osm_roads": roads,
-    }
+        _relation_rows(relations, ways, nodes).createOrReplaceTempView(RELATIONS_VIEW)
+    served_views(style_path, parent_highway, relations is not None).ensure(
+        spark, SERVED, force=True
+    )
+    return {name: spark.table(name) for name in SERVED}

@@ -15,7 +15,16 @@ one partition first and the rest in a second. The conf is session-wide, so
 it is set and restored around each collect; that is safe because engine
 calls are serialized behind ``TileServer._lock``. /extract's one-row region
 frame is driver-local (``sources.regions_frame``), so collecting it to prune
-tiles and to build the PIP predicate runs no job.
+tiles and to build the PIP predicate runs no job; its bounded collect runs
+at most two (the PIP match and the id-set semi join, with no ``distinct``
+job between them).
+
+A /query builds no view per request. The planet_osm views are SQL text
+(``plans.tables``) over one slice view; the engine re-points the slice at
+the request's pruned bbox scan and creates a view only the first time a
+query names it (or when another caller in the session replaced its
+definition), so a request pays one ``createOrReplaceTempView`` and the
+analysis of its own query.
 
 Routes (GET):
     /                           embedded Leaflet viewer (static HTML)

@@ -5,7 +5,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from osmquadtree_bin_spark.plans.tables import _parent_highway
+from osmquadtree_bin_spark.plans.tables import (
+    _parent_highway,
+    _parent_highway_ctes,
+    served_views,
+)
 
 
 def _fixture(nl=300, npts=2000, seed=3):
@@ -58,3 +62,8 @@ def test_parent_highway_plan_is_equi_join(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastNestedLoop" not in plan and "CartesianProduct" not in plan
+
+
+def test_point_view_runs_the_tested_join():
+    """The served point view embeds the same join text these tests run."""
+    assert _parent_highway_ctes() in served_views().text["planet_osm_point"]

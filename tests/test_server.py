@@ -219,6 +219,109 @@ def test_bbox_and_tile_miss_one_spark_job(served):
     assert json.loads(out)["type"] == "FeatureCollection" and jobs == 1
 
 
+def test_extract_miss_at_most_two_spark_jobs(served):
+    """An /extract runs the PIP match and the id-set semi join in one plan
+    with its bounded collect: no separate ``distinct`` job over the matched
+    ids (a semi join already has set semantics). It ran 3 jobs with it."""
+    _, ts, engine = served
+    out, jobs = _spark_jobs(
+        engine.spark, lambda: ts.page_extract(-4500000, 510000000, 2500000, 520000000)
+    )
+    assert json.loads(out)["features"] and jobs <= 2
+
+
+def test_query_serves_its_own_views_after_register_tables(served, spark):
+    """The planet_osm names are global to the session: after another caller
+    registers different definitions over another frame (relation rows
+    unioned into the polygon view, no parent_highway join), the engine's
+    next /query re-creates its own views and answers byte for byte as
+    before."""
+    from osmquadtree_bin_spark.datagen import gen_docs, gen_multipolygon
+    from osmquadtree_bin_spark.plans.tables import register_tables
+    from osmquadtree_bin_spark.spans import explode_geoms
+
+    base, _, _ = served
+    bb = "-4500000,510000000,2500000,520000000"
+    queries = [
+        "SELECT osm_id, way_area FROM planet_osm_polygon ORDER BY osm_id, way_area",
+        "SELECT osm_id, parent_highway FROM planet_osm_point ORDER BY osm_id, parent_highway",
+        "SELECT osm_id, z_order FROM planet_osm_roads ORDER BY osm_id, z_order",
+    ]
+
+    def answers():
+        return [
+            _get(f"{base}/query?sql={urllib.parse.quote(q)}&bbox={bb}")[1] for q in queries
+        ]
+
+    before = answers()
+    nodes, ways, rels = gen_multipolygon(spark, n_rels=7)
+    other = register_tables(
+        spark, explode_geoms(gen_docs(spark, n_docs=50, seed=7)), parent_highway=False,
+        relations=rels, ways=ways, nodes=nodes,
+    )
+    assert other["planet_osm_polygon"].filter("osm_id < 0").count() >= 7
+    assert answers() == before
+    assert json.loads(before[0])["n"] > 0
+
+
+def test_query_creates_only_the_views_it_references(served, spark, monkeypatch):
+    """A view is created the first time a query names it, after the views
+    it reads from (roads reads line and polygon); a later query over
+    another bbox only re-points the slice."""
+    from osmquadtree_bin_spark.plans.tables import BASE_VIEW, SERVED, VIEWS_CONF
+
+    _, ts, engine = served
+    spark.conf.unset(VIEWS_CONF)
+    for name in (*SERVED, BASE_VIEW):
+        spark.catalog.dropTempView(name)
+
+    def live():
+        return {n for n in (*SERVED, BASE_VIEW) if spark.catalog.tableExists(n)}
+
+    ts.page_query("SELECT count(*) AS n FROM planet_osm_polygon", (0, 0, 1, 1))
+    assert live() == {"planet_osm_polygon", BASE_VIEW}
+    ts.page_query("SELECT osm_id FROM planet_osm_roads", (0, 0, 1, 1))
+    assert live() == {"planet_osm_polygon", "planet_osm_line", "planet_osm_roads", BASE_VIEW}
+    made = []
+    orig = engine.spark.sql
+    monkeypatch.setattr(engine.spark, "sql", lambda q, *a, **k: made.append(q) or orig(q, *a, **k))
+    body = ts.page_query(
+        "SELECT count(*) AS n FROM planet_osm_polygon", (-4500000, 510000000, 2500000, 520000000)
+    )
+    assert not [q for q in made if q.startswith("CREATE")]
+    assert json.loads(body)["rows"][0]["n"] > 0
+
+
+def test_read_tiles_past_32_directories_one_spark_job(spark, tmp_path):
+    """Reading more tile directories than Spark's parallel partition
+    discovery threshold (32) lists them on the driver: no listing job, so a
+    bounded collect over 40 tiles is one job (2 with the listing job)."""
+    import pandas as pd
+
+    from osmquadtree_bin_spark.plans.store import TileQueryEngine
+    from osmquadtree_bin_spark.tuning import collect_limited
+
+    store = str(tmp_path / "tiles")
+    spark.range(80).selectExpr("id", "CAST(id % 40 AS INT) AS tile_idx").write.partitionBy(
+        "tile_idx"
+    ).parquet(store)
+    engine = TileQueryEngine(spark, store, pd.DataFrame({"tile_idx": [], "tile_qt": []}))
+    rows, jobs = _spark_jobs(spark, lambda: collect_limited(engine.read_tiles(range(40)), 1000))
+    assert len(rows) == 80 and jobs == 1
+
+
+def test_traced_engine_names_importable():
+    """perfbench's tracer wraps these engine names; they stay importable."""
+    from osmquadtree_bin_spark.plans import store
+    from perfbench.trace import _targets
+
+    assert callable(store.register_tables)
+    for m in ("pruned_tiles", "scan_bbox", "tables_for_bbox", "sql", "rawtile", "extract"):
+        assert callable(getattr(store.TileQueryEngine, m))
+    for owner, attr, *_ in _targets():
+        assert callable(getattr(owner, attr)), attr
+
+
 def test_extract_region_frame_is_driver_local(served, monkeypatch):
     """/extract's region frame is collected twice (tile pruning, pip_join's
     broadcast side); it is driver-local, so neither collect runs a job."""

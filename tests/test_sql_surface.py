@@ -144,7 +144,7 @@ def test_z_order_table_reference_parity(spark):
     """Pin the entries the reference map (osmquadtree-geometry-features.go:
     722-770) defines per-value — the ones a flat per-key default would get
     wrong — plus layer shifting and first-match-key precedence."""
-    from osmquadtree_bin_spark.functions.zorder import Z_ORDER_TABLE, z_order
+    from osmquadtree_bin_spark.functions.zorder import Z_ORDER_TABLE, z_order_sql
 
     expected = {
         "railway_rail": 440, "railway_subway": 420, "railway_tram": 410,
@@ -165,5 +165,5 @@ def test_z_order_table_reference_parity(spark):
         ({"building": "yes"}, 0),
     ]
     df = spark.createDataFrame([(t,) for t, _ in rows], "tags map<string,string>")
-    got = [r[0] for r in df.select(z_order("tags")).collect()]
+    got = [r[0] for r in df.selectExpr(z_order_sql("tags")).collect()]
     assert got == [z for _, z in rows]

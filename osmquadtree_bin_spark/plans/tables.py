@@ -20,9 +20,9 @@ The views are session-global names. Each creation records a digest of its
 text in one session conf key (``VIEWS_CONF``), so a caller can tell with one
 ``spark.conf.get`` whether the live definition of a name is the one it
 would create (``ServedViews.ensure``), and re-create only the ones that are
-not. ``register_tables`` points the slice at its frame and creates all of
-them; the tiled-store engine creates each one the first time a query
-references it.
+not. ``register_tables`` points the slice at its frame and ensures all of
+them; the tiled-store engine ensures each one the first time a query
+references it. Both go through that one digest check.
 """
 
 from __future__ import annotations
@@ -233,22 +233,24 @@ class ServedViews:
             )),
             "planet_osm_roads": _view("planet_osm_roads", translate(ROADS_VIEW_SQL)),
         }
+        # which view reads which, from the FROM clauses of the texts
         self.deps = {
-            BASE_VIEW: (),
-            "planet_osm_point": (BASE_VIEW,),
-            "planet_osm_line": (BASE_VIEW,),
-            "planet_osm_polygon": (BASE_VIEW,),
-            "planet_osm_roads": ("planet_osm_line", "planet_osm_polygon"),
+            k: tuple(n for n in self.text if n != k and re.search(rf"\b{n}\b", t))
+            for k, t in self.text.items()
         }
         self.digest = {
             k: hashlib.sha1(v.encode()).hexdigest()[:16] for k, v in self.text.items()
         }
 
-    def ensure(self, spark: SparkSession, names, force: bool = False) -> None:
+    def ensure(self, spark: SparkSession, names) -> None:
         """Create each view of ``names`` and the views it reads from whose
-        live definition is not this one's text (all of them when
-        ``force``). The slice view must exist: creation analyzes the text
-        against it."""
+        live definition is not this one's text. The slice view must exist:
+        creation analyzes the text against it.
+
+        ``VIEWS_CONF`` is trusted to name the live definitions, so anything
+        that drops or replaces one of these views other than through
+        ``ensure`` (``spark.catalog.dropTempView``, a direct
+        ``createOrReplaceTempView``) must also unset ``VIEWS_CONF``."""
         live = dict(
             kv.split("=") for kv in spark.conf.get(VIEWS_CONF, "").split(",") if kv
         )
@@ -259,7 +261,7 @@ class ServedViews:
                 return
             for dep in self.deps[name]:
                 walk(dep)
-            if force or live.get(name) != self.digest[name]:
+            if live.get(name) != self.digest[name]:
                 if name == "planet_osm_polygon":
                     spark.udf.register("way_area_merc", way_area_merc)
                 spark.sql(self.text[name])
@@ -341,7 +343,5 @@ def register_tables(
     elements.createOrReplaceTempView(SLICE_VIEW)
     if relations is not None:
         _relation_rows(relations, ways, nodes).createOrReplaceTempView(RELATIONS_VIEW)
-    served_views(style_path, parent_highway, relations is not None).ensure(
-        spark, SERVED, force=True
-    )
+    served_views(style_path, parent_highway, relations is not None).ensure(spark, SERVED)
     return {name: spark.table(name) for name in SERVED}

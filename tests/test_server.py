@@ -4,6 +4,7 @@ Covers the reference server's route set (tile / bbox / sql query / extract /
 status / UI page) and its exact cache sizing (1 bbox result, 3 raw-tile
 results, osmquadtree-geometry.go:235-243 & :291-298)."""
 
+import itertools
 import json
 import os
 import urllib.parse
@@ -184,10 +185,15 @@ def test_extract_parquet_artifact_roundtrip(served, tmp_path):
     assert store.read().count() == len(want)
 
 
+_JOB_GROUPS = itertools.count()
+
+
 def _spark_jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran on this thread)."""
+    """(fn(), number of Spark jobs fn ran on this thread). Each call gets a
+    fresh job group: ``id(fn)`` is reused once a lambda is freed, and the
+    status tracker still holds the jobs of the earlier group of that name."""
     sc = spark.sparkContext
-    group = f"server-jobs-{id(fn)}"
+    group = f"server-jobs-{next(_JOB_GROUPS)}"
     sc.setJobGroup(group, "server job count")
     try:
         out = fn()

@@ -409,17 +409,3 @@ def gen_multipolygon(spark, n_rels: int = 40, seed: int = 46):
     )
     return nodes, ways, rels
 
-
-def gen_tile_requests(spark, n: int = 64, seed: int = 44):
-    """F4: raster tile requests biased toward the hot clusters."""
-    rng = np.random.default_rng(seed)
-    from . import quadtree as qtk
-
-    rows = []
-    for _ in range(n):
-        lon, lat = _coord(rng)
-        z = int(rng.integers(8, 15))
-        key = qtk.point_quadtree(np.array([lon]), np.array([lat]), z)
-        tx, ty, tz = qtk.to_tuple(key)
-        rows.append((int(tx[0]), int(ty[0]), int(tz[0])))
-    return spark.createDataFrame(rows, "tilex long, tiley long, tilez long")

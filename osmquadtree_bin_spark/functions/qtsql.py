@@ -24,7 +24,7 @@ against the numpy kernel by hypothesis property tests.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..quadtree import COORD_SCALE, MAX_DEPTH, MAX_LAT
 
@@ -178,7 +178,3 @@ def with_qt_sql(
     # cut the alias lineage of the deep qt chain — see sever_lineage
     return sever_lineage(df, [out])
 
-
-def qt_sql_expr_cols(df: DataFrame, out: str = "qt") -> Column:
-    """Convenience: the qt column appended by :func:`with_qt_sql`."""
-    return with_qt_sql(df, out=out)[out]

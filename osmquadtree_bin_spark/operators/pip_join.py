@@ -19,8 +19,6 @@ Spark-first design for 100 TB:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -60,7 +58,8 @@ def _point_in_rings(px: np.ndarray, py: np.ndarray, lons: np.ndarray, lats: np.n
     return (crossings % 2).astype(bool)
 
 
-PIP_BBOX_JOIN_CROSSOVER = int(os.environ.get("PIP_BBOX_JOIN_CROSSOVER", "256"))
+# bbox-region count above which the grid-cell join arm replaces the WHEN array
+PIP_BBOX_JOIN_CROSSOVER = 256
 _MAX_GRID_CELLS_PER_AXIS = 4096
 
 

@@ -46,8 +46,3 @@ def to_spark_sql(corpus_sql: str) -> str:
 def run_query(spark: SparkSession, corpus_sql: str) -> DataFrame:
     return spark.sql(to_spark_sql(corpus_sql))
 
-
-def run_corpus(spark: SparkSession, names: list[str] | None = None) -> dict[str, DataFrame]:
-    corpus = load_corpus()
-    keys = names if names is not None else sorted(corpus)
-    return {k: run_query(spark, corpus[k]) for k in keys}

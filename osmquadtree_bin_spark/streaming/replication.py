@@ -1,7 +1,7 @@
 """S6 replication-source helpers: diff URL sharding, state.txt parsing, and
 the catch-up plan — the pure-offline half of the reference's HTTP diff source
 (``/root/reference/osmquadtree-update.go:46-160``). The network fetch itself
-stays a stub in this sandbox (no egress); everything below it is real and
+(``fetchDiff``) is not implemented; the helpers below are real and
 unit-tested.
 
   * ``make_diff_url``  — ``makeDiffUrl`` (:141-147): state 4270123 →
@@ -62,8 +62,3 @@ def plan_catch_up(prefix: str, last_applied: int, head: int) -> list[tuple[int, 
     loop shape of the reference's catch-up (:315-370)."""
     return [(s, make_diff_url(prefix, s)) for s in range(last_applied + 1, head + 1)]
 
-
-def fetch_diff(dst: str, src: str) -> int:  # pragma: no cover - sandbox stub
-    """HTTP GET → file (reference fetchDiff :46-68). Stubbed: this sandbox
-    has no network egress; wire to urllib/requests in production."""
-    raise NotImplementedError("network fetch is stubbed in this environment")

@@ -10,12 +10,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-def _struct(*names: str) -> StructType:
-    return StructType([StructField(n, LongType()) for n in names])
+from pyspark.sql.types import LongType
 
 from . import quadtree as qtk
 
@@ -29,53 +25,6 @@ def qt_point(lon: pd.Series, lat: pd.Series) -> pd.Series:
 
 
 @pandas_udf(LongType())
-def qt_calculate(minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.Series:
-    """``quadtree.Calculate(bbox, 0.05, 18)`` — the reference split rule
-    (``osmquadtree-rebase.go:109``)."""
-    return pd.Series(
-        qtk.calculate(
-            minx.to_numpy(np.int64),
-            miny.to_numpy(np.int64),
-            maxx.to_numpy(np.int64),
-            maxy.to_numpy(np.int64),
-            buffer=0.05,
-            maxdepth=qtk.MAX_DEPTH,
-        )
-    )
-
-
-@pandas_udf(LongType())
-def qt_round(key: pd.Series, level: pd.Series) -> pd.Series:
-    return pd.Series(qtk.round_to(key.to_numpy(np.int64), level.to_numpy(np.int64)))
-
-
-@pandas_udf(LongType())
-def qt_common(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Pairwise LCA; used as a reduce step (associative + commutative)."""
-    return pd.Series(qtk.common(a.to_numpy(np.int64), b.to_numpy(np.int64)))
-
-
-@pandas_udf(StringType())
-def qt_string(key: pd.Series) -> pd.Series:
-    return pd.Series(qtk.to_string(key.to_numpy(np.int64)).astype(object))
-
-
-@pandas_udf(LongType())
-def qt_from_tuple(tx: pd.Series, ty: pd.Series, tz: pd.Series) -> pd.Series:
-    return pd.Series(
-        qtk.from_tuple(tx.to_numpy(np.int64), ty.to_numpy(np.int64), tz.to_numpy(np.int64))
-    )
-
-
-@pandas_udf(_struct("tx", "ty", "tz"))
-def qt_tuple(key: pd.Series) -> pd.DataFrame:
-    """Decode key → (tile x, tile y, zoom) struct. Matches ``k.Tuple()``
-    (``osmquadtree-geometry.go:361``)."""
-    tx, ty, tz = qtk.to_tuple(key.to_numpy(np.int64))
-    return pd.DataFrame({"tx": tx, "ty": ty, "tz": tz})
-
-
-@pandas_udf(LongType())
 def qt_lca_agg(key: pd.Series) -> int:  # grouped-agg variant
     """Grouped-aggregate LCA over a whole group (A2) — numpy tree-reduce,
     shuffle-safe because LCA is associative/commutative."""
@@ -84,21 +33,3 @@ def qt_lca_agg(key: pd.Series) -> int:  # grouped-agg variant
         return 0
     return int(qtk.common_reduce(arr))
 
-
-def with_bounds(df, key_col: str, buffer: float = 0.0, prefix: str = "b"):
-    """Attach buffered cell bounds columns (fixed-point ints) for a key column."""
-
-    @pandas_udf(_struct("minx", "miny", "maxx", "maxy"))
-    def _bounds(key: pd.Series) -> pd.DataFrame:
-        minx, miny, maxx, maxy = qtk.bounds(key.to_numpy(np.int64), buffer)
-        return pd.DataFrame({"minx": minx, "miny": miny, "maxx": maxx, "maxy": maxy})
-
-    struct = _bounds(F.col(key_col))
-    return (
-        df.withColumn("_b", struct)
-        .withColumn(f"{prefix}_minx", F.col("_b.minx"))
-        .withColumn(f"{prefix}_miny", F.col("_b.miny"))
-        .withColumn(f"{prefix}_maxx", F.col("_b.maxx"))
-        .withColumn(f"{prefix}_maxy", F.col("_b.maxy"))
-        .drop("_b")
-    )

@@ -3,17 +3,22 @@
 tools/bench_report decides which per-stage walls count as verified engine
 evidence — on a steal-heavy shared host this logic IS the integrity of every
 scaling number we publish, so it gets the same test treatment as an
-operator. All but one test are pure-python;
+operator. Most tests are pure-python;
 ``test_scaling_record_carries_every_admitted_stage_key`` runs the scaling
 bench's measurement body on Spark and checks that its record carries what
-the admission rule reads.
+the admission rule reads, and ``test_retired_mode_exits_before_spark`` runs
+``bench.py --scaling`` in a subprocess.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
 import sys
 
 import tools.bench_report as br
+import tools.bench_scaling as bs
 
 
 def _knee_record(date, stages_lo, stages_hi, cpus_lo=2, cpus_hi=8):
@@ -30,12 +35,15 @@ def _knee_record(date, stages_lo, stages_hi, cpus_lo=2, cpus_hi=8):
     }
 
 
-def _stages(wall, steal, busy, names=("parse_qt",)):
+def _stages(wall, steal, busy, names=("parse_qt",), own=None):
+    """One stage window; ``own`` is the job's own CPU rate in cores
+    (default: all of ``busy``, i.e. no foreign load)."""
     out = {}
     for n in names:
         out[n] = wall
         out[f"{n}_steal_cores"] = steal
         out[f"{n}_busy_cores"] = busy
+        out[f"{n}_pg_cpu_s"] = (busy if own is None else own) * wall
     return out
 
 
@@ -59,12 +67,13 @@ def test_steal_gate_rejects_loud_stage():
 
 
 def test_busy_gate_rejects_competing_guest_load():
-    # steal is clean on both levels, but the low level shows 2 extra busy
-    # cores beyond its allotment — another process competed; reject.
+    # steal is clean on both levels, but the low level shows busy cores
+    # beyond the job's own CPU by more than the margin — another process
+    # competed; reject.
     h = [
         _knee_record(
             "d1",
-            _stages(100.0, steal=0.0, busy=2 + br.BUSY_CLEAN_MARGIN + 0.5),
+            _stages(100.0, steal=0.0, busy=2 + br.BUSY_CLEAN_MARGIN + 0.5, own=2.0),
             _stages(30.0, steal=0.0, busy=8.0),
         ),
         _knee_record(
@@ -103,26 +112,6 @@ def test_serial_stage_excluded_from_composite():
     # composite over parse_qt only: 100/(4*25) = 1.0
     n_parallel = len([s for s in br.STAGE_ORDER if s not in br.SERIAL_STAGES])
     assert f"1/{n_parallel} clean-covered parallel stages): 1.0" in joined
-
-
-def test_serial_stage_busy_beyond_level_allotment_rejected():
-    # a serial stage showing 6 busy cores at a 2-core level means another
-    # process competed during its window (beyond the level's cpus + margin)
-    # — reject despite zero steal. The stage's own work is ~1 core, but the
-    # app's executor JVMs legitimately contribute background busy up to the
-    # level's allotment.
-    h = [
-        _knee_record(
-            "d1",
-            _stages(0.4, 0.0, 6.0, ("find_groups",)),
-            _stages(0.4, 0.0, 1.0, ("find_groups",)),
-        ),
-        _knee_record(
-            "d2", _stages(5.0, 0.0, 2.0, ("pip",)), _stages(1.5, 0.0, 8.0, ("pip",))
-        ),
-    ]
-    joined = "\n".join(br._stage_clean_lines(h))
-    assert "| find_groups | — | — | — | no clean window yet (0 runs) |" in joined
 
 
 def test_no_parallel_coverage_claims_no_composite():
@@ -207,8 +196,6 @@ def test_scaling_record_carries_every_admitted_stage_key(spark, tmp_path, monkey
     """``tools.bench_scaling._scaling_body`` writes, for every STAGE_ORDER
     stage, the keys ``stage_clean`` reads: the wall and, where /proc exists,
     the stage's steal, busy and own-CPU figures."""
-    import tools.bench_scaling as bs
-
     monkeypatch.setattr(
         bs, "_staged_docs_path",
         lambda n_docs, parts, fallback_base="/tmp": str(tmp_path / f"docs_{n_docs}_{parts}"),
@@ -224,3 +211,43 @@ def test_scaling_record_carries_every_admitted_stage_key(spark, tmp_path, monkey
         }
         assert {"steal_cores", "busy_cores"} <= set(rec)
     assert want <= set(rec["stages"])
+
+
+def _committed_history():
+    with open(bs.HISTORY_PATH) as f:
+        return json.load(f)
+
+
+def test_committed_history_composite():
+    assert br._stage_composite(_committed_history()) == 0.7768
+
+
+def test_committed_history_is_the_current_knee_config():
+    want = (bs.KNEE_LEVELS, bs.N_DOCS_KNEE, bs.IMPL_TAG)
+    history = _committed_history()
+    assert history
+    for h in history:
+        k = h["knee"]
+        assert (tuple(k["levels"]), k["n_docs"], k["impl"]) == want
+
+
+def test_bench_py_imports_resolve():
+    from tools.bench_scaling import (  # noqa: F401  (the names bench.py imports)
+        jvm_calib_job, knee_repeat, knee_until, run_scaling, scaling_job,
+        stage_docs, write_path_probe,
+    )
+
+
+def test_retired_mode_exits_before_spark():
+    # a JVM launch under this PYSPARK_SUBMIT_ARGS fails with spark-submit's
+    # own error, so the archive message proves the exit came first
+    out = subprocess.run(
+        [sys.executable, "bench.py", "--scaling"],
+        cwd=br.REPO,
+        capture_output=True,
+        text=True,
+        timeout=120,
+        env={**os.environ, "PYSPARK_SUBMIT_ARGS": "--no-such-flag"},
+    )
+    assert out.returncode != 0
+    assert "BENCH_SCALING_ARCHIVE.json" in out.stderr

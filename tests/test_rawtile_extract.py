@@ -19,16 +19,27 @@ def engine(spark, docs, tmp_path_factory):
     return TileQueryEngine(spark, path, groups)
 
 
-def test_rawtile_matches_oracle(spark, docs, engine):
+@pytest.mark.parametrize(
+    "lon, lat, z, nonempty",
+    [
+        (int(-0.13e7), int(51.5e7), 0, True),  # the root cell: every element
+        (int(-0.13e7), int(51.5e7), 10, True),  # over the London cluster
+        (-302111, 516188881, 18, True),  # a max-depth cell holding one point
+        (0, int(-60e7), 10, False),  # open South Atlantic: no elements
+    ],
+    ids=["z0", "z10", "z18", "empty"],
+)
+def test_rawtile_matches_oracle(spark, docs, engine, lon, lat, z, nonempty):
+    """Descendant-or-equal fetch: every element at depth >= z whose qt
+    rounds to the requested cell, and nothing else."""
     el = explode_geoms(docs).toPandas()
-    # a zoom-10 cell over the London cluster
-    key = qtk.point_quadtree(np.array([int(-0.13e7)]), np.array([int(51.5e7)]), 10)
+    key = qtk.point_quadtree(np.array([lon]), np.array([lat]), z)
     tx, ty, tz = (int(v[0]) for v in qtk.to_tuple(key))
     got = set(engine.rawtile(tx, ty, tz).toPandas()["id"])
     deep = el[(el.qt & 31) >= tz]
     want = set(deep.id[qtk.round_to(deep.qt.to_numpy(np.int64), tz) == int(key[0])])
     assert got == want
-    assert got, "expected a nonempty hot tile"
+    assert bool(got) == nonempty
 
 
 def test_extract_sorted_and_trimmed(spark, engine):

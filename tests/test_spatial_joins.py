@@ -1,4 +1,4 @@
-"""PIP join, kNN, raster↔vector join, element-assembly joins (SURVEY.md §2.3)."""
+"""PIP join, kNN, element-assembly joins (SURVEY.md §2.3)."""
 
 import numpy as np
 import pandas as pd
@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osmquadtree_bin_spark import quadtree as qtk
-from osmquadtree_bin_spark.datagen import gen_elements, gen_regions, gen_tile_requests
+from osmquadtree_bin_spark.datagen import gen_elements, gen_regions
 from osmquadtree_bin_spark.operators.element_joins import (
     node_qts,
     node_qts_with_way_backprop,
@@ -15,7 +15,6 @@ from osmquadtree_bin_spark.operators.element_joins import (
 )
 from osmquadtree_bin_spark.operators.knn import knn_bruteforce, knn_tiled
 from osmquadtree_bin_spark.operators.pip_join import idset_trim, pip_join, region_tiles
-from osmquadtree_bin_spark.operators.raster_vector import raster_vector_join
 from osmquadtree_bin_spark.spans import explode_geoms
 
 
@@ -123,29 +122,6 @@ def test_knn_tiled_matches_bruteforce(spark, elements):
     bf = knn_bruteforce(elements, queries, k=3).toPandas().sort_values("rank")
     tl = knn_tiled(tiled, queries, g, k=3, ring_levels=14).toPandas().sort_values("rank")
     assert tl["id"].tolist() == bf["id"].tolist()
-
-
-# ------------------------------------------------------------- raster↔vector
-def test_raster_vector_join(spark, elements):
-    reqs = gen_tile_requests(spark, n=32)
-    got = raster_vector_join(elements, reqs).toPandas()
-    el = elements.toPandas()
-    reqs_pd = reqs.toPandas()
-    # oracle: element qt rounded to tilez equals the request cell
-    for r in reqs_pd.itertuples():
-        key = int(
-            qtk.from_tuple(
-                np.array([r.tilex]), np.array([r.tiley]), np.array([r.tilez])
-            )[0]
-        )
-        deep = el[(el.qt & 31) >= r.tilez]
-        want = set(
-            deep.id[qtk.round_to(deep.qt.to_numpy(np.int64), int(r.tilez)) == key]
-        )
-        have = set(
-            got[(got.tilex == r.tilex) & (got.tiley == r.tiley) & (got.tilez == r.tilez)]["id"]
-        )
-        assert have == want
 
 
 # ----------------------------------------------------- element assembly joins

@@ -83,12 +83,24 @@ def test_replval_isval_haskey(spark, tagdf):
         C.replval("highway", {"motorway_link": "mlink", "": "other"}).alias("rv"),
         C.isval("building", "house").alias("iv"),
         C.haskey("name").alias("hk"),
+        C.renamecol("highway", "hw"),
+        C.hassuffix("highway", "_link").alias("hs"),
+        C.haseither([C.isval("highway", "footway"), C.yesno("oneway")]).alias("he"),
+        C.asint("layer").alias("ai"),
+        C.asint("ref").alias("ar"),
+        C.is_building().alias("ib"),
     ).collect()
     assert got[0]["rv"] == "mlink"
     assert got[1]["rv"] == "other"  # footway → default
     assert got[3]["rv"] is None  # absent → null
     assert got[2]["iv"] == "yes" and got[0]["iv"] is None
     assert got[2]["hk"] == "yes" and got[0]["hk"] == "no"
+    assert [r["hw"] for r in got] == ["motorway_link", "footway", None, None]
+    assert [r["hs"] for r in got] == ["yes", "no", None, None]
+    # oneway=yes on row 0, highway=footway on row 1; absent tags are "no"
+    assert [r["he"] for r in got] == ["yes", "yes", "no", "no"]
+    assert got[0]["ai"] == 2 and got[2]["ar"] is None and got[3]["ai"] is None
+    assert [r["ib"] for r in got] == [False, False, True, False]
 
 
 def test_splitcol_joincol(spark, tagdf):

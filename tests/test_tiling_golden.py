@@ -13,13 +13,12 @@ import pandas as pd
 import pytest
 
 from osmquadtree_bin_spark import quadtree as qtk
+from osmquadtree_bin_spark.sources import write_groups_dump, write_tree_dump
 from osmquadtree_bin_spark.tiling import (
     assign_tiles,
     count_tree,
     find_groups,
-    group_lines,
     make_tile_assigner,
-    tree_lines,
 )
 from tests.independent_oracles import _find_groups_reference, assign_tiles_arrow
 
@@ -94,19 +93,19 @@ def test_assigner_matches_walk_semantics():
     pd.testing.assert_series_equal(got.sort_index(), want.sort_index(), check_names=False)
 
 
-def test_golden_tree_and_groups():
+def test_golden_tree_and_groups(tmp_path):
+    """The S12 text dumpers write byte-identical qts.txt / groups.txt."""
     cells, counts = _synth_counts()
-    tl = tree_lines(cells, counts)
     g = find_groups(cells, counts, target=8000, minimum=4000)
-    gl = group_lines(g)
     tree_path = os.path.join(GOLDEN, "qts.txt")
     grp_path = os.path.join(GOLDEN, "groups.txt")
     if not os.path.exists(tree_path):
         pytest.skip("goldens not generated yet (run tests/make_goldens.py)")
-    with open(tree_path) as f:
-        assert f.read() == "\n".join(tl) + "\n"
-    with open(grp_path) as f:
-        assert f.read() == "\n".join(gl) + "\n"
+    write_tree_dump(str(tmp_path / "qts.txt"), cells, counts)
+    write_groups_dump(str(tmp_path / "groups.txt"), g)
+    for name, golden in (("qts.txt", tree_path), ("groups.txt", grp_path)):
+        with open(golden, "rb") as want, open(tmp_path / name, "rb") as got:
+            assert got.read() == want.read()
 
 
 def test_end_to_end_tiling_on_docs(spark, docs):

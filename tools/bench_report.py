@@ -1,8 +1,9 @@
-"""BENCH.md renderer — pure formatting over the measured records.
+"""BENCH.md renderer — pure formatting over the measured knee history.
 
-Split out of bench.py (round-4 verdict #8): bench.py measures and appends to
-BENCH_SCALING_HISTORY.json; this module is the ONE place a record becomes
-markdown. No measurement, no side effects beyond writing BENCH.md.
+tools/bench_scaling measures and appends to BENCH_SCALING_HISTORY.json; this
+module is the ONE place a record becomes markdown. No measurement, no side
+effects beyond writing BENCH.md. Re-render from the committed history with
+``python tools/bench_report.py``.
 """
 
 from __future__ import annotations
@@ -11,92 +12,116 @@ import json
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-EXEC_CORES = int(os.environ.get("BENCH_EXEC_CORES", "8"))
-WRITE_PATH_ARTIFACT = os.path.join(REPO, "WRITE_PATH.json")
+
+STAGE_ORDER = (
+    "parse_qt", "count_tree", "find_groups", "assign_write_tiled",
+    "lineage", "pip",
+)
+# find_groups is the deterministic driver-side group walk and lineage a
+# driver-side parquet-footer walk (jobs/prepare_job.py): serial BY DESIGN,
+# absolute wall capped (~0.5 s) and independent of cluster size. Their
+# "efficiency" is definitionally ~1/factor and says nothing about the
+# engine's distributed stages, so they are reported by absolute wall and
+# excluded from the composite.
+SERIAL_STAGES = frozenset({"find_groups", "lineage"})
+# A stage window counts as uncontaminated only when the hypervisor stole less
+# than this many cores on average during it. 0.35 distorts a 2-core level by
+# at most ~±17% and an 8-core level by ~±4%.
+STEAL_CLEAN_CORES = 0.35
+# Foreign-CPU margin: whole-guest busy cores minus the job's own
+# descendant-tree CPU rate above this means ANOTHER process on the box
+# competed during the window — contamination the steal counter cannot see
+# (steal is hypervisor-level, busy is guest-level).
+BUSY_CLEAN_MARGIN = 1.5
 
 
-def _stage_rows(rn: dict, r4: dict, factor: int) -> list[str]:
-    """Per-stage wall table rows (shared by the knee and main sections)."""
-    out = []
-    for key in rn.get("stages", {}):
-        if key.endswith(
-            ("_mb", "_mb_per_s", "_steal_cores", "_busy_cores", "_pg_cpu_s")
-        ):
-            continue
-        a, b = rn["stages"][key], r4["stages"].get(key, float("nan"))
-        eff = round(a / b / factor, 2) if b else float("nan")
-        out.append(f"| {key} | {a} | {b} | {eff} |")
-    return out
+def stage_clean(stages: dict, st: str) -> bool:
+    """Admission rule for one stage window.
+
+    steal gate: hypervisor stole < STEAL_CLEAN_CORES during the window.
+
+    busy gate: foreign busy, ``busy_cores − own_cpu_s / wall``, stays under
+    BUSY_CLEAN_MARGIN. The own CPU (``{st}_pg_cpu_s``) is the job's
+    descendant-tree CPU, so a stage that legitimately overcommits its
+    allotment (pip: JVM pipeline + Arrow Python workers ≈ 10 busy cores on
+    an 8-core level, identically at both levels) is not mistaken for a
+    neighbor. A window without that figure is not admitted."""
+    steal = stages.get(f"{st}_steal_cores")
+    busy = stages.get(f"{st}_busy_cores")
+    own = stages.get(f"{st}_pg_cpu_s")
+    wall = stages.get(st)
+    if steal is None or busy is None or own is None or not wall:
+        return False
+    return steal < STEAL_CLEAN_CORES and busy - own / wall < BUSY_CLEAN_MARGIN
 
 
-def _write_path_lines() -> list[str]:
-    if not os.path.exists(WRITE_PATH_ARTIFACT):
-        return []
-    with open(WRITE_PATH_ARTIFACT) as f:
-        wp = json.load(f)
-    return [
-        (
-            f"Isolated write path (dated artifact WRITE_PATH.json, {wp['date']}, "
-            "`python bench.py --write-path`): with the assign compute excluded "
-            "(assigned table pre-staged), read → repartition(tile_idx) → sort → "
-            f"write moves **{wp['rows']:,} rows in {wp['wall_sec']} s = "
-            f"{wp['rows_per_sec']:,.0f} rows/s** at local[{wp['cpus']}] — "
-            "substantially faster than the full pipeline's end-to-end rate, "
-            "i.e. the write stage alone is NOT the limiter; in the pipeline "
-            "all stages compete for the same cores and memory system."
-        ),
-        "",
-    ]
+def _knee_config(history: list[dict]) -> tuple | None:
+    """(levels, n_docs, impl) of the NEWEST knee record — the config whose
+    walls the report pools and whose level ratio sets the efficiency
+    factor."""
+    for h in reversed(history):
+        k = h.get("knee")
+        if k:
+            return (tuple(k["levels"]), k.get("n_docs"), k.get("impl"))
+    return None
 
 
-def _knee_lines(record: dict) -> list[str]:
-    """Section for the below-the-knee N→4N pair (2→8 cores by default): the
-    parallelism step where the box's own no-engine ceiling clears ~0.9, so
-    engine scaling is separable from memory-bandwidth sharing."""
-    knee = record.get("knee")
-    if not knee:
-        return []
-    kn, kn4 = knee["levels"]
-    ec = knee["exec_cores"]
-    rn, r4 = knee["cluster"][str(kn)], knee["cluster"][str(kn4)]
-    raw = knee["calib_raw_cpu"]
-    factor = kn4 // kn
-    return [
-        f"## Below the bandwidth knee: {kn}→{kn4} cores "
-        f"({kn // ec}→{kn4 // ec} executor JVMs × {ec} cores)",
-        "",
-        f"The {record['levels'][0]}→{record['levels'][1]} step saturates this "
-        "box's single memory system (the no-engine raw-CPU calibration itself "
-        f"lands ~0.7 there). At {kn}→{kn4} cores the same no-engine "
-        f"calibration measures **{raw['efficiency']}** (wall {raw['t_n']}s → "
-        f"{raw['t_4n']}s), i.e. the hardware can express near-linear scaling "
-        "— so this pair isolates ENGINE scaling. Same job, same executor "
-        f"isolation, {knee['n_docs']:,} docs:",
-        "",
-        "| parallelism | rows | wall (s) | rows/sec |",
-        "|---|---|---|---|",
-        f"| {kn // ec}×{ec} cores | {rn['rows']:,} | {rn['wall_sec']} | "
-        f"{rn['rows_per_sec']:,.0f} |",
-        f"| {kn4 // ec}×{ec} cores | {r4['rows']:,} | {r4['wall_sec']} | "
-        f"{r4['rows_per_sec']:,.0f} |",
-        "",
-        f"**Below-knee scaling efficiency {kn}→{kn4}: "
-        f"{knee['efficiency_cluster']}** (no-engine ceiling at the same "
-        f"step: {raw['efficiency']}). Probe walls {knee.get('cpu_probes')} s, "
-        f"spread {knee.get('probe_spread')}.",
-        "",
-        f"| stage | {kn // ec} exec | {kn4 // ec} exec | efficiency |",
-        "|---|---|---|---|",
-        *_stage_rows(rn, r4, factor),
-        "",
-    ]
+def _pooled_levels(history: list[dict]):
+    """(N-level record, 4N-level record) of every knee record matching the
+    current config: min-walls from a different level pair, input size or
+    engine revision would publish a ratio no single engine ever produced."""
+    cfg = _knee_config(history)
+    for h in history:
+        k = h.get("knee")
+        if k and (tuple(k["levels"]), k.get("n_docs"), k.get("impl")) == cfg:
+            lo, hi = (str(x) for x in k["levels"])
+            yield k["cluster"][lo], k["cluster"][hi]
+
+
+def _knee_factor(history: list[dict]) -> float:
+    """Core ratio hi/lo of the current knee config (4.0 for 2→8)."""
+    cfg = _knee_config(history)
+    lo, hi = cfg[0] if cfg else (1, 4)
+    return hi / lo
+
+
+def _best_walls(history: list[dict]) -> dict:
+    """{stage: (best N wall, best 4N wall, admitted runs)} over the windows
+    where the stage is clean (``stage_clean``) on BOTH levels of one run.
+    Steal and competition only ever inflate a wall, so the minimum is the
+    engine's best-verified wall."""
+    per_stage: dict[str, list[tuple[float, float]]] = {s: [] for s in STAGE_ORDER}
+    for c_lo, c_hi in _pooled_levels(history):
+        s_lo, s_hi = c_lo.get("stages", {}), c_hi.get("stages", {})
+        for st in STAGE_ORDER:
+            if stage_clean(s_lo, st) and stage_clean(s_hi, st):
+                per_stage[st].append((s_lo[st], s_hi[st]))
+    return {
+        st: (min(m[0] for m in ms), min(m[1] for m in ms), len(ms))
+        for st, ms in per_stage.items()
+        if ms
+    }
+
+
+def _composite(best: dict, factor: float) -> tuple[list[str], float | None]:
+    """(covered parallel stages, Σt_N / (factor·Σt_4N) over them)."""
+    covered = [st for st in STAGE_ORDER if st not in SERIAL_STAGES and st in best]
+    tot_hi = sum(best[st][1] for st in covered)
+    tot_lo = sum(best[st][0] for st in covered)
+    return covered, (round(tot_lo / (factor * tot_hi), 4) if tot_hi else None)
+
+
+def _stage_composite(history: list[dict]) -> float | None:
+    """Composite over the best admissible wall per parallel stage; None
+    until every parallel stage has a clean window."""
+    covered, comp = _composite(_best_walls(history), _knee_factor(history))
+    return comp if len(covered) == len(STAGE_ORDER) - len(SERIAL_STAGES) else None
 
 
 def _knee_clean_stats(history: list[dict]) -> dict:
     """Headline numbers over all below-knee pairs: the best steal-clean
     efficiency, and the best steal-clean pair whose single-thread probe
-    spread is also < 1.25 (the round-4 verdict's tightness bar — both
-    contamination detectors quiet at once)."""
+    spread is also < 1.25 (both contamination detectors quiet at once)."""
     clean = [
         h["knee"]
         for h in history
@@ -111,342 +136,60 @@ def _knee_clean_stats(history: list[dict]) -> dict:
     return {"n_clean": len(clean), "best": best, "best_tight": best_t}
 
 
-def _knee_history_lines(history: list[dict]) -> list[str]:
-    """Every below-knee measurement in history (full runs' knee sections +
-    --knee-repeat records): shared-host steal only ever slows a level, so
-    the BEST repeat is the engine's demonstrated capability and the spread
-    is the host's noise, each row carrying its own no-engine ceiling."""
-    rows = []
-    for h in history:
-        k = h.get("knee")
-        if not k:
-            continue
-        mark = " ⚠contaminated" if h.get("contaminated") else ""
-        if k.get("steal_clean") is False:
-            mark += " ⚠steal"
-        steal = k.get("max_steal_cores")
-        rows.append(
-            f"| {h['date']}{mark} | {k['efficiency_cluster']} | "
-            f"{k['calib_raw_cpu']['efficiency']} | "
-            f"{k.get('probe_spread', '—')} | "
-            f"{'—' if steal is None else steal} | "
-            f"{k['cluster'][str(k['levels'][0])]['wall_sec']} | "
-            f"{k['cluster'][str(k['levels'][1])]['wall_sec']} |"
-        )
-    if not rows:
-        return []
-    clean = [
-        h["knee"]["efficiency_cluster"]
-        for h in history
-        if h.get("knee")
-        and not h.get("contaminated")
-        and h["knee"].get("steal_clean") is not False
-    ]
-    defensible = [e for e in clean if e <= 1.0]
-    best = max(defensible) if defensible else None
-    measured = [
-        h["knee"]["efficiency_cluster"]
-        for h in history
-        if h.get("knee") and h["knee"].get("steal_clean") and
-        h["knee"]["efficiency_cluster"] <= 1.0
-    ]
-    best_measured = max(measured) if measured else None
-    return [
-        "### All below-knee measurements (full runs + --knee-repeat)",
-        "",
-        "| when | efficiency 2→8 | no-engine ceiling (same run) | "
-        "probe spread | stolen cores (hypervisor) | N wall (s) | 4N wall (s) |",
-        "|---|---|---|---|---|---|---|",
-        *rows,
-        "",
-        "How to read this: the code and input are IDENTICAL in every row — "
-        "the spread is the shared host, whose effective core count varies "
-        "hour to hour (the 4N level's wall moved several-fold across "
-        "consecutive hours of identical work; multi-core steal is invisible "
-        "to the single-thread probe). Steal on the 4N level deflates the "
-        "ratio; steal on the N level inflates it — an efficiency above 1.0 "
-        "is an N-level-steal artifact, not engine capability, so it is "
-        "excluded from the best below. A row is trustworthy exactly when "
-        "its per-stage walls reproduce across neighbouring measurements. "
-        "Rows since 2026-08-18 carry the DIRECT contamination measurement: "
-        "/proc/stat steal jiffies (this Firecracker VM's hypervisor counter "
-        "of runnable-but-preempted time), averaged to stolen cores over each "
-        "measured window; a pair is steal-clean iff both levels stole "
-        "< 0.35 cores (⚠steal marks the rest). "
-        f"**Best defensible below-knee efficiency (≤1.0, uncontaminated): "
-        f"{best}.**"
-        + (
-            f" **Best steal-clean (counter-verified) efficiency: "
-            f"{best_measured}.**"
-            if best_measured is not None
-            else ""
-        ),
-        "",
-    ]
-
-
-STAGE_ORDER = (
-    "parse_qt", "count_tree", "find_groups", "assign_write_tiled",
-    "lineage", "pip",
-)
-# find_groups is the deterministic driver-side group walk: serial BY DESIGN,
-# absolute wall capped (~0.4 s) and independent of cluster size. Its
-# "efficiency" is definitionally ~1/factor and says nothing about the
-# engine's distributed stages, so it is reported by absolute wall and
-# excluded from the composite.
-# lineage joined this class when the per-tile audit became a driver-side
-# parquet-footer walk (the local-fs analogue of Iceberg's manifest-summary
-# scan; jobs/prepare_job.py:_tile_rows_from_footers): a ~0.5 s single-thread
-# metadata read whose wall is independent of executor count. Earlier history
-# records measured the old distributed-count audit; both are reported by
-# absolute wall here, neither says anything about distributed scaling.
-SERIAL_STAGES = frozenset({"find_groups", "lineage"})
-STEAL_CLEAN_CORES = float(os.environ.get("BENCH_STEAL_CLEAN_CORES", "0.35"))
-# busy-core headroom over the level's allotted cores: the level's own JVM +
-# python driver legitimately use ~cpus + a fraction (GC/IO threads are
-# bounded by ActiveProcessorCount); busy beyond cpus + this margin means
-# ANOTHER process on the box competed during the window — contamination the
-# steal counter cannot see (steal is hypervisor-level, busy is guest-level).
-BUSY_CLEAN_MARGIN = float(os.environ.get("BENCH_BUSY_CLEAN_MARGIN", "1.5"))
-
-
-def stage_clean(stages: dict, st: str, cpus: int, tree_pg: bool = True) -> bool:
-    """Admission rule for one stage window (shared by the report pooling
-    and knee_until's coverage tracking).
-
-    steal gate: hypervisor stole < STEAL_CLEAN_CORES during the window.
-
-    busy gate: exists to catch OTHER-process competition, which shows as
-    whole-guest busy beyond what the job itself is running. When the record
-    carries the stage's own process-group CPU (``{st}_pg_cpu_s``), foreign
-    busy is measured DIRECTLY as ``busy_cores − own_pg_cores`` — this is
-    the r06 refinement: a stage like pip legitimately overcommits its own
-    allotment (JVM pipeline + Arrow Python workers ≈ 10 busy cores on an
-    8-core level, identically at both levels), and the old
-    ``busy < cpus + margin`` rule rejected those windows as if a neighbor
-    had competed. Foreign-CPU margin stays BUSY_CLEAN_MARGIN.
-
-    ``tree_pg``: pass False for records written before hostmetrics switched
-    to descendant-tree CPU accounting (r06) — their pg numbers are
-    process-group-based and MISS the pyspark daemon's workers (the daemon
-    setpgid()s away), so busy−pg would systematically overestimate foreign
-    CPU there; those records keep the allotment rule they were admitted
-    under. Records without pg data likewise."""
-    steal = stages.get(f"{st}_steal_cores")
-    if steal is None or steal >= STEAL_CLEAN_CORES:
-        return False
-    busy = stages.get(f"{st}_busy_cores")
-    if busy is None:
-        return False
-    wall = stages.get(st)
-    pg = stages.get(f"{st}_pg_cpu_s")
-    if tree_pg and pg is not None and wall and wall > 0.5:
-        own = pg / wall
-        return (busy - own) < BUSY_CLEAN_MARGIN
-    return busy < float(cpus) + BUSY_CLEAN_MARGIN
-
-
-def _admitted_stage_walls(history: list[dict], cfg: tuple | None = None) -> dict:
-    """Per-stage admissible (N wall, 4N wall, date) measurements — the
-    admission rule documented in _stage_clean_lines. Only records matching
-    ``cfg`` (default: the newest knee record's levels, n_docs AND engine
-    impl tag) are pooled — mixing walls from a different level pair, input
-    size (BENCH_KNEE_N/4N/BENCH_KNEE_DOCS overrides) or ENGINE REVISION
-    (r06: records carry an ``impl`` tag) would publish a min-wall ratio no
-    single engine ever produced."""
-    per_stage: dict[str, list[tuple[float, float, str]]] = {s: [] for s in STAGE_ORDER}
-    cfg = cfg or _knee_config(history)
-    for h in history:
-        k = h.get("knee")
-        if not k:
-            continue
-        if (tuple(k["levels"]), k.get("n_docs"), k.get("impl")) != cfg:
-            continue
-        lo, hi = (str(x) for x in k["levels"])
-        c_lo, c_hi = k["cluster"][lo], k["cluster"][hi]
-        s_lo, s_hi = c_lo.get("stages", {}), c_hi.get("stages", {})
-
-        for st in STAGE_ORDER:
-            if st not in s_lo or st not in s_hi:
-                continue
-            # descendant-tree pg accounting lands with impl r06b; earlier
-            # records' pg misses setpgid()'d UDF workers (see stage_clean)
-            tree = k.get("impl") not in (None, "r06a")
-            if stage_clean(s_lo, st, c_lo["cpus"], tree) and stage_clean(
-                s_hi, st, c_hi["cpus"], tree
-            ):
-                per_stage[st].append((s_lo[st], s_hi[st], h["date"]))
-    return per_stage
-
-
-def _knee_config(history: list[dict]) -> tuple | None:
-    """(levels, n_docs, impl) of the NEWEST knee record — the config whose
-    walls the report pools and whose level ratio sets the efficiency
-    factor. Legacy records predate the impl tag and group under None."""
-    for h in reversed(history):
-        k = h.get("knee")
-        if k:
-            return (tuple(k["levels"]), k.get("n_docs"), k.get("impl"))
-    return None
-
-
-def _knee_configs_all(history: list[dict]) -> list[tuple]:
-    """Every distinct pooling config in history, oldest→newest by first
-    appearance (for the previous-engine fallback composite and the
-    excluded-record accounting)."""
-    seen: list[tuple] = []
-    for h in history:
-        k = h.get("knee")
-        if not k:
-            continue
-        c = (tuple(k["levels"]), k.get("n_docs"), k.get("impl"))
-        if c not in seen:
-            seen.append(c)
-    return seen
-
-
-def _knee_factor(history: list[dict]) -> float:
-    """Core ratio hi/lo of the current knee config (4.0 for the default
-    2→8); the renderer must not hard-code 4 when the levels come from env."""
-    cfg = _knee_config(history)
-    if not cfg:
-        return 4.0
-    lo, hi = cfg[0]
-    return hi / lo if lo else 4.0
-
-
-def _stage_composite(history: list[dict], cfg: tuple | None = None) -> float | None:
-    """Composite Σt_N / (factor·Σt_4N) over the best admissible wall per
-    parallel stage; None until every parallel stage has a clean window."""
-    per_stage = _admitted_stage_walls(history, cfg)
-    factor = (cfg[0][1] / cfg[0][0]) if cfg else _knee_factor(history)
-    tot_lo = tot_hi = 0.0
-    for st in STAGE_ORDER:
-        if st in SERIAL_STAGES:
-            continue
-        if not per_stage[st]:
-            return None
-        tot_lo += min(m[0] for m in per_stage[st])
-        tot_hi += min(m[1] for m in per_stage[st])
-    return round(tot_lo / (factor * tot_hi), 4) if tot_hi else None
-
-
 def _stage_clean_lines(history: list[dict]) -> list[str]:
     """Steal-verified per-stage scaling: on a box whose neighbor arrives in
     multi-minute bursts, a 12-minute pair is rarely clean end-to-end, but
-    individual STAGES often are. Every knee record since the steal counters
-    carries per-stage stolen-core averages on both levels; a stage
-    measurement is admissible iff during its own window, on BOTH levels of
-    the SAME run, (a) the hypervisor stole < 0.35 cores AND (b) guest
-    busy-cores stayed within the level's own core allotment + margin (busy
-    beyond that is another guest process competing — invisible to the steal
-    counter). Steal and competition only ever inflate a wall, so the minimum
-    admissible wall per (stage, level) is the engine's best-verified wall,
-    and the composite Σt_N / (4·Σt_4N) over those walls is the engine's
-    steal-verified below-knee efficiency."""
-    per_stage = _admitted_stage_walls(history)
+    individual STAGES often are. The composite Σt_N / (4·Σt_4N) over the
+    best-verified walls is the engine's steal-verified below-knee
+    efficiency."""
+    best = _best_walls(history)
+    if not best:
+        return []
     factor = _knee_factor(history)
-    rows, tot_lo, tot_hi, covered, any_clean = [], 0.0, 0.0, 0, 0
-    n_parallel = len([s for s in STAGE_ORDER if s not in SERIAL_STAGES])
+    rows = []
     for st in STAGE_ORDER:
-        meas = per_stage[st]
-        if not meas:
+        if st not in best:
             rows.append(f"| {st} | — | — | — | no clean window yet (0 runs) |")
             continue
-        b_lo = min(m[0] for m in meas)
-        b_hi = min(m[1] for m in meas)
-        any_clean += 1
-        if st in SERIAL_STAGES:
-            rows.append(
-                f"| {st} | {b_lo} | {b_hi} | n/a (serial by design, "
-                f"excluded) | {len(meas)} clean run(s) |"
-            )
-            continue
-        eff = round(b_lo / (factor * b_hi), 3)
-        tot_lo += b_lo
-        tot_hi += b_hi
-        covered += 1
-        rows.append(
-            f"| {st} | {b_lo} | {b_hi} | {eff} | {len(meas)} clean run(s) |"
+        b_lo, b_hi, n = best[st]
+        eff = (
+            "n/a (serial by design, excluded)"
+            if st in SERIAL_STAGES
+            else round(b_lo / (factor * b_hi), 3)
         )
+        rows.append(f"| {st} | {b_lo} | {b_hi} | {eff} | {n} clean run(s) |")
+    covered, comp = _composite(best, factor)
     cfg = _knee_config(history)
-    if not any_clean or not cfg:
-        return []
-    all_cfgs = _knee_configs_all(history)
-    n_total = sum(1 for h in history if h.get("knee"))
-    n_pooled = sum(
-        1
-        for h in history
-        if h.get("knee")
-        and (
-            tuple(h["knee"]["levels"]),
-            h["knee"].get("n_docs"),
-            h["knee"].get("impl"),
-        )
-        == cfg
-    )
-    pool_note = (
-        f"Pooling config: levels {list(cfg[0])}, n_docs {cfg[1]}, engine "
-        f"impl tag `{cfg[2]}` — {n_pooled} of {n_total} knee records match "
-        "and are pooled; the remainder measured a different level pair, "
-        "input size, or engine revision and are excluded from the "
-        "composite (r06 definition change: stage walls are pooled per "
-        "engine revision so minimum walls from different engines are "
-        "never combined; earlier composites pooled every same-config "
-        "record and, separately, moved `lineage` out of the denominator "
-        "when it became a driver-side metadata read — numbers across "
-        "those definition changes are not directly comparable)."
-    )
+    n_pooled = sum(1 for _ in _pooled_levels(history))
     if covered:
         composite_line = (
             f"**Composite steal-verified below-knee efficiency "
-            f"(Σt_N / {factor:g}·Σt_4N over the {covered}/{n_parallel} "
-            f"clean-covered parallel stages): "
-            f"{round(tot_lo / (factor * tot_hi), 4)}.**"
+            f"(Σt_N / {factor:g}·Σt_4N over the {len(covered)}/"
+            f"{len(STAGE_ORDER) - len(SERIAL_STAGES)} clean-covered parallel "
+            f"stages): {comp}.**"
         )
     else:
         composite_line = (
             "**No clean window on any parallel stage yet — no "
-            "composite is claimed from this table** (the serial group walk "
-            "is excluded by design; see the repeat-run table above for the "
-            "whole-pair measurements)."
+            "composite is claimed from this table** (the serial steps are "
+            "excluded by design)."
         )
-    fallback_lines: list[str] = []
-    if covered < n_parallel:
-        for prev in reversed(all_cfgs):
-            if prev == cfg:
-                continue
-            prev_comp = _stage_composite(history, prev)
-            if prev_comp is not None:
-                fallback_lines = [
-                    "",
-                    f"Previous fully-covered engine revision (impl "
-                    f"`{prev[2]}`, levels {list(prev[0])}, n_docs "
-                    f"{prev[1]}): composite {prev_comp} — kept for "
-                    "reference until the current revision accumulates a "
-                    "clean window on every parallel stage.",
-                ]
-                break
     return [
-        "### Steal-verified per-stage scaling (hypervisor-counter-clean windows)",
+        "## Steal-verified per-stage scaling (hypervisor-counter-clean windows)",
         "",
         "A stage row is admitted only when, during that stage's window on "
         f"BOTH levels of the same run, /proc/stat shows < {STEAL_CLEAN_CORES}"
         " cores stolen AND foreign busy-cores (whole-guest busy minus the "
-        "job's own process-group CPU rate — r06 refinement: a stage whose "
-        "JVM pipeline overlaps its Arrow Python workers legitimately runs "
-        "more busy cores than its allotment, identically at both levels, "
-        "and must not be rejected as neighbor competition) stayed under "
-        f"{BUSY_CLEAN_MARGIN}; records without per-stage process-group CPU "
-        "fall back to the old allotment+margin rule. Walls below are the "
-        "minimum over admissible windows (steal "
-        "and competition only ever inflate a wall). The two serial-by-design "
-        "driver-side steps — the group walk and the parquet-footer lineage "
-        "audit (the Iceberg manifest-scan analogue; a ~0.5 s metadata read "
-        "whose wall is independent of executor count) — are shown by "
-        "absolute wall only.",
+        "job's own descendant-tree CPU rate: a stage whose JVM pipeline "
+        "overlaps its Arrow Python workers legitimately runs more busy cores "
+        "than its allotment, identically at both levels) stayed under "
+        f"{BUSY_CLEAN_MARGIN}. Walls below are the minimum over admissible "
+        "windows (steal and competition only ever inflate a wall). The two "
+        "serial-by-design driver-side steps — the group walk and the "
+        "parquet-footer lineage audit — are shown by absolute wall only.",
         "",
-        pool_note,
+        f"Pooling config: levels {list(cfg[0])}, n_docs {cfg[1]}, engine "
+        f"impl tag `{cfg[2]}` — {n_pooled} knee records.",
         "",
         "| stage | best clean N wall (s) | best clean 4N wall (s) | "
         "efficiency | evidence |",
@@ -454,91 +197,51 @@ def _stage_clean_lines(history: list[dict]) -> list[str]:
         *rows,
         "",
         composite_line,
-        *fallback_lines,
         "",
     ]
 
 
 def _cpu_work_lines(history: list[dict]) -> list[str]:
-    """Steal-immune CPU-work accounting: /proc/stat busy jiffies count only
-    cycles this guest actually executed (hypervisor steal inflates WALL, not
-    busy), so busy_cores × wall = the stage's true guest CPU-seconds even in
-    a loud window. The ratio work_4N / work_N ("inflation", ideal 1.0) is an
-    UPPER BOUND on the engine's parallel overhead: a neighbor hammering the
-    shared memory system makes each of our scheduled cycles do less work
-    (stalls are busy time), so loud windows inflate the 4N side more than
-    the N side — the minimum across runs is the tightest bound and the
-    number converges to the engine's true overhead as windows get cleaner.
-    Admission: no competing guest load (busy within the level's allotment),
-    steal NOT gated — that is the point of this table."""
+    """Steal-immune CPU-work accounting: the stage's own descendant-tree CPU
+    (``{st}_pg_cpu_s``) counts only cycles this job executed (hypervisor
+    steal inflates WALL, not CPU time). The ratio work_4N / work_N
+    ("inflation", ideal 1.0) is an UPPER BOUND on the engine's parallel
+    overhead: a neighbor hammering the shared memory system makes each of
+    our scheduled cycles do less work, hitting the wider level harder — the
+    minimum across runs is the tightest bound. No admission gate: that is
+    the point of this table."""
     per_stage: dict[str, list[tuple[float, float]]] = {s: [] for s in STAGE_ORDER}
-    cfg = _knee_config(history)
-    for h in history:
-        k = h.get("knee")
-        if not k:
-            continue
-        if (tuple(k["levels"]), k.get("n_docs"), k.get("impl")) != cfg:
-            continue  # same per-revision pooling as the wall table
-        lo, hi = (str(x) for x in k["levels"])
-        c_lo, c_hi = k["cluster"][lo], k["cluster"][hi]
+    for c_lo, c_hi in _pooled_levels(history):
         s_lo, s_hi = c_lo.get("stages", {}), c_hi.get("stages", {})
         for st in STAGE_ORDER:
-            # exact source when present: per-phase process-group CPU
-            # (hostmetrics.pg_cpu_jiffies — the job's own processes only,
-            # no admission gate needed)
-            if f"{st}_pg_cpu_s" in s_lo and f"{st}_pg_cpu_s" in s_hi:
-                w_lo, w_hi = s_lo[f"{st}_pg_cpu_s"], s_hi[f"{st}_pg_cpu_s"]
-                if w_lo > 0.5 and w_hi > 0.5:
-                    per_stage[st].append((w_lo, w_hi))
-                continue
-            # fallback for records predating pg-CPU: whole-guest busy×wall,
-            # admissible only without competing guest load
-            if f"{st}_busy_cores" not in s_lo or f"{st}_busy_cores" not in s_hi:
-                continue
-            allot_lo = float(c_lo["cpus"])
-            allot_hi = float(c_hi["cpus"])
-            if (
-                s_lo[f"{st}_busy_cores"] >= allot_lo + BUSY_CLEAN_MARGIN
-                or s_hi[f"{st}_busy_cores"] >= allot_hi + BUSY_CLEAN_MARGIN
-            ):
-                continue
-            w_lo = s_lo[f"{st}_busy_cores"] * s_lo[st]
-            w_hi = s_hi[f"{st}_busy_cores"] * s_hi[st]
-            if w_lo > 0.5 and w_hi > 0.5:
+            w_lo, w_hi = s_lo.get(f"{st}_pg_cpu_s"), s_hi.get(f"{st}_pg_cpu_s")
+            if w_lo is not None and w_hi is not None and w_lo > 0.5 and w_hi > 0.5:
                 per_stage[st].append((w_lo, w_hi))
+    if not any(per_stage.values()):
+        return []
     rows = []
     for st in STAGE_ORDER:
         meas = per_stage[st]
         if not meas:
             rows.append(f"| {st} | — | — | — | 0 runs |")
             continue
-        # tightest bound: the run with the LEAST inflation (noise only ever
-        # adds stalled-but-busy cycles, mostly on the wider level)
         w_lo, w_hi = min(meas, key=lambda m: m[1] / m[0])
         rows.append(
             f"| {st} | {w_lo:.1f} | {w_hi:.1f} | {w_hi / w_lo:.2f} | "
             f"{len(meas)} runs |"
         )
-    if not any(per_stage.values()):
-        return []
     return [
-        "### CPU-work accounting (steal-immune, upper-bounds engine overhead)",
+        "## CPU-work accounting (steal-immune, upper-bounds engine overhead)",
         "",
-        "CPU-seconds the stage actually executed — per-phase process-group "
-        "CPU (`*_pg_cpu_s`, the job's own processes only) on records that "
-        "carry it, else whole-guest `busy_cores × wall` (admitted only "
-        "without competing guest load). The hypervisor's steal inflates "
-        "wall, never CPU time, so this metric survives loud windows. "
-        "`inflation` = CPU-work at 4N ÷ "
+        "CPU-seconds the stage's own process tree executed (`*_pg_cpu_s`). "
+        "The hypervisor's steal inflates wall, never CPU time, so this "
+        "metric survives loud windows. `inflation` = CPU-work at 4N ÷ "
         "CPU-work at N (ideal 1.0 — same job, same input, 4× the cores). "
         "It upper-bounds the engine's parallel overhead: neighbor pressure "
-        "on the shared memory system turns our cycles into stalls "
-        "(stalled-but-scheduled counts as busy), hitting the wider level "
-        "harder, so each row shows the MINIMUM-inflation run — the "
-        "tightest available bound, which converges to the engine's true "
-        "overhead as windows get cleaner. Wall efficiency ≈ 1/inflation "
-        "when all stages are fully parallel, so this is the same story as "
-        "the wall tables told without the host's dice.",
+        "on the shared memory system turns our cycles into stalls, hitting "
+        "the wider level harder, so each row shows the MINIMUM-inflation "
+        "run. Wall efficiency ≈ 1/inflation when all stages are fully "
+        "parallel.",
         "",
         "| stage | best CPU-work N (core·s) | CPU-work 4N (same run) | "
         "inflation 4N/N | evidence |",
@@ -548,280 +251,70 @@ def _cpu_work_lines(history: list[dict]) -> list[str]:
     ]
 
 
-def write_bench_md(record: dict, history: list[dict]) -> None:
-    """Render the last full record + all knee history to BENCH.md."""
-    knee_all_lines = (
-        _knee_history_lines(history)
-        + _stage_clean_lines(history)
-        + _cpu_work_lines(history)
-    )
-    knee_history = history
-    history = [h for h in history if not h.get("knee_only")]
-    n, n4 = record["levels"]
-    factor = n4 // n
-    rc_n, rc_4 = record["cluster"][str(n)], record["cluster"][str(n4)]
-    rl_n, rl_4 = record["local"][str(n)], record["local"][str(n4)]
-    ec = EXEC_CORES
-    raw = record["calib_raw_cpu"]
-    jvm = record["calib_jvm_only"]
+def _verdict_lines(history: list[dict]) -> list[str]:
+    stats = _knee_clean_stats(history)
+    b, bt = stats["best"], stats["best_tight"]
+    if b is None:
+        return []
+    kn, kn4 = b["levels"]
+    out = [
+        "## North-rule verdict (auto-computed from the measured history)",
+        "",
+        f"Below the bandwidth knee ({kn}→{kn4} cores, {kn // kn}→{kn4 // kn} "
+        "executor JVMs, where the no-engine hardware ceiling clears ~0.89), "
+        f"over {stats['n_clean']} hypervisor-steal-clean pairs:",
+        "",
+        f"- **Best steal-clean efficiency: {b['efficiency_cluster']}** "
+        f"(no-engine ceiling that run: {b['calib_raw_cpu']['efficiency']}).",
+    ]
+    if bt is not None:
+        lo, hi = bt["cluster"][str(kn)], bt["cluster"][str(kn4)]
+        out.append(
+            f"- **Best fully-tight pair (steal-clean AND probe-spread "
+            f"{bt.get('probe_spread')} < 1.25): {bt['efficiency_cluster']}** — "
+            f"{lo['rows']:,} rows at {lo['rows_per_sec']:,.0f} rows/s "
+            f"({kn} cores) vs {hi['rows_per_sec']:,.0f} rows/s ({kn4} cores)."
+        )
+    composite = _stage_composite(history)
+    if composite is not None:
+        out.append(
+            f"- **Composite steal-verified per-stage efficiency: {composite}** "
+            "(best hypervisor-clean window per stage; table below)."
+        )
+    return out + [""]
 
-    def byte_rows() -> list[str]:
-        out = []
-        for mode, label_n, label_4, rn, r4 in (
-            ("executor", f"{n // ec}×{ec}", f"{n4 // ec}×{ec}", rc_n, rc_4),
-            ("thread", f"local[{n}]", f"local[{n4}]", rl_n, rl_4),
-        ):
-            s_n, s_4 = rn.get("stages", {}), r4.get("stages", {})
-            if "tiled_out_mb" not in s_n:
-                continue
-            out.append(
-                f"| {mode} | {s_n.get('parse_qt_out_mb', '—')} | "
-                f"{s_n.get('tiled_out_mb', '—')} | "
-                f"{s_n.get('tiled_write_mb_per_s', '—')} ({label_n}) | "
-                f"{s_4.get('tiled_write_mb_per_s', '—')} ({label_4}) |"
-            )
-        return out
 
-    clean_hist = [h for h in history if not h.get("contaminated")]
-    effs = [h["efficiency_cluster"] for h in clean_hist]
-    raws = [h["calib_raw_cpu"]["efficiency"] for h in clean_hist]
-    stats = _knee_clean_stats(knee_history)
-    composite = _stage_composite(knee_history)
-    headline: list[str] = []
-    if stats["best"] is not None:
-        b, bt = stats["best"], stats["best_tight"]
-        kn, kn4 = b["levels"]
-        headline = [
-            "## North-rule verdict (auto-computed from the measured history)",
-            "",
-            f"Below the bandwidth knee ({kn}→{kn4} cores, 1→4 executor JVMs, "
-            "where the no-engine hardware ceiling clears ~0.89), over "
-            f"{stats['n_clean']} hypervisor-steal-clean pairs:",
-            "",
-            f"- **Best steal-clean efficiency: {b['efficiency_cluster']}** "
-            f"(no-engine ceiling that run: "
-            f"{b['calib_raw_cpu']['efficiency']}).",
-            *(
-                [
-                    f"- **Best fully-tight pair (steal-clean AND probe-spread "
-                    f"{bt.get('probe_spread')} < 1.25): "
-                    f"{bt['efficiency_cluster']}** — "
-                    f"{bt['cluster'][str(kn)]['rows']:,} rows at "
-                    f"{bt['cluster'][str(kn)]['rows_per_sec']:,.0f} rows/s "
-                    f"({kn} cores) vs "
-                    f"{bt['cluster'][str(kn4)]['rows_per_sec']:,.0f} rows/s "
-                    f"({kn4} cores).",
-                ]
-                if bt is not None
-                else []
-            ),
-            *(
-                [
-                    f"- **Composite steal-verified per-stage efficiency: "
-                    f"{composite}** (best hypervisor-clean window per stage; "
-                    "table below).",
-                ]
-                if composite is not None
-                else []
-            ),
-            "",
-            "Above the knee the box's single memory system is the limiter "
-            "(no-engine ceiling ~0.7 at 8→32); the full-run tables below "
-            "keep that continuity evidence.",
-            "",
-        ]
+def write_bench_md(history: list[dict]) -> None:
+    """Render the knee history to BENCH.md."""
     lines = [
         "# BENCH — scaling evidence (north rule)",
         "",
-        f"Generated by `python bench.py --scaling` on {record['date']}; every "
-        "number below (including the calibration companions) was measured by "
-        "THAT run — nothing is hand-maintained. History: "
-        "BENCH_SCALING_HISTORY.json.",
+        "Generated by `tools/bench_report.py` from BENCH_SCALING_HISTORY.json "
+        "(appended by `python bench.py --knee-repeat K`); nothing below is "
+        "hand-maintained. The job: span parse + quadtree Calculate → slim "
+        "elements table → count tree → group walk → tile assignment → tiled "
+        "shuffle-write → footer lineage, plus a PIP join, through "
+        "`jobs.prepare_job.prepare_pipeline`, at two levels of separate "
+        "executor JVMs (`local-cluster`) over the same tmpfs-staged input. "
+        "The retired 8→32, thread-mode, write-path and calibration records "
+        "are in BENCH_SCALING_ARCHIVE.json.",
         "",
-        *headline,
-        "The north-rule job (span parse + quadtree Calculate → slim elements "
-        "table → count tree → group walk → tile assignment → tiled "
-        "shuffle-write, plus a PIP join) on the same deterministic input of "
-        f"**{record['n_docs']:,} interleaved docs**, at two parallelism "
-        "levels in two modes:",
+        *_verdict_lines(history),
+        *_stage_clean_lines(history),
+        *_cpu_work_lines(history),
+        "## Scope of the headline q26 leaf",
         "",
-        f"- **executor mode** (the north-rule evidence): `local-cluster"
-        f"[{n // ec},{ec},…]` vs `local-cluster[{n4 // ec},{ec},…]` — "
-        f"{n // ec} vs {n4 // ec} SEPARATE executor JVMs of {ec} cores each, "
-        "each with its own heap, GC, shuffle files, and Python workers; the "
-        "closest one box gets to N vs 4N executors.",
-        f"- **thread mode** (continuity with earlier rounds): `local[{n}]` "
-        f"vs `local[{n4}]` — one shared JVM heap.",
-        "",
-        "Input staged on tmpfs (the sandbox's single disk saturates at ~4 "
-        "writers; a real cluster's storage bandwidth grows with executors). "
-        "Parquet codec zstd. Steady-state timing: full warm-up pass first "
-        "(Python worker spawn, codegen JIT, shuffle files), second pass "
-        "measured.",
-        "",
-        "| mode | parallelism | rows | wall (s) | rows/sec |",
-        "|---|---|---|---|---|",
-        f"| executor | {n // ec}×{ec} cores | {rc_n['rows']:,} | "
-        f"{rc_n['wall_sec']} | {rc_n['rows_per_sec']:,.0f} |",
-        f"| executor | {n4 // ec}×{ec} cores | {rc_4['rows']:,} | "
-        f"{rc_4['wall_sec']} | {rc_4['rows_per_sec']:,.0f} |",
-        f"| thread | local[{n}] | {rl_n['rows']:,} | {rl_n['wall_sec']} | "
-        f"{rl_n['rows_per_sec']:,.0f} |",
-        f"| thread | local[{n4}] | {rl_4['rows']:,} | {rl_4['wall_sec']} | "
-        f"{rl_4['rows_per_sec']:,.0f} |",
-        "",
-        f"**Scaling efficiency N→4N executors ({n // ec}→{n4 // ec} executor "
-        f"JVMs × {ec} cores): {record['efficiency_cluster']}** "
-        "(north-rule target ≥ 0.8). "
-        f"Thread-mode local[{n}]→local[{n4}]: {record['efficiency_local']}.",
-        "",
-        f"Contention self-check: a fixed single-thread CPU probe at each "
-        f"level's start measured walls {record.get('cpu_probes')} s — "
-        f"spread {record.get('probe_spread')} (a spread ≳1.25 would mean "
-        "the box was not equally idle across levels; the r3 15:33 run "
-        "failed exactly this way, silently).",
-        "",
-        *_knee_lines(record),
-        *knee_all_lines,
-        f"## Per-stage scaling — executor mode (wall s at {n // ec}× / "
-        f"{n4 // ec}× executors / eff)",
-        "",
-        f"| stage | {n // ec} exec | {n4 // ec} exec | efficiency |",
-        "|---|---|---|---|",
-        *_stage_rows(rc_n, rc_4, factor),
-        "",
-        f"## Per-stage scaling — thread mode (local[{n}] / local[{n4}])",
-        "",
-        f"| stage | local[{n}] | local[{n4}] | efficiency |",
-        "|---|---|---|---|",
-        *_stage_rows(rl_n, rl_4, factor),
-        "",
-        "## Write-path byte budget",
-        "",
-        "The tiled shuffle-write is the bandwidth-bound stage; the stored "
-        "tables are string-free, tile_qt-free, with int32 fixed-point bbox "
-        "and int8 geom_type (the reference's storage convention). Measured "
-        "bytes (zstd parquet on tmpfs) and effective write rate:",
-        "",
-        "| mode | elements (MB) | tiled (MB) | write MB/s @N | write MB/s @4N |",
-        "|---|---|---|---|---|",
-        *byte_rows(),
-        "",
-        *_write_path_lines(),
-        (
-            "Raw tmpfs (memcpy) bandwidth measured by this run: "
-            f"**{record.get('calib_tmpfs', {}).get('single_stream_mb_s', '—')} MB/s** "
-            "single stream, "
-            f"**{record.get('calib_tmpfs', {}).get('4_stream_mb_s', '—')} MB/s** "
-            "aggregate with 4 concurrent writers — the hardware ceiling the "
-            "write stage's parallel partition writers share. (The write "
-            "stage's MB/s above excludes the shuffle read + sort + zstd "
-            "encode happening in the same wall window.)"
-        ),
-        "",
-        f"## Calibration: what this box can physically deliver at {n}→{n4}",
-        "",
-        f"All {n4} cores of this sandbox VM share one memory system; the "
-        f"same {n}→{n4} step with NO engine in it (measured by this run):",
-        "",
-        f"| workload | {n}→{n4} efficiency |",
-        "|---|---|",
-        f"| raw CPU, {n4} independent Python processes (register-only "
-        f"integer mix) | **{raw['efficiency']}** "
-        f"(wall {raw['t_n']}s → {raw['t_4n']}s, fixed work/process) |",
-        "| Spark JVM compute only (`sum(sin(id·1e-6))` over `range`, no "
-        f"input IO, no shuffle) | **{jvm['efficiency']}** (wall "
-        f"{jvm['runs'][str(n)]['wall_sec']}s → "
-        f"{jvm['runs'][str(n4)]['wall_sec']}s, fixed total work) |",
-        "| full pipeline | see tables above |",
-        "",
-        "Readings:",
-        "- Executor mode is the honest stand-in for the north rule's N→4N "
-        "*executors*: each executor JVM brings its own heap and GC, so the "
-        "measurement isolates engine scaling from single-heap contention. "
-        "What one box still cannot multiply is the physical memory "
-        "bandwidth and page cache shared by all executor processes — the "
-        "resource a real cluster adds with every node (the raw-CPU "
-        "calibration row bounds that effect).",
-        "- The shuffle-write and Arrow-transfer stages are "
-        "memory-bandwidth-bound; the tiled write carries no strings and no "
-        "tile_qt (derivable from the broadcast groups frame at read time).",
-        "",
-        "## Shared-host variance (computed from history)",
-        "",
-        "Runs flagged `contaminated` in BENCH_SCALING_HISTORY.json (shared-box "
-        "contention detected from impossible level walls) are excluded from "
-        "the min/max below and marked ⚠ in the round-over-round table.",
-        "",
-        (
-            f"Across the {len(effs)} full measurement(s) in history, the "
-            f"NO-ENGINE raw-CPU calibration itself moved between "
-            f"{min(raws)} and {max(raws)} — run-to-run neighbor steal on "
-            "this shared VM swings every number by that order, and the "
-            "engine's measured executor-mode efficiency moved with it "
-            f"(min {min(effs)}, max {max(effs)}). Best-measured "
-            f"executor-mode efficiency: **{max(effs)}**; best-measured "
-            "4N throughput: "
-            f"**{max(h['cluster'][str(h['levels'][1])]['rows_per_sec'] for h in clean_hist):,.0f} rows/s** "
-            "(executor mode). The honest reading: at 32 cores this box "
-            "tops out at ~1.2-1.3M rows/s for this job in EVERY "
-            "configuration while its own no-engine ceiling is "
-            f"{max(raws)}, i.e. the limiter is the single shared memory "
-            "system, which is exactly the resource each additional "
-            "executor brings on a real cluster."
-        ),
-        "",
-        "## Round-over-round (same job, this box)",
-        "",
-        "| run | levels | mode | rows/sec @4N | efficiency | docs |",
-        "|---|---|---|---|---|---|",
-        "| r1 (2026-08-15) | 4→16 | thread | 322,019 | 0.23 | 3M | ",
-        "| r2 (2026-08-16) | 8→32 | thread | 1,122,055 | 0.52 | 20M | ",
-        *[
-            f"| {h['date']}{' ⚠contaminated' if h.get('contaminated') else ''} | "
-            f"{h['levels'][0]}→{h['levels'][1]} | executor | "
-            f"{h['cluster'][str(h['levels'][1])]['rows_per_sec']:,.0f} | "
-            f"{h['efficiency_cluster']} | {h['n_docs'] // 1_000_000}M |"
-            for h in history
-        ],
-        *[
-            f"| {h['date']}{' ⚠contaminated' if h.get('contaminated') else ''} | "
-            f"{h['levels'][0]}→{h['levels'][1]} | thread | "
-            f"{h['local'][str(h['levels'][1])]['rows_per_sec']:,.0f} | "
-            f"{h['efficiency_local']} | {h['n_docs'] // 1_000_000}M |"
-            for h in history
-        ],
-        "",
-        "## Why this plan scales at 100 TB",
-        "",
-        "- One shuffle per phase: count-tree agg (map-side combine), tile "
-        "repartition + sorted write. No driver collect beyond the capped "
-        "count tree (≤150k cells) and the group list (broadcast back).",
-        "- The two serial steps are driver-side metadata work, independent "
-        "of input size: the group walk (0.3-0.4 s at the capped tree) and "
-        "the lineage audit (a parquet-footer/manifest read, ~0.5 s).",
-        "- The hot elements/tiled tables carry no strings: the packed id "
-        "encodes (type, doc seq, span_idx); doc_id is derived only at the "
-        "serving edge.",
-        "- qt parse AND tile assignment are pure JVM expressions (the "
-        "assigner is one broadcast hash join per occupied group depth + "
-        "coalesce, whole-stage-codegen'd); the only pandas UDF in the job "
-        "is the PIP kernel — vectorized, no per-row Python.",
-        "- PIP/kNN/raster joins broadcast the small side and prune by tile "
-        "partition before touching data; AQE skew-join plus explicit "
-        "salting (`operators/skew.py`) handle hot tiles; parent_highway "
-        "and simhash/minhash candidate generation are bucketed equi-joins "
-        "with bounded key width.",
-        "- Incremental updates rewrite only touched tile partitions and "
-        "resolve moved elements via the stored (id → tile) mapping; the "
-        "ledger gives per-partition lineage + row counts for resumable "
-        "re-runs.",
-        "- Scope of the headline q26 leaf: it times the count-tree pass plus "
-        "the driver-side rollup of the collected cell counts (numpy assigner "
-        "over ≤150k cells), not the distributed assigner. The general "
-        "distributed assigner (`tiling.assign_tiles`) is measured by "
-        "perfbench `update` (`python3 perfbench/run.py --workload update`).",
+        "q26 times the count-tree pass plus the driver-side rollup of the "
+        "collected cell counts (numpy assigner over ≤150k cells), not the "
+        "distributed assigner. The general distributed assigner "
+        "(`tiling.assign_tiles`) is measured by perfbench `update` "
+        "(`python3 perfbench/run.py --workload update`).",
         "",
     ]
     with open(os.path.join(REPO, "BENCH.md"), "w") as f:
         f.write("\n".join(lines))
+
+
+if __name__ == "__main__":
+    with open(os.path.join(REPO, "BENCH_SCALING_HISTORY.json")) as f:
+        write_bench_md(json.load(f))

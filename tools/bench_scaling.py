@@ -1,9 +1,15 @@
-"""North-rule scaling measurement harness (bench.py --scaling / --knee-*).
+"""North-rule knee measurement (bench.py --knee-repeat / --single-scaling).
 
-Split out of bench.py (round-4 verdict #8): bench.py stays the driver-run
-headline timer + CLI; this module owns every scaling/calibration/knee
-measurement. Subprocess levels still launch through bench.py's CLI so each
-parallelism level gets its own JVM with its own ActiveProcessorCount.
+bench.py stays the driver-run headline timer + CLI; this module owns the
+below-the-knee scaling pair: 2→8 cores as 1→4 executor JVMs of 2 cores each,
+the range where this kind of single box's own no-engine ceiling clears ~0.9,
+so engine scaling is separable from memory-bandwidth sharing. Each level
+launches through bench.py's CLI so it gets its own JVM set with its own
+ActiveProcessorCount.
+
+The 8→32 tables, the thread-mode pair, the write-path probe, the JVM/tmpfs
+calibrations and the quiet-window hunter were retired; their records live in
+BENCH_SCALING_ARCHIVE.json and their CLI modes exit through ``_archived``.
 """
 
 from __future__ import annotations
@@ -18,62 +24,70 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 BENCH_CLI = os.path.join(REPO, "bench.py")
+HISTORY_PATH = os.path.join(REPO, "BENCH_SCALING_HISTORY.json")
+
+from tools.bench_report import STEAL_CLEAN_CORES  # noqa: E402
 
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-N_DOCS_SCALING = int(os.environ.get("BENCH_N_DOCS", "20000000"))
-# The BASELINE.md-stated levels: local[8] vs local[32]; BENCH.md carries the
-# no-engine calibration companions that separate engine scaling from
-# single-box hardware sharing.
-SCALING_LEVELS = (
-    int(os.environ.get("BENCH_CPUS_N", "8")),
-    int(os.environ.get("BENCH_CPUS_4N", "32")),
-)
+KNEE_LEVELS = (2, 8)
+N_DOCS_KNEE = 5_000_000
+# Engine-revision tag stamped into every knee record. BUMP THIS whenever a
+# measured stage's implementation or measurement-relevant config changes:
+# the report pools best-clean stage walls by (levels, n_docs, impl), so
+# min-walls from different engine revisions are never mixed into one
+# composite (a change that speeds one level could otherwise pair an old
+# lo-wall with a new hi-wall and publish an efficiency no single engine ever
+# had). r06b = zstd shuffle codec + vectorized find_groups + footer lineage.
+IMPL_TAG = "r06b"
+EXEC_MEM_MB = 13312
+QUIET_WAIT_SEC = 600.0
 
-EXEC_CORES = int(os.environ.get("BENCH_EXEC_CORES", "8"))
-EXEC_MEM_MB = int(os.environ.get("BENCH_EXEC_MEM_MB", "13312"))
+
+def _archived(*_args, **_kwargs):
+    """The retired modes (--scaling, --calibrate-jvm, --write-path,
+    --knee-until) and the thread-mode level: fail before any JVM starts."""
+    raise SystemExit(
+        "retired: the 8->32, thread-mode, write-path, JVM-calibration and "
+        "quiet-window-hunter measurements are archived in "
+        "BENCH_SCALING_ARCHIVE.json; use `python bench.py --knee-repeat K`"
+    )
 
 
-def _master_for(cpus: int, mode: str, exec_cores: int | None = None) -> tuple[str, dict]:
-    """local mode: one JVM with `cpus` threads (the BASELINE.md-stated
-    proxy). cluster mode: `cpus/exec_cores` separate executor JVMs of
-    exec_cores each (`local-cluster`) — each executor brings its own heap,
-    GC, and Python workers, modelling N vs 4N *executors* instead of N vs
-    4N threads in one shared heap."""
-    ec = exec_cores or EXEC_CORES
-    if mode == "local":
-        return f"local[{cpus}]", {}
-    workers = max(1, cpus // ec)
+run_scaling = jvm_calib_job = write_path_probe = knee_until = _archived
+
+
+def _master_for(cpus: int, exec_cores: int) -> tuple[str, dict]:
+    """``cpus/exec_cores`` separate executor JVMs of exec_cores each
+    (`local-cluster`): each executor brings its own heap, GC, and Python
+    workers, modelling N vs 4N *executors* instead of N vs 4N threads in one
+    shared heap."""
+    workers = max(1, cpus // exec_cores)
     extra = {
         "spark.executor.memory": f"{EXEC_MEM_MB - 1024}m",
-        # ActiveProcessorCount=ec: on a real cluster each executor JVM sees
-        # only its container's cores; on one box every executor JVM sees all
-        # 32 and sizes its ParallelGC/netty/codegen pools for 32 — four
-        # 8-core executors then run 4×32 GC threads and thrash (measured:
-        # 51 core-s/M rows vs 9.5 in local[8] on the same host). This flag
-        # makes the executor JVM pool-size for its actual core share, which
-        # is exactly the containerized-cluster semantics being modelled.
+        # on one box every executor JVM sees all host cores and sizes its
+        # GC/netty/codegen pools for them (four 8-core executors on 32 cores
+        # thrashed: 51 core-s/M rows vs 9.5 in local[8]); this pins each JVM
+        # to its own core share, as a container would on a real cluster
         "spark.executor.extraJavaOptions": (
             f"-Djava.io.tmpdir=/tmp -XX:+UseParallelGC "
-            f"-XX:ActiveProcessorCount={ec}"
+            f"-XX:ActiveProcessorCount={exec_cores}"
         ),
         # executor JVMs spawn their own Python workers in their own cwd —
         # they need the repo on PYTHONPATH (spark-submit --py-files in prod)
-        "spark.executorEnv.PYTHONPATH": os.path.dirname(BENCH_CLI),
+        "spark.executorEnv.PYTHONPATH": REPO,
+        # shuffle/spill codec (static conf — must be set at session build):
+        # zstd cuts the bytes pushed through the shuffle dirs per row for
+        # scalable CPU, the same bandwidth-for-CPU trade as the parquet codec
+        "spark.io.compression.codec": "zstd",
     }
-    return f"local-cluster[{workers},{ec},{EXEC_MEM_MB}]", extra
+    return f"local-cluster[{workers},{exec_cores},{EXEC_MEM_MB}]", extra
 
 
 def _cpu_probe(reps: int = 3) -> float:
     """Fixed single-thread integer work (~1s on an idle core) run at the
-    START of every scaling level: if the box is being shared, this wall
-    inflates, so the level-to-level spread is a built-in contention
-    detector (the 15:33 r3 run was silently contaminated by a neighbor —
-    this makes that failure mode self-reporting). Min of ``reps`` runs:
-    a single pass carries CPython/frequency jitter that can flag a genuinely
-    idle pair as loose (one 14:42 pair measured spread 2.6 with hypervisor
-    steal at 0.025 cores); the minimum estimates the uncontended
-    single-thread speed, so the spread reflects SUSTAINED host-speed
-    differences between levels, not one-off scheduler hiccups."""
+    START of every scaling level: on a shared box this wall inflates, so the
+    level-to-level spread is a built-in contention detector. The min of
+    ``reps`` runs drops one-off scheduler/frequency jitter."""
     best = float("inf")
     for _ in range(reps):
         t0 = time.perf_counter()
@@ -83,13 +97,6 @@ def _cpu_probe(reps: int = 3) -> float:
             a ^= x
         best = min(best, time.perf_counter() - t0)
     return best
-
-
-# A level (and the pair containing it) counts as uncontaminated only when the
-# hypervisor stole less than this many cores on average during the measured
-# window. 0.35 distorts a 2-core level by at most ~±17% and an 8-core level
-# by ~±4% — below this box's same-code run-to-run jitter.
-STEAL_CLEAN_CORES = float(os.environ.get("BENCH_STEAL_CLEAN_CORES", "0.35"))
 
 
 def _wait_for_quiet(
@@ -102,8 +109,6 @@ def _wait_for_quiet(
     from osmquadtree_bin_spark.hostmetrics import cores_between, proc_stat
 
     t0 = time.perf_counter()
-    waited = 0
-    last = None
     while True:
         b = proc_stat()
         time.sleep(window_sec)
@@ -118,61 +123,48 @@ def _wait_for_quiet(
 
 def scaling_job(
     cpus: int,
-    mode: str = "local",
+    mode: str = "cluster",
     exec_cores: int | None = None,
     n_docs: int | None = None,
     input_parts: int | None = None,
 ) -> dict:
-    """The north-rule job: tile assignment over interleaved docs + PIP join.
-    Returns rows processed + wall seconds (one driver at local[cpus] or
-    local-cluster with cpus total cores)."""
+    """The north-rule job at one level: tile assignment over interleaved
+    docs + PIP join on ``local-cluster`` with ``cpus`` total cores. Returns
+    rows processed + wall seconds."""
+    import shutil
     import tempfile
 
     from osmquadtree_bin_spark.session import get_spark
 
+    if mode != "cluster":
+        _archived()
     os.environ.setdefault("SPARK_DRIVER_MEM", "32g")  # headroom: GC noise off the measurement
     if os.path.isdir("/dev/shm"):
         os.environ.setdefault("SPARK_LOCAL_DIRS", "/dev/shm/oqt_spark_local")
-    master, extra = _master_for(cpus, mode, exec_cores)
-    # shuffle/spill codec (static conf — must be set at session build):
-    # zstd cuts the bytes pushed through the shuffle dirs per row for
-    # scalable CPU, the same bandwidth-for-CPU trade as the parquet codec
-    # below (guide §2.3); lz4 remains selectable for A/B via env
-    extra = dict(extra)
-    extra.setdefault(
-        "spark.io.compression.codec",
-        os.environ.get("BENCH_SHUFFLE_CODEC", "zstd"),
-    )
+    master, extra = _master_for(cpus, exec_cores or KNEE_LEVELS[0])
     spark = get_spark(
         app=f"oqt-scaling-{mode}-{cpus}",
         master=master,
         shuffle_partitions=cpus * 2,
         extra_conf=extra,
     )
-    # zstd over snappy: the box (and any single node) is memory-bandwidth
-    # bound on the write stages; zstd spends scalable CPU to cut the bytes
-    # pushed through tmpfs/page cache per row
-    spark.conf.set(
-        "spark.sql.parquet.compression.codec",
-        os.environ.get("BENCH_PARQUET_CODEC", "zstd"),
-    )
+    # zstd over snappy: the write stages are memory-bandwidth bound; zstd
+    # spends scalable CPU to cut the bytes pushed through tmpfs per row
+    spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
     # stage the input as parquet — production shape (the input IS a table);
     # Spark's in-memory persist measured 50-80× slower than parquet re-read.
-    # tmpfs staging: the sandbox's single disk (~280 MB/s) saturates at 4
-    # writers and would measure disk contention, not engine scaling; a real
-    # cluster's distributed FS bandwidth grows with executors, which tmpfs
-    # models honestly on one box.
+    # tmpfs staging: a single disk saturates at ~4 writers and would measure
+    # disk contention, not engine scaling; a real cluster's distributed FS
+    # bandwidth grows with executors, which tmpfs models on one box.
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     probe = _cpu_probe()
     tmp = tempfile.mkdtemp(prefix=f"oqt_scaling_{cpus}_", dir=shm)
     try:
-        res = _scaling_body(spark, tmp, cpus, n_docs or N_DOCS_SCALING, input_parts)
+        res = _scaling_body(spark, tmp, cpus, n_docs or N_DOCS_KNEE, input_parts)
         res["cpu_probe_sec"] = round(probe, 3)
         return res
     finally:  # a crashed run must not leak multi-GB tmpfs dirs
         spark.stop()
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -180,20 +172,15 @@ def _scaling_body(
     spark,
     tmp: str,
     cpus: int,
-    n_docs: int = N_DOCS_SCALING,
+    n_docs: int = N_DOCS_KNEE,
     input_parts: int | None = None,
 ) -> dict:
     """North-rule measurement body. The prepare phases (parse_qt →
-    count_tree → find_groups → assign_write_tiled) run through
+    count_tree → find_groups → assign_write_tiled → lineage) run through
     ``jobs.prepare_job.prepare_pipeline`` — the SAME code path the shipped
-    spark-submit job executes — so the measured pipeline is literally the
-    shipped job (VERDICT r3 #9), plus a PIP join and byte-budget
-    instrumentation that only the bench needs. ``partition_by_tile=False``:
+    spark-submit job executes — plus a PIP join. ``partition_by_tile=False``:
     the per-tile directory fan-out is a store-layout choice, not part of the
-    measured shuffle+sort+write (the job exposes the same flag). The job's
-    ``lineage`` phase (per-tile audit table — rows written vs the group
-    walk's expected counts) is part of the measured pipeline since r4: the
-    north rule's job includes per-partition lineage + row-count metrics."""
+    measured shuffle+sort+write (the job exposes the same flag)."""
     from pyspark.sql import functions as F
 
     from jobs.prepare_job import prepare_pipeline
@@ -204,15 +191,10 @@ def _scaling_body(
 
     # FIXED input layout across parallelism levels: a real cluster reads the
     # SAME table at N and 4N executors, so the staged file count must not
-    # depend on this level's core count (cpus*4 here previously gave the 4N
-    # level 4x more files — different scan splits AND 4x more count-tree
-    # partial-agg output than the N level saw). Staged ONCE per (n_docs,
-    # parts) in a shared tmpfs dir: content is per-doc-seeded (writer
-    # parallelism cannot change it) and file count = parts regardless of
-    # the writing level's cores, so levels re-reading one copy is
-    # measurement-identical to each staging its own — minus ~25 min of
-    # Python-generator wall per low-core level.
-    parts = input_parts or max(SCALING_LEVELS) * 4
+    # depend on this level's core count. Staged ONCE per (n_docs, parts) in a
+    # shared tmpfs dir: content is per-doc-seeded, so levels re-reading one
+    # copy is measurement-identical to each staging its own.
+    parts = input_parts or max(KNEE_LEVELS) * 4
     docs_path = _staged_docs_path(n_docs, parts, os.path.dirname(tmp))
     if not os.path.exists(os.path.join(docs_path, "_SUCCESS")):
         import shutil
@@ -235,13 +217,6 @@ def _scaling_body(
             partition_by_tile=False,
         )
         n_elements = arts["n_elements"]
-        # byte-budget instrumentation (bench-only): sizes of the two
-        # bandwidth-bound materializations
-        stages["parse_qt_out_mb"] = round(_du(arts["elements_path"]) / 1e6, 1)
-        stages["tiled_out_mb"] = round(_du(arts["tiled_path"]) / 1e6, 1)
-        stages["tiled_write_mb_per_s"] = round(
-            stages["tiled_out_mb"] / stages["assign_write_tiled"], 1
-        )
         # PIP join over the slim table; lineage columns derived from the
         # packed id (bits: type >= 59, low 40 = seq*64 + span_idx) — JVM
         # exprs, no extra storage (the hot table carries NO strings)
@@ -288,21 +263,21 @@ def _staged_docs_path(n_docs: int, parts: int, fallback_base: str = "/tmp") -> s
     return os.path.join(base, f"oqt_docs_v{DATAGEN_VERSION}_{n_docs}_{parts}")
 
 
-def stage_docs(n_docs: int, parts: int, cpus: int | None = None) -> dict:
+def stage_docs(n_docs: int, parts: int) -> dict:
     """Stage the scaling input ONCE at full parallelism (content is per-doc
     seeded, so writer parallelism cannot change it — but a 2-core level
     paying ~25 min of datagen wall before its measurement starts is pure
     waste on a box where quiet windows are scarce)."""
+    import shutil
+
     from osmquadtree_bin_spark.datagen import gen_docs_dist
     from osmquadtree_bin_spark.session import get_spark
 
     path = _staged_docs_path(n_docs, parts)
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return {"staged": path, "cached": True}
-    import shutil
-
     shutil.rmtree(path, ignore_errors=True)
-    cpus = cpus or int(CPUS)
+    cpus = int(CPUS)
     spark = get_spark(
         app="oqt-stage-docs", master=f"local[{cpus}]", shuffle_partitions=cpus
     )
@@ -321,52 +296,10 @@ def _sub_json(args: list[str]) -> dict:
         capture_output=True,
         text=True,
         check=True,
-        cwd=os.path.dirname(BENCH_CLI),
+        cwd=REPO,
     )
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
     return json.loads(line)
-
-
-def _du(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            total += os.path.getsize(os.path.join(root, fn))
-    return total
-
-
-# ------------------------------------------------------------- calibration
-def calibrate_tmpfs(streams: int = 4, mb: int = 2048) -> dict:
-    """Raw tmpfs (page-cache/memcpy) write bandwidth — the hardware ceiling
-    the tiled-write stage competes with. Measured single-stream and with
-    `streams` concurrent writers (the write stage runs one writer per
-    shuffle partition task)."""
-    import shutil
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="oqt_bw_", dir="/dev/shm")
-    try:
-        def one(tag: str, count: int) -> subprocess.Popen:
-            return subprocess.Popen(
-                ["dd", f"if=/dev/zero", f"of={base}/{tag}", "bs=1M",
-                 f"count={count}"],
-                stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-            )
-
-        t0 = time.perf_counter()
-        one("s", mb).wait()
-        single = mb / (time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        procs = [one(f"m{i}", mb // streams) for i in range(streams)]
-        for p in procs:
-            p.wait()
-        multi = mb / (time.perf_counter() - t0)
-        return {
-            "single_stream_mb_s": round(single, 1),
-            f"{streams}_stream_mb_s": round(multi, 1),
-        }
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def calibrate_raw_cpu(n: int, n4: int) -> dict:
@@ -403,164 +336,25 @@ def calibrate_raw_cpu(n: int, n4: int) -> dict:
     }
 
 
-def jvm_calib_job(cpus: int) -> dict:
-    """Spark JVM compute only — sum(sin(id*1e-6)) over range, no input IO,
-    no shuffle — isolating JVM-thread scaling from the storage/shuffle path.
-    Fixed TOTAL work; efficiency across levels = t_n / (factor * t_4n)."""
-    from osmquadtree_bin_spark.session import get_spark
-
-    spark = get_spark(
-        app=f"oqt-calib-{cpus}", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
-    q = lambda rows: spark.range(0, rows, 1, cpus * 2).selectExpr(  # noqa: E731
-        "sum(sin(id * 1e-6)) as s"
-    ).collect()
-    q(50_000_000)  # warm codegen + JIT
-    t0 = time.perf_counter()
-    q(3_000_000_000)
-    wall = time.perf_counter() - t0
-    spark.stop()
-    return {"cpus": cpus, "wall_sec": round(wall, 3)}
-
-
-HISTORY_PATH = os.path.join(
-    os.path.dirname(BENCH_CLI), "BENCH_SCALING_HISTORY.json"
-)
-WRITE_PATH_ARTIFACT = os.path.join(
-    os.path.dirname(BENCH_CLI), "WRITE_PATH.json"
-)
-
-
-def write_path_probe(n_docs: int = 10_000_000, cpus: int | None = None) -> dict:
-    """Isolate the tiled shuffle-sort-write from the assign compute: stage
-    the ASSIGNED table to tmpfs parquet first, then time only
-    read → repartition(tile_idx) → sortWithinPartitions → write. Saves a
-    dated artifact BENCH.md cites (`python bench.py --write-path`)."""
-    import shutil
-    import tempfile
-
-    import numpy as np
-
-    from osmquadtree_bin_spark.datagen import gen_docs_dist
-    from osmquadtree_bin_spark.session import get_spark
-    from osmquadtree_bin_spark.spans import explode_geoms
-    from osmquadtree_bin_spark.tiling import assign_tiles, count_tree, find_groups
-    from pyspark.sql import functions as F
-
-    cpus = cpus or int(CPUS)
-    spark = get_spark(
-        app="oqt-write-path", master=f"local[{cpus}]", shuffle_partitions=cpus * 2
-    )
-    spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
-    tmp = tempfile.mkdtemp(prefix="oqt_wp_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None)
-    try:
-        gen_docs_dist(spark, n_docs=n_docs, seed=42, partitions=cpus * 4).write.parquet(
-            f"{tmp}/docs"
-        )
-        explode_geoms(spark.read.parquet(f"{tmp}/docs")).select(
-            "id", "qt",
-            F.col("minx").cast("int").alias("minx"),
-            F.col("miny").cast("int").alias("miny"),
-            F.col("maxx").cast("int").alias("maxx"),
-            F.col("maxy").cast("int").alias("maxy"),
-            F.col("geom_type").cast("tinyint").alias("geom_type"),
-        ).write.parquet(f"{tmp}/slim")
-        slim = spark.read.parquet(f"{tmp}/slim")
-        n = slim.count()
-        counts = count_tree(slim, n_rows_hint=n)
-        groups = find_groups(
-            counts["cell"].to_numpy(np.int64), counts["cnt"].to_numpy(np.int64),
-            8000, 4000,
-        )
-        assign_tiles(slim, groups, counts=counts).drop("tile_qt").withColumn(
-            "tile_idx", F.col("tile_idx").cast("int")
-        ).write.parquet(f"{tmp}/assigned")
-        assigned = spark.read.parquet(f"{tmp}/assigned")
-
-        def run() -> float:
-            t0 = time.perf_counter()
-            (
-                assigned.repartition(F.col("tile_idx"))
-                .sortWithinPartitions("tile_idx", "id")
-                .write.mode("overwrite")
-                .parquet(f"{tmp}/tiled")
-            )
-            return time.perf_counter() - t0
-
-        run()  # warm
-        wall = run()
-        out_mb = _du(f"{tmp}/tiled") / 1e6
-        artifact = {
-            "date": time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime()),
-            "cpus": cpus,
-            "rows": n,
-            "wall_sec": round(wall, 2),
-            "rows_per_sec": round(n / wall, 0),
-            "out_mb": round(out_mb, 1),
-            "written_mb_per_s": round(out_mb / wall, 1),
-        }
-        with open(WRITE_PATH_ARTIFACT, "w") as f:
-            json.dump(artifact, f, indent=1)
-        return artifact
-    finally:
-        spark.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-KNEE_LEVELS = (
-    int(os.environ.get("BENCH_KNEE_N", "2")),
-    int(os.environ.get("BENCH_KNEE_4N", "8")),
-)
-N_DOCS_KNEE = int(os.environ.get("BENCH_KNEE_DOCS", "5000000"))
-# Engine-revision tag stamped into every knee record. BUMP THIS whenever a
-# measured stage's implementation or measurement-relevant config changes
-# (r06a = zstd shuffle codec + 32 MB count_tree scan floor + vectorized
-# find_groups + footer lineage): the report pools best-clean stage walls by
-# (levels, n_docs, impl), so min-walls from different engine revisions are
-# never mixed into one composite (a change that speeds one level could
-# otherwise pair an old lo-wall with a new hi-wall and publish an
-# efficiency no single engine ever had).
-# (r06a briefly added a 32 MB count_tree scan floor; a clean pair measured
-# it slower at the 4N level, so r06b reverts it — see tiling.count_tree)
-IMPL_TAG = os.environ.get("BENCH_IMPL_TAG", "r06b")
-
-
-def _measure_pair(
-    n: int, n4: int, exec_cores: int, n_docs: int, modes=("cluster", "local")
-) -> dict:
-    """One N→4N measurement (each level in its own subprocess/JVM set).
-    Both levels stage the input with the SAME partition count (n4*4) —
-    a cluster reads one table layout regardless of its size."""
-    factor = n4 / n
+def _measure_pair(n: int, n4: int, n_docs: int) -> dict:
+    """One N→4N measurement in executor mode (each level in its own
+    subprocess/JVM set, executors of ``n`` cores). Both levels read the
+    input staged with the SAME partition count (n4*4) — a cluster reads one
+    table layout regardless of its size."""
     parts = n4 * 4
-    results: dict[str, dict[int, dict]] = {}
-    for mode in modes:
-        results[mode] = {}
-        for cpus in (n, n4):
-            results[mode][cpus] = _sub_json(
-                [
-                    "--single-scaling", str(cpus), mode, str(exec_cores),
-                    str(n_docs), str(parts),
-                ]
-            )
-
-    def eff(mode: str) -> float:
-        r = results[mode]
-        return round(r[n4]["rows_per_sec"] / (factor * r[n]["rows_per_sec"]), 4)
-
-    probes = [results[m][c].get("cpu_probe_sec") for m in modes for c in (n, n4)]
-    probes = [p for p in probes if p]
-    steals = [
-        results[m][c].get("steal_cores")
-        for m in modes
-        for c in (n, n4)
-        if results[m][c].get("steal_cores") is not None
-    ]
-    rec = {
+    levels = {
+        cpus: _sub_json(
+            ["--single-scaling", str(cpus), "cluster", str(n), str(n_docs), str(parts)]
+        )
+        for cpus in (n, n4)
+    }
+    probes = [r["cpu_probe_sec"] for r in levels.values() if r.get("cpu_probe_sec")]
+    steals = [r["steal_cores"] for r in levels.values() if r.get("steal_cores") is not None]
+    return {
         "n_docs": n_docs,
         "levels": [n, n4],
         "impl": IMPL_TAG,
-        "exec_cores": exec_cores,
+        "exec_cores": n,
         "calib_raw_cpu": calibrate_raw_cpu(n, n4),
         # per-level single-thread probe walls + spread: >~1.25 means the box
         # was NOT equally idle across levels and the pair is suspect
@@ -570,17 +364,15 @@ def _measure_pair(
         # neighbor stole < STEAL_CLEAN_CORES during BOTH measured windows
         "max_steal_cores": round(max(steals), 3) if steals else None,
         "steal_clean": (max(steals) < STEAL_CLEAN_CORES) if steals else None,
+        "cluster": {str(c): r for c, r in levels.items()},
+        "efficiency_cluster": round(
+            levels[n4]["rows_per_sec"] / (n4 / n * levels[n]["rows_per_sec"]), 4
+        ),
     }
-    for mode in modes:
-        rec[mode] = {str(c): results[mode][c] for c in (n, n4)}
-        rec[f"efficiency_{mode}"] = eff(mode)
-    return rec
 
 
 def _record_run(record: dict) -> list[dict]:
-    """THE one measured-run record writer: append to history, re-render
-    BENCH.md from the last full record + all knee measurements. Every mode
-    (--scaling, --knee-repeat) goes through here."""
+    """Append one knee record to history and re-render BENCH.md from it."""
     from tools.bench_report import write_bench_md
 
     history = []
@@ -590,25 +382,19 @@ def _record_run(record: dict) -> list[dict]:
     history.append(record)
     with open(HISTORY_PATH, "w") as f:
         json.dump(history, f, indent=1)
-    full = [h for h in history if not h.get("knee_only")]
-    if full:
-        write_bench_md(full[-1], history)
+    write_bench_md(history)
     return history
 
 
-def knee_repeat(k: int, quiet_wait_sec: float | None = None) -> dict:
+def knee_repeat(k: int, quiet_wait_sec: float = QUIET_WAIT_SEC) -> dict:
     """Repeat the below-knee pair k times, appending each as a knee-only
     history record. Every repeat ships with its own no-engine calibration,
     per-level probe walls, and per-level hypervisor-steal counters; before
-    each repeat the harness waits (up to ``quiet_wait_sec``, default
-    BENCH_QUIET_WAIT_SEC or 600) for a steal-quiet window — launching a
-    15-minute pair into a loud window wastes the pair. The headline value is
-    the best STEAL-CLEAN efficiency if any repeat is clean, else the best
-    overall (flagged)."""
+    each repeat the harness waits (up to ``quiet_wait_sec``) for a
+    steal-quiet window. The headline value is the best STEAL-CLEAN
+    efficiency if any repeat is clean, else the best overall (flagged)."""
     if k < 1:
         raise SystemExit("--knee-repeat needs k >= 1")
-    if quiet_wait_sec is None:
-        quiet_wait_sec = float(os.environ.get("BENCH_QUIET_WAIT_SEC", "600"))
     kn, kn4 = KNEE_LEVELS
     out: list[tuple[float, bool]] = []
     try:
@@ -616,15 +402,14 @@ def knee_repeat(k: int, quiet_wait_sec: float | None = None) -> dict:
         # inside the first (low-core) level's measurement subprocess
         _sub_json(["--stage-docs", str(N_DOCS_KNEE), str(kn4 * 4)])
         for _ in range(k):
-            gate = _wait_for_quiet(quiet_wait_sec)
             rec = {
                 "knee_only": True,
                 "date": time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime()),
-                "quiet_gate": gate,
-                "knee": _measure_pair(kn, kn4, kn, N_DOCS_KNEE, modes=("cluster",)),
+                "quiet_gate": _wait_for_quiet(quiet_wait_sec),
+                "knee": _measure_pair(kn, kn4, N_DOCS_KNEE),
             }
             out.append(
-                (rec["knee"]["efficiency_cluster"], bool(rec["knee"].get("steal_clean")))
+                (rec["knee"]["efficiency_cluster"], bool(rec["knee"]["steal_clean"]))
             )
             _record_run(rec)
     finally:
@@ -640,59 +425,6 @@ def knee_repeat(k: int, quiet_wait_sec: float | None = None) -> dict:
     }
 
 
-def knee_until(deadline_sec: float, quiet_wait_sec: float = 1800.0) -> dict:
-    """Quiet-window hunter: keep running below-knee pairs (each gated on a
-    steal-quiet pre-check) until EITHER one pair is fully steal-clean on
-    both levels, OR every parallel stage has accumulated a clean window
-    (per-stage admission: tools/bench_report._stage_clean_lines), OR the
-    deadline passes. On a host whose neighbor arrives in multi-minute
-    bursts, whole-pair-clean is rare but per-stage-clean accumulates — this
-    mode converts idle hours into verified stage walls."""
-    from tools.bench_report import SERIAL_STAGES, STAGE_ORDER, stage_clean
-
-    kn, kn4 = KNEE_LEVELS
-    t_end = time.monotonic() + deadline_sec
-    covered: set[str] = set()
-    parallel = [s for s in STAGE_ORDER if s not in SERIAL_STAGES]
-    out: list[tuple[float, bool]] = []
-    try:
-        _sub_json(["--stage-docs", str(N_DOCS_KNEE), str(kn4 * 4)])
-        while time.monotonic() < t_end:
-            budget = min(quiet_wait_sec, max(30.0, t_end - time.monotonic()))
-            gate = _wait_for_quiet(budget)
-            if gate.get("gave_up") and time.monotonic() >= t_end:
-                break
-            k = _measure_pair(kn, kn4, kn, N_DOCS_KNEE, modes=("cluster",))
-            rec = {
-                "knee_only": True,
-                "date": time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime()),
-                "quiet_gate": gate,
-                "knee": k,
-            }
-            out.append((k["efficiency_cluster"], bool(k.get("steal_clean"))))
-            _record_run(rec)
-            c_lo, c_hi = (k["cluster"][str(x)] for x in (kn, kn4))
-            for st in parallel:
-                ok = all(
-                    stage_clean(c.get("stages", {}), st, c["cpus"])
-                    for c in (c_lo, c_hi)
-                )
-                covered |= {st} if ok else set()
-            if k.get("steal_clean") or covered >= set(parallel):
-                break
-    finally:
-        _clean_staged_docs()
-    clean = [e for e, ok in out if ok and e <= 1.0]
-    return {
-        "metric": f"below-knee {kn}->{kn4} hunt, {len(out)} pairs, "
-        f"stage-clean coverage {sorted(covered)}",
-        "value": max(clean) if clean else (max(e for e, _ in out) if out else 0.0),
-        "unit": "efficiency",
-        "queries": {f"rep{i}": e for i, (e, _) in enumerate(out)},
-        "sf": N_DOCS_KNEE,
-    }
-
-
 def _clean_staged_docs() -> None:
     import glob
     import shutil
@@ -702,58 +434,3 @@ def _clean_staged_docs() -> None:
     for base in ("/dev/shm", tempfile.gettempdir()):
         for d in glob.glob(os.path.join(base, "oqt_docs_*")):
             shutil.rmtree(d, ignore_errors=True)
-
-
-def run_scaling() -> dict:
-    n, n4 = SCALING_LEVELS
-    factor = n4 / n
-    record = _measure_pair(n, n4, EXEC_CORES, N_DOCS_SCALING)
-    # below-the-knee companion (cluster mode only): the 8→32 step is
-    # memory-bandwidth-saturated on this box (no-engine raw-CPU calibration
-    # itself lands 0.66-0.73 there); 2→8 cores sits below that knee, where
-    # the no-engine ceiling clears ~0.9, so engine scaling is separable from
-    # hardware sharing. Same executor isolation (local-cluster, 1→4 JVMs of
-    # 2 cores), smaller input so per-core work matches the main pair.
-    kn, kn4 = KNEE_LEVELS
-    record["knee"] = _measure_pair(kn, kn4, kn, N_DOCS_KNEE, modes=("cluster",))
-
-    record["date"] = time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime())
-    record["calib_tmpfs"] = calibrate_tmpfs()
-    jvm_runs = {str(c): _sub_json(["--calibrate-jvm", str(c)]) for c in (n, n4)}
-    jvm_eff = round(
-        jvm_runs[str(n)]["wall_sec"] / (factor * jvm_runs[str(n4)]["wall_sec"]), 4
-    )
-    record["calib_jvm_only"] = {"runs": jvm_runs, "efficiency": jvm_eff}
-    _record_run(record)
-
-    knee = record["knee"]
-    payload = {
-        "metric": (
-            f"tile-assign+pip rows/sec scaling, N->4N executors "
-            f"(local-cluster[{n // EXEC_CORES},{EXEC_CORES}]->"
-            f"local-cluster[{n4 // EXEC_CORES},{EXEC_CORES}]) "
-            f"and local[{n}]->local[{n4}], plus below-knee "
-            f"local-cluster[{kn // kn},{kn}]->local-cluster[{kn4 // kn},{kn}]"
-        ),
-        "value": record["efficiency_cluster"],
-        "unit": "efficiency",
-        "queries": {
-            "cluster_efficiency": record["efficiency_cluster"],
-            "local_efficiency": record["efficiency_local"],
-            "knee_cluster_efficiency": knee["efficiency_cluster"],
-            f"cluster{n}_rows_per_sec": record["cluster"][str(n)]["rows_per_sec"],
-            f"cluster{n4}_rows_per_sec": record["cluster"][str(n4)]["rows_per_sec"],
-            f"local{n}_rows_per_sec": record["local"][str(n)]["rows_per_sec"],
-            f"local{n4}_rows_per_sec": record["local"][str(n4)]["rows_per_sec"],
-            f"knee{kn}_rows_per_sec": knee["cluster"][str(kn)]["rows_per_sec"],
-            f"knee{kn4}_rows_per_sec": knee["cluster"][str(kn4)]["rows_per_sec"],
-            "calib_raw_cpu_eff": record["calib_raw_cpu"]["efficiency"],
-            "knee_calib_raw_cpu_eff": knee["calib_raw_cpu"]["efficiency"],
-            "calib_jvm_only_eff": jvm_eff,
-        },
-        "sf": N_DOCS_SCALING,
-    }
-    _clean_staged_docs()
-    return payload
-
-

@@ -43,17 +43,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _tile_rows_from_footers(
-    tiled_path: str, max_files: int = 50_000
-) -> dict[int, int] | None:
-    """Delegates to osmquadtree_bin_spark.footers.tile_rows_from_footers
-    (moved there in r06 so the streaming diff ledger can share the same
-    metadata path; this name stays for the resume/audit tests)."""
-    from osmquadtree_bin_spark.footers import tile_rows_from_footers
-
-    return tile_rows_from_footers(tiled_path, max_files)
-
-
 def _phase_complete(path: str) -> bool:
     """A parquet phase output is a checkpoint iff Spark committed it
     (_SUCCESS marker — partial output from a killed run has none). Local-fs
@@ -89,7 +78,11 @@ def prepare_pipeline(
       lineage             per-tile audit table (tile_idx, tile_qt, rows,
                           expected_rows): actual written row counts vs the
                           group walk's expected counts — the north rule's
-                          per-partition lineage + row-count metrics
+                          per-partition lineage + row-count metrics. The
+                          counts are ``footers.tile_rows`` (a footer walk of
+                          the hive layout, one Spark count of the flat one);
+                          the table is merged in pandas and written on the
+                          driver with pyarrow
 
     **Resumable** (``resume=True``): the two expensive phases checkpoint
     through their committed parquet output (_SUCCESS marker) — a killed
@@ -102,14 +95,21 @@ def prepare_pipeline(
 
     Returns (stages, artifacts): artifacts carries elements/tiled/lineage
     paths, the counts/groups frames, n_elements, and ``resumed_phases``."""
+    import shutil
+
     import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from osmquadtree_bin_spark.footers import parquet_rows
+    from osmquadtree_bin_spark.footers import parquet_rows, tile_rows
     from osmquadtree_bin_spark.hostmetrics import stage
     from osmquadtree_bin_spark.spans import explode_geoms
-    from osmquadtree_bin_spark.tiling import assign_tiles, count_tree, find_groups
-    from osmquadtree_bin_spark.tuning import scan_splits_for, shuffle_partitions_for
+    from osmquadtree_bin_spark.tiling import (
+        assign_tiles, count_tree, find_groups, write_tiled,
+    )
+    from osmquadtree_bin_spark.tuning import scan_splits_for
 
     stages: dict[str, float] = {}
     resumed: list[str] = []
@@ -173,104 +173,42 @@ def prepare_pipeline(
         stages["assign_write_tiled"] = 0.0
         resumed.append("assign_write_tiled")
     else:
-        # the tiled store is tile_qt-free (recoverable from the broadcast
-        # groups frame at read time — 8 wasted bytes/row through the
-        # bandwidth-bound shuffle+write otherwise) and int32 tile_idx
-        assigned = (
-            assign_tiles(slim, groups, counts=counts)
-            .drop("tile_qt")
-            .withColumn("tile_idx", F.col("tile_idx").cast("int"))
-        )
-        with stage(stages, "assign_write_tiled"):
-            # explicit partition count: wave-aligned for this session, byte-
-            # bounded at scale; blocks AQE's sub-wave coalescing (tuning.py)
-            w = (
-                assigned.repartition(shuffle_partitions_for(slim), F.col("tile_idx"))
-                .sortWithinPartitions("tile_idx", "id")
-                .write.mode("overwrite")
-            )
-            if partition_by_tile:
-                w = w.partitionBy("tile_idx")
-            with scan_splits_for(slim):  # map side reads the slim table
-                w.parquet(tiled_path)
+        assigned = assign_tiles(slim, groups, counts=counts)
+        # the map side reads the slim table
+        with stage(stages, "assign_write_tiled"), scan_splits_for(slim):
+            write_tiled(assigned, tiled_path, partition_by_tile=partition_by_tile)
 
     lineage_path = os.path.join(work_dir, f"lineage{run_tag}")
     if lineage:
-        expected = groups.rename(columns={"cnt": "expected_rows"})[
-            ["tile_idx", "tile_qt", "expected_rows"]
-        ]
-
-        def lineage_write():
-            # Fast path: per-tile written row counts straight from the
-            # parquet footers of the hive layout — a driver-side metadata
-            # read, the local-fs analogue of Iceberg's single manifest-
-            # summary scan (which is how this audit runs in production).
-            # The previous implementation re-scanned the whole tiled store
-            # with a Spark count job: a flat ~0.5 s at every parallelism
-            # level, i.e. the pipeline's worst-scaling phase for an answer
-            # the writer's own footers already hold.
-            actual = _tile_rows_from_footers(tiled_path)
-            if actual is None:
-                # non-local fs / non-partitioned layout / too many files
-                # for a driver walk → the distributed count
-                gdf = spark.createDataFrame(expected)
-                tiled = spark.read.parquet(tiled_path)
-                with scan_splits_for(tiled):
-                    (
-                        tiled.groupBy(
-                            F.col("tile_idx").cast("long").alias("tile_idx")
-                        )
-                        .agg(F.count(F.lit(1)).alias("rows"))
-                        .join(F.broadcast(gdf), "tile_idx", "full")
-                        .select(
-                            "tile_idx",
-                            "tile_qt",
-                            F.coalesce("rows", F.lit(0)).alias("rows"),
-                            F.coalesce("expected_rows", F.lit(0)).alias(
-                                "expected_rows"
-                            ),
-                        )
-                        .write.mode("overwrite")
-                        .parquet(lineage_path)
-                    )
-                return
-            import shutil
-
-            import pandas as pd
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
+        with stage(stages, "lineage"):
+            actual = tile_rows(spark, tiled_path)
+            exp = groups.rename(columns={"cnt": "expected_rows"})[
+                ["tile_idx", "tile_qt", "expected_rows"]
+            ]
             adf = pd.DataFrame(
-                {"tile_idx": list(actual.keys()), "rows": list(actual.values())}
+                {"tile_idx": list(actual.keys()), "rows": list(actual.values())},
+                dtype="int64",
             )
             # nullable Int64 BEFORE the merge: an outer merge that adds a
             # written-but-ungrouped tile (the anomaly the audit exists to
             # expose) would otherwise coerce tile_qt to float64 and destroy
             # the low bits of every key >= 2^53 — quadtree keys pack the
             # path in the high bits, so that is all of them
-            exp = expected.copy()
-            exp["tile_qt"] = exp["tile_qt"].astype("Int64")
+            exp = exp.astype({"tile_qt": "Int64"})
             lin = exp.merge(adf, on="tile_idx", how="outer")
             lin["rows"] = lin["rows"].fillna(0).astype("int64")
-            lin["expected_rows"] = (
-                lin["expected_rows"].fillna(0).astype("int64")
-            )
+            lin["expected_rows"] = lin["expected_rows"].fillna(0).astype("int64")
             lin["tile_idx"] = lin["tile_idx"].astype("int64")
-            tbl = pa.Table.from_pandas(lin, preserve_index=False)
-            # true overwrite semantics, like the distributed path's
-            # write.mode("overwrite"): a prior run's part files (e.g. a
-            # distributed-count write under a different layout flag, or an
-            # uncommitted kill) must not be unioned into the audit table
+            # true overwrite: a prior run's part files (or an uncommitted
+            # kill's) must not be unioned into the audit table
             if os.path.isdir(lineage_path):
                 shutil.rmtree(lineage_path)
             os.makedirs(lineage_path)
             pq.write_table(
-                tbl, os.path.join(lineage_path, "part-00000.parquet")
+                pa.Table.from_pandas(lin, preserve_index=False),
+                os.path.join(lineage_path, "part-00000.parquet"),
             )
             open(os.path.join(lineage_path, "_SUCCESS"), "w").close()
-
-        with stage(stages, "lineage"):
-            lineage_write()
 
     artifacts = {
         "elements_path": el_path,
@@ -306,7 +244,7 @@ def main() -> None:
     from pyspark.sql import SparkSession, functions as F
 
     from osmquadtree_bin_spark.datagen import gen_docs_dist
-    from osmquadtree_bin_spark.tiling import group_lines, tree_lines
+    from osmquadtree_bin_spark.sources import write_groups_dump, write_tree_dump
 
     spark = SparkSession.builder.appName("oqt-prepare").getOrCreate()
     metrics: dict[str, float] = {}
@@ -340,17 +278,11 @@ def main() -> None:
     metrics["n_groups"] = int(len(groups))
 
     os.makedirs(args.output, exist_ok=True)
-    with open(os.path.join(args.output, "qts.txt"), "w") as f:
-        f.write(
-            "\n".join(
-                tree_lines(
-                    counts["cell"].to_numpy(np.int64), counts["cnt"].to_numpy(np.int64)
-                )
-            )
-            + "\n"
-        )
-    with open(os.path.join(args.output, "groups.txt"), "w") as f:
-        f.write("\n".join(group_lines(groups)) + "\n")
+    write_tree_dump(
+        os.path.join(args.output, "qts.txt"),
+        counts["cell"].to_numpy(np.int64), counts["cnt"].to_numpy(np.int64),
+    )
+    write_groups_dump(os.path.join(args.output, "groups.txt"), groups)
     with open(os.path.join(args.output, "metrics.json"), "w") as f:
         json.dump(metrics, f, indent=1, sort_keys=True)
     print(json.dumps(metrics))

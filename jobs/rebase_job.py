@@ -43,8 +43,8 @@ def main() -> None:
     import numpy as np
     from pyspark.sql import SparkSession
 
+    from osmquadtree_bin_spark.sources import write_groups_dump, write_tree_dump
     from osmquadtree_bin_spark.streaming.update import TiledStore
-    from osmquadtree_bin_spark.tiling import group_lines, tree_lines
 
     spark = SparkSession.builder.appName("oqt-rebase").getOrCreate()
     metrics: dict[str, float] = {}
@@ -61,17 +61,11 @@ def main() -> None:
     metrics["n_cells"] = int(len(counts))
 
     os.makedirs(args.output, exist_ok=True)
-    with open(os.path.join(args.output, "qts.txt"), "w") as f:
-        f.write(
-            "\n".join(
-                tree_lines(
-                    counts["cell"].to_numpy(np.int64), counts["cnt"].to_numpy(np.int64)
-                )
-            )
-            + "\n"
-        )
-    with open(os.path.join(args.output, "groups.txt"), "w") as f:
-        f.write("\n".join(group_lines(groups)) + "\n")
+    write_tree_dump(
+        os.path.join(args.output, "qts.txt"),
+        counts["cell"].to_numpy(np.int64), counts["cnt"].to_numpy(np.int64),
+    )
+    write_groups_dump(os.path.join(args.output, "groups.txt"), groups)
     with open(os.path.join(args.output, "metrics.json"), "w") as f:
         json.dump(metrics, f, indent=1, sort_keys=True)
     print(json.dumps(metrics))

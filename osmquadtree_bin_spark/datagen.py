@@ -100,6 +100,28 @@ def _coord(rng: np.random.Generator) -> tuple[int, int]:
     return int(round(lon * COORD_SCALE)), int(round(lat * COORD_SCALE))
 
 
+def _doc_spans(rng: np.random.Generator) -> list[dict]:
+    """One doc's spans: 3-20 of geom (30%), media (15%) or text, each with
+    its character offset in the doc."""
+    spans = []
+    offset = 0
+    for _ in range(int(rng.integers(3, 21))):
+        r = rng.random()
+        if r < 0.30:
+            kind, text, media = "geom", _wkt_and_tags(rng), ""
+        elif r < 0.45:
+            kind, text = "media", ""
+            media = f"media://{int(rng.integers(0, 1 << 48)):012x}"
+        else:
+            kind = "text"
+            nw = int(rng.integers(3, 12))
+            text = " ".join(_WORDS[int(k)] for k in rng.integers(0, len(_WORDS), nw))
+            media = ""
+        spans.append({"kind": kind, "text": text, "media_ref": media, "offset": offset})
+        offset += max(len(text), 1)
+    return spans
+
+
 def gen_docs_pdf(n_docs: int = 1000, seed: int = 42) -> pd.DataFrame:
     """F1: interleaved docs as a pandas frame (driver-side, small scale).
 
@@ -107,26 +129,7 @@ def gen_docs_pdf(n_docs: int = 1000, seed: int = 42) -> pd.DataFrame:
     the generator exists only to fabricate deterministic test input.
     """
     rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n_docs):
-        n_spans = int(rng.integers(3, 21))
-        spans = []
-        offset = 0
-        for j in range(n_spans):
-            r = rng.random()
-            if r < 0.30:
-                kind, text, media = "geom", _wkt_and_tags(rng), ""
-            elif r < 0.45:
-                kind, text = "media", ""
-                media = f"media://{int(rng.integers(0, 1 << 48)):012x}"
-            else:
-                kind = "text"
-                nw = int(rng.integers(3, 12))
-                text = " ".join(_WORDS[int(k)] for k in rng.integers(0, len(_WORDS), nw))
-                media = ""
-            spans.append({"kind": kind, "text": text, "media_ref": media, "offset": offset})
-            offset += max(len(text), 1)
-        rows.append({"doc_id": f"doc_{i:08d}", "spans": spans})
+    rows = [{"doc_id": f"doc_{i:08d}", "spans": _doc_spans(rng)} for i in range(n_docs)]
     return pd.DataFrame(rows)
 
 
@@ -143,26 +146,8 @@ def _doc_rows(doc_ids, seed: int):
     same generator run at 10^12-doc scale on any cluster layout)."""
     out_ids, out_spans = [], []
     for i in doc_ids:
-        rng = np.random.default_rng((int(seed) << 34) ^ int(i))
-        n_spans = int(rng.integers(3, 21))
-        spans = []
-        offset = 0
-        for _ in range(n_spans):
-            r = rng.random()
-            if r < 0.30:
-                kind, text, media = "geom", _wkt_and_tags(rng), ""
-            elif r < 0.45:
-                kind, text = "media", ""
-                media = f"media://{int(rng.integers(0, 1 << 48)):012x}"
-            else:
-                kind = "text"
-                nw = int(rng.integers(3, 12))
-                text = " ".join(_WORDS[int(k)] for k in rng.integers(0, len(_WORDS), nw))
-                media = ""
-            spans.append({"kind": kind, "text": text, "media_ref": media, "offset": offset})
-            offset += max(len(text), 1)
         out_ids.append(f"doc_{int(i):08d}")
-        out_spans.append(spans)
+        out_spans.append(_doc_spans(np.random.default_rng((int(seed) << 34) ^ int(i))))
     return pd.DataFrame({"doc_id": out_ids, "spans": out_spans})
 
 

@@ -1,12 +1,14 @@
-"""Parquet-footer metadata reads for hive-partitioned tile stores.
+"""Parquet-footer metadata reads for hive-partitioned tile stores, and the
+store's ``tile_idx=N`` directory names (:func:`tile_dir`).
 
 Per-tile row counts from file footers — the driver-side metadata path that
-replaces full distributed count scans for write audits and diff ledgers
-(guide §1.2: don't compute things a metadata read already knows). On
+replaces full distributed count scans for write audits, diff ledgers and
+overflow monitoring (guide §1.2: don't compute things a metadata read
+already knows). :func:`tile_rows` is the one per-tile count those callers
+use: the footer walk, or one distributed count when the walk declines. On
 Iceberg the same numbers come from one manifest-summary scan; on HDFS/S3
-the footers stream through the FS API or the caller falls back to a
-distributed count. Callers must treat ``None`` as "fall back", never as
-zero.
+the footers stream through the FS API. Callers of the walks themselves must
+treat ``None`` as "fall back", never as zero.
 """
 
 from __future__ import annotations
@@ -18,6 +20,12 @@ import os
 log = logging.getLogger(__name__)
 
 
+def tile_dir(tiled_path: str, tile: int) -> str:
+    """The hive partition directory of ``tile`` in a tiled store — the one
+    place the ``tile_idx=N`` path format is spelled."""
+    return os.path.join(tiled_path, f"tile_idx={int(tile)}")
+
+
 def tile_files(tiled_path: str, tiles: list[int] | None = None) -> dict[int, list[str]]:
     """Sorted ``*.parquet`` files per tile partition of a local
     hive-partitioned layout (tile_idx=N/ dirs). ``tiles`` limits the listing
@@ -25,9 +33,7 @@ def tile_files(tiled_path: str, tiles: list[int] | None = None) -> dict[int, lis
     if tiles is None:
         dirs = glob.glob(os.path.join(tiled_path, "tile_idx=*"))
     else:
-        dirs = [
-            d for t in tiles if os.path.isdir(d := os.path.join(tiled_path, f"tile_idx={t}"))
-        ]
+        dirs = [d for t in tiles if os.path.isdir(d := tile_dir(tiled_path, t))]
     return {
         int(os.path.basename(d).split("=", 1)[1]): sorted(
             glob.glob(os.path.join(d, "*.parquet"))
@@ -101,3 +107,26 @@ def tile_rows_from_footers(
         }
 
     return _guarded_walk(tiled_path, walk)
+
+
+def tile_rows(spark, tiled_path: str, tiles: list[int] | None = None) -> dict[int, int]:
+    """Per-tile row counts of a tiled store, ``tiles`` limiting them to those
+    partitions (a tile without a partition is left out). The footer walk
+    (:func:`tile_rows_from_footers`) answers on a local hive layout with no
+    Spark job; otherwise one ``groupBy(tile_idx).count()`` collect does,
+    its scan split-sized for the session (``tuning.scan_splits_for``)."""
+    from pyspark.sql import functions as F
+
+    from .tuning import scan_splits_for
+
+    got = tile_rows_from_footers(tiled_path, tiles=tiles)
+    if got is not None:
+        return got
+    store = spark.read.parquet(tiled_path)
+    if tiles is not None:
+        store = store.filter(F.col("tile_idx").isin(list(tiles)))
+    with scan_splits_for(store):
+        return {
+            int(r["tile_idx"]): int(r["count"])
+            for r in store.groupBy("tile_idx").count().collect()
+        }

@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..footers import tile_dir
 from ..operators.pip_join import region_tiles
 from ..tuning import scoped_conf
 from .tables import SLICE_VIEW, referenced_views, served_views
@@ -62,8 +63,7 @@ class TileQueryEngine:
         would run a listing job, so the threshold is scoped to their
         count."""
         dirs = [
-            d for t in sorted(set(tiles))
-            if os.path.isdir(d := os.path.join(self.store_path, f"tile_idx={t}"))
+            d for t in sorted(set(tiles)) if os.path.isdir(d := tile_dir(self.store_path, t))
         ]
         if not dirs:
             return self.spark.createDataFrame([], self.schema)

@@ -56,7 +56,7 @@ from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from .sources import regions_frame, to_geojson
+from .sources import _jsonable, regions_frame, to_geojson
 from .tuning import collect_limited
 
 BBOX_CACHE_SIZE = 1  # osmquadtree-geometry.go:235-243
@@ -133,25 +133,20 @@ class TileServer:
         return INDEX_HTML
 
     def page_status(self) -> str:
+        """Store and ledger state. The ledger is the store root's, read on
+        the driver by ``TiledStore.resume_state`` (no Spark job);
+        ``ledger_state`` is null when nothing was applied."""
         import os
 
-        from pyspark.sql import functions as F
+        from .streaming.update import TiledStore
 
-        with self._lock:
-            n_tiles = len(self.engine.groups)
-            ledger_path = os.path.join(
-                os.path.dirname(self.engine.store_path.rstrip("/")), "ledger"
-            )
-            try:
-                led = self.engine.spark.read.parquet(ledger_path)
-                state = led.agg(F.max("state").alias("s")).collect()[0]["s"]
-            except Exception:  # noqa: BLE001 — store without a ledger
-                state = None
+        root = os.path.dirname(self.engine.store_path.rstrip("/"))
+        state = TiledStore(self.engine.spark, root).resume_state()
         return json.dumps(
             {
                 "store": self.engine.store_path,
-                "n_tiles": int(n_tiles),
-                "ledger_state": state,
+                "n_tiles": len(self.engine.groups),
+                "ledger_state": state or None,
                 "cache": {
                     "bbox": {"hits": self.bbox_cache.hits, "misses": self.bbox_cache.misses},
                     "tile": {"hits": self.tile_cache.hits, "misses": self.tile_cache.misses},
@@ -185,7 +180,8 @@ class TileServer:
         with self._lock:
             rows = collect_limited(self.engine.sql(sql, bbox), self.limit)
         return json.dumps(
-            {"rows": [self._jsonable_row(r.asDict()) for r in rows], "n": len(rows)}
+            {"rows": [{k: _jsonable(v) for k, v in r.asDict().items()} for r in rows],
+             "n": len(rows)}
         )
 
     def _extract_df(self, minx: int, miny: int, maxx: int, maxy: int):
@@ -224,17 +220,6 @@ class TileServer:
                     return f.read()
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
-
-    @staticmethod
-    def _jsonable_row(d: dict) -> dict:
-        out = {}
-        for k, v in d.items():
-            try:
-                json.dumps(v)
-                out[k] = v
-            except TypeError:
-                out[k] = str(v)
-        return out
 
     # ------------------------------------------------------------ handler
     def make_handler(self):

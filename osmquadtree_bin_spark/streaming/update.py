@@ -19,11 +19,14 @@ runs as few Spark jobs as its work needs:
      now (partition pruning: only those partitions are read below),
   2. merges newest-wins via row_number over (id) ordered by version desc and
      writes the result straight into a dynamic partition overwrite of ONLY
-     the touched tiles — one write job, no persist. The overwrite commits
-     after every task has read its base partitions; a touched tile whose
-     ``*.parquet`` files are the same after the write got no output rows and
-     is dropped,
-  3. reads the per-tile row counts before and after from parquet footers,
+     the touched tiles — one write job, no persist. The write goes through
+     ``tiling.write_tiled``, the store's one writer, which owns the stored
+     schema: a tile rewritten here has the same file schema as one prepare,
+     ``write_initial`` or a rebase wrote. The overwrite commits after every
+     task has read its base partitions; a touched tile whose ``*.parquet``
+     files are the same after the write got no output rows and is dropped,
+  3. reads the per-tile row counts before and after (``footers.tile_rows``:
+     parquet footers on a local hive store),
   4. writes a lineage row per touched partition on the driver with pyarrow:
      (state, tile_idx, rows_in, rows_out, ts) — the resumable-checkpoint
      contract of the north rule. The file appears atomically (hidden temp
@@ -132,14 +135,15 @@ class TiledStore:
     def apply_diff(self, diff: DataFrame, state: int, version_col: str = "version") -> list[int]:
         """J6/T3: newest-wins merge of a change set, rewriting only touched
         tile partitions. ``diff`` needs (id, changetype, version, <element
-        cols>, tile_idx precomputed by the caller via the assigner).
+        cols>, tile_idx precomputed by the caller via the assigner); the
+        assigner's ``tile_qt`` may ride along, ``write_tiled`` drops it.
         Returns the touched tile list. Idempotent per state (skips if the
         ledger already has it). Steps 1-4 of the module docstring; the merged
         result is never persisted or collected."""
         if self.resume_state() >= state:
             return []
-        from ..footers import tile_files
-        from ..tuning import shuffle_partitions_for
+        from ..footers import tile_files, tile_rows
+        from ..tiling import write_tiled
 
         # the diff lineage (a parquet read plus the assigner's broadcast
         # join, or even a lazy read of this store) runs once, here
@@ -167,25 +171,16 @@ class TiledStore:
             self._append_ledger([], state, {}, {})
             return []
 
-        rows_in = self._touched_counts(touched)
+        rows_in = tile_rows(self.spark, self.data_path, touched)
         files_in = tile_files(self.data_path, touched)
         base = store.filter(F.col("tile_idx").isin(touched))
         newest = merge_newest(base, diff, version_col)  # T5: deletes drop
-        # dynamic partition overwrite: only the touched tiles are rewritten.
-        # Spark stages the output and commits it after every task has read
-        # its base partitions, so newest may read the partitions it replaces.
-        # Scoped to THIS write via the DataFrameWriter option — a
-        # session-level conf.set here would leak "dynamic" into every later
-        # partitioned overwrite (no top-level _SUCCESS, stale partitions
-        # surviving a same-session re-tile).
-        (
-            newest.repartition(shuffle_partitions_for(newest), F.col("tile_idx"))
-            .sortWithinPartitions("tile_idx", "id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tile_idx")
-            .parquet(self.data_path)
-        )
+        # dynamic partition overwrite: only the touched tiles are rewritten,
+        # in the store's one format (write_tiled drops the assigner's
+        # tile_qt and casts tile_idx). Spark stages the output and commits
+        # it after every task has read its base partitions, so newest may
+        # read the partitions it replaces.
+        write_tiled(newest, self.data_path, dynamic=True)
         # Dynamic overwrite only replaces partitions PRESENT in the output,
         # each with newly named files: a touched tile whose files did not
         # change got no rows (all deleted or moved away), and its stale
@@ -193,37 +188,18 @@ class TiledStore:
         # overwrite-by-partition-filter / MERGE and needs no FS ops.)
         files_out = tile_files(self.data_path, touched)
         self._drop_partitions([t for t, fs in files_in.items() if files_out.get(t) == fs])
-        rows_out = self._touched_counts(touched)
+        rows_out = tile_rows(self.spark, self.data_path, touched)
         self._append_ledger(touched, state, rows_in, rows_out)
         return touched
-
-    def _touched_counts(self, touched: list[int]) -> dict[int, int]:
-        """Per-tile row counts for the touched partitions. Footer-walk fast
-        path (r05 verdict #5: the ledger's rows_in/rows_out were two full
-        distributed count scans per diff batch — the parquet-footer metadata
-        read built for the prepare lineage audit serves here too, zero Spark
-        jobs); distributed count fallback when the store is not a local
-        hive-partitioned layout."""
-        from ..footers import tile_rows_from_footers
-
-        got = tile_rows_from_footers(self.data_path, tiles=touched)
-        if got is not None:
-            return got
-        return {
-            r["tile_idx"]: r["n"]
-            for r in self.read()
-            .filter(F.col("tile_idx").isin(touched))
-            .groupBy("tile_idx")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
 
     def _drop_partitions(self, tiles: list[int]) -> None:
         """Remove now-empty tile partitions from the hive layout."""
         import shutil
 
+        from ..footers import tile_dir
+
         for t in tiles:
-            p = os.path.join(self.data_path, f"tile_idx={t}")
+            p = tile_dir(self.data_path, t)
             if os.path.isdir(p):
                 shutil.rmtree(p)
 
@@ -260,15 +236,12 @@ class TiledStore:
         elements arriving via ``apply_diff`` whose qt has no ancestor group
         land in the overflow tile (``make_tile_assigner.overflow_idx`` —
         tiling.py). Its growth is the signal that the fixed grouping has
-        drifted from the data and a rebase is due. One zero-column scan
-        (tile_idx is the partition column)."""
-        rows = {
-            r["tile_idx"]: r["n"]
-            for r in self.read()
-            .groupBy("tile_idx")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        drifted from the data and a rebase is due. The per-tile counts are
+        ``footers.tile_rows``: a footer walk on a local hive store (no Spark
+        job), one count job otherwise."""
+        from ..footers import tile_rows
+
+        rows = tile_rows(self.spark, self.data_path)
         total = sum(rows.values())
         ov = rows.get(overflow_idx, 0)
         return {

@@ -14,7 +14,8 @@ Re-creates the reference pipeline phases 2-4 (``osmquadtree-prepare.go:170-292``
                             (≤ 18) + coalesce, fully JVM-side, zero Python.
   4. ``write_tiled``      — repartition by tile, sort within partitions by id,
                             write hive-partitioned parquet (Iceberg partition
-                            transform in production).
+                            transform in production); the one tile writer,
+                            so the one owner of the stored schema.
 
 Group-walk semantics (pinned here, golden-tested in tests/test_tiling_golden.py):
 post-order DFS in quad-digit order (A,B,C,D). Each node bubbles up an
@@ -428,27 +429,46 @@ def _assign_tiles_cellmap(
     )
 
 
-def write_tiled(elements_with_tiles: DataFrame, path: str) -> None:
+def write_tiled(
+    elements_with_tiles: DataFrame,
+    path: str,
+    partition_by_tile: bool = True,
+    dynamic: bool = False,
+) -> None:
     """O1: shuffle every element to its tile, write partitioned + sorted.
+    The one tile writer (prepare, ``TiledStore.write_initial`` and so
+    rebase, ``TiledStore.apply_diff``), so it owns the stored format: every
+    tile has the same file schema, without ``tile_qt`` (the groups frame
+    maps tile_idx back to it; 8 bytes a row through the bandwidth-bound
+    shuffle and write otherwise) and with an int ``tile_idx``.
 
-    ``repartition(tile_idx)`` + ``sortWithinPartitions(tile_idx, id)`` gives the
-    reference's tiled, id-sorted layout; hive partitioning by tile_idx gives
-    partition pruning on read (Iceberg partition transform in production).
-    The partition count is explicit — wave-aligned for this session, byte-
-    bounded at scale — so AQE cannot coalesce the sort+write into a sub-wave
-    stage (tuning.py).
+    ``repartition(tile_idx)`` + ``sortWithinPartitions(tile_idx, id)`` gives
+    the reference's tiled, id-sorted layout; hive partitioning by tile_idx
+    gives partition pruning on read (Iceberg partition transform in
+    production; ``partition_by_tile=False`` writes the rows flat). The
+    partition count is explicit — wave-aligned for this session, byte-
+    bounded at scale — so AQE cannot coalesce the sort+write into a
+    sub-wave stage (tuning.py). ``dynamic=True`` overwrites only the tile
+    partitions in the output, scoped to this write by the writer option: a
+    session-level conf.set would leak "dynamic" into every later
+    partitioned overwrite (no top-level _SUCCESS, stale partitions
+    surviving a same-session re-tile).
     """
     from .tuning import shuffle_partitions_for
 
-    (
-        elements_with_tiles.repartition(
-            shuffle_partitions_for(elements_with_tiles), F.col("tile_idx")
-        )
+    df = elements_with_tiles.drop("tile_qt").withColumn(
+        "tile_idx", F.col("tile_idx").cast("int")
+    )
+    w = (
+        df.repartition(shuffle_partitions_for(df), F.col("tile_idx"))
         .sortWithinPartitions("tile_idx", "id")
         .write.mode("overwrite")
-        .partitionBy("tile_idx")
-        .parquet(path)
     )
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    if partition_by_tile:
+        w = w.partitionBy("tile_idx")
+    w.parquet(path)
 
 
 def tiling_pipeline(

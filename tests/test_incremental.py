@@ -192,7 +192,14 @@ def test_overflow_tile_monitored_and_rebase_absorbs(spark, tmp_path):
     led = {r["tile_idx"]: r for r in st.ledger().filter(F.col("state") == 1).collect()}
     assert led[ovf]["rows_out"] == 3  # overflow tile ledgered like any tile
 
-    p = st.overflow_pressure(ovf)
+    # the per-tile counts come from the footers: no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("overflow-pressure-jobs", "overflow_pressure job count")
+    try:
+        p = st.overflow_pressure(ovf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("overflow-pressure-jobs") == []
     assert p["overflow_rows"] == 3 and p["total_rows"] == 83
     assert not st.needs_rebase(ovf, max_fraction=0.5)
     assert st.needs_rebase(ovf, max_fraction=0.01)  # 3/83 > 1%
@@ -429,3 +436,51 @@ def test_diff_read_lazily_from_store(spark, store):
     got = st.read().filter(F.col("wkt").startswith("LAZY:")).collect()
     assert sorted(r["id"] for r in got) == ids
     assert all(not r["wkt"].startswith("LAZY:LAZY:") for r in got)
+
+
+def test_every_tile_file_has_one_schema_whichever_path_wrote_it(spark, tmp_path):
+    """prepare, two apply_diff batches of assigner output (as the update
+    benchmark applies them) and a rebase all write tiles through
+    ``tiling.write_tiled``: every ``*.parquet`` under tiles/ has the same
+    file schema, with no ``tile_qt`` column, whether a diff touched its tile
+    or not."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from jobs.prepare_job import prepare_pipeline
+    from osmquadtree_bin_spark.datagen import gen_docs_dist
+
+    work = str(tmp_path / "prep")
+    docs = gen_docs_dist(spark, n_docs=300, seed=5, partitions=2)
+    _, arts = prepare_pipeline(spark, docs, work, target=300, minimum=150, lineage=False)
+    groups = arts["groups"]
+    st = TiledStore(spark, work)
+    n_tiles = len(os.listdir(st.data_path))
+
+    def batch(state, rows):
+        src = str(tmp_path / f"diff-{state}")
+        (
+            rows.drop("tile_idx")
+            .withColumn("changetype", F.lit("modify"))
+            .withColumn("version", F.lit(state))
+            .write.parquet(src)
+        )
+        return st.apply_diff(assign_tiles(spark.read.parquet(src), groups), state=state)
+
+    tile0 = st.read().agg(F.min("tile_idx")).first()[0]
+    touched = set(batch(1, st.read().filter(F.col("tile_idx") == tile0).limit(5)))
+    touched |= set(batch(2, st.read().filter(F.col("id") % 97 == 0).limit(5)))
+    assert 0 < len(touched) < n_tiles  # touched and untouched tiles both
+
+    def schemas(tiles_dir):
+        files = glob.glob(os.path.join(tiles_dir, "tile_idx=*", "*.parquet"))
+        assert files
+        return {pq.read_schema(f).remove_metadata() for f in files}
+
+    (schema,) = schemas(st.data_path)
+    assert "tile_qt" not in schema.names
+    empty = spark.createDataFrame([], "id long, qt long, changetype string, version long")
+    out, _, _ = st.rebase(empty, str(tmp_path / "rebased"), 300, 150)
+    assert schemas(out.data_path) == {schema}

@@ -200,24 +200,24 @@ def test_lineage_footer_path_equals_distributed_count(spark, tmp_path):
 def test_tile_rows_from_footers_fallbacks(tmp_path):
     """Non-partitioned layout and over-budget file counts decline the
     driver walk (→ distributed count)."""
-    from jobs.prepare_job import _tile_rows_from_footers
+    from osmquadtree_bin_spark.footers import tile_rows_from_footers
 
-    assert _tile_rows_from_footers(str(tmp_path)) is None  # no tile dirs
+    assert tile_rows_from_footers(str(tmp_path)) is None  # no tile dirs
     d = tmp_path / "tile_idx=3"
     d.mkdir()
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     pq.write_table(pa.table({"id": [1, 2, 3]}), str(d / "f.parquet"))
-    assert _tile_rows_from_footers(str(tmp_path)) == {3: 3}
-    assert _tile_rows_from_footers(str(tmp_path), max_files=0) is None
+    assert tile_rows_from_footers(str(tmp_path)) == {3: 3}
+    assert tile_rows_from_footers(str(tmp_path), max_files=0) is None
 
 
 def test_lineage_overwrite_clears_stale_part_files(spark, tmp_path):
     """Re-running prepare into the SAME work_dir with a different layout
     flag (distributed-count audit first, footer fast path second) must
-    OVERWRITE the lineage table, not union the old Spark part files with
-    the new driver-written one."""
+    OVERWRITE the lineage table, not union the old part files with the new
+    one."""
     from osmquadtree_bin_spark.datagen import gen_docs_dist
 
     docs = gen_docs_dist(spark, n_docs=600, seed=13, partitions=2)

@@ -117,6 +117,7 @@ def test_status_and_errors(served):
     assert status == 200
     st = json.loads(body)
     assert st["n_tiles"] > 0 and "cache" in st
+    assert st["ledger_state"] is None  # no diff applied to this store
     # bad requests → 400, unknown route → 404, engine guard → 500 surfaced
     import urllib.error
 
@@ -392,7 +393,7 @@ def diffed(spark, docs, tmp_path):
     for t in gone:
         assert not os.path.isdir(os.path.join(st.data_path, f"tile_idx={t}"))
     yield {
-        "base": f"http://127.0.0.1:{httpd.server_address[1]}", "store": st,
+        "base": f"http://127.0.0.1:{httpd.server_address[1]}", "store": st, "ts": ts,
         "a_bbox": tuple(ext[c] for c in ("minx", "miny", "maxx", "maxy")),
         "a_qt": int(groups.set_index("tile_idx").tile_qt[a]), "b_qt": int(b_qt),
         "b_centre": centre(b_qt),
@@ -434,6 +435,9 @@ def test_bbox_and_tile_see_rows_rewritten_after_engine_built(diffed):
             ((F.col("qt").bitwiseAND(F.lit(31))) >= tz) & (qt_round_expr("qt", tz) == key)
         )
         assert status == 200 and _feature_ids(body) == _store_ids(want)
+    # /status reads the applied state from the store's ledger on the driver
+    status, jobs = _spark_jobs(diffed["store"].spark, diffed["ts"].page_status)
+    assert json.loads(status)["ledger_state"] == 1 and jobs == 0
 
 
 def test_request_on_emptied_tile_returns_empty_collection(diffed):

@@ -17,10 +17,10 @@ STAGE_ORDER = (
     "parse_qt", "count_tree", "find_groups", "assign_write_tiled",
     "lineage", "pip",
 )
-# find_groups is the deterministic driver-side group walk and lineage a
-# driver-side parquet-footer walk (jobs/prepare_job.py): serial BY DESIGN,
-# absolute wall capped (~0.5 s) and independent of cluster size. Their
-# "efficiency" is definitionally ~1/factor and says nothing about the
+# find_groups is the deterministic driver-side group walk: serial BY DESIGN.
+# lineage is prepare's per-tile audit: ``footers.tile_rows`` (a footer walk
+# of a hive layout; one Spark count of the knee bench's flat layout) and a
+# driver-side write. Neither stage's "efficiency" says anything about the
 # engine's distributed stages, so they are reported by absolute wall and
 # excluded from the composite.
 SERIAL_STAGES = frozenset({"find_groups", "lineage"})
@@ -184,9 +184,9 @@ def _stage_clean_lines(history: list[dict]) -> list[str]:
         "overlaps its Arrow Python workers legitimately runs more busy cores "
         "than its allotment, identically at both levels) stayed under "
         f"{BUSY_CLEAN_MARGIN}. Walls below are the minimum over admissible "
-        "windows (steal and competition only ever inflate a wall). The two "
-        "serial-by-design driver-side steps — the group walk and the "
-        "parquet-footer lineage audit — are shown by absolute wall only.",
+        "windows (steal and competition only ever inflate a wall). The "
+        "driver-side group walk and the per-tile lineage audit (one Spark "
+        "count of the flat layout) are shown by absolute wall only.",
         "",
         f"Pooling config: levels {list(cfg[0])}, n_docs {cfg[1]}, engine "
         f"impl tag `{cfg[2]}` — {n_pooled} knee records.",
@@ -293,7 +293,7 @@ def write_bench_md(history: list[dict]) -> None:
         "(appended by `python bench.py --knee-repeat K`); nothing below is "
         "hand-maintained. The job: span parse + quadtree Calculate → slim "
         "elements table → count tree → group walk → tile assignment → tiled "
-        "shuffle-write → footer lineage, plus a PIP join, through "
+        "shuffle-write → lineage audit, plus a PIP join, through "
         "`jobs.prepare_job.prepare_pipeline`, at two levels of separate "
         "executor JVMs (`local-cluster`) over the same tmpfs-staged input. "
         "The retired 8→32, thread-mode, write-path and calibration records "

@@ -292,6 +292,8 @@ def main() -> None:
         "|---|---|---|",
     ]
     for name, evidence, ok in rows:
+        # Spark's expression ids (tile_idx#744) differ run to run
+        evidence = re.sub(r"#\d+", "#n", evidence)
         lines.append(f"| {name} | `{evidence}` | {'✅' if ok else '❌ FAIL'} |")
     lines.append("")
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:

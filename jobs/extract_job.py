@@ -5,7 +5,8 @@
         (--bbox minlon,minlat,maxlon,maxlat | --poly region.poly) \
         --output <dir> [--geojson]
 
-Reads the tiled store written by prepare_job, prunes tiles against the
+Reads the tiled store written by prepare_job or rebase_job (its groups
+from the lineage table, ``TiledStore.groups``), prunes tiles against the
 region (P1), PIP-matches (J7), trims by id set (P4), sorts by id (O2), and
 writes parquet (+ optional GeoJSON, S11).
 """
@@ -34,22 +35,11 @@ def main() -> None:
     from osmquadtree_bin_spark.plans.store import TileQueryEngine
     from osmquadtree_bin_spark.quadtree import COORD_SCALE
     from osmquadtree_bin_spark.sources import poly_to_regions, regions_frame, to_geojson
+    from osmquadtree_bin_spark.streaming.update import TiledStore
 
     spark = SparkSession.builder.appName("oqt-extract").getOrCreate()
-
-    # reconstruct the tile-group table from the tiled store itself
-    from pyspark.sql import functions as F
-
-    tiles_df = spark.read.parquet(os.path.join(args.store, "tiles"))
-    groups_pdf = (
-        tiles_df.groupBy("tile_idx")
-        .agg(F.first("tile_qt").alias("tile_qt"), F.count("*").alias("cnt"))
-        .toPandas()
-        .sort_values("tile_idx")
-        .reset_index(drop=True)
-    )
-
-    eng = TileQueryEngine(spark, os.path.join(args.store, "tiles"), groups_pdf)
+    store = TiledStore(spark, args.store)
+    eng = TileQueryEngine(spark, store.data_path, store.groups())
 
     if args.bbox:
         mnx, mny, mxx, mxy = (float(v) for v in args.bbox.split(","))

@@ -29,7 +29,7 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..footers import tile_dir
 from ..operators.pip_join import region_tiles
@@ -141,6 +141,12 @@ class TileQueryEngine:
                 bb = (min(r["lons"]), min(r["lats"]), max(r["lons"]), max(r["lats"]))
             tiles.update(self.pruned_tiles(*(int(v) for v in bb)))
         elements = self.read_tiles(sorted(tiles))
-        matched = pip_join(elements, regions)
+        # the id-set trim keeps only the matched ids, so the match reads id
+        # and the bbox; pip_join's lineage columns are nulls (prepare stores none)
+        probe = elements.select(
+            "id", "minx", "miny", "maxx", "maxy",
+            F.lit(None).cast("string").alias("doc_id"), F.lit(None).cast("int").alias("span_idx"),
+        )
+        matched = pip_join(probe, regions)
         trimmed = idset_trim(elements, matched)
         return trimmed.orderBy("id") if sort_by_id else trimmed

@@ -196,3 +196,22 @@ def write_groups_dump(path: str, groups) -> None:
 
     with open(path, "w") as f:
         f.write("\n".join(group_lines(groups)) + "\n")
+
+
+def write_reports(out_dir: str, arts: dict, metrics: dict) -> None:
+    """prepare_job's and rebase_job's reports: the S12 dumps of the tiling
+    tail's artifacts, and ``metrics`` plus its counts as metrics.json."""
+    import os
+
+    import numpy as np
+
+    counts, groups = arts["counts"], arts["groups"]
+    metrics.update(n_elements=arts["n_elements"], n_groups=len(groups), n_cells=len(counts))
+    write_tree_dump(
+        os.path.join(out_dir, "qts.txt"),
+        counts["cell"].to_numpy(np.int64), counts["cnt"].to_numpy(np.int64),
+    )
+    write_groups_dump(os.path.join(out_dir, "groups.txt"), groups)
+    with open(os.path.join(out_dir, "metrics.json"), "w") as f:
+        json.dump(metrics, f, indent=1, sort_keys=True)
+    print(json.dumps(metrics))

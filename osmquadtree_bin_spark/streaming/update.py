@@ -35,10 +35,14 @@ runs as few Spark jobs as its work needs:
 ``resume_state`` reads the ledger's ``state`` column on the driver once per
 store instance, so a killed run restarts idempotently (T1's re-fetch
 avoidance). One writer per store, as the dynamic overwrite already requires.
+
+``TiledStore.tile`` is the bulk tiling path: prepare and ``rebase`` (prepare
+over the ``merge_newest`` result) both run it.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 
@@ -70,7 +74,7 @@ def merge_newest(base: DataFrame, diff: DataFrame, version_col: str = "version")
     """J6 newest-wins merge: base rows carry implicit version 0, diff rows
     their ``version_col``; highest version per id wins, ``changetype =
     'delete'`` drops the row (T5). Shared by the incremental ``apply_diff``
-    (touched tiles only) and the full ``rebase_store`` (whole table)."""
+    (touched tiles only) and the full ``rebase`` (whole table)."""
     base_v = base.withColumn("_v", F.lit(0)).withColumn("_ct", F.lit("base"))
     diff_v = (
         diff.withColumn("_v", F.col(version_col).cast("long"))
@@ -87,13 +91,24 @@ def merge_newest(base: DataFrame, diff: DataFrame, version_col: str = "version")
     )
 
 
+def committed(path: str) -> bool:
+    """A parquet phase output is a checkpoint iff Spark committed it
+    (_SUCCESS marker — partial output from a killed run has none). Local-fs
+    check here; on HDFS/S3 the same marker is probed through the Hadoop FS
+    API."""
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
 class TiledStore:
-    """A tiled element table + its state/lineage ledger on disk."""
+    """A store root on disk: staged elements, tiles, the lineage audit and
+    the state ledger. Their directory names are spelled here only."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self.elements_path = os.path.join(root, "elements")
         self.data_path = os.path.join(root, "tiles")
+        self.lineage_path = os.path.join(root, "lineage")
         self.ledger_path = os.path.join(root, "ledger")
         self._last_state: int | None = None  # read once by resume_state
 
@@ -106,26 +121,141 @@ class TiledStore:
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.data_path)
 
+    def groups(self):
+        """The (tile_idx, tile_qt, cnt) groups ``tile`` found, read on the
+        driver from the lineage table (exact int64 tile_qt; cnt is
+        expected_rows). The audit's anomaly rows (null tile_qt) are no group."""
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(self.lineage_path, columns=["tile_idx", "tile_qt", "expected_rows"])
+        t = t.filter(t["tile_qt"].is_valid()).rename_columns(["tile_idx", "tile_qt", "cnt"])
+        return t.to_pandas().sort_values("tile_idx", ignore_index=True)
+
+    # ---------------------------------------------------------- bulk tiling
+    def tile(self, stages: dict, target: int, minimum: int,
+             partition_by_tile: bool = True, resume: bool = False) -> dict:
+        """The bulk tiling tail of prepare and ``rebase``, the phases the
+        reference runs in both (``osmquadtree-prepare.go:179-209``,
+        ``osmquadtree-rebase.go:597-627``), over the staged elements. Each
+        phase's ``hostmetrics.stage`` record is added to ``stages``:
+
+          count_tree          distributed per-cell agg, capped driver
+                              collect; its row hint is the elements' footer
+                              row count (one Spark count off a local fs)
+          find_groups         serial group walk over the collected tree
+          assign_write_tiled  counts-backed ONE-broadcast-join assignment →
+                              ``tiling.write_tiled``. With ``resume``, skipped
+                              when tiles/ committed (_SUCCESS)
+          lineage             per-tile audit table (tile_idx, tile_qt, rows,
+                              expected_rows): actual written row counts vs
+                              the group walk's expected counts — the north
+                              rule's per-partition lineage + row-count
+                              metrics. The counts are ``footers.tile_rows``
+                              (a footer walk of the hive layout, one Spark
+                              count of the flat one); the table is merged in
+                              pandas and written on the driver with pyarrow
+
+        Returns the artifacts: elements/tiled/lineage paths, the
+        counts/groups frames, n_elements and ``resumed_phases``."""
+        import shutil
+
+        import numpy as np
+        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from .. import tiling
+        from ..footers import parquet_rows, tile_rows
+        from ..hostmetrics import stage
+        from ..tuning import scan_splits_for
+
+        resumed: list[str] = []
+        elements = self.spark.read.parquet(self.elements_path)
+        n_elements = parquet_rows(self.elements_path)
+        if n_elements is None:  # non-local fs fallback: one Spark count job
+            n_elements = elements.count()
+        with stage(stages, "count_tree"):
+            counts = tiling.count_tree(elements, n_rows_hint=n_elements)
+        stages.update({f"count_tree_{k}": v for k, v in counts.attrs.items()})
+        with stage(stages, "find_groups"):
+            groups = tiling.find_groups(
+                counts["cell"].to_numpy(np.int64),
+                counts["cnt"].to_numpy(np.int64),
+                target,
+                minimum,
+            )
+        if resume and committed(self.data_path):
+            stages["assign_write_tiled"] = 0.0
+            resumed.append("assign_write_tiled")
+        else:
+            assigned = tiling.assign_tiles(elements, groups, counts=counts)
+            # the map side reads the staged elements
+            with stage(stages, "assign_write_tiled"), scan_splits_for(elements):
+                tiling.write_tiled(assigned, self.data_path, partition_by_tile=partition_by_tile)
+
+        with stage(stages, "lineage"):
+            actual = tile_rows(self.spark, self.data_path)
+            exp = groups.rename(columns={"cnt": "expected_rows"})[
+                ["tile_idx", "tile_qt", "expected_rows"]
+            ]
+            adf = pd.DataFrame(
+                {"tile_idx": list(actual.keys()), "rows": list(actual.values())},
+                dtype="int64",
+            )
+            # nullable Int64 BEFORE the merge: an outer merge that adds a
+            # written-but-ungrouped tile (the anomaly the audit exists to
+            # expose) would otherwise coerce tile_qt to float64 and destroy
+            # the low bits of every key >= 2^53 — quadtree keys pack the
+            # path in the high bits, so that is all of them
+            exp = exp.astype({"tile_qt": "Int64"})
+            lin = exp.merge(adf, on="tile_idx", how="outer")
+            lin["rows"] = lin["rows"].fillna(0).astype("int64")
+            lin["expected_rows"] = lin["expected_rows"].fillna(0).astype("int64")
+            lin["tile_idx"] = lin["tile_idx"].astype("int64")
+            # true overwrite: a prior run's part files (or an uncommitted
+            # kill's) must not be unioned into the audit table
+            if os.path.isdir(self.lineage_path):
+                shutil.rmtree(self.lineage_path)
+            os.makedirs(self.lineage_path)
+            pq.write_table(
+                pa.Table.from_pandas(lin, preserve_index=False),
+                os.path.join(self.lineage_path, "part-00000.parquet"),
+            )
+            open(os.path.join(self.lineage_path, "_SUCCESS"), "w").close()
+
+        return {
+            "elements_path": self.elements_path,
+            "tiled_path": self.data_path,
+            "lineage_path": self.lineage_path,
+            "counts": counts,
+            "groups": groups,
+            "n_elements": n_elements,
+            "resumed_phases": resumed,
+        }
+
     # --------------------------------------------------------------- ledger
+    def _ledger_files(self) -> list[str]:
+        # glob skips the hidden temp files of an interrupted append
+        return glob.glob(os.path.join(self.ledger_path, "*.parquet"))
+
     def ledger(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.ledger_path)
-        except Exception:  # noqa: BLE001 — first run: empty ledger
+        """The ledger as a Spark frame. Empty only while the ledger has no
+        published file (the files ``resume_state`` reads); a file that
+        cannot be read raises, as it does in ``resume_state``."""
+        if not self._ledger_files():
             return self.spark.createDataFrame([], LEDGER_SCHEMA)
+        return self.spark.read.parquet(self.ledger_path)
 
     def resume_state(self) -> int:
         """Last fully-applied state (S7 re-fetch avoidance); 0 if none. The
         ledger's ``state`` column is read on the driver once per instance;
         after that this store's own appends keep the value current."""
         if self._last_state is None:
-            import glob
-
             import pyarrow.parquet as pq
 
-            # glob skips the hidden temp files of an interrupted append
             states = [
                 s
-                for f in glob.glob(os.path.join(self.ledger_path, "*.parquet"))
+                for f in self._ledger_files()
                 for s in pq.read_table(f, columns=["state"])["state"].to_pylist()
             ]
             self._last_state = max(states, default=0)
@@ -275,47 +405,24 @@ class TiledStore:
         out_root: str,
         target: int = 8000,
         minimum: int = 4000,
-        version_col: str = "version",
-    ):
+    ) -> tuple[dict, dict]:
         """Full re-tile on merged base+diffs — the ``osmquadtree-rebase.go``
         job shape, vs ``apply_diff`` which keeps the existing grouping and
-        rewrites only touched partitions. The merged element set gets a
-        FRESH count tree / group walk / assignment (groups re-balance after
-        heavy churn), written as a new tiled store at ``out_root``.
-
-        Returns (new_store, counts_pdf, groups_pdf); per-phase wall times
-        (the ``osmquadtree-rebase.go:730-734`` metric shape) are stashed on
-        the returned store as ``new_store.rebase_phases``: each phase
-        (merge_count, count_tree, find_groups, assign_write) is one
-        ``hostmetrics.stage`` record, as in ``prepare_pipeline``, plus
-        count_tree's ``count_tree_*`` sub-timings."""
-        import numpy as np
-
+        rewrites only touched partitions. It is prepare over the merge: the
+        ``merge_newest`` result is written once to the new root's elements
+        (stage ``merge``), then ``tile`` gives it a FRESH count tree / group
+        walk / assignment (groups re-balance after heavy churn) and a
+        lineage table. Returns (stages, artifacts) as ``prepare_pipeline``
+        does; the stages are the ``osmquadtree-rebase.go:730-734`` metric
+        shape."""
         from ..hostmetrics import stage
-        from ..tiling import assign_tiles, count_tree, find_groups
 
-        phases: dict[str, float] = {}
-        merged = merge_newest(
-            self.read().drop("tile_idx", "tile_qt"), diff, version_col
-        )
-        with stage(phases, "merge_count"):
-            n = merged.count()
-        with stage(phases, "count_tree"):
-            counts = count_tree(merged, n_rows_hint=n)
-        phases.update({f"count_tree_{k}": v for k, v in counts.attrs.items()})
-        with stage(phases, "find_groups"):
-            groups = find_groups(
-                counts["cell"].to_numpy(np.int64),
-                counts["cnt"].to_numpy(np.int64),
-                target,
-                minimum,
-            )
-        assigned = assign_tiles(merged, groups, counts=counts)
+        stages: dict[str, float] = {}
         out = TiledStore(self.spark, out_root)
-        with stage(phases, "assign_write"):
-            out.write_initial(assigned)
-        out.rebase_phases = phases
-        return out, counts, groups
+        with stage(stages, "merge"):
+            merged = merge_newest(self.read().drop("tile_idx"), diff.drop("tile_idx", "tile_qt"))
+            merged.write.mode("overwrite").parquet(out.elements_path)
+        return stages, out.tile(stages, target, minimum)
 
     # ---------------------------------------------------------- catch-up T1
     def catch_up(self, diffs_by_state: dict[int, DataFrame]) -> list[int]:

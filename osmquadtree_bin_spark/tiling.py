@@ -436,8 +436,8 @@ def write_tiled(
     dynamic: bool = False,
 ) -> None:
     """O1: shuffle every element to its tile, write partitioned + sorted.
-    The one tile writer (prepare, ``TiledStore.write_initial`` and so
-    rebase, ``TiledStore.apply_diff``), so it owns the stored format: every
+    The one tile writer (``TiledStore.tile``, so prepare and rebase,
+    ``write_initial`` and ``apply_diff``), so it owns the stored format: every
     tile has the same file schema, without ``tile_qt`` (the groups frame
     maps tile_idx back to it; 8 bytes a row through the bandwidth-bound
     shuffle and write otherwise) and with an int ``tile_idx``.

@@ -81,6 +81,27 @@ def test_ledger_resume_idempotent(spark, store):
     assert {r["tile_idx"] for r in rows} != set()
 
 
+def test_ledger_empty_before_first_append_and_raises_on_unreadable_file(spark, store):
+    """``ledger()`` reads as empty only while no ledger file is published
+    (a hidden temp file of an interrupted append is not one). A published
+    file that cannot be read raises, as it does in ``resume_state``,
+    instead of reading as "nothing applied"."""
+    import os
+
+    st, _, _ = store
+    os.makedirs(st.ledger_path)
+    with open(os.path.join(st.ledger_path, ".state-9-tmp.parquet"), "wb") as f:
+        f.write(b"half-written append")
+    assert st.ledger().collect() == []
+    assert st.resume_state() == 0
+    with open(os.path.join(st.ledger_path, "state-9-garbage.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        st.ledger().collect()
+    with pytest.raises(Exception, match="(?i)parquet"):
+        TiledStore(spark, st.root).resume_state()
+
+
 def test_catch_up_applies_in_order(spark, store):
     st, assigned, _ = store
     d1 = _mk_diff(spark, assigned, "modify", version=1, n=2)
@@ -208,8 +229,9 @@ def test_overflow_tile_monitored_and_rebase_absorbs(spark, tmp_path):
     # rebase re-absorbs: the fresh count tree sees quadrant C, the group
     # walk emits a root remainder group, and nothing overflows anymore
     empty = spark.createDataFrame([], "id long, qt long, changetype string, version long")
-    out, _counts2, groups2 = st.rebase(empty, str(tmp_path / "ovf_rebased"), 40, 20)
-    asg2 = make_tile_assigner(groups2)
+    _, arts = st.rebase(empty, str(tmp_path / "ovf_rebased"), 40, 20)
+    out = TiledStore(spark, str(tmp_path / "ovf_rebased"))
+    asg2 = make_tile_assigner(arts["groups"])
     new_tiles = {r["tile_idx"] for r in out.read().select("tile_idx").distinct().collect()}
     assert asg2.overflow_idx not in new_tiles
     assert out.read().count() == 83
@@ -244,7 +266,9 @@ def test_replication_url_and_state_parse():
 def test_rebase_reproduces_fresh_tiling_on_merged_input(spark, store, tmp_path):
     """Rebase (merged base+diffs -> re-tile from scratch,
     osmquadtree-rebase.go shape) must equal running the prepare pipeline
-    directly on the merged element set: same groups, same per-tile contents."""
+    directly on the merged element set: same groups, same per-tile contents.
+    It is prepare over the merge: prepare's stage records and root layout,
+    with a lineage table whose rows match the group walk's."""
     st, assigned, _ = store
     # churn: 5 modified (version wins), 3 deleted, 4 moved to a new location
     mod = _mk_diff(spark, assigned, "modify", version=1, n=5)
@@ -259,7 +283,8 @@ def test_rebase_reproduces_fresh_tiling_on_merged_input(spark, store, tmp_path):
     )
     diff = mod.unionByName(dele).unionByName(moved)
 
-    out, counts, groups = st.rebase(diff, str(tmp_path / "rebased"), 200, 100)
+    stages, arts = st.rebase(diff, str(tmp_path / "rebased"), 200, 100)
+    out, groups = TiledStore(spark, str(tmp_path / "rebased")), arts["groups"]
 
     # independent expectation: merge in-memory, re-run the tiling phases
     from osmquadtree_bin_spark.streaming.update import merge_newest
@@ -277,17 +302,28 @@ def test_rebase_reproduces_fresh_tiling_on_merged_input(spark, store, tmp_path):
     assert got_rows == want_rows
     # the moved elements live in the root-ancestor group now, and deletes are gone
     assert out.read().count() == assigned.count() - 3
-    # per-phase stage records (the osmquadtree-rebase.go:730-734 walls, in
-    # prepare's per-stage schema) plus count_tree's sub-timings
-    walls = {"merge_count", "count_tree", "find_groups", "assign_write"}
+    # per-phase stage records (the osmquadtree-rebase.go:730-734 walls,
+    # prepare's stage names and per-stage schema) plus count_tree's sub-timings
+    walls = {"merge", "count_tree", "find_groups", "assign_write_tiled", "lineage"}
     want = set(walls) | {"count_tree_cells_out"}
     if sys.platform == "linux":
         want |= {
             f"{w}{suffix}" for w in walls
             for suffix in ("_pg_cpu_s", "_steal_cores", "_busy_cores")
         }
-    assert want <= set(out.rebase_phases)
-    assert all(v >= 0 for v in out.rebase_phases.values())
+    assert want <= set(stages)
+    assert all(v >= 0 for v in stages.values())
+    # prepare's root layout, and a lineage row per group with its rows as
+    # the group walk expected them; the lineage doubles as the groups table
+    import os
+
+    import pyarrow.parquet as pq
+
+    assert {"elements", "tiles", "lineage"} <= set(os.listdir(out.root))
+    lin = pq.read_table(arts["lineage_path"]).to_pandas()
+    assert sorted(lin["tile_idx"]) == sorted(groups["tile_idx"])
+    assert (lin["rows"] == lin["expected_rows"]).all()
+    assert out.groups().equals(groups)
 
 
 def test_ledger_counts_via_footers(spark, store, monkeypatch):
@@ -454,7 +490,7 @@ def test_every_tile_file_has_one_schema_whichever_path_wrote_it(spark, tmp_path)
 
     work = str(tmp_path / "prep")
     docs = gen_docs_dist(spark, n_docs=300, seed=5, partitions=2)
-    _, arts = prepare_pipeline(spark, docs, work, target=300, minimum=150, lineage=False)
+    _, arts = prepare_pipeline(spark, docs, work, target=300, minimum=150)
     groups = arts["groups"]
     st = TiledStore(spark, work)
     n_tiles = len(os.listdir(st.data_path))
@@ -482,5 +518,5 @@ def test_every_tile_file_has_one_schema_whichever_path_wrote_it(spark, tmp_path)
     (schema,) = schemas(st.data_path)
     assert "tile_qt" not in schema.names
     empty = spark.createDataFrame([], "id long, qt long, changetype string, version long")
-    out, _, _ = st.rebase(empty, str(tmp_path / "rebased"), 300, 150)
-    assert schemas(out.data_path) == {schema}
+    _, rebased = st.rebase(empty, str(tmp_path / "rebased"), 300, 150)
+    assert schemas(rebased["tiled_path"]) == {schema}

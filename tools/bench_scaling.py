@@ -210,10 +210,9 @@ def _scaling_body(
         stages, arts = prepare_pipeline(
             spark,
             docs,
-            tmp,
+            os.path.join(tmp, f"run{run_idx}"),
             target=8000,
             minimum=4000,
-            run_tag=f"_{run_idx}",
             partition_by_tile=False,
         )
         n_elements = arts["n_elements"]

@@ -641,10 +641,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ------------------------------------------------- streaming (§2.10)
     def q31_windowed_stats(spark, sf):
-        """Event-time tumbling-window stats — the SAME logical plan the
-        streaming path runs incrementally with watermark state eviction
-        (streaming/windowed.py; batch/stream equality pinned by
-        test_streaming_windowed_matches_batch)."""
+        """Event-time one-hour tumbling-window stats per event_type
+        (streaming/windowed.py): one batch groupBy on the window
+        expression."""
         from osmquadtree_bin_spark.streaming.windowed import windowed_event_stats
 
         return windowed_event_stats(_t(spark, sf, "events"))

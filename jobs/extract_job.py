@@ -3,12 +3,12 @@
     spark-submit --py-files dist/osmquadtree_bin_spark.zip jobs/extract_job.py \
         --store <prepare output dir> \
         (--bbox minlon,minlat,maxlon,maxlat | --poly region.poly) \
-        --output <dir> [--geojson]
+        --output <dir>
 
 Reads the tiled store written by prepare_job or rebase_job (its groups
 from the lineage table, ``TiledStore.groups``), prunes tiles against the
 region (P1), PIP-matches (J7), trims by id set (P4), sorts by id (O2), and
-writes parquet (+ optional GeoJSON, S11).
+writes parquet under ``<output>/extract``.
 """
 
 from __future__ import annotations
@@ -27,14 +27,13 @@ def main() -> None:
     ap.add_argument("--bbox")
     ap.add_argument("--poly")
     ap.add_argument("--output", required=True)
-    ap.add_argument("--geojson", action="store_true")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
     from osmquadtree_bin_spark.plans.store import TileQueryEngine
     from osmquadtree_bin_spark.quadtree import COORD_SCALE
-    from osmquadtree_bin_spark.sources import poly_to_regions, regions_frame, to_geojson
+    from osmquadtree_bin_spark.sources import poly_to_regions, regions_frame
     from osmquadtree_bin_spark.streaming.update import TiledStore
 
     spark = SparkSession.builder.appName("oqt-extract").getOrCreate()
@@ -56,9 +55,6 @@ def main() -> None:
     result = eng.extract(regions)
     result.write.mode("overwrite").parquet(os.path.join(args.output, "extract"))
     n = spark.read.parquet(os.path.join(args.output, "extract")).count()
-    if args.geojson:
-        with open(os.path.join(args.output, "extract.geojson"), "w") as f:
-            f.write(to_geojson(result.select("doc_id", "wkt", "geom_type", "id")))
     print(json.dumps({"extracted_rows": n}))
 
 

@@ -25,8 +25,10 @@ Writes under --output (the store root layout is ``TiledStore``'s):
                       P_busy_cores and P_pg_cpu_s (``hostmetrics.stage``;
                       Linux only), count_tree its count_tree_* sub-timings
                       (agg_collect_s, driver_s, cells_collected, cells_out,
-                      level); plus resumed_phases, assignments_sec,
-                      total_sec, n_elements, n_groups, n_cells
+                      level); plus resumed_phases, n_elements, n_groups,
+                      n_cells, and two more ``hostmetrics.stage``
+                      records: assignments (the S9 table write) and total
+                      (the whole job before the reports)
 
 ``--gen-docs N`` generates a deterministic synthetic input instead of
 --input (sandbox/demo mode). ``--resume`` re-enters a killed run, skipping
@@ -40,7 +42,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -150,35 +151,34 @@ def main() -> None:
     from pyspark.sql import SparkSession, functions as F
 
     from osmquadtree_bin_spark.datagen import gen_docs_dist
+    from osmquadtree_bin_spark.hostmetrics import stage
     from osmquadtree_bin_spark.sources import write_reports
 
     spark = SparkSession.builder.appName("oqt-prepare").getOrCreate()
     metrics: dict[str, float] = {}
 
-    t0 = time.perf_counter()
-    if args.gen_docs:
-        docs = gen_docs_dist(spark, args.gen_docs, seed=42)
-    else:
-        if not args.input:
-            ap.error("--input or --gen-docs required")
-        docs = spark.read.parquet(args.input)
+    with stage(metrics, "total"):
+        if args.gen_docs:
+            docs = gen_docs_dist(spark, args.gen_docs, seed=42)
+        else:
+            if not args.input:
+                ap.error("--input or --gen-docs required")
+            docs = spark.read.parquet(args.input)
 
-    stages, arts = prepare_pipeline(
-        spark, docs, args.output, args.target, args.minimum,
-        resume=args.resume,
-    )
-    metrics.update(stages)
-    metrics["resumed_phases"] = arts["resumed_phases"]
+        stages, arts = prepare_pipeline(
+            spark, docs, args.output, args.target, args.minimum,
+            resume=args.resume,
+        )
+        metrics.update(stages)
+        metrics["resumed_phases"] = arts["resumed_phases"]
 
-    # golden S9 assignments table (id → qt → tile), id-sorted (O2)
-    t1 = time.perf_counter()
-    spark.read.parquet(arts["tiled_path"]).select(
-        "id", "qt", F.col("tile_idx").cast("long").alias("tile_idx")
-    ).orderBy("id").write.mode("overwrite").parquet(
-        os.path.join(args.output, "assignments")
-    )
-    metrics["assignments_sec"] = round(time.perf_counter() - t1, 3)
-    metrics["total_sec"] = round(time.perf_counter() - t0, 3)
+        # golden S9 assignments table (id → qt → tile), id-sorted (O2)
+        with stage(metrics, "assignments"):
+            spark.read.parquet(arts["tiled_path"]).select(
+                "id", "qt", F.col("tile_idx").cast("long").alias("tile_idx")
+            ).orderBy("id").write.mode("overwrite").parquet(
+                os.path.join(args.output, "assignments")
+            )
     write_reports(args.output, arts, metrics)
 
 

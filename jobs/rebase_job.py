@@ -15,7 +15,8 @@ each id), tiles/, lineage/ (also the groups table), qts.txt and groups.txt
 come from its fresh tiling, and metrics.json has prepare's phases after a
 merge phase (osmquadtree-rebase.go:730-734): merge, count_tree,
 find_groups, assign_write_tiled, lineage, each with its
-``hostmetrics.stage`` keys; plus total_sec, n_elements, n_groups, n_cells.
+``hostmetrics.stage`` keys; plus a total stage record (the whole job
+before the reports), n_elements, n_groups, n_cells.
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -39,15 +39,17 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from osmquadtree_bin_spark.hostmetrics import stage
     from osmquadtree_bin_spark.sources import write_reports
     from osmquadtree_bin_spark.streaming.update import TiledStore
 
     spark = SparkSession.builder.appName("oqt-rebase").getOrCreate()
-    t0 = time.perf_counter()
-    stages, arts = TiledStore(spark, args.base).rebase(
-        spark.read.parquet(args.diffs), args.output, target=args.target, minimum=args.minimum
-    )
-    metrics = {**stages, "total_sec": round(time.perf_counter() - t0, 3)}
+    metrics: dict[str, float] = {}
+    with stage(metrics, "total"):
+        stages, arts = TiledStore(spark, args.base).rebase(
+            spark.read.parquet(args.diffs), args.output, target=args.target, minimum=args.minimum
+        )
+    metrics.update(stages)
     write_reports(args.output, arts, metrics)
 
 

@@ -204,46 +204,6 @@ def gen_regions(spark, n_bbox: int = 8, n_poly: int = 4, seed: int = 43):
     )
 
 
-def gen_elements(spark, n_nodes: int = 2000, n_ways: int = 300, n_rels: int = 60, seed: int = 45):
-    """F2: node/way/relation tables incl. the FIXTURES.md edge cases:
-    a relation containing a relation, a circular relation, an empty relation,
-    a member referencing a missing node."""
-    rng = np.random.default_rng(seed)
-    nodes = []
-    for i in range(n_nodes):
-        lon, lat = _coord(rng)
-        nodes.append((i, lon, lat))
-    nodes_df = spark.createDataFrame(nodes, "id long, lon long, lat long")
-
-    ways = []
-    for i in range(n_ways):
-        nrefs = int(rng.integers(2, 12))
-        start = int(rng.integers(0, n_nodes - 1))
-        # mostly-local refs (cluster locality), a few long-range ways
-        refs = [int((start + int(rng.integers(0, 30))) % n_nodes) for _ in range(nrefs)]
-        ways.append((i, refs))
-    ways_df = spark.createDataFrame(ways, "id long, refs array<long>")
-
-    rels = []
-    for i in range(n_rels - 3):
-        nm = int(rng.integers(1, 6))
-        members = []
-        for _ in range(nm):
-            mt = int(rng.integers(0, 2))  # node or way
-            ref = int(rng.integers(0, n_nodes if mt == 0 else n_ways))
-            members.append((mt, ref, "member"))
-        if rng.random() < 0.3 and i > 0:  # rel-of-rel
-            members.append((2, int(rng.integers(0, i)), "subrel"))
-        rels.append((i, members))
-    rels.append((n_rels - 3, [(2, n_rels - 3, "self")]))  # circular
-    rels.append((n_rels - 2, []))  # empty
-    rels.append((n_rels - 1, [(0, n_nodes + 999, "missing")]))  # missing member
-    rels_df = spark.createDataFrame(
-        rels, "id long, members array<struct<mtype:int,ref:long,role:string>>"
-    )
-    return nodes_df, ways_df, rels_df
-
-
 def _mp_rows(n_rels: int = 40, seed: int = 46):
     """F7: multipolygon-relation fixture rows (pure pandas — shared input
     contract with tests/independent_oracles.oracle_q35). Per relation:
@@ -393,4 +353,3 @@ def gen_multipolygon(spark, n_rels: int = 40, seed: int = 46):
         "id long, members array<struct<mtype:int,ref:long,role:string>>",
     )
     return nodes, ways, rels
-

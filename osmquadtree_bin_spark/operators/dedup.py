@@ -10,7 +10,6 @@ components per the build brief:
                       instead of the quadratic all-pairs join.
   * simhash         — 64-bit simhash over token hashes, near-dup = hamming
                       distance ≤ k via band partitioning.
-  * n-gram Jaccard  — exact verification kernel (numpy set ops).
 
 All hashing is deterministic across runs and executors (never relies on
 PYTHONHASHSEED): word hashing uses pandas' C-level SipHash
@@ -23,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
@@ -421,42 +420,3 @@ def simhash_near_pairs(
     )
     return cross.unionByName(intra)
 
-
-# ------------------------------------------------------------ ngram jaccard
-def ngram_jaccard_pairs(
-    docs: DataFrame, pairs: DataFrame, n: int = 3,
-    id_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """Exact word-n-gram Jaccard for given candidate (id_a, id_b) pairs —
-    the verify stage after LSH candidates. Gram arrays are built only for
-    docs that appear in a candidate pair (semi-join first): at 100 TB the
-    candidate set is a tiny fraction of the corpus and gram construction is
-    the expensive part."""
-    cand_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    docs = docs.join(cand_ids, id_col, "left_semi")
-    grams = docs.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.size(F.split(F.col(text_col), " ")) - n, F.lit(0)),
-                ),
-                lambda i: F.concat_ws(
-                    " ", F.slice(F.split(F.col(text_col), " "), i + 1, n)
-                ),
-            )
-        ).alias("grams"),
-    )
-    a = grams.select(F.col("id").alias("id_a"), F.col("grams").alias("g_a"))
-    b = grams.select(F.col("id").alias("id_b"), F.col("grams").alias("g_b"))
-    joined = pairs.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("g_a", "g_b")).cast("double")
-    union = F.size(F.array_union("g_a", "g_b")).cast("double")
-    return joined.select(
-        "id_a", "id_b", (inter / union).alias("jaccard")
-    )

@@ -1,20 +1,18 @@
-"""Element-assembly joins (J2, J3, J4) — the rebase/prepare quadtree resolution.
+"""Element-assembly joins (J2, J4) — the quadtree resolution behind the
+served relation rows.
 
-Reference semantics (``/root/reference/osmquadtree-rebase.go``):
+Reference semantics (``osmquadtree-rebase.go``):
   J2 (:397-404)  way bbox = min/max over member node locations, then
                  ``quadtree.Calculate(bbox, 0.05, 18)``.
-  J3 (:365-379)  each member node's qt merges the way qt via Common (LCA);
-                 a node not used by any way falls back to its own point qt
-                 (:108-113).
   J4 (:184-312)  relation qt = LCA of member node/way qts; relation-of-
                  relation resolved by 5 fixed-point iterations (:275-282);
-                 unresolved leftovers default to qt 0 (:304-312).
+                 unresolved leftovers default to qt 0 (:304-312). A node
+                 member contributes its own point qt (:108-113).
 
 Spark shape (SURVEY.md §2.3): explode refs → equi-join on node id (THE big
 shuffle — both sides repartitioned on ref) → groupBy way → min/max agg →
-vectorized Calculate; back-propagation is the reverse join + LCA grouped agg;
-relations are a fixed 5-iteration loop of explode-join-agg, exactly the
-reference's unroll.
+vectorized Calculate; relations are a fixed 5-iteration loop of
+explode-join-agg, exactly the reference's unroll.
 """
 
 from __future__ import annotations
@@ -336,57 +334,6 @@ def rel_wkt(relations: DataFrame, ways: DataFrame, nodes: DataFrame) -> DataFram
         )
 
     return joined.groupBy("id").applyInPandas(_assemble, schema)
-
-
-def node_qts_with_way_backprop(nodes: DataFrame, ways: DataFrame, wqts: DataFrame) -> DataFrame:
-    """J3: node qt = LCA(own point qt, qts of all ways using it)."""
-    own = node_qts(nodes)
-    way_member = (
-        ways.select("id", F.explode("refs").alias("nid"))
-        .join(wqts.withColumnRenamed("qt", "way_qt"), "id")
-        .select(F.col("nid").alias("id"), F.col("way_qt").alias("qt"))
-    )
-    merged = own.unionByName(way_member)
-    return merged.groupBy("id").agg(qt_lca_agg(F.col("qt")).alias("qt"))
-
-
-def way_admin_levels(relations: DataFrame) -> DataFrame:
-    """A5 calc_minmax (``extrastyle.json:71-72``, cols added
-    ``osmquadtree-postgis.go:83-86``): per way, min/max admin_level over the
-    administrative-boundary relations containing it. ``relations`` needs
-    (id, members, tags:map)."""
-    admin = relations.filter(
-        (F.element_at(F.col("tags"), "boundary") == "administrative")
-        & F.element_at(F.col("tags"), "admin_level").rlike(r"^[0-9]+$")
-    ).select(
-        F.element_at(F.col("tags"), "admin_level").cast("long").alias("admin_level"),
-        F.explode("members").alias("m"),
-    )
-    way_members = admin.filter(F.col("m.mtype") == 1).select(
-        F.col("m.ref").alias("id"), "admin_level"
-    )
-    return way_members.groupBy("id").agg(
-        F.min("admin_level").alias("min_admin_level"),
-        F.max("admin_level").alias("max_admin_level"),
-    )
-
-
-def way_route_lists(relations: DataFrame, route_type: str = "bus") -> DataFrame:
-    """A7 calc_list (``extrastyle.json:74``, split back out
-    ``osmquadtree-geometry-features.go:411-440``): per way, the sorted
-    ';'-joined refs of the ``route=<type>`` relations containing it."""
-    routes = relations.filter(
-        (F.element_at(F.col("tags"), "route") == route_type)
-        & F.element_at(F.col("tags"), "ref").isNotNull()
-    ).select(
-        F.element_at(F.col("tags"), "ref").alias("ref"), F.explode("members").alias("m")
-    )
-    way_members = routes.filter(F.col("m.mtype") == 1).select(
-        F.col("m.ref").alias("id"), "ref"
-    )
-    return way_members.groupBy("id").agg(
-        F.concat_ws(";", F.sort_array(F.collect_set("ref"))).alias(f"{route_type}_routes")
-    )
 
 
 def relation_qts(

@@ -100,91 +100,6 @@ def _decode_stub(payload: bytes, media_type: str, fake: bool) -> np.ndarray:
     )
 
 
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_ref", StringType()),
-        StructField("media_type", StringType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("t_ms", LongType()),
-        StructField("frame_payload", BinaryType()),
-    ]
-)
-
-
-def _resize_stub(payload: bytes, media_type: str, w: int, h: int, fake: bool) -> bytes:
-    """STUB resize. Production: PIL thumbnail / ffmpeg scale filter. Here:
-    a deterministic payload transform keyed on (payload, dims), or
-    NotImplementedError — same stub pattern as ``_decode_stub``."""
-    if not fake:
-        raise NotImplementedError(
-            "media resize requires image libs not present in this container"
-        )
-    return hashlib.blake2b(
-        payload + f"|{media_type}|{w}x{h}".encode(), digest_size=32
-    ).digest()
-
-
-def resize_media(
-    media: DataFrame, width: int, height: int, fake_resize: bool = True
-) -> DataFrame:
-    """Resize image/video media to (width, height) via mapInPandas — the
-    production batch shape (opaque binary in, opaque binary out, metadata
-    updated). Audio rows pass through untouched (no spatial dims)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            mask = out["media_type"] != "audio"
-            out.loc[mask, "payload"] = [
-                _resize_stub(bytes(p), t, width, height, fake_resize)
-                for p, t in zip(out.loc[mask, "payload"], out.loc[mask, "media_type"])
-            ]
-            out.loc[mask, "width"] = width
-            out.loc[mask, "height"] = height
-            yield out
-
-    return media.mapInPandas(run, MEDIA_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame sampling: one output row per sampled timestamp — video/audio
-    rows fan out to ``duration_ms // every_ms + 1`` frames, images emit a
-    single frame at t=0. The per-frame payload is the deterministic fake
-    decode of (payload, t_ms); swap the inner call for an ffmpeg seek in
-    production — the Spark-side fan-out shape (mapInPandas emitting more
-    rows than it consumes, Arrow-batched) is the real thing."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, types, idxs, ts, payloads = [], [], [], [], []
-            for ref, mtype, payload, dur in zip(
-                pdf["media_ref"], pdf["media_type"], pdf["payload"], pdf["duration_ms"]
-            ):
-                n = 1 if mtype == "image" else int(dur) // every_ms + 1
-                for i in range(n):
-                    t = i * every_ms if mtype != "image" else 0
-                    refs.append(ref)
-                    types.append(mtype)
-                    idxs.append(i)
-                    ts.append(t)
-                    payloads.append(
-                        hashlib.blake2b(
-                            bytes(payload) + f"|frame|{t}".encode(), digest_size=32
-                        ).digest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "media_type": types,
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "t_ms": pd.array(ts, dtype="int64"),
-                    "frame_payload": payloads,
-                }
-            )
-
-    return media.mapInPandas(run, FRAME_SCHEMA)
-
-
 def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
     """Decode + feature-extract via mapInPandas — Arrow batches in/out, the
     production batch shape (one row per media object, feature vector out)."""

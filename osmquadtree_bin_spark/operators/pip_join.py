@@ -10,9 +10,9 @@ Spark-first design for 100 TB:
      driver by a quadtree walk; the elements scan is filtered with
      ``tile_idx IN (...)`` → partition pruning at the source, no full scan.
   2. **Broadcast** the (small) region table — never shuffle the big side.
-  3. **Salting**: hot tiles (from the already-computed A3 count table) can be
-     exploded on the region side / salted on the element side; at local scale
-     AQE skew-join covers it, the ``salt`` knob exists for cluster runs.
+  3. **No salting**: bbox regions match through a per-row WHEN array, or,
+     above ``PIP_BBOX_JOIN_CROSSOVER`` regions, a grid-cell broadcast
+     equi-join; the only skew handling is AQE's skew-join splitting.
   4. Exact test runs as a vectorized numpy kernel inside one pandas UDF
      (bbox compare / ray-casting PIP) — no per-row Python.
 """

@@ -1,8 +1,8 @@
-"""Text analysis for training-data pipelines: language-ID heuristic, quality
-scoring, token counting, document fingerprinting.
+"""Text analysis for training-data pipelines: token counting and document
+fingerprinting.
 
-All implemented with built-in JVM-side functions where possible (codegen),
-pandas UDFs only for the rolling-hash fingerprint.
+Token counting is a built-in JVM-side expression (codegen); the rolling-hash
+fingerprint is a pandas UDF.
 """
 
 from __future__ import annotations
@@ -13,73 +13,12 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
-_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it", "that", "for"]
-
-# tiny n-gram profiles for the heuristic language guesser (deterministic)
-_LANG_MARKERS = {
-    "en": ["the ", " and ", " of "],
-    "es": [" el ", " la ", " de ", "ción"],
-    "fr": [" le ", " la ", " et ", " des "],
-    "de": [" der ", " die ", " und ", "sch"],
-}
-
 
 def token_count(col: Column) -> Column:
     """Whitespace tokens; empty string → 0 (JVM-side)."""
     trimmed = F.trim(col)
     return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
         F.size(F.split(trimmed, r"\s+"))
-    )
-
-
-def bpe_ish_token_count(col: Column) -> Column:
-    """BPE-ish regex token count: words, numbers, and single punctuation
-    each count as one token (approximates subword tokenizer load)."""
-    toks = F.regexp_extract_all(col, F.lit(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"), 0)
-    return F.size(toks)
-
-
-def quality_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / punctuation ratio / stopword ratio / mean word length."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    n_punct = F.length(F.regexp_replace(t, r"[A-Za-z0-9\s]", ""))
-    words = F.split(F.trim(t), r"\s+")
-    n_words = token_count(t)
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    n_stop = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, F.lower(w))))
-    return (
-        df.withColumn("n_chars_calc", n_chars)
-        .withColumn("n_tokens", n_words)
-        .withColumn(
-            "punct_ratio",
-            F.when(n_chars > 0, n_punct.cast("double") / n_chars).otherwise(0.0),
-        )
-        .withColumn(
-            "stopword_ratio",
-            F.when(n_words > 0, n_stop.cast("double") / n_words).otherwise(0.0),
-        )
-        .withColumn(
-            "mean_word_len",
-            F.when(n_words > 0, (n_chars - n_words + 1).cast("double") / n_words).otherwise(0.0),
-        )
-    )
-
-
-def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_guess") -> DataFrame:
-    """N-gram marker heuristic: score = marker occurrences per language,
-    argmax wins (ties → lexicographic). Pure JVM expressions."""
-    t = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
-    scores = []
-    for lang, markers in sorted(_LANG_MARKERS.items()):
-        s = None
-        for m in markers:
-            cnt = (F.length(t) - F.length(F.replace(t, F.lit(m), F.lit("")))) / len(m)
-            s = cnt if s is None else s + cnt
-        scores.append(F.struct(s.cast("double").alias("score"), F.lit(lang).alias("lang")))
-    best = F.array_max(F.array(*scores))
-    return df.withColumn(
-        out_col, F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
     )
 
 

@@ -151,18 +151,6 @@ ph_parent AS (
   GROUP BY p.id)"""
 
 
-def _parent_highway(pts: DataFrame, hwy_lines: DataFrame) -> DataFrame:
-    """The point view's parent-highway join (``_parent_highway_ctes``, the
-    same SQL text) over two frames: ``pts`` (id, minx, miny) and
-    ``hwy_lines`` (lminx, lminy, lmaxx, lmaxy, l_osm_id, l_highway)."""
-    return pts.sparkSession.sql(
-        "WITH ph_pts AS (SELECT id, minx, miny FROM {pts}), "
-        "ph_lines AS (SELECT * FROM {lines}), "
-        f"{_parent_highway_ctes()} SELECT id, parent_highway FROM ph_parent",
-        pts=pts, lines=hwy_lines,
-    )
-
-
 def _proj(tags: list[str]) -> str:
     return ", ".join(f"element_at(tags, '{t}') AS `{t}`" for t in sorted(set(tags)))
 

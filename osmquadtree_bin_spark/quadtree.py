@@ -314,10 +314,3 @@ def calculate(
         d = d + step.astype(np.int64)
         active = step
     return from_tuple(tx, ty, d)
-
-
-def is_ancestor(anc: np.ndarray, key: np.ndarray) -> np.ndarray:
-    """True where ``anc`` is an ancestor-of-or-equal of ``key``."""
-    anc = np.asarray(anc, dtype=np.int64)
-    key = np.asarray(key, dtype=np.int64)
-    return (depth_of(anc) <= depth_of(key)) & (round_to(key, depth_of(anc)) == anc)

@@ -2,7 +2,7 @@
 
 Arrow is enabled everywhere (all custom kernels are pandas/Arrow UDFs —
 BASELINE.json ``input_hint``: no per-row Python). AQE is on so skewed tile
-joins get runtime splitting on top of our explicit salting. In production the
+joins get runtime splitting; no shipped path salts its joins. In production the
 warehouse is an Iceberg catalog; in this sandbox (no Iceberg runtime jar) the
 same layout is written as hive-style partitioned parquet, which preserves the
 partition-pruning behaviour the engine relies on.

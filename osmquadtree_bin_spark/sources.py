@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .quadtree import COORD_SCALE
 from .tuning import collect_limited
@@ -78,17 +78,6 @@ def poly_to_regions(spark, path: str) -> DataFrame:
         for lons, lats, hole in poly["rings"]
     ]
     return regions_frame(spark, rows, hole=True)
-
-
-def write_poly(path: str, name: str, rings: list[tuple[list[int], list[int], bool]]):
-    with open(path, "w") as f:
-        f.write(name + "\n")
-        for i, (lons, lats, hole) in enumerate(rings, 1):
-            f.write(("!" if hole else "") + str(i) + "\n")
-            for lon, lat in zip(lons, lats):
-                f.write(f"   {lon / COORD_SCALE:.7E}   {lat / COORD_SCALE:.7E}\n")
-            f.write("END\n")
-        f.write("END\n")
 
 
 # --------------------------------------------------------------- S11 GeoJSON

@@ -1,49 +1,25 @@
-"""Event-time windowed aggregation with watermark — ONE logical plan for
-batch and streaming (§2.10 / build brief: "watermarks + windowed aggs for
-late data").
+"""Event-time windowed aggregation (§2.10 / build brief: "windowed aggs").
 
-The reference has no event-time engine; its closest analogue is the
-2-hour grace it applies when rounding replication-state timestamps to day
-boundaries (``/root/reference/osmquadtree-update.go:354-360``). Here that
-same 7200 s tolerance becomes the WATERMARK: in streaming mode a window
-closes (its state is evicted and the result becomes final) once the
-max-seen event time passes window end + grace, and rows arriving later
-than the watermark are dropped — the Spark-native form of "wait a bounded
-time for stragglers, then seal the day".
-
-Spark-first shape: the SAME ``windowed_event_stats`` call works on a batch
-DataFrame (plain groupBy) and on a ``readStream`` DataFrame (incremental
-state + eviction). ``test_streaming_windowed_matches_batch`` pins the
-batch/stream result equality; the q31 driver entry oracles the batch form
-against DuckDB ``date_trunc``.
+One batch plan: one-hour tumbling windows on the ``ts`` column per
+event_type. ``__spark_entry__``'s q31 query runs it over the ``events``
+table and oracles it against DuckDB ``date_trunc('hour', ts)``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-DEFAULT_GRACE = "7200 seconds"  # the reference's day-rounding tolerance
+WINDOW = "1 hour"
 
 
-def windowed_event_stats(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = DEFAULT_GRACE,
-    ts_col: str = "ts",
-) -> DataFrame:
+def windowed_event_stats(events: DataFrame) -> DataFrame:
     """Tumbling event-time windows per event_type: row count + value cents.
 
-    Batch: a plain groupBy on the window expression (shuffles once,
-    map-side partial agg). Streaming: identical plan plus watermark-driven
-    state eviction — state held per (window, event_type) is bounded by
-    (watermark / window) * |event_type| regardless of stream length, which
-    is what lets this run forever at planet scale.
+    A plain groupBy on the window expression (shuffles once, map-side
+    partial agg).
     """
-    src = events
-    if src.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
     return (
-        src.groupBy(F.window(ts_col, window).alias("w"), "event_type")
+        events.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.round(F.col("value") * 100).cast("bigint"))
@@ -57,34 +33,3 @@ def windowed_event_stats(
             "value_cents",
         )
     )
-
-
-def run_windowed_available(
-    spark,
-    events_dir: str,
-    checkpoint_dir: str,
-    schema: str,
-    window: str = "1 hour",
-    watermark: str = DEFAULT_GRACE,
-    max_files_per_trigger: int | None = None,
-    table_name: str = "windowed_events",
-):
-    """Drain the events directory through the streaming form into an
-    in-memory sink table (append mode: only watermark-finalized windows are
-    emitted — late rows older than the watermark are dropped, exactly the
-    sealed-day semantics). Returns the finalized-windows DataFrame."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(events_dir)
-    q = (
-        windowed_event_stats(stream, window=window, watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(table_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table_name)

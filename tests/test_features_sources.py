@@ -1,46 +1,14 @@
-"""Feature fan-out, .poly source, GeoJSON sink, tiled-store query engine,
-A5/A7 relation-derived columns."""
+""".poly source, GeoJSON sink, tiled-store query engine."""
 
 import json
 
 import numpy as np
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import functions as F
 
-from osmquadtree_bin_spark.operators.element_joins import way_admin_levels, way_route_lists
-from osmquadtree_bin_spark.operators.features import feature_fanout, feature_summary
-from osmquadtree_bin_spark.sources import poly_to_regions, read_poly, to_geojson, write_poly
+from osmquadtree_bin_spark.sources import poly_to_regions, read_poly, to_geojson
 from osmquadtree_bin_spark.spans import explode_geoms
-
-
-def test_feature_fanout(spark, docs):
-    el = explode_geoms(docs)
-    f = feature_fanout(el)
-    rows = f.limit(200).collect()
-    assert rows
-    for r in rows:
-        assert r.table in ("point", "line", "polygon")
-        assert r.feature_value is not None
-        if r.table != "line":
-            assert r.prio == 0
-    # dedup: no duplicate (id, table, feature)
-    total = f.count()
-    assert f.dropDuplicates(["id", "table", "feature"]).count() == total
-    # summary is deterministic + sorted
-    s = feature_summary(f).toPandas()
-    assert (s.sort_values(["table", "feature"]).reset_index(drop=True) == s).all().all()
-
-
-def test_feature_prio_for_lines(spark):
-    el = spark.createDataFrame(
-        [Row(id=1, geom_type=1, tags={"highway": "motorway"}),
-         Row(id=2, geom_type=1, tags={"waterway": "river"}),
-         Row(id=3, geom_type=0, tags={"highway": "motorway"})],
-    )
-    f = {(r.id, r.feature): r.prio for r in feature_fanout(el).collect()}
-    assert f[(1, "highway")] == 380
-    assert f[(2, "waterway")] == 50
-    assert f[(3, "highway")] == 0  # points carry no line prio
+from tests.helpers import write_poly
 
 
 def test_poly_roundtrip(spark, tmp_path):
@@ -97,30 +65,6 @@ def test_geojson_emission(spark, docs):
         assert feat["geometry"]["type"] in ("Point", "LineString", "Polygon")
         assert "doc_id" in feat["properties"]
         assert "wkt" not in feat["properties"]
-
-
-def test_admin_levels_and_routes(spark):
-    rels = spark.createDataFrame(
-        [
-            Row(id=1, members=[Row(mtype=1, ref=10, role="outer")],
-                tags={"boundary": "administrative", "admin_level": "4"}),
-            Row(id=2, members=[Row(mtype=1, ref=10, role="outer"),
-                               Row(mtype=1, ref=11, role="outer")],
-                tags={"boundary": "administrative", "admin_level": "8"}),
-            Row(id=3, members=[Row(mtype=1, ref=10, role="")],
-                tags={"route": "bus", "ref": "N7"}),
-            Row(id=4, members=[Row(mtype=1, ref=10, role="")],
-                tags={"route": "bus", "ref": "42"}),
-            Row(id=5, members=[Row(mtype=0, ref=10, role="")],
-                tags={"route": "bus", "ref": "X1"}),  # node member: ignored
-        ]
-    )
-    adm = {r["id"]: (r["min_admin_level"], r["max_admin_level"])
-           for r in way_admin_levels(rels).collect()}
-    assert adm[10] == (4, 8)
-    assert adm[11] == (8, 8)
-    routes = {r["id"]: r["bus_routes"] for r in way_route_lists(rels).collect()}
-    assert routes[10] == "42;N7"
 
 
 def test_tile_query_engine_pruning(spark, docs, tmp_path):

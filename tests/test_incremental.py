@@ -237,32 +237,6 @@ def test_overflow_tile_monitored_and_rebase_absorbs(spark, tmp_path):
     assert out.read().count() == 83
 
 
-def test_replication_url_and_state_parse():
-    """S6 offline half: URL sharding + state.txt parse (no network needed)."""
-    from osmquadtree_bin_spark.streaming.replication import (
-        make_diff_url, make_state_fn, parse_state_txt, plan_catch_up,
-    )
-
-    assert make_diff_url("https://r/hour", 4270123) == "https://r/hour/004/270/123"
-    assert make_diff_url("p", 7) == "p/000/000/007"
-    assert make_state_fn("d/", 42) == "d/042.osc.gz"
-    assert make_state_fn("d/", 4270123) == "d/4270123.osc.gz"
-
-    body = "#Sat Aug 16 00:00:00 UTC 2026\nsequenceNumber=4270123\ntimestamp=2026-08-16T00\\:00\\:00Z\n"
-    sn, ts = parse_state_txt(body)
-    assert sn == 4270123
-    import datetime
-    assert datetime.datetime.fromtimestamp(ts, datetime.timezone.utc).isoformat() == "2026-08-16T00:00:00+00:00"
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        parse_state_txt("no=data\n")
-
-    plan = plan_catch_up("p", 10, 13)
-    assert [s for s, _ in plan] == [11, 12, 13]
-    assert plan[0][1] == "p/000/000/011"
-
-
 def test_rebase_reproduces_fresh_tiling_on_merged_input(spark, store, tmp_path):
     """Rebase (merged base+diffs -> re-tile from scratch,
     osmquadtree-rebase.go shape) must equal running the prepare pipeline

@@ -3,13 +3,20 @@ theta-join semantics (numpy oracle) and never plan a broadcast nested loop."""
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
-from osmquadtree_bin_spark.plans.tables import (
-    _parent_highway,
-    _parent_highway_ctes,
-    served_views,
-)
+from osmquadtree_bin_spark.plans.tables import _parent_highway_ctes, served_views
+
+
+def _parent_highway(pts, hwy_lines):
+    """The point view's parent-highway join (``_parent_highway_ctes``, the
+    same SQL text) over two frames: ``pts`` (id, minx, miny) and
+    ``hwy_lines`` (lminx, lminy, lmaxx, lmaxy, l_osm_id, l_highway)."""
+    return pts.sparkSession.sql(
+        "WITH ph_pts AS (SELECT id, minx, miny FROM {pts}), "
+        "ph_lines AS (SELECT * FROM {lines}), "
+        f"{_parent_highway_ctes()} SELECT id, parent_highway FROM ph_parent",
+        pts=pts, lines=hwy_lines,
+    )
 
 
 def _fixture(nl=300, npts=2000, seed=3):

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 
 from osmquadtree_bin_spark import quadtree as qt
+from tests.helpers import is_ancestor
 
 
 def fp(deg: float) -> int:
@@ -79,10 +80,10 @@ def test_round_to():
 
 def test_is_ancestor():
     anc = qt.from_string("AB")
-    assert qt.is_ancestor(np.array([anc]), np.array([qt.from_string("ABCD")]))[0]
-    assert qt.is_ancestor(np.array([anc]), np.array([anc]))[0]
-    assert not qt.is_ancestor(np.array([anc]), np.array([qt.from_string("AC")]))[0]
-    assert not qt.is_ancestor(np.array([qt.from_string("ABCD")]), np.array([anc]))[0]
+    assert is_ancestor(np.array([anc]), np.array([qt.from_string("ABCD")]))[0]
+    assert is_ancestor(np.array([anc]), np.array([anc]))[0]
+    assert not is_ancestor(np.array([anc]), np.array([qt.from_string("AC")]))[0]
+    assert not is_ancestor(np.array([qt.from_string("ABCD")]), np.array([anc]))[0]
 
 
 def test_bounds_contains_cell_points():

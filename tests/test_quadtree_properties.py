@@ -4,6 +4,7 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from osmquadtree_bin_spark import quadtree as qt
+from tests.helpers import is_ancestor
 
 lon_fp = st.integers(-1_790_000_000, 1_790_000_000)
 lat_fp = st.integers(-830_000_000, 830_000_000)
@@ -42,7 +43,7 @@ def test_common_is_ancestor_of_both(lon1, lat1, lon2, lat2):
     a = qt.point_quadtree(np.array([lon1]), np.array([lat1]), 18)
     b = qt.point_quadtree(np.array([lon2]), np.array([lat2]), 18)
     c = qt.common(a, b)
-    assert qt.is_ancestor(c, a)[0] and qt.is_ancestor(c, b)[0]
+    assert is_ancestor(c, a)[0] and is_ancestor(c, b)[0]
     # deepest: one level deeper fails for at least one side
     d = int(qt.depth_of(c)[0])
     if d < 18:

@@ -1,9 +1,7 @@
-"""Salted skew join equivalence + Structured Streaming diff ingest."""
+"""Salted skew join equivalence."""
 
 import numpy as np
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 from osmquadtree_bin_spark.operators.skew import hot_keys_from_counts, salted_join
 
@@ -45,48 +43,3 @@ def test_salted_join_no_hot_keys_passthrough(spark):
     small = spark.createDataFrame([(1, "x")], "k long, m string")
     got = salted_join(big, small, "k", hot_keys=[]).collect()
     assert len(got) == 1 and got[0]["m"] == "x"
-
-
-def test_streaming_ingest(spark, docs, tmp_path):
-    from osmquadtree_bin_spark.spans import explode_geoms
-    from osmquadtree_bin_spark.streaming.stream_ingest import run_available
-    from osmquadtree_bin_spark.streaming.update import TiledStore
-    from osmquadtree_bin_spark.tiling import assign_tiles, count_tree, find_groups
-
-    elements = explode_geoms(docs)
-    counts = count_tree(elements)
-    groups = find_groups(
-        counts["cell"].to_numpy(np.int64), counts["cnt"].to_numpy(np.int64), 200, 100
-    )
-    assigned = assign_tiles(elements, groups).select(
-        "id", "doc_id", "span_idx", "wkt", "qt", "tile_idx"
-    )
-    store = TiledStore(spark, str(tmp_path / "store"))
-    store.write_initial(assigned)
-    n0 = store.read().count()
-
-    # two diff states as files in a watched directory
-    diff_dir = str(tmp_path / "diffs")
-    base = assigned.limit(6)
-    d1 = base.limit(3).withColumn("changetype", F.lit("modify")).withColumn(
-        "version", F.lit(1)
-    ).withColumn("state", F.lit(1)).withColumn("wkt", F.concat(F.lit("S1:"), F.col("wkt")))
-    d2 = base.limit(2).withColumn("changetype", F.lit("delete")).withColumn(
-        "version", F.lit(2)
-    ).withColumn("state", F.lit(2))
-    d1.write.mode("append").parquet(diff_dir)
-    d2.write.mode("append").parquet(diff_dir)
-
-    schema = (
-        "id long, doc_id string, span_idx int, wkt string, qt long, tile_idx long, "
-        "changetype string, version int, state int"
-    )
-    run_available(spark, store, diff_dir, str(tmp_path / "ckpt"), schema)
-
-    assert store.resume_state() == 2
-    assert store.read().count() == n0 - 2  # 2 deletes
-    assert store.read().filter(F.col("wkt").startswith("S1:")).count() == 1  # 3 mod - 2 del
-
-    # re-run: file-source checkpoint + ledger make it a no-op
-    run_available(spark, store, diff_dir, str(tmp_path / "ckpt"), schema)
-    assert store.read().count() == n0 - 2

@@ -32,6 +32,8 @@ def test_spark_submit_prepare_job(tmp_path):
         metrics = json.load(f)
     assert metrics["n_elements"] > 0
     assert metrics["n_groups"] >= 1
+    # the job's own stage records (hostmetrics.stage), not hand timers
+    assert metrics["total"] >= metrics["assignments"] > 0
     for fn in ("qts.txt", "groups.txt"):
         with open(os.path.join(out_dir, fn)) as f:
             first = f.readline()

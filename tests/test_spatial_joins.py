@@ -3,19 +3,14 @@
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from osmquadtree_bin_spark import quadtree as qtk
-from osmquadtree_bin_spark.datagen import gen_elements, gen_regions
-from osmquadtree_bin_spark.operators.element_joins import (
-    node_qts,
-    node_qts_with_way_backprop,
-    relation_qts,
-    way_qts,
-)
+from osmquadtree_bin_spark.datagen import gen_regions
+from osmquadtree_bin_spark.operators.element_joins import node_qts, relation_qts, way_qts
 from osmquadtree_bin_spark.operators.knn import knn_bruteforce, knn_tiled
 from osmquadtree_bin_spark.operators.pip_join import idset_trim, pip_join, region_tiles
 from osmquadtree_bin_spark.spans import explode_geoms
+from tests.helpers import gen_elements
 
 
 @pytest.fixture(scope="module")
@@ -132,23 +127,10 @@ def test_way_qts_contains_members(spark):
     assert ((wq.qt & 31) <= qtk.MAX_DEPTH).all()
 
 
-def test_node_backprop_is_ancestor_of_own(spark):
-    nodes, ways, rels = gen_elements(spark)
-    wq = way_qts(ways, nodes)
-    own = node_qts(nodes).toPandas().set_index("id")["qt"]
-    merged = node_qts_with_way_backprop(nodes, ways, wq).toPandas().set_index("id")["qt"]
-    # merged qt must be ancestor-of-or-equal of the node's own point qt
-    common_idx = own.index.intersection(merged.index)
-    anc = merged.loc[common_idx].to_numpy(np.int64)
-    chl = own.loc[common_idx].to_numpy(np.int64)
-    assert qtk.is_ancestor(anc, chl).all()
-
-
 def test_relation_qts_edge_cases(spark):
     nodes, ways, rels = gen_elements(spark)
     wq = way_qts(ways, nodes)
-    nq = node_qts_with_way_backprop(nodes, ways, wq)
-    rq = relation_qts(rels, nq, wq).toPandas().set_index("id")["qt"]
+    rq = relation_qts(rels, node_qts(nodes), wq).toPandas().set_index("id")["qt"]
     n_rels = rels.count()
     assert len(rq) == n_rels
     # circular, empty, and missing-member relations default to qt 0

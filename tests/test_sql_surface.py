@@ -1,11 +1,10 @@
-"""Dialect shims, tag combinators, virtual tables, and the 72-query corpus."""
+"""Dialect shims, virtual tables, and the 72-query corpus."""
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import functions as F
 
-from osmquadtree_bin_spark.functions import combinators as C
 from osmquadtree_bin_spark.functions.dialect import makeinteger, pg_substr, translate
-from osmquadtree_bin_spark.plans.corpus import load_corpus, run_query, to_spark_sql
+from osmquadtree_bin_spark.plans.corpus import load_corpus, run_query
 from osmquadtree_bin_spark.plans.tables import register_tables
 from osmquadtree_bin_spark.spans import explode_geoms
 
@@ -48,70 +47,6 @@ def test_makeinteger_sql_matches_column(spark):
     df.createOrReplaceTempView("mi_test")
     got = spark.sql(translate("SELECT makeinteger(v) AS o FROM mi_test")).collect()
     assert [r["o"] for r in got] == [42, 0]
-
-
-# --------------------------------------------------------------- combinators
-@pytest.fixture(scope="module")
-def tagdf(spark):
-    rows = [
-        Row(tags={"highway": "motorway_link", "oneway": "yes", "layer": "2"}),
-        Row(tags={"highway": "footway", "bridge": "no", "horse": ""}),
-        Row(tags={"building": "house", "name": "x", "ref": "A1;B2;C33"}),
-        Row(tags={}),
-    ]
-    return spark.createDataFrame(rows)
-
-
-def test_passcol_yesno_cutsuffix(spark, tagdf):
-    got = tagdf.select(
-        C.passcol("highway").alias("hw"),
-        C.cutsuffix("highway", "_link").alias("cut"),
-        C.yesno("oneway").alias("ow"),
-        C.yesno("bridge").alias("br"),
-        C.yesno("horse").alias("ho"),
-    ).collect()
-    assert got[0]["hw"] == "motorway_link" and got[0]["cut"] == "motorway"
-    assert got[1]["cut"] == "footway"
-    assert got[0]["ow"] == "yes" and got[1]["br"] == "no"
-    # empty string is not nonempty → null (reference yesno semantics)
-    assert got[1]["ho"] is None
-    assert got[3]["hw"] is None and got[3]["ow"] is None
-
-
-def test_replval_isval_haskey(spark, tagdf):
-    got = tagdf.select(
-        C.replval("highway", {"motorway_link": "mlink", "": "other"}).alias("rv"),
-        C.isval("building", "house").alias("iv"),
-        C.haskey("name").alias("hk"),
-        C.renamecol("highway", "hw"),
-        C.hassuffix("highway", "_link").alias("hs"),
-        C.haseither([C.isval("highway", "footway"), C.yesno("oneway")]).alias("he"),
-        C.asint("layer").alias("ai"),
-        C.asint("ref").alias("ar"),
-        C.is_building().alias("ib"),
-    ).collect()
-    assert got[0]["rv"] == "mlink"
-    assert got[1]["rv"] == "other"  # footway → default
-    assert got[3]["rv"] is None  # absent → null
-    assert got[2]["iv"] == "yes" and got[0]["iv"] is None
-    assert got[2]["hk"] == "yes" and got[0]["hk"] == "no"
-    assert [r["hw"] for r in got] == ["motorway_link", "footway", None, None]
-    assert [r["hs"] for r in got] == ["yes", "no", None, None]
-    # oneway=yes on row 0, highway=footway on row 1; absent tags are "no"
-    assert [r["he"] for r in got] == ["yes", "yes", "no", "no"]
-    assert got[0]["ai"] == 2 and got[2]["ar"] is None and got[3]["ai"] is None
-    assert [r["ib"] for r in got] == [False, False, True, False]
-
-
-def test_splitcol_joincol(spark, tagdf):
-    arr, cnt, mx = C.splitcol("ref")
-    got = tagdf.select(arr.alias("a"), cnt.alias("c"), mx.alias("m"),
-                       C.joincol("name", "ref").alias("j")).collect()
-    assert got[2]["a"] == ["A1", "B2", "C33"]
-    assert got[2]["c"] == 3 and got[2]["m"] == 3
-    assert got[2]["j"] == "x A1;B2;C33"
-    assert got[0]["j"] is None  # both absent
-    assert got[3]["c"] == 0
 
 
 # ---------------------------------------------------------- tables + corpus

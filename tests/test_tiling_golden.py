@@ -20,6 +20,7 @@ from osmquadtree_bin_spark.tiling import (
     find_groups,
     make_tile_assigner,
 )
+from tests.helpers import is_ancestor
 from tests.independent_oracles import _find_groups_reference, assign_tiles_arrow
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden")
@@ -86,7 +87,7 @@ def test_assigner_matches_walk_semantics():
     gk = g.set_index("tile_idx")["tile_qt"]
     tile_keys = gk.loc[tiles].to_numpy(np.int64)
     # each assigned tile is ancestor-of-or-equal of the cell
-    assert qtk.is_ancestor(tile_keys, cells).all()
+    assert is_ancestor(tile_keys, cells).all()
     # and per-group assigned counts reproduce the group counts exactly
     got = pd.DataFrame({"tile_qt": tile_keys, "cnt": counts}).groupby("tile_qt")["cnt"].sum()
     want = g.set_index("tile_qt")["cnt"]

@@ -42,30 +42,31 @@ def tile_files(tiled_path: str, tiles: list[int] | None = None) -> dict[int, lis
     }
 
 
-def _guarded_walk(path: str, walk):
-    """``walk(pq)`` with pyarrow's parquet module, or None (logged) when
-    pyarrow is missing or the walk fails. The except clause is narrow on
-    purpose: a corrupt-footer signal must surface in the log, not silently
-    vanish into the fallback (r05 ADVICE)."""
+def _guarded_walk(path: str, walk, fallback: str = "a distributed count", on_fail=None):
+    """``walk(pq)`` with pyarrow's parquet module, or None (logged, and the
+    reason passed to ``on_fail``) when pyarrow is missing or the walk fails.
+    The except clause is narrow on purpose: a corrupt-footer signal must
+    surface in the log, not silently vanish into the fallback (r05 ADVICE)."""
     try:
         import pyarrow.parquet as pq
         from pyarrow import ArrowException
     except ImportError as e:
-        log.warning("no pyarrow for the footer walk of %s (%s) — falling back "
-                    "to a distributed count", path, e)
-        return None
-    try:
-        return walk(pq)
-    except (OSError, ValueError, KeyError, ArrowException) as e:
-        log.warning(
-            "footer walk of %s failed (%s: %s) — falling back to a "
-            "distributed count; if this is a corrupt-footer signal it needs "
-            "attention, not silence",
-            path,
-            type(e).__name__,
-            e,
-        )
-        return None
+        reason = f"no pyarrow ({e})"
+    else:
+        try:
+            return walk(pq)
+        except (OSError, ValueError, KeyError, ArrowException) as e:
+            reason = f"{type(e).__name__}: {e}"
+    log.warning(
+        "footer walk of %s failed (%s) — falling back to %s; if this is a "
+        "corrupt-footer signal it needs attention, not silence",
+        path,
+        reason,
+        fallback,
+    )
+    if on_fail is not None:
+        on_fail(reason)
+    return None
 
 
 def parquet_rows(path: str) -> int | None:

@@ -308,7 +308,9 @@ def rel_wkt(relations: DataFrame, ways: DataFrame, nodes: DataFrame) -> DataFram
 
     schema = "id long, wkt string, n_outer int, n_inner int, n_dropped int"
 
-    def _assemble(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    # no type hints: with them pyspark tries to infer a pandas UDF eval type
+    # from them and warns that ``key`` has none
+    def _assemble(key, pdf):
         members = []
         for role, wid, p in zip(pdf["role"], pdf["way_id"], pdf["pts"]):
             if p is None or (isinstance(p, float) and pd.isna(p)):

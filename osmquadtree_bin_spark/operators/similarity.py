@@ -3,13 +3,15 @@
   * ``cosine_topk``      — brute-force exact top-k per query: broadcast the
     (small) query set, JVM-side dot product via ``aggregate``/``zip_with`` —
     whole-stage codegen, no Python in the hot path — then a row_number window.
-  * ``lsh_bucket_topk``  — scale path: random-hyperplane LSH buckets
-    (signature computed once per row in a pandas UDF), candidates restricted
-    to same-bucket rows (multi-probe by unioning B tables), exact re-rank.
+  * ``ivf_topk``         — scale path: coarse k-means lists, each query
+    probes its ``nprobe`` nearest lists, exact re-rank inside them.
+  * ``embedding_near_dup_pairs`` — near-duplicate pairs over
+    random-hyperplane LSH buckets (``hyperplane_signature``), never
+    all-pairs.
 
 At 100 TB the brute force is O(Q×N) but embarrassingly parallel and
-shuffle-free (broadcast queries); the LSH variant trades recall for a
-bucket-equi-join that prunes N.
+shuffle-free (broadcast queries); the IVF lists trade recall for an
+equi-join that prunes N.
 """
 
 from __future__ import annotations
@@ -59,54 +61,6 @@ def hyperplane_signature(dim: int, nbits: int = 16, seed: int = 13):
         return pd.Series(sig.astype(np.int64))
 
     return _sig
-
-
-def lsh_bucket_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    nbits: int = 12,
-    multiprobe: int = 1,
-    tables: int = 2,
-) -> DataFrame:
-    """Approximate top-k: same-bucket candidates, exact cosine re-rank.
-
-    Recall tunable three ways (all keep candidates an equi-join):
-      * fewer ``nbits``   → bigger buckets;
-      * ``multiprobe``=m  → the QUERY side also probes every bucket within
-        hamming m of its signature (explode over a literal XOR-mask array);
-      * ``tables``=L      → L independent hyperplane tables (different
-        seeds), candidates unioned then (query_id, vec_id)-deduped — the
-        classic LSH recall lever, linear cost in L.
-    Recall@k vs brute force is pinned by test_ann_recall on clustered data
-    (on uniform random vectors top-k neighbours are barely closer than
-    random points and ANY bucketing scheme has low recall)."""
-    masks = [0]
-    if multiprobe >= 1:
-        masks += [1 << i for i in range(nbits)]
-    if multiprobe >= 2:
-        masks += [(1 << i) | (1 << j) for i in range(nbits) for j in range(i)]
-    if multiprobe >= 3:
-        raise ValueError("multiprobe > 2 explodes the probe count; lower nbits instead")
-    cand = None
-    for t in range(tables):
-        sig = hyperplane_signature(dim, nbits, seed=13 + 101 * t)
-        e = embeddings.withColumn("bucket", sig(F.col("embedding")))
-        q = queries.withColumn("_b0", sig(F.col("qvec"))).withColumn(
-            "bucket",
-            F.explode(F.array(*[F.col("_b0").bitwiseXOR(F.lit(m)) for m in masks])),
-        ).drop("_b0")
-        j = e.join(F.broadcast(q), "bucket").drop("bucket")
-        cand = j if cand is None else cand.unionByName(j)
-    cos = _cos_expr("embedding", "qvec")
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        cand.dropDuplicates(["query_id", "vec_id"])
-        .select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
 
 
 # ------------------------------------------------------------------ IVF ANN

@@ -6,39 +6,49 @@ a pruned scan of the packed tile store (``pds.Filter``/``FilterTile``,
 (``MakePassQt``, :766-777), with a guard rejecting oversized bboxes
 (:600-602).
 
-Spark shape: the store is tile-partitioned parquet (Iceberg in production).
-``scan_bbox`` computes the pruned tile list on the driver (a numpy pass over
-the group keys — the P1 generator) and reads ONLY those hive partitions: the
-scan is built over the pruned ``tile_idx=N`` directories with the store
-schema read once at construction, so a request neither lists the whole store
-nor runs a schema-inference job. The ``tile_idx IN (...)`` filter stays
-(``.explain`` → PartitionFilters). It applies the exact bbox predicate.
+Every request is the pruned tile list, computed on the driver (a numpy pass
+over the group keys — the P1 generator), and an exact predicate
+(``BBoxOverlap`` for a bbox, ``InCell`` for a raw tile), read through the
+store's one tile-set reader (``streaming.update.TileSet``). The bbox guard
+rejects an oversized request before anything is read. The reader has two
+arms:
 
-``sql`` serves the planet_osm views over that slice. The views are SQL text
-(``plans.tables``) that read one slice view by name, so a request only
-re-points the slice (``tables_for_bbox``: one ``createOrReplaceTempView``);
-a view is created the first time a query references it, after the views it
-reads from, and again only when the session's live definition of its name
-is not the engine's (``register_tables`` elsewhere in the session replaced
-it).
+* the driver arm (``bbox_rows``, ``tile_rows``: the server's /bbox and
+  /tile) reads the pruned ``tile_idx=N`` files of a local store with
+  pyarrow, skips row groups whose footer min/max miss the predicate and
+  stops at the response limit: no Spark job. Where pyarrow cannot read the
+  store (not local, or a read that raises) it falls back to the Spark arm
+  and records why;
+* the Spark arm (``read_tiles``, ``scan_bbox``, ``rawtile``) returns a lazy
+  DataFrame over only the pruned directories, with the store schema read
+  once at construction, so a request neither lists the whole store nor runs
+  a schema-inference job. The ``tile_idx IN (...)`` filter stays
+  (``.explain`` → PartitionFilters).
+
+The same predicate value renders the SQL text and the Arrow mask, and both
+arms return rows in the stored ``(tile_idx, id)`` order.
+
+``sql`` serves the planet_osm views over the Spark arm's bbox slice. The
+views are SQL text (``plans.tables``) that read one slice view by name, so a
+request only re-points the slice (``tables_for_bbox``: one
+``createOrReplaceTempView``); a view is created the first time a query
+references it, after the views it reads from, and again only when the
+session's live definition of its name is not the engine's
+(``register_tables`` elsewhere in the session replaced it).
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..footers import tile_dir
 from ..operators.pip_join import region_tiles
-from ..tuning import scoped_conf
+from ..streaming.update import BBoxOverlap, InCell, TileSet
 from .tables import SLICE_VIEW, referenced_views, served_views
 from .tables import register_tables  # noqa: F401 — perfbench's tracer wraps it by name
 
 MAX_BBOX_UNITS = 200_000_000  # reference guard: reject bboxes > 20M units (×10 margin)
-_DISCOVERY_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 class TileQueryEngine:
@@ -46,32 +56,13 @@ class TileQueryEngine:
         self.spark = spark
         self.store_path = store_path
         self.groups = groups
-        self.schema = spark.read.parquet(store_path).schema
+        self.tiles = TileSet(spark, store_path)
         self.views = served_views()
 
     def read_tiles(self, tiles: list[int], where: str | None = None) -> DataFrame:
         """The store restricted to ``tiles`` and to the SQL predicate
-        ``where``: a pinned-schema read of just their ``tile_idx=N``
-        directories. The directories are listed per call, so files that
-        ``TiledStore.apply_diff`` rewrote since the engine was built are
-        seen; a tile without a directory (emptied by a diff) is skipped, and
-        no directory at all gives an empty frame. The predicate is one SQL
-        string in one filter: built from Column objects it costs a py4j
-        round trip per literal (~20 ms on a 4-vCPU Xeon for a 9-tile
-        ``isin`` and a bbox). The directories are listed on the driver: past
-        ``parallelPartitionDiscovery.threshold`` paths (32 by default) Spark
-        would run a listing job, so the threshold is scoped to their
-        count."""
-        dirs = [
-            d for t in sorted(set(tiles)) if os.path.isdir(d := tile_dir(self.store_path, t))
-        ]
-        if not dirs:
-            return self.spark.createDataFrame([], self.schema)
-        cond = f"tile_idx IN ({', '.join(str(int(t)) for t in tiles)})"  # → PartitionFilters
-        with scoped_conf(self.spark, _DISCOVERY_KEY, str(len(dirs))):
-            df = self.spark.read.schema(self.schema).option("basePath", self.store_path)
-            df = df.parquet(*dirs)
-        return df.filter(cond if where is None else f"{cond} AND {where}")
+        ``where``: the reader's Spark arm (``TileSet.frame``)."""
+        return self.tiles.frame(tiles, where)
 
     def pruned_tiles(self, minx: int, miny: int, maxx: int, maxy: int) -> list[int]:
         """P1 generator: tile_idx list whose buffered tile bounds intersect."""
@@ -80,18 +71,42 @@ class TileQueryEngine:
         sel = self.groups[self.groups["tile_qt"].isin(hit_keys)]
         return [int(t) for t in sel["tile_idx"]]
 
+    def _bbox(self, minx: int, miny: int, maxx: int, maxy: int):
+        """P6: the pruned tiles and the exact predicate of a bbox request."""
+        if (maxx - minx) > MAX_BBOX_UNITS or (maxy - miny) > MAX_BBOX_UNITS:
+            raise ValueError("bbox too large (reference guard, geometry.go:600-602)")
+        return self.pruned_tiles(minx, miny, maxx, maxy), BBoxOverlap(minx, miny, maxx, maxy)
+
+    def _cell(self, tx: int, ty: int, tz: int):
+        """J8 (``tq.rawtile``, ``osmquadtree-geometry.go:283-314``): every
+        stored element whose qt is a descendant-or-equal of the raster cell —
+        the tiles its buffered bounds prune to, then the rounded-key test."""
+        from .. import quadtree as qtk
+
+        req = int(qtk.from_tuple(np.array([tx]), np.array([ty]), np.array([tz]))[0])
+        minx, miny, maxx, maxy = (int(v[0]) for v in qtk.bounds(np.array([req]), 0.05))
+        return self.pruned_tiles(minx, miny, maxx, maxy), InCell(req, tz)
+
     def scan_bbox(
         self, minx: int, miny: int, maxx: int, maxy: int, columns: list[str] | None = None
     ) -> DataFrame:
-        """P6: pruned + exact-filtered scan of the tiled store."""
-        if (maxx - minx) > MAX_BBOX_UNITS or (maxy - miny) > MAX_BBOX_UNITS:
-            raise ValueError("bbox too large (reference guard, geometry.go:600-602)")
-        df = self.read_tiles(
-            self.pruned_tiles(minx, miny, maxx, maxy),
-            f"minx <= {int(maxx)} AND maxx >= {int(minx)} "
-            f"AND miny <= {int(maxy)} AND maxy >= {int(miny)}",
-        )
+        """P6: pruned + exact-filtered scan of the tiled store (Spark arm)."""
+        tiles, pred = self._bbox(minx, miny, maxx, maxy)
+        df = self.read_tiles(tiles, pred.sql())
         return df.select(*columns) if columns else df
+
+    def bbox_rows(self, minx: int, miny: int, maxx: int, maxy: int, limit: int) -> list[dict]:
+        """The rows of ``scan_bbox``, at most ``limit``, read on the driver."""
+        return self.tiles.rows(*self._bbox(minx, miny, maxx, maxy), limit)
+
+    def rawtile(self, tx: int, ty: int, tz: int) -> DataFrame:
+        """J8 raw-tile fetch over the Spark arm."""
+        tiles, pred = self._cell(tx, ty, tz)
+        return self.read_tiles(tiles, pred.sql())
+
+    def tile_rows(self, tx: int, ty: int, tz: int, limit: int) -> list[dict]:
+        """The rows of ``rawtile``, at most ``limit``, read on the driver."""
+        return self.tiles.rows(*self._cell(tx, ty, tz), limit)
 
     def tables_for_bbox(self, minx: int, miny: int, maxx: int, maxy: int, views) -> None:
         """Point the planet_osm views at the bbox slice, creating those of

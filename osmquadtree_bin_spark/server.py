@@ -3,12 +3,22 @@ server (``/root/reference/osmquadtree-geometry.go:384-550`` route handlers,
 ``osmquadtree-filter.go`` server mode, embedded Leaflet UI in
 ``static.go``/``index.html``), re-expressed as a thin stdlib HTTP layer over
 ``TileQueryEngine``. Serving is a driver-edge concern: every endpoint is a
-bounded collect of an already-pruned Spark plan (tile partition pruning +
-exact predicates), never a bulk path.
+bounded read of an already-pruned tile set, never a bulk path.
 
-One Spark job per request: a /tile or /bbox miss runs exactly one job. The
-engine reads only the pruned tile directories with a pinned schema (no
-store-wide listing, no schema-inference job), and the bounded collect
+/tile and /bbox run no Spark job on a local store. The engine reads the
+pruned ``tile_idx=N`` files on the driver with pyarrow (the driver arm of
+the store's one tile-set reader, ``streaming.update.TileSet``), skips row
+groups whose footer min/max miss the request and stops at ``limit`` rows,
+the way the reference filters its in-memory packed store
+(``osmquadtree-geometry.go:617-619``). On a store pyarrow cannot read (not
+local, or a read that raises) the reader falls back to one Spark job over
+the same tiles and predicate, ordered by ``(tile_idx, id)`` before its
+limit, and records why; either arm renders to the same bytes. The
+oversized-bbox guard runs before anything is read. ``/status`` reports the
+reads each arm served and the last fallback reason from the reader's
+counters, with no Spark job.
+
+/query and /extract stay on Spark. Their bounded collect
 (``tuning.collect_limited``) scopes ``spark.sql.limit.initialNumPartitions``
 so Spark's take scans every pruned partition in its first job instead of
 one partition first and the rest in a second. The conf is session-wide, so
@@ -118,8 +128,9 @@ class _LRU:
 class TileServer:
     """Wraps a TileQueryEngine; ``make_handler()`` yields the request class.
 
-    The engine's Spark calls run single-flight behind ``_lock``; responses
-    are rendered driver-side (bounded by ``limit``)."""
+    The engine's reads run single-flight behind ``_lock`` (a tile-set read
+    may fall back to Spark); responses are rendered driver-side (bounded by
+    ``limit``)."""
 
     def __init__(self, engine, limit: int = DEFAULT_LIMIT):
         self.engine = engine
@@ -135,13 +146,16 @@ class TileServer:
     def page_status(self) -> str:
         """Store and ledger state. The ledger is the store root's, read on
         the driver by ``TiledStore.resume_state`` (no Spark job);
-        ``ledger_state`` is null when nothing was applied."""
+        ``ledger_state`` is null when nothing was applied. ``reads`` counts
+        the tile-set reads each arm of the engine's reader served, with the
+        reason of its last fallback to Spark."""
         import os
 
         from .streaming.update import TiledStore
 
         root = os.path.dirname(self.engine.store_path.rstrip("/"))
         state = TiledStore(self.engine.spark, root).resume_state()
+        tiles = self.engine.tiles
         return json.dumps(
             {
                 "store": self.engine.store_path,
@@ -151,6 +165,7 @@ class TileServer:
                     "bbox": {"hits": self.bbox_cache.hits, "misses": self.bbox_cache.misses},
                     "tile": {"hits": self.tile_cache.hits, "misses": self.tile_cache.misses},
                 },
+                "reads": {**tiles.reads, "last_fallback": tiles.last_fallback},
             }
         )
 
@@ -160,7 +175,8 @@ class TileServer:
         if cached is not None:
             return cached
         with self._lock:
-            out = to_geojson(self.engine.rawtile(tx, ty, tz), limit=self.limit)
+            rows = self.engine.tile_rows(tx, ty, tz, self.limit)
+        out = to_geojson(rows, limit=self.limit)
         self.tile_cache.put(key, out)
         return out
 
@@ -170,9 +186,8 @@ class TileServer:
         if cached is not None:
             return cached
         with self._lock:
-            out = to_geojson(
-                self.engine.scan_bbox(minx, miny, maxx, maxy), limit=self.limit
-            )
+            rows = self.engine.bbox_rows(minx, miny, maxx, maxy, self.limit)
+        out = to_geojson(rows, limit=self.limit)
         self.bbox_cache.put(key, out)
         return out
 

@@ -81,18 +81,20 @@ def poly_to_regions(spark, path: str) -> DataFrame:
 
 
 # --------------------------------------------------------------- S11 GeoJSON
-def to_geojson(df: DataFrame, wkt_col: str = "wkt", limit: int = 10000) -> str:
+def to_geojson(rows: DataFrame | list[dict], wkt_col: str = "wkt", limit: int = 10000) -> str:
     """Query result rows → GeoJSON FeatureCollection string.
 
-    Geometry parse is WKT → GeoJSON coordinates (points/linestrings/polygons,
-    the engine's three types); properties = every other column. Collect is
-    bounded by ``limit`` (a serving endpoint, not a bulk path — matches the
-    reference server's per-tile responses), in one Spark job
-    (:func:`tuning.collect_limited`)."""
-    rows = collect_limited(df, limit)
+    ``rows`` is a DataFrame or rows already read, as dicts. Geometry parse
+    is WKT → GeoJSON coordinates (points/linestrings/polygons, the engine's
+    three types); properties = every other column, map values key-sorted.
+    Output is bounded by ``limit`` (a serving endpoint, not a bulk path —
+    matches the reference server's per-tile responses); a DataFrame is
+    collected in one Spark job (:func:`tuning.collect_limited`)."""
+    if isinstance(rows, DataFrame):
+        rows = [r.asDict() for r in collect_limited(rows, limit)]
     feats = []
-    for r in rows:
-        d = r.asDict()
+    for d in rows[:limit]:
+        d = dict(d)
         wkt = d.pop(wkt_col, None)
         feats.append(
             {
@@ -105,6 +107,8 @@ def to_geojson(df: DataFrame, wkt_col: str = "wkt", limit: int = 10000) -> str:
 
 
 def _jsonable(v):
+    if isinstance(v, dict):  # a map: its key order is the reader's, so sort it
+        return {k: _jsonable(v[k]) for k in sorted(v)}
     try:
         json.dumps(v)
         return v

@@ -9,9 +9,8 @@ Spark analogue of the reference's element stream (SURVEY.md §1.4).
 
 SPAN-SEQUENCE INVARIANT (the graft's hard rule): the ``spans`` array itself is
 NEVER exploded-and-regrouped by the pipeline — results join back to documents
-by ``doc_id``, so (kind, text, media_ref, order) survives bit-identical.
-``span_fingerprint`` gives an order-sensitive digest used by tests and by the
-lineage ledger to prove it.
+by ``doc_id``, so (kind, text, media_ref, order) survives bit-identical
+(``tests/test_spans.py`` checks it with an order-sensitive digest).
 """
 
 from __future__ import annotations
@@ -114,28 +113,4 @@ def explode_geoms(docs: DataFrame) -> DataFrame:
         F.shiftleft(F.col("geom_type").cast("long"), 59).bitwiseOR(
             seq.bitwiseAND(F.lit((1 << 40) - 1))
         ),
-    )
-
-
-def span_fingerprint(docs: DataFrame) -> DataFrame:
-    """Order-sensitive per-doc digest of (kind, text, media_ref, order).
-
-    Pure built-in functions (no shuffle, no explode): the invariant check is
-    a narrow map over the original array column.
-    """
-    return docs.select(
-        "doc_id",
-        F.md5(
-            F.to_json(
-                F.transform(
-                    "spans",
-                    lambda s: F.struct(
-                        s["kind"].alias("kind"),
-                        s["text"].alias("text"),
-                        s["media_ref"].alias("media_ref"),
-                        s["offset"].alias("offset"),
-                    ),
-                )
-            )
-        ).alias("span_digest"),
     )

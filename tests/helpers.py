@@ -1,9 +1,12 @@
-"""Test-only helpers: an element-table generator, a .poly writer and a
-quadtree ancestry check. No product code calls these."""
+"""Test-only helpers: an element-table generator, a .poly writer, a
+quadtree ancestry check, a corpus-query runner and the span-sequence
+digest. No product code calls these."""
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from osmquadtree_bin_spark.datagen import _coord
+from osmquadtree_bin_spark.functions.dialect import translate
 from osmquadtree_bin_spark.quadtree import COORD_SCALE, depth_of, round_to
 
 
@@ -65,3 +68,34 @@ def is_ancestor(anc: np.ndarray, key: np.ndarray) -> np.ndarray:
     anc = np.asarray(anc, dtype=np.int64)
     key = np.asarray(key, dtype=np.int64)
     return (depth_of(anc) <= depth_of(key)) & (round_to(key, depth_of(anc)) == anc)
+
+
+def run_query(spark, corpus_sql: str):
+    """A corpus entry (a ``( SELECT ... ) AS alias`` table expression) as a
+    full query, through the dialect shims, run as Spark SQL over the
+    registered virtual tables."""
+    return spark.sql(translate(f"SELECT * FROM {corpus_sql.strip()}"))
+
+
+def span_fingerprint(docs):
+    """Order-sensitive per-doc digest of (kind, text, media_ref, order).
+
+    Pure built-in functions (no shuffle, no explode): the invariant check is
+    a narrow map over the original array column.
+    """
+    return docs.select(
+        "doc_id",
+        F.md5(
+            F.to_json(
+                F.transform(
+                    "spans",
+                    lambda s: F.struct(
+                        s["kind"].alias("kind"),
+                        s["text"].alias("text"),
+                        s["media_ref"].alias("media_ref"),
+                        s["offset"].alias("offset"),
+                    ),
+                )
+            )
+        ).alias("span_digest"),
+    )

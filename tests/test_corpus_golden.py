@@ -16,7 +16,8 @@ def corpus_checksums(spark, docs):
     """Every one of the 72 corpus layers, pinned by (row count, sorted
     md5-of-rows) — zero-row layers are pinned at rows=0 too, so a filter
     regression that silently empties a layer still trips the golden."""
-    from osmquadtree_bin_spark.plans.corpus import load_corpus, run_query
+    from osmquadtree_bin_spark.plans.corpus import load_corpus
+    from tests.helpers import run_query
     from osmquadtree_bin_spark.plans.tables import register_tables
     from osmquadtree_bin_spark.spans import explode_geoms
 

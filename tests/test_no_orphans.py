@@ -8,11 +8,13 @@ file and with relative imports resolved, must reach every module under
 ``osmquadtree_bin_spark/``.
 
 A module-level function, class or ``_private`` variable of
-``osmquadtree_bin_spark/`` or ``jobs/`` counts as used when its name
-appears, as a whole word, outside its own definition in a shipped file:
-any ``*.py`` outside ``tests/`` that is not a ``test_*.py`` or
-``conftest.py``. A name only a test uses is deleted, or moved into
-``tests/`` if it is a test helper.
+``osmquadtree_bin_spark/`` or ``jobs/`` counts as used when a shipped file
+(any ``*.py`` outside ``tests/`` that is not a ``test_*.py`` or
+``conftest.py``) references it in its AST: a name or attribute that is
+read, an imported name, or a whole word of a string constant that is not a
+docstring (``getattr`` and the tracer's wrap list name functions in
+strings). A mention in a docstring or a comment is not a use. A name only
+a test uses is deleted, or moved into ``tests/`` if it is a test helper.
 
 Keep list (``KEEP``): ``operators/knn.py`` and ``operators/skew.py``. The
 ``BASELINE.json`` north rule names kNN lookups and explicit skew handling
@@ -24,6 +26,7 @@ fan-out estimate would be that measurement). Both checks skip them.
 import ast
 import os
 import re
+from collections import Counter
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -110,18 +113,41 @@ def _module_level_names(path: Path):
                     yield t.id
 
 
+def _references(path: Path) -> Counter:
+    """Names a file uses: read names and attributes, imported names and
+    the words of its non-docstring string constants."""
+    tree = ast.parse(path.read_text())
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+        and isinstance(node.body[0].value.value, str)
+    }
+    refs: Counter = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            refs[node.id] += 1
+        elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+            refs[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            refs[node.name.rsplit(".", 1)[-1]] += 1
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and id(node) not in docstrings):
+            refs.update(re.findall(r"\w+", node.value))
+    return refs
+
+
 def _orphans(private: bool) -> list[str]:
-    shipped = [p.read_text() for p in _py_files() if not _is_test(p)]
+    used = sum((_references(p) for p in _py_files() if not _is_test(p)), Counter())
     orphans = []
     for path in sorted(_py_files()):
         if path.relative_to(REPO).parts[0] not in SCANNED or _rel(path) in KEEP:
             continue
         for name in _module_level_names(path):
-            if name.startswith("_") != private:
-                continue
-            word = re.compile(rf"\b{re.escape(name)}\b")
-            # the definition itself is one match
-            if sum(len(word.findall(t)) for t in shipped) < 2:
+            if name.startswith("_") == private and not used[name]:
                 orphans.append(f"{_rel(path)}::{name}")
     return orphans
 

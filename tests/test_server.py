@@ -203,27 +203,121 @@ def _spark_jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_bbox_and_tile_miss_one_spark_job(served):
-    """A /bbox or /tile cache miss is one Spark job: a pinned-schema read of
-    the pruned tile directories (no listing of the whole store, no schema
-    inference job) and a bounded collect whose first job takes every
-    partition. A bbox miss ran 3 jobs when each request read the whole store
-    (schema inference, then a take of one partition and then the rest)."""
+def _stored_tile(engine, z: int = 8, dy: int = 0) -> tuple[int, int, int]:
+    """(tz, tx, ty) of the zoom-``z`` cell over a stored element, ``dy``
+    cells south of it."""
+    import osmquadtree_bin_spark.quadtree as qtk
+
+    row = engine.spark.read.parquet(engine.store_path).select("qt").first()
+    tx, ty, tz = (int(v[0]) for v in qtk.to_tuple(qtk.round_to(np.array([row["qt"]]), z)))
+    return tz, tx, ty + dy
+
+
+def test_bbox_and_tile_miss_run_no_spark_job(served):
+    """A /bbox or /tile cache miss on a local store runs no Spark job: the
+    engine reads the pruned tile files on the driver. It ran one job (a
+    pinned-schema read of the pruned directories and a bounded collect)
+    before the driver read, and 3 when each request read the whole store."""
     _, ts, engine = served
     m0 = ts.bbox_cache.misses
     out, jobs = _spark_jobs(
         engine.spark, lambda: ts.page_bbox(-4500001, 510000001, 2500001, 520000001)
     )
     assert ts.bbox_cache.misses == m0 + 1
-    assert json.loads(out)["features"] and jobs == 1
+    assert json.loads(out)["features"] and jobs == 0
+    tz, tx, ty = _stored_tile(engine, dy=1)
+    m0 = ts.tile_cache.misses
+    out, jobs = _spark_jobs(engine.spark, lambda: ts.page_tile(tz, tx, ty))
+    assert ts.tile_cache.misses == m0 + 1
+    assert json.loads(out)["type"] == "FeatureCollection" and jobs == 0
+
+
+def test_tile_read_falls_back_to_one_spark_job(served, monkeypatch):
+    """When pyarrow cannot read the tile files, a /bbox or /tile miss is
+    served by the reader's Spark arm in at most one job, with the same
+    response bytes, and /status names the reason (read with no job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osmquadtree_bin_spark.server import TileServer
+
+    _, _, engine = served
+    bb = (-4500002, 510000002, 2500002, 520000002)
+    tile = _stored_tile(engine, z=10)
+    want = (TileServer(engine).page_bbox(*bb), TileServer(engine).page_tile(*tile))
+    reads = dict(engine.tiles.reads)
+
+    def unreadable(*a, **k):
+        raise pa.ArrowInvalid("Parquet magic bytes not found in footer")
+
+    monkeypatch.setattr(pq, "ParquetFile", unreadable)
+    ts = TileServer(engine)
+    for page, args, body in ((ts.page_bbox, bb, want[0]), (ts.page_tile, tile, want[1])):
+        out, jobs = _spark_jobs(engine.spark, lambda: page(*args))
+        assert out == body and jobs <= 1
+    status, jobs = _spark_jobs(engine.spark, ts.page_status)
+    st = json.loads(status)["reads"]
+    assert jobs == 0 and st["driver"] == reads["driver"] and st["spark"] == reads["spark"] + 2
+    assert st["last_fallback"].startswith("ArrowInvalid: Parquet magic bytes")
+
+
+def _parity_requests(engine, n: int, seed: int) -> list[tuple]:
+    """``n`` seeded (route, args) requests over the stored elements: cells at
+    zoom 3-14 above a stored element's qt and bboxes of 0.002-6 degrees
+    around a stored element's corner, some of them away from any data."""
     import osmquadtree_bin_spark.quadtree as qtk
 
-    row = engine.spark.read.parquet(engine.store_path).select("qt").first()
-    tx, ty, tz = (int(v[0]) for v in qtk.to_tuple(qtk.round_to(np.array([row["qt"]]), 8)))
-    m0 = ts.tile_cache.misses
-    out, jobs = _spark_jobs(engine.spark, lambda: ts.page_tile(tz, tx, ty + 1))
-    assert ts.tile_cache.misses == m0 + 1
-    assert json.loads(out)["type"] == "FeatureCollection" and jobs == 1
+    pdf = engine.spark.read.parquet(engine.store_path).select("qt", "minx", "miny").toPandas()
+    rng = np.random.default_rng(seed)
+    out = []
+    for i in range(n):
+        r = pdf.iloc[int(rng.integers(len(pdf)))]
+        if i % 2:
+            key = qtk.round_to(np.array([int(r["qt"])]), int(rng.integers(3, 15)))
+            tx, ty, tz = (int(v[0]) for v in qtk.to_tuple(key))
+            out.append(("tile", (tz, tx, ty + int(rng.integers(0, 2)))))
+        else:
+            w = int(rng.integers(100_000, 30_000_000))
+            x, y = int(r["minx"]) + int(rng.integers(-w, w)), int(r["miny"])
+            out.append(("bbox", (x - w, y - w, x + w, y + w)))
+    return out
+
+
+def _both_arms(engine, requests, monkeypatch, limit: int | None = None) -> tuple[list, list]:
+    """Each request's response from the reader's driver arm and, with the
+    store treated as non-local, from its Spark arm (fresh caches)."""
+    from osmquadtree_bin_spark.server import DEFAULT_LIMIT, TileServer
+
+    def answers(expect_arm: str):
+        ts = TileServer(engine, limit=limit or DEFAULT_LIMIT)
+        before = engine.tiles.reads[expect_arm]
+        got = [getattr(ts, f"page_{route}")(*args) for route, args in requests]
+        assert engine.tiles.reads[expect_arm] == before + len(set(requests))
+        return got
+
+    driver = answers("driver")
+    with monkeypatch.context() as m:
+        m.setattr(engine.tiles, "local", False)
+        spark_arm = answers("spark")
+    return driver, spark_arm
+
+
+def test_driver_and_spark_arms_answer_byte_for_byte(served, monkeypatch):
+    """The Spark arm is the oracle: 48 seeded /tile and /bbox requests get
+    the same bytes from the driver read, and so does a request with more
+    hits than a small limit, which pins the (tile_idx, id) truncation
+    order."""
+    _, _, engine = served
+    south_atlantic = ("bbox", (0, -600_000_000, 1_000_000, -599_000_000))
+    requests = [*_parity_requests(engine, 48, seed=16), south_atlantic]
+    driver, spark_arm = _both_arms(engine, requests, monkeypatch)
+    hits = [len(json.loads(body)["features"]) for body in spark_arm]
+    assert sum(h > 0 for h in hits) >= 30 and hits[-1] == 0
+    assert driver == spark_arm
+    wide = [("bbox", (-4500000, 510000000, 2500000, 520000000))]
+    driver, spark_arm = _both_arms(engine, wide, monkeypatch, limit=7)
+    assert len(json.loads(spark_arm[0])["features"]) == 7 and driver == spark_arm
+    assert engine.tiles.last_fallback == "store path is not local"
 
 
 def test_extract_miss_at_most_two_spark_jobs(served):
@@ -302,7 +396,8 @@ def test_query_creates_only_the_views_it_references(served, spark, monkeypatch):
 def test_read_tiles_past_32_directories_one_spark_job(spark, tmp_path):
     """Reading more tile directories than Spark's parallel partition
     discovery threshold (32) lists them on the driver: no listing job, so a
-    bounded collect over 40 tiles is one job (2 with the listing job)."""
+    bounded collect over the reader's Spark arm for 40 tiles is one job (2
+    with the listing job)."""
     import pandas as pd
 
     from osmquadtree_bin_spark.plans.store import TileQueryEngine
@@ -313,7 +408,7 @@ def test_read_tiles_past_32_directories_one_spark_job(spark, tmp_path):
         "tile_idx"
     ).parquet(store)
     engine = TileQueryEngine(spark, store, pd.DataFrame({"tile_idx": [], "tile_qt": []}))
-    rows, jobs = _spark_jobs(spark, lambda: collect_limited(engine.read_tiles(range(40)), 1000))
+    rows, jobs = _spark_jobs(spark, lambda: collect_limited(engine.tiles.frame(range(40)), 1000))
     assert len(rows) == 80 and jobs == 1
 
 
@@ -445,6 +540,23 @@ def test_request_on_emptied_tile_returns_empty_collection(diffed):
     status, body = _get(f"{diffed['base']}/bbox?minx={x}&miny={y}&maxx={x}&maxy={y}")
     assert status == 200
     assert json.loads(body) == {"type": "FeatureCollection", "features": []}
+
+
+def test_driver_and_spark_arms_agree_after_apply_diff(diffed, monkeypatch):
+    """After a diff rewrote one tile and emptied others, the driver read
+    serves the rewritten rows and the emptied tiles' missing directories
+    byte for byte as the Spark arm does."""
+    from osmquadtree_bin_spark import quadtree as qtk
+
+    engine = diffed["ts"].engine
+    x, y = diffed["b_centre"]
+    requests = [("bbox", diffed["a_bbox"]), ("bbox", (x, y, x, y))]
+    for key in (diffed["a_qt"], diffed["b_qt"]):
+        tx, ty, tz = (int(v[0]) for v in qtk.to_tuple(np.array([key])))
+        requests += [("tile", (tz, tx, ty)), ("tile", (tz + 1, 2 * tx + 1, 2 * ty))]
+    driver, spark_arm = _both_arms(engine, requests, monkeypatch)
+    assert driver == spark_arm
+    assert "MOD:" in driver[0] and json.loads(driver[1])["features"] == []
 
 
 def test_serve_rejects_non_loopback_without_optin():

@@ -2,8 +2,9 @@
 
 from pyspark.sql import functions as F
 
-from osmquadtree_bin_spark.spans import explode_geoms, span_fingerprint
+from osmquadtree_bin_spark.spans import explode_geoms
 from osmquadtree_bin_spark import quadtree as qtk
+from tests.helpers import span_fingerprint
 
 import numpy as np
 

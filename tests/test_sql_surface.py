@@ -4,9 +4,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from osmquadtree_bin_spark.functions.dialect import makeinteger, pg_substr, translate
-from osmquadtree_bin_spark.plans.corpus import load_corpus, run_query
+from osmquadtree_bin_spark.plans.corpus import load_corpus
 from osmquadtree_bin_spark.plans.tables import register_tables
 from osmquadtree_bin_spark.spans import explode_geoms
+from tests.helpers import run_query
 
 
 # ------------------------------------------------------------------- dialect

@@ -13,7 +13,7 @@ from osmquadtree_bin_spark.operators.dedup import (
     simhash_near_pairs,
 )
 from osmquadtree_bin_spark.operators.multimodal import extract_features, synth_media
-from osmquadtree_bin_spark.operators.similarity import cosine_topk, lsh_bucket_topk
+from osmquadtree_bin_spark.operators.similarity import cosine_topk
 from osmquadtree_bin_spark.operators.textstats import fingerprint, token_count
 
 SF = "/root/testdata/sf0.001"
@@ -83,19 +83,6 @@ def test_cosine_topk_matches_numpy(spark, embeddings):
         assert have == want
         # rank 1 must be the query itself (cosine 1)
         assert have[0] == r["vec_id"]
-
-
-def test_lsh_topk_finds_self(spark, embeddings):
-    qrows = embeddings.limit(2).collect()
-    queries = spark.createDataFrame(
-        [(f"q{r['vec_id']}", r["embedding"]) for r in qrows],
-        "query_id string, qvec array<float>",
-    )
-    dim = len(qrows[0]["embedding"])
-    got = lsh_bucket_topk(embeddings, queries, dim=dim, k=3, nbits=8).toPandas()
-    for r in qrows:
-        sub = got[got.query_id == f"q{r['vec_id']}"].sort_values("rank")
-        assert len(sub) >= 1 and sub.iloc[0]["vec_id"] == r["vec_id"]
 
 
 def test_token_count_and_quality(spark, documents):
@@ -247,32 +234,6 @@ def test_simhash_bands_keep_wide_pieces():
         simhash_near_pairs(None, max_hamming=3, bands=8)  # 8-bit pieces
     with pytest.raises(ValueError):
         simhash_near_pairs(None, max_hamming=12, bands=4)  # radius 3 masks
-
-
-def test_ann_recall_on_clustered_data(spark):
-    """LSH ANN must recover >= 0.85 of exact top-10 on clustered embeddings
-    (on uniform random vectors ANY bucketing has low recall — not a useful
-    target). Levers: L independent tables + hamming-1 multiprobe."""
-    rng = np.random.default_rng(7)
-    dim, nc, per = 32, 40, 50
-    centers = rng.standard_normal((nc, dim))
-    vecs = (centers[np.repeat(np.arange(nc), per)]
-            + 0.25 * rng.standard_normal((nc * per, dim)))
-    e = spark.createDataFrame(
-        [(int(i), vecs[i].tolist()) for i in range(len(vecs))],
-        "vec_id long, embedding array<double>",
-    )
-    q = e.filter(F.col("vec_id") % 250 == 0).select(
-        F.concat(F.lit("q"), F.col("vec_id")).alias("query_id"),
-        F.col("embedding").alias("qvec"),
-    )
-    exact = cosine_topk(e, q, k=10).toPandas()
-    ann = lsh_bucket_topk(e, q, dim, k=10, nbits=12, multiprobe=1, tables=4).toPandas()
-    recalls = [
-        len(set(ann[ann.query_id == qid].vec_id) & set(g.vec_id)) / len(g)
-        for qid, g in exact.groupby("query_id")
-    ]
-    assert sum(recalls) / len(recalls) >= 0.85
 
 
 def test_ivf_recall_on_clustered_data(spark):

@@ -16,9 +16,8 @@ arms:
 * the driver arm (``bbox_rows``, ``tile_rows``: the server's /bbox and
   /tile) reads the pruned ``tile_idx=N`` files of a local store with
   pyarrow, skips row groups whose footer min/max miss the predicate and
-  stops at the response limit: no Spark job. Where pyarrow cannot read the
-  store (not local, or a read that raises) it falls back to the Spark arm
-  and records why;
+  stops at the response limit: no Spark job. Where a pyarrow read raises
+  it falls back to the Spark arm and records why;
 * the Spark arm (``read_tiles``, ``scan_bbox``, ``rawtile``) returns a lazy
   DataFrame over only the pruned directories, with the store schema read
   once at construction, so a request neither lists the whole store nor runs
@@ -121,20 +120,6 @@ class TileQueryEngine:
         text = translate(query)
         self.tables_for_bbox(*bbox, views=referenced_views(text))
         return self.spark.sql(text)
-
-    def rawtile(self, tx: int, ty: int, tz: int) -> DataFrame:
-        """J8 raw-tile fetch (``tq.rawtile``, ``osmquadtree-geometry.go:283-314``):
-        every stored element whose qt is a descendant-or-equal of the raster
-        cell — tile partitions pruned first, then the rounded-key equi-filter."""
-        from .. import quadtree as qtk
-        from ..tiling import qt_round_sql
-
-        req = int(qtk.from_tuple(np.array([tx]), np.array([ty]), np.array([tz]))[0])
-        minx, miny, maxx, maxy = (int(v[0]) for v in qtk.bounds(np.array([req]), 0.05))
-        return self.read_tiles(
-            self.pruned_tiles(minx, miny, maxx, maxy),
-            f"(qt & 31) >= {int(tz)} AND {qt_round_sql('qt', tz)} = {req}",
-        )
 
     def extract(
         self,

@@ -10,10 +10,10 @@ pruned ``tile_idx=N`` files on the driver with pyarrow (the driver arm of
 the store's one tile-set reader, ``streaming.update.TileSet``), skips row
 groups whose footer min/max miss the request and stops at ``limit`` rows,
 the way the reference filters its in-memory packed store
-(``osmquadtree-geometry.go:617-619``). On a store pyarrow cannot read (not
-local, or a read that raises) the reader falls back to one Spark job over
-the same tiles and predicate, ordered by ``(tile_idx, id)`` before its
-limit, and records why; either arm renders to the same bytes. The
+(``osmquadtree-geometry.go:617-619``). When the pyarrow read raises, the
+reader falls back to one Spark job over the same tiles and predicate,
+ordered by ``(tile_idx, id)`` before its limit, and records why; either arm
+renders to the same bytes. The
 oversized-bbox guard runs before anything is read. ``/status`` reports the
 reads each arm served and the last fallback reason from the reader's
 counters, with no Spark job.

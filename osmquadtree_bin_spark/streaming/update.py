@@ -538,24 +538,21 @@ class TileSet:
 
     Two arms. ``frame`` is the Spark arm: a pinned-schema read of just the
     listed tiles' directories, a lazy DataFrame for callers that go on in
-    Spark. ``rows`` answers a bounded request on the driver: on a local
-    store it reads the tiles' files with pyarrow, skips row groups whose
-    footer min/max miss the predicate, masks the rest and stops once
-    ``limit`` rows are in, with no Spark job. On any other store, or when
-    pyarrow fails (``footers._guarded_walk``: logged, never silent), it runs
-    the Spark arm instead and keeps the reason in ``last_fallback``. Both
-    arms give rows in ``(tile_idx, id)`` order, the order ``write_tiled``
-    stores them, as dicts in the pinned schema's column order with map
-    columns as dicts: the same rows whichever arm served them. ``reads``
-    counts the reads each arm served."""
+    Spark. ``rows`` answers a bounded request on the driver: it reads the
+    tiles' files with pyarrow, skips row groups whose footer min/max miss
+    the predicate, masks the rest and stops once ``limit`` rows are in, with
+    no Spark job. When pyarrow fails (``footers._guarded_walk``: logged,
+    never silent), it runs the Spark arm instead and keeps the reason in
+    ``last_fallback``. Both arms list the tile directories on the local
+    filesystem, and both give rows in ``(tile_idx, id)`` order, the order
+    ``write_tiled`` stores them, as dicts in the pinned schema's column
+    order with map columns as dicts: the same rows whichever arm served
+    them. ``reads`` counts the reads each arm served."""
 
     def __init__(self, spark: SparkSession, data_path: str):
-        from urllib.parse import urlparse
-
         self.spark = spark
         self.data_path = data_path
         self.schema = spark.read.parquet(data_path).schema
-        self.local = urlparse(data_path).scheme == ""
         self.reads = {"driver": 0, "spark": 0}
         self.last_fallback: str | None = None
 
@@ -592,18 +589,15 @@ class TileSet:
         from ..footers import _guarded_walk
         from ..tuning import collect_limited
 
-        reason = "store path is not local"
-        if self.local:
-            failed: list[str] = []
-            got = _guarded_walk(
-                self.data_path, lambda pq: self._driver_rows(pq, tiles, pred, limit),
-                fallback="the Spark read", on_fail=failed.append,
-            )
-            if got is not None:
-                self.reads["driver"] += 1
-                return got
-            reason = failed[0]
-        self.last_fallback = reason
+        failed: list[str] = []
+        got = _guarded_walk(
+            self.data_path, lambda pq: self._driver_rows(pq, tiles, pred, limit),
+            fallback="the Spark read", on_fail=failed.append,
+        )
+        if got is not None:
+            self.reads["driver"] += 1
+            return got
+        self.last_fallback = failed[0]
         df = self.frame(tiles, pred.sql()).orderBy("tile_idx", "id")
         return [r.asDict() for r in collect_limited(df, limit)]
 

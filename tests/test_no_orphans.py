@@ -16,6 +16,10 @@ docstring (``getattr`` and the tracer's wrap list name functions in
 strings). A mention in a docstring or a comment is not a use. A name only
 a test uses is deleted, or moved into ``tests/`` if it is a test helper.
 
+No module or class body of those files defines a function or class name
+twice: the later definition silently replaces the earlier one, leaving it
+dead (a property's ``@x.setter`` is the one allowed repeat).
+
 Keep list (``KEEP``): ``operators/knn.py`` and ``operators/skew.py``. The
 ``BASELINE.json`` north rule names kNN lookups and explicit skew handling
 on hot tiles, so they stay with their unit tests; neither gets a shipped
@@ -170,3 +174,37 @@ def test_no_unreferenced_public_names():
 def test_no_unreferenced_private_names():
     orphans = _orphans(private=True)
     assert not orphans, f"private names no shipped code references: {orphans}"
+
+
+def _redefined(path: Path):
+    """``qualname`` of each function or class a module or class body
+    defines again; a property setter or deleter is no redefinition."""
+
+    def redefines(node) -> bool:
+        return not any(
+            isinstance(d, ast.Attribute) and d.attr in ("setter", "deleter")
+            for d in getattr(node, "decorator_list", [])
+        )
+
+    bodies = [("", ast.parse(path.read_text()))]
+    while bodies:
+        prefix, owner = bodies.pop()
+        seen = set()
+        for node in owner.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            if node.name in seen and redefines(node):
+                yield f"{_rel(path)}::{prefix}{node.name}"
+            seen.add(node.name)
+            if isinstance(node, ast.ClassDef):
+                bodies.append((f"{prefix}{node.name}.", node))
+
+
+def test_no_name_defined_twice_in_one_body():
+    twice = [
+        name
+        for path in sorted(_py_files())
+        if path.relative_to(REPO).parts[0] in SCANNED
+        for name in _redefined(path)
+    ]
+    assert not twice, f"names a later definition in the same body replaces: {twice}"

@@ -284,9 +284,16 @@ def _parity_requests(engine, n: int, seed: int) -> list[tuple]:
 
 
 def _both_arms(engine, requests, monkeypatch, limit: int | None = None) -> tuple[list, list]:
-    """Each request's response from the reader's driver arm and, with the
-    store treated as non-local, from its Spark arm (fresh caches)."""
+    """Each request's response from the reader's driver arm and, with its
+    driver read raising, from its Spark arm (fresh caches). The driver read
+    is failed whole, not per file, so a request whose tiles have no files
+    left is still served by the Spark arm."""
+    import pyarrow as pa
+
     from osmquadtree_bin_spark.server import DEFAULT_LIMIT, TileServer
+
+    def unreadable(*a, **k):
+        raise pa.ArrowInvalid("driver read disabled")
 
     def answers(expect_arm: str):
         ts = TileServer(engine, limit=limit or DEFAULT_LIMIT)
@@ -297,7 +304,7 @@ def _both_arms(engine, requests, monkeypatch, limit: int | None = None) -> tuple
 
     driver = answers("driver")
     with monkeypatch.context() as m:
-        m.setattr(engine.tiles, "local", False)
+        m.setattr(engine.tiles, "_driver_rows", unreadable)
         spark_arm = answers("spark")
     return driver, spark_arm
 
@@ -317,7 +324,7 @@ def test_driver_and_spark_arms_answer_byte_for_byte(served, monkeypatch):
     wide = [("bbox", (-4500000, 510000000, 2500000, 520000000))]
     driver, spark_arm = _both_arms(engine, wide, monkeypatch, limit=7)
     assert len(json.loads(spark_arm[0])["features"]) == 7 and driver == spark_arm
-    assert engine.tiles.last_fallback == "store path is not local"
+    assert engine.tiles.last_fallback == "ArrowInvalid: driver read disabled"
 
 
 def test_extract_miss_at_most_two_spark_jobs(served):
